@@ -3,7 +3,8 @@ GH-Archive ELT pipeline (lapis2002/gh-archive-data-pipeline), rebuilt
 Spark-first.
 
 Subpackages:
-- ``sources``   — readers/writers (parquet, JSON-with-schema, JDBC, Kafka/Avro).
+- ``sources``   — readers/writers (parquet, JSON-with-schema, JDBC write) and
+                  the per-fixture artifact memo.
 - ``plans``     — declarative query catalog (DataFrame/SQL logical plans) and
                   the oracle-checkable registry consumed by ``__spark_entry__``.
 - ``operators`` — engine-level composite operators (profiler, dedup families,

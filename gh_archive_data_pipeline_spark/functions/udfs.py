@@ -7,8 +7,6 @@ pandas_udf when Python is unavoidable, row-at-a-time udf never in hot paths.
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 
 from pyspark.sql import SparkSession
@@ -27,21 +25,6 @@ def gini_impurity(counts: pd.Series) -> float:
         return 0.0
     p = counts / total
     return float(1.0 - (p * p).sum())
-
-
-@F.pandas_udf(DoubleType())
-def log1p_scaled(v: pd.Series) -> pd.Series:
-    """SCALAR pandas UDF: vectorized log1p — shown for API completeness; in
-    real plans prefer F.log1p (JVM, codegen). The oracle query using this
-    asserts the two agree to 1e-12."""
-    return (v.abs() + 1.0).apply(math.log)
-
-
-def register_sql_udfs(spark: SparkSession) -> None:
-    """Expose the UDFs to the SQL surface (spark.udf.register), mirroring
-    how an analyst-facing deployment would publish them."""
-    spark.udf.register("gini_impurity", gini_impurity)
-    spark.udf.register("log1p_scaled", log1p_scaled)
 
 
 @F.udtf(returnType="pos int, ngram string")

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.readers import load_table, plan_size_bytes
+from ..sources.readers import fixture_memo, load_table, plan_size_bytes
 from .text_queries import _STOP_SQL, STOPWORDS
 
 ROUNDS = 16
@@ -283,16 +283,8 @@ def q401_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # one trained probe per fixture state — q401 trains fresh (the honest
 # trainer headline); streaming/score-only consumers (q407) amortize via
-# this cache, the same convention as tokenize._cached_merges
-_probe_cache: dict[tuple[str, float], tuple[list[float], float]] = {}
-
-
+# this memo
+@fixture_memo("documents")
 def _cached_probe(spark: SparkSession,
                   sf_dir: str) -> tuple[list[float], float]:
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _probe_cache:
-        _probe_cache[key] = train_quality_probe(
-            load_table(spark, sf_dir, "documents"))
-    return _probe_cache[key]
+    return train_quality_probe(load_table(spark, sf_dir, "documents"))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, load_table, scratch_dir
 from ..plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -197,29 +197,6 @@ def _minhash_array(num_hashes: int):
         f"i -> array_min(transform(hs, "
         f"h -> (element_at(array({a_lit}), i + 1) * (h % {p}L)"
         f" + element_at(array({b_lit}), i + 1)) % {p}L)))")
-
-
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       num_hashes: int = 64, ngram: int = 3) -> DataFrame:
-    """MinHash signatures: k independent permutations of the shingle hash.
-
-    Computed per-row with ONE nested higher-order expression —
-    transform(sequence(0,k-1), i -> array_min(transform(hs, h ->
-    xxhash64(i, h)))) — because the shingle set is ALREADY a per-doc array:
-    no explode, no groupBy, ZERO shuffles (the explode→groupBy form paid a
-    full shuffle of k×|shingles| rows), and one expression to codegen (k
-    separate array_min columns compiled 64 lambdas and tripled cold wall
-    time; k python-built F.transform columns silently COLLAPSE into one
-    shared lambda — measured, every mh_i identical — so the expression is
-    SQL text, not python lambdas).
-    """
-    _check_hash_fan(num_hashes, "num_hashes")
-    sh = hashed_shingles(docs, id_col, ngram)
-    mh = _minhash_array(num_hashes)
-    return sh.select(
-        id_col,
-        *[mh.getItem(i).alias(f"mh_{i}") for i in range(num_hashes)],
-    )
 
 
 def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
@@ -1702,34 +1679,21 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
     )
 
 
-# One materialized signature index per fixture STATE (same contract as the
-# IVF/SRP vector indexes in operators/similarity.py): keyed on the source
-# fingerprint so a regenerated fixture rebuilds; temp dirs removed at exit.
-_minhash_index_cache: dict[tuple[str, float], str] = {}
-
-
+# One materialized signature index per fixture state (same contract as the
+# IVF/SRP vector indexes in operators/similarity.py).
+@fixture_memo("documents")
 def _cached_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _minhash_index_cache:
-        d = tempfile.mkdtemp(prefix="minhash_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        # num_buckets sized to the fixture per build_minhash_index's own
-        # sizing rule ("one bucket's band rows fit a scan task"): at a few
-        # hundred docs, 8 buckets keep probes pruned while every build /
-        # append writes ~8 files instead of 64 — at sf0.01 the q376/q379
-        # wall time is file-count-fixed-cost, not bytes (a 100 TB build
-        # passes thousands here, exactly as the docstring prescribes).
-        build_minhash_index(docs.filter(F.col("doc_id") % 10 != 0), d,
-                            num_buckets=8)
-        _minhash_index_cache[key] = d
-    return _minhash_index_cache[key]
+    d = scratch_dir("minhash_index_")
+    docs = load_table(spark, sf_dir, "documents")
+    # num_buckets sized to the fixture per build_minhash_index's own
+    # sizing rule ("one bucket's band rows fit a scan task"): at a few
+    # hundred docs, 8 buckets keep probes pruned while every build /
+    # append writes ~8 files instead of 64 — at sf0.01 the q376/q379
+    # wall time is file-count-fixed-cost, not bytes (a 100 TB build
+    # passes thousands here, exactly as the docstring prescribes).
+    build_minhash_index(docs.filter(F.col("doc_id") % 10 != 0), d,
+                        num_buckets=8)
+    return d
 
 
 def _q376_oracle() -> str:
@@ -1788,13 +1752,8 @@ def q450_minhash_tombstone_probe(spark: SparkSession,
     q448/q449 convention. :func:`compact_minhash_index` folding the
     tombstones bit-equal to an index built from the surviving corpus is
     pinned by unit test."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="minhash_tomb_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("minhash_tomb_")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     build_minhash_index(corpus, d, num_buckets=8)
     minhash_index_delete(
@@ -2067,54 +2026,6 @@ DECON_NGRAM = 8      # shingle width (words)
 EVAL_DOCS = 25       # fixture eval set: doc_id < 25
 
 
-def _bloom_positions(key, m: int = BLOOM_M, k: int = BLOOM_HASHES):
-    """array<bigint> of k Bloom positions for a string column, via
-    Kirsch-Mitzenmacher double hashing over the two 32-bit halves of md5 —
-    the one hash both engines compute identically (the md5_60 convention,
-    dedup.hashed_shingles). h1/h2 < 2^32 so h1 + (k-1)*h2 stays far inside
-    bigint."""
-    md5 = F.md5(key)
-    h1 = F.conv(F.substring(md5, 1, 8), 16, 10).cast("bigint")
-    h2 = F.conv(F.substring(md5, 9, 8), 16, 10).cast("bigint")
-    return F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m))
-                     for i in range(k)])
-
-
-def bloom_build(keys: DataFrame, key_col: str,
-                m: int = BLOOM_M, k: int = BLOOM_HASHES) -> DataFrame:
-    """Build a Bloom filter over a key column as its SET-BIT table:
-    one row per set position (<= m rows — broadcastable at any corpus
-    size; this is the representation that ships to 1000 executors as a
-    few KB instead of a driver-side bitmap)."""
-    return (keys.select(F.explode(_bloom_positions(F.col(key_col), m, k))
-                        .alias("pos"))
-            .distinct())
-
-
-def bloom_probe(probes: DataFrame, key_col: str, bits: DataFrame,
-                m: int = BLOOM_M, k: int = BLOOM_HASHES) -> DataFrame:
-    """Probe: a key is a Bloom HIT iff all k of its positions are set.
-    Hits are decided per DISTINCT key value (a key's k positions don't
-    depend on which row carries it), then joined back to the input rows —
-    duplicate probe rows therefore cannot pool their matched-position
-    counts into 2k != k and fake a miss. Input rows pass through with a
-    ``bloom_hit`` int column (NULL keys read as misses)."""
-    keys = probes.select(key_col).distinct()
-    pos = keys.withColumn(
-        "_p", F.explode(_bloom_positions(F.col(key_col), m, k)))
-    matched = (pos.join(F.broadcast(bits),
-                        pos["_p"] == bits["pos"])
-               .groupBy(key_col)
-               .agg(F.count("*").alias("_n")))
-    hits = (keys.join(matched, key_col, "left")
-            .select(key_col,
-                    (F.coalesce("_n", F.lit(0)) == k).cast("int")
-                    .alias("bloom_hit")))
-    return (probes.join(hits, key_col, "left")
-            .withColumn("bloom_hit",
-                        F.coalesce("bloom_hit", F.lit(0)).cast("int")))
-
-
 def _decon_shingle_sql(src: str) -> str:
     """Distinct (doc_id, h1, h2) shingle HASHES — the two 32-bit md5
     halves, computed before any grouping so every downstream stage works
@@ -2178,9 +2089,9 @@ def bloom_bitmap(bits: DataFrame, m: int = BLOOM_M) -> list[int]:
     discipline as pack_spans' per-partition offsets and the PQ codebooks).
     At the decon plane's m=8192 this is 1 KB; the words enter downstream
     plans as an array literal (see :func:`_bloom_hit_sql`), which only
-    makes sense while m/8 bytes is plan-literal-sized (KBs-MBs) — for a
-    filter sized beyond that, use :func:`bloom_probe`'s broadcast-join
-    form instead."""
+    makes sense while m/8 bytes is plan-literal-sized (KBs-MBs) — a filter
+    sized beyond that needs a broadcast join against the set-bit table
+    instead."""
     words = [0] * ((m + 63) // 64)
     for r in bits.select("pos").collect():
         p = int(r[0])
@@ -2754,17 +2665,12 @@ def q434_curated_corpus_export(spark: SparkSession,
     100 TB lens: q374's scale shape plus one partitioned write and one
     columnar re-read; the manifest rollup shuffles (source, doc_id, int)
     rows only."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     kept_ids = (q374_corpus_curation(spark, sf_dir)
                 .filter(F.col("keep")).select("doc_id"))
     kept = docs.join(kept_ids, "doc_id").select(
         "doc_id", "source", "text")
-    out = tempfile.mkdtemp(prefix="curated_export_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir("curated_export_")
     kept.write.mode("overwrite").partitionBy("source").parquet(out)
     back = spark.read.parquet(out)
     return (back.select("source", "doc_id",

@@ -10,7 +10,7 @@ the clustered writer (`sources/writers.py:write_clustered`).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
@@ -31,11 +31,6 @@ def _interleave_sql(x_sql: str, y_sql: str, spark_dialect: bool) -> str:
             terms.append(f"((({x_sql} >> {i}) & 1) << {2 * i})")
             terms.append(f"((({y_sql} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zvalue(x: str, y: str) -> Column:
-    """Morton code of two already-bucketed non-negative int columns."""
-    return F.expr(_interleave_sql(x, y, spark_dialect=True))
 
 
 _X = f"cast(user_id % {1 << ZBITS} as bigint)"

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, load_table, scratch_dir
 from ..plans.registry import register
 
 # Output schema for extract_features — metadata stays typed, payload dropped.
@@ -660,36 +660,25 @@ def q389_media_header_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q387 — binaryFile ingest audit (raw files -> lake, driver-checked e2e)
 # ---------------------------------------------------------------------------
 
-_asset_dir_cache: dict[tuple[str, float], str] = {}
-
-
+@fixture_memo("documents")
 def _materialized_asset_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write each fixture document's utf-8 bytes as one ``doc_<id>.txt``
-    file (cached per fixture state, same convention as the signature/IVF
+    file (once per fixture state, same convention as the signature/IVF
     indexes) — the raw-file drop zone a binaryFile ingest starts from."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _asset_dir_cache:
-        d = tempfile.mkdtemp(prefix="assets_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        # foreachPartition writes files executor-side (local[..] shares the
-        # filesystem); at cluster scale the drop zone is object storage and
-        # this materialization IS the upstream system's job.
-        def write_part(rows):
-            for r in rows:
-                p = os.path.join(d, f"doc_{r.doc_id}.txt")
-                with open(p, "wb") as f:
-                    f.write(r.text.encode("utf-8"))
-        docs.foreachPartition(write_part)
-        _asset_dir_cache[key] = d
-    return _asset_dir_cache[key]
+    d = scratch_dir("assets_")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # foreachPartition writes files executor-side (local[..] shares the
+    # filesystem); at cluster scale the drop zone is object storage and
+    # this materialization IS the upstream system's job.
+    def write_part(rows):
+        for r in rows:
+            p = os.path.join(d, f"doc_{r.doc_id}.txt")
+            with open(p, "wb") as f:
+                f.write(r.text.encode("utf-8"))
+    docs.foreachPartition(write_part)
+    return d
 
 
 @register(

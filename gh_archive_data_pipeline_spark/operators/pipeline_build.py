@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import load_table, scratch_dir
 from .classifier import (
     _cached_probe,
     _feats_select_sql,
@@ -197,29 +197,24 @@ def phase3_gate_split(docs: DataFrame, ann1: DataFrame,
 
 def build_disposition_table(spark: SparkSession, docs: DataFrame,
                             w: list[float], b: float,
-                            checkpoint: bool = True,
-                            keep_text: bool = True) -> DataFrame:
+                            checkpoint: bool = True) -> DataFrame:
     """The pipeline's product: ONE row per candidate document (doc_id >=
     EVAL_DOCS) with its split, funnel ``outcome`` ('exact_dup' |
     'chunk_dup' | 'contaminated' | 'quality' | 'kept'), chunk
-    ``disposition``, post-policy ``text`` and ``kept_tokens``. ``w``/``b``
-    are the q401 probe weights. Three phase products, each checkpointed
-    once (see module docstring): the exact-dedup annotation, the
-    chunk-disposition annotation, and the final disposition table.
+    ``disposition`` and ``kept_tokens``. ``w``/``b`` are the q401 probe
+    weights. Three phase products, each checkpointed once (see module
+    docstring): the exact-dedup annotation, the chunk-disposition
+    annotation, and the final disposition table.
 
-    ``keep_text=False`` drops the post-policy text column BEFORE the
-    final checkpoint (round 12, guide §5 — don't persist what the
-    consumer never reads): the manifest (q440) and epoch-plan (q443)
-    consumers are stats-only, so their checkpoint materializes the
-    decision table without the corpus payload; at scale that is a
-    bounded stats table instead of a second copy of the corpus. Export
-    consumers (q444's standing table, q434-style corpus writes) keep
-    the default."""
+    The post-policy text column is dropped BEFORE the final checkpoint
+    (round 12, guide §5 — don't persist what the consumer never reads):
+    the manifest (q440) and epoch-plan (q443) consumers are stats-only, so
+    the checkpoint materializes the decision table without the corpus
+    payload; at scale that is a bounded stats table instead of a second
+    copy of the corpus."""
     flag1 = _ckpt(phase1_exact(docs), checkpoint)
     ann1 = _ckpt(phase2_chunk(flag1), checkpoint)
-    disp = phase3_gate_split(docs, ann1, w, b)
-    if not keep_text:
-        disp = disp.drop("text")
+    disp = phase3_gate_split(docs, ann1, w, b).drop("text")
     return _ckpt(disp, checkpoint)
 
 
@@ -451,7 +446,7 @@ def q440_corpus_build_pipeline(spark: SparkSession,
     # the raw documents table — q401's exact float sequence)
     w, b = _cached_probe(spark, sf_dir)
     # stats-only consumer: the manifest never reads text (guide §5)
-    disp = build_disposition_table(spark, docs, w, b, keep_text=False)
+    disp = build_disposition_table(spark, docs, w, b)
     return manifest_from_disposition(disp)
 
 
@@ -500,7 +495,7 @@ def q443_pipeline_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     w, b = _cached_probe(spark, sf_dir)
     # stats-only consumer: the epoch plan never reads text (guide §5)
-    disp = build_disposition_table(spark, docs, w, b, keep_text=False)
+    disp = build_disposition_table(spark, docs, w, b)
     kept = disp.filter(F.col("outcome") == "kept")
     sized = kept.select("doc_id", "split",
                         F.col("kept_tokens").alias("n_tokens"))
@@ -586,11 +581,8 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
     guard, persists each batch's matched-chunk set as standing state, and
     defers correctness to :func:`reconcile_dispositions` — the q446
     contract (drain in any order, sweep once, converge to one-shot)."""
-    import atexit
     import glob
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.types import StructType
 
@@ -611,8 +603,7 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
     w, b = _cached_probe(spark, sf_dir)
 
     if state_dir is None:
-        state_dir = tempfile.mkdtemp(prefix="corpus_build_state_")
-        atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
+        state_dir = scratch_dir("corpus_build_state_")
     land = f"{state_dir}/land"
     idx = f"{state_dir}/idx"
     fps_dir = f"{state_dir}/fps"
@@ -940,12 +931,7 @@ def q447_incremental_reconcile(spark: SparkSession,
     the whole corpus; THIS one touches |damage| documents' text plus two
     int-table scans — the difference between 'rebuild the table tonight'
     and 'patch 0.01% of it now'."""
-    import atexit
-    import shutil
-    import tempfile
-
-    state = tempfile.mkdtemp(prefix="corpus_build_ooo_inc_")
-    atexit.register(shutil.rmtree, state, ignore_errors=True)
+    state = scratch_dir("corpus_build_ooo_inc_")
     stream_corpus_build(spark, sf_dir, state_dir=state,
                         reverse_arrival=True, allow_out_of_order=True)
     return manifest_from_disposition(
@@ -969,12 +955,7 @@ def q446_out_of_order_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup over the persisted matched union and scan-side gates — linear,
     no LSH re-probe (see :func:`reconcile_dispositions`); the drain's own
     shape is q444's."""
-    import atexit
-    import shutil
-    import tempfile
-
-    state = tempfile.mkdtemp(prefix="corpus_build_ooo_")
-    atexit.register(shutil.rmtree, state, ignore_errors=True)
+    state = scratch_dir("corpus_build_ooo_")
     stream_corpus_build(spark, sf_dir, state_dir=state,
                         reverse_arrival=True, allow_out_of_order=True)
     return manifest_from_disposition(

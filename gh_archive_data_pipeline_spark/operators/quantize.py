@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, load_table
 
 DIM = 64
 M_SUB = 8          # subspaces
@@ -117,21 +117,12 @@ def pq_train(emb: DataFrame, m_sub: int = M_SUB, k: int = K_PQ,
     return cbs
 
 
-# One trained codebook per fixture STATE (same contract as dedup.py's
-# _cached_minhash_index): keyed on the source fingerprint so a regenerated
-# fixture retrains; q399 and q400 share one training pass per fixture.
-_pq_codebook_cache: dict[tuple[str, float], list[list[list[float]]]] = {}
-
-
+# One trained codebook per fixture state: q399 and q400 share one training
+# pass per fixture.
+@fixture_memo("embeddings")
 def _cached_codebooks(spark: SparkSession,
                       sf_dir: str) -> list[list[list[float]]]:
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/embeddings.parquet"))
-    if key not in _pq_codebook_cache:
-        _pq_codebook_cache[key] = pq_train(
-            load_table(spark, sf_dir, "embeddings"))
-    return _pq_codebook_cache[key]
+    return pq_train(load_table(spark, sf_dir, "embeddings"))
 
 
 def pq_encode(emb: DataFrame,

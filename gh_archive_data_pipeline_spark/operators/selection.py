@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import load_table, scratch_dir
 
 # ---------------------------------------------------------------------------
 # distributed global order statistics
@@ -699,10 +699,6 @@ def q445_epoch_plan_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB lens: q442's scan-side keys + per-shard rank, one partitioned
     write keyed by shard (= one directory per reader stream), one columnar
     re-read, and a shard-keyed rollup of int triples."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id",
@@ -710,8 +706,7 @@ def q445_epoch_plan_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = (pack_spans(sized, _SEQ_LEN, eod_per_doc=True)
             .select("seq_id").distinct())
     plan0 = epoch_order(seqs, [0]).drop("epoch")
-    out = tempfile.mkdtemp(prefix="epoch_plan_export_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir("epoch_plan_export_")
     plan0.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
     h31 = (F.conv(F.substring(F.md5(F.col("seq_id").cast("string")),

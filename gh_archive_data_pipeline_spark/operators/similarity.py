@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import hadoop_fs, load_table
+from ..sources.readers import fixture_memo, hadoop_fs, load_table, scratch_dir
 from ..plans.registry import register
 
 
@@ -1104,29 +1104,13 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
                     F.round("sim", 6).alias("cosine_sim"), "rank"))
 
 
-# one materialized IVF index per fixture STATE — repeated registry/bench
+# one materialized IVF index per fixture state — repeated registry/bench
 # invocations reuse it (the build-once/search-many contract is the point).
-# Keyed on (sf_dir, source fingerprint) so a regenerated fixture triggers a
-# rebuild instead of silently serving stale vectors; temp dirs are removed
-# at interpreter exit.
-_ivf_index_cache: dict[tuple[str, float], str] = {}
-
-
+@fixture_memo("embeddings")
 def _ivf_cached_index(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/embeddings.parquet"))
-    if key not in _ivf_index_cache:
-        d = tempfile.mkdtemp(prefix="ivf_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        build_ivf_index(load_table(spark, sf_dir, "embeddings"), d,
-                        num_cells=16)
-        _ivf_index_cache[key] = d
-    return _ivf_index_cache[key]
+    d = scratch_dir("ivf_index_")
+    build_ivf_index(load_table(spark, sf_dir, "embeddings"), d, num_cells=16)
+    return d
 
 
 # Shared DuckDB twin of the deterministic IVF algorithm (seeds = 16
@@ -1208,13 +1192,8 @@ def q448_ivf_tombstone_search(spark: SparkSession,
     the candidate set shrinks). A fresh index is built in-query (the
     cached q358 index is shared state a delete must not mutate) — the
     q365 build-dominated convention."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    d = tempfile.mkdtemp(prefix="ivf_tomb_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("ivf_tomb_")
     build_ivf_index(emb, d, num_cells=16)
     ivf_delete(spark, d,
                emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
@@ -1376,23 +1355,11 @@ def srp_compact(spark: SparkSession, index_dir: str) -> None:
                       "re-ingested ids")
 
 
-_srp_index_cache: dict[tuple[str, float], str] = {}
-
-
+@fixture_memo("embeddings")
 def _srp_cached_index(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/embeddings.parquet"))
-    if key not in _srp_index_cache:
-        d = tempfile.mkdtemp(prefix="srp_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        build_srp_index(load_table(spark, sf_dir, "embeddings"), d)
-        _srp_index_cache[key] = d
-    return _srp_index_cache[key]
+    d = scratch_dir("srp_index_")
+    build_srp_index(load_table(spark, sf_dir, "embeddings"), d)
+    return d
 
 
 @register("q365_srp_index_search", sql=_q45_oracle())
@@ -1426,13 +1393,8 @@ def q449_srp_tombstone_search(spark: SparkSession,
     shared state a delete must not mutate) — the q448 convention.
     :func:`srp_compact` folding the tombstones bit-equal to a fresh build
     over the survivors is pinned by unit test."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    d = tempfile.mkdtemp(prefix="srp_tomb_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = scratch_dir("srp_tomb_")
     build_srp_index(emb, d)
     srp_delete(spark, d,
                emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
@@ -2171,30 +2133,17 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
      .parquet(f"{index_dir}/corpus/ingest={ingest_id}"))
 
 
-_ivf_appended_cache: dict[tuple[str, float], str] = {}
-
-
+@fixture_memo("embeddings")
 def _ivf_appended_index(spark: SparkSession, sf_dir: str) -> str:
     """Index built from the standing corpus (vec_id % 10 != 0) then
-    incrementally appended with the delta (vec_id % 10 == 0) — cached per
-    fixture state like the other materialized indexes."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/embeddings.parquet"))
-    if key not in _ivf_appended_cache:
-        d = tempfile.mkdtemp(prefix="ivf_append_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        emb = load_table(spark, sf_dir, "embeddings")
-        build_ivf_index(emb.filter(F.col("vec_id") % 10 != 0), d,
-                        num_cells=16)
-        ivf_index_append(spark, d, emb.filter(F.col("vec_id") % 10 == 0),
-                         ingest_id="delta")
-        _ivf_appended_cache[key] = d
-    return _ivf_appended_cache[key]
+    incrementally appended with the delta (vec_id % 10 == 0) — built once
+    per fixture state like the other materialized indexes."""
+    d = scratch_dir("ivf_append_")
+    emb = load_table(spark, sf_dir, "embeddings")
+    build_ivf_index(emb.filter(F.col("vec_id") % 10 != 0), d, num_cells=16)
+    ivf_index_append(spark, d, emb.filter(F.col("vec_id") % 10 == 0),
+                     ingest_id="delta")
+    return d
 
 
 # q378's oracle is the IVF algorithm with the codebook seeded from the

@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.arrays import sorted_pairs
 from ..sources.readers import load_table
 from ..plans.registry import register
 
@@ -615,28 +616,22 @@ def q123_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary, linear in corpus), then one count aggregation; the HAVING
     prunes the long tail before any further join."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    # Pair enumeration is the q167 scan-side HOF over the per-doc SORTED
-    # distinct token array (round 12): the old explode×explode+filter
-    # staged `w` as a column, and InferFiltersFromGenerate (the q144
-    # trap: it fires on attribute generator inputs) pushed its inferred
-    # size>0/isnotnull filter below the staging Project, substituting the
-    # split+filter+array_distinct tree into it — 3 evaluations per row.
-    # Here the generator input is an EXPRESSION over the staged array
-    # (rule skips; the array builds once per row), elements are distinct
-    # and ascending so slice pairs (i < j) == value pairs (a < b), and
-    # the Generate emits |w|·(|w|−1)/2 rows instead of |w|² rows
-    # post-filtered. Same pair multiset, same counts.
-    ws_col = F.array_sort(F.array_distinct(
-        F.filter(F.split("text", " "), lambda t: t != "")))
-    pairs = (docs.select(ws_col.alias("ws"))
-             .select(F.explode(F.expr(
-                 "flatten(transform(ws, (x, i) -> "
-                 "transform(slice(ws, i + 2, size(ws) - i - 1), "
-                 "y -> struct(x AS tok_a, y AS tok_b))))")).alias("pr"))
-             .select("pr.tok_a", "pr.tok_b"))
-    return (pairs.groupBy("tok_a", "tok_b")
+    # scan-side pair HOF over the per-doc sorted distinct tokens (the
+    # q167 idiom; see functions.arrays.sorted_pairs)
+    return (_token_pairs(docs).groupBy("tok_a", "tok_b")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .filter(F.col("n_docs") >= 20))
+
+
+def _token_pairs(docs: DataFrame) -> DataFrame:
+    """(tok_a, tok_b) per doc: its distinct non-empty tokens paired in
+    ascending order, one row per pair."""
+    ws_col = F.array_sort(F.array_distinct(
+        F.filter(F.split("text", " "), lambda t: t != "")))
+    return (docs.select(ws_col.alias("ws"))
+            .select(F.explode(sorted_pairs("ws", "tok_a", "tok_b"))
+                    .alias("pr"))
+            .select("pr.tok_a", "pr.tok_b"))
 
 
 def zlib_ratio_udf():

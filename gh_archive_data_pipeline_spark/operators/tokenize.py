@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, load_table
 
 _CHARS = "abcdefghijklmnopqrstuvwxyz0123456789"
 # Multi-char pieces chosen so common fixture words split into 2+ pieces;
@@ -311,18 +311,11 @@ def _bpe_encode_oracle(n_merges: int) -> str:
 
 
 # trained merge table per fixture state — q390 (train) and q394 (encode)
-# share one training run per session, same convention as the index caches
-_bpe_merges_cache: dict[tuple[str, float], list] = {}
-
-
+# share one training run per session
+@fixture_memo("documents")
 def _cached_merges(spark: SparkSession, sf_dir: str) -> list:
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _bpe_merges_cache:
-        _bpe_merges_cache[key] = bpe_train(
-            load_table(spark, sf_dir, "documents"), n_merges=_BPE_MERGES)
-    return _bpe_merges_cache[key]
+    return bpe_train(load_table(spark, sf_dir, "documents"),
+                     n_merges=_BPE_MERGES)
 
 
 @register("q390_bpe_training", sql=_bpe_oracle(_BPE_MERGES))

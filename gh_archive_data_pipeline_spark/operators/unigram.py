@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, load_table, scratch_dir
 
 MAX_WORD_LEN = 12   # words longer than this are excluded from EM (none in
                     # the fixture; at scale they are tail noise by weight)
@@ -258,19 +258,11 @@ def q404_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # trained unigram vocab per fixture state — q404 (train) and q405 (encode)
-# share one training run per session, same convention as _cached_merges
-_unigram_cache: dict[tuple[str, float], list[tuple[str, int, float]]] = {}
-
-
+# share one training run per session
+@fixture_memo("documents")
 def _cached_unigram(spark: SparkSession,
                     sf_dir: str) -> list[tuple[str, int, float]]:
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _unigram_cache:
-        _unigram_cache[key] = unigram_train(
-            load_table(spark, sf_dir, "documents"))
-    return _unigram_cache[key]
+    return unigram_train(load_table(spark, sf_dir, "documents"))
 
 
 def _unigram_encode_oracle(rounds: int = EM_ROUNDS) -> str:
@@ -379,25 +371,12 @@ def load_unigram_artifact(spark: SparkSession, store_dir: str,
     return {p: _q_logprob(c, total) for p, c in state.items()}
 
 
-# one published artifact per fixture state (temp store, removed at exit)
-_artifact_cache: dict[tuple[str, float], str] = {}
-
-
+# one published artifact per fixture state
+@fixture_memo("documents")
 def _cached_artifact_store(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..sources.readers import source_stamp
-
-    key = (sf_dir, source_stamp(f"{sf_dir}/documents.parquet"))
-    if key not in _artifact_cache:
-        d = tempfile.mkdtemp(prefix="unigram_artifact_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        publish_unigram_artifact(
-            spark, load_table(spark, sf_dir, "documents"), d)
-        _artifact_cache[key] = d
-    return _artifact_cache[key]
+    d = scratch_dir("unigram_artifact_")
+    publish_unigram_artifact(spark, load_table(spark, sf_dir, "documents"), d)
+    return d
 
 
 @register("q406_unigram_artifact_encode", sql=_unigram_encode_oracle())

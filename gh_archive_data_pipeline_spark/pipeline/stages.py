@@ -14,40 +14,11 @@ Differences from the reference, by design:
 
 from __future__ import annotations
 
-import gzip
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import read_json_with_schema
 from .schema import CREATED_AT_FORMAT, GH_EVENT_SCHEMA
-
-GH_ARCHIVE_URL = "https://data.gharchive.org/{y}-{m:02d}-{d:02d}-{h}.json.gz"
-
-
-# ---------------------------------------------------------------------------
-# bronze: acquire raw hourly archives
-# ---------------------------------------------------------------------------
-
-def download_hour(year: int, month: int, day: int, hour: int,
-                  dest_dir: str) -> str:
-    """Fetch one GH Archive hour file and gunzip it next to the download
-    (reference download_to_bronze, load_data_task.py:63-89). Driver-side by
-    necessity (single HTTP object); at scale, list many hour URLs and let
-    ``spark.read.json`` pull the .json.gz files directly — one task each."""
-    import urllib.request
-
-    os.makedirs(dest_dir, exist_ok=True)
-    url = GH_ARCHIVE_URL.format(y=year, m=month, d=day, h=hour)
-    gz_path = os.path.join(dest_dir, os.path.basename(url))
-    json_path = gz_path[:-3]
-    with urllib.request.urlopen(url, timeout=60) as resp, open(gz_path, "wb") as f:
-        shutil.copyfileobj(resp, f)
-    with gzip.open(gz_path, "rb") as src, open(json_path, "wb") as dst:
-        shutil.copyfileobj(src, dst)
-    return json_path
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrays import sorted_pairs
 from ..sources.readers import load_table
 from .registry import register
 
@@ -955,17 +956,14 @@ def q167_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_orders = grouped.agg(F.count(F.lit(1)).alias("n"))
     brand_freq = (grouped.select(F.explode("bs").alias("p_brand"))
                   .groupBy("p_brand").agg(F.count("*").alias("c")))
-    # pair generator INLINED at the explode site (the q144 optimizer-trap
-    # rule: InferFiltersFromGenerate only fires on attribute inputs);
     # elements are distinct and ascending, so (i < j) == (bs[i] < bs[j])
-    pairs = (grouped.select(F.explode(F.expr(
-        "flatten(transform(bs, (x, i) -> "
-        "transform(slice(bs, i + 2, size(bs) - i - 1), "
-        "y -> struct(x AS brand_a, y AS brand_b))))")).alias("pr"))
-        .select("pr.brand_a", "pr.brand_b")
-        .groupBy("brand_a", "brand_b")
-        .agg(F.count("*").alias("c_ab"))
-        .where(F.col("c_ab") >= 50))
+    pairs = (grouped
+             .select(F.explode(sorted_pairs("bs", "brand_a", "brand_b"))
+                     .alias("pr"))
+             .select("pr.brand_a", "pr.brand_b")
+             .groupBy("brand_a", "brand_b")
+             .agg(F.count("*").alias("c_ab"))
+             .where(F.col("c_ab") >= 50))
     fa = brand_freq.select(F.col("p_brand").alias("brand_a"),
                            F.col("c").alias("c_a"))
     fb = brand_freq.select(F.col("p_brand").alias("brand_b"),

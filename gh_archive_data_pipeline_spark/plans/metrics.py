@@ -13,9 +13,36 @@ broadcasts).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 METRIC_SCHEMA = ("node_id bigint, node string, metric string, value bigint")
+
+
+def _walk_metrics(node):
+    """Yield ``(node_id, node_name, metric, value)`` for every metric of
+    every physical operator under ``node``.
+
+    AQE hides its subtree from children(): AdaptiveSparkPlanExec holds the
+    final plan behind executedPlan(), and each QueryStageExec holds its
+    stage subtree behind plan(). Without both unwraps, any query with a
+    shuffle reports ZERO metrics (the root has none)."""
+    name = node.nodeName()
+    it = node.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        yield node.id(), name, kv._1(), kv._2().value()
+    cit = node.children().iterator()
+    while cit.hasNext():
+        yield from _walk_metrics(cit.next())
+    unwrap = ("executedPlan" if name == "AdaptiveSparkPlan"
+              else "plan" if "QueryStage" in name else None)
+    if unwrap:
+        try:
+            inner = getattr(node, unwrap)()
+        except Py4JError:
+            return
+        yield from _walk_metrics(inner)
 
 
 def plan_metrics(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -27,37 +54,7 @@ def plan_metrics(df: DataFrame, spark: SparkSession) -> DataFrame:
     would build a separate aggregating plan and leave df's accumulators
     untouched (all zeros)."""
     df.collect()
-    rows: list[tuple] = []
-
-    def walk(node) -> None:
-        nid = node.id()
-        name = node.nodeName()
-        m = node.metrics()
-        it = m.iterator()
-        while it.hasNext():
-            kv = it.next()
-            rows.append((nid, name, kv._1(), kv._2().value()))
-        children = node.children()
-        cit = children.iterator()
-        while cit.hasNext():
-            walk(cit.next())
-        # AQE hides its subtree from children(): AdaptiveSparkPlanExec holds
-        # the final plan behind executedPlan(), and each QueryStageExec holds
-        # its stage subtree behind plan(). Without both unwraps, any query
-        # with a shuffle reports ZERO metrics (the root has none).
-        if name == "AdaptiveSparkPlan":
-            try:
-                walk(node.executedPlan())
-            except Exception:
-                pass
-        if name.endswith("QueryStageExec") or "QueryStage" in name:
-            try:
-                walk(node.plan())
-            except Exception:
-                pass
-
-    qe = df._jdf.queryExecution()
-    walk(qe.executedPlan())
+    rows = list(_walk_metrics(df._jdf.queryExecution().executedPlan()))
     return spark.createDataFrame(rows, METRIC_SCHEMA)
 
 
@@ -80,44 +77,12 @@ def executed_shuffle_summary(df: DataFrame) -> dict:
     QueryExecution carries the accumulators); calling this on a never-run
     DataFrame returns zeros."""
     totals = {"shuffle_records": 0, "shuffle_bytes": 0, "rows_read": 0}
-
-    def walk(node) -> None:
-        name = node.nodeName()
-        m = node.metrics()
-        it = m.iterator()
-        while it.hasNext():
-            kv = it.next()
-            key, val = kv._1(), kv._2().value()
-            if name == "Exchange" and key == "shuffleRecordsWritten":
-                totals["shuffle_records"] += val
-            elif name == "Exchange" and key == "shuffleBytesWritten":
-                totals["shuffle_bytes"] += val
-            elif "Scan" in name and key == "numOutputRows":
-                totals["rows_read"] += val
-        cit = node.children().iterator()
-        while cit.hasNext():
-            walk(cit.next())
-        if name == "AdaptiveSparkPlan":
-            try:
-                walk(node.executedPlan())
-            except Exception:
-                pass
-        if "QueryStage" in name:
-            try:
-                walk(node.plan())
-            except Exception:
-                pass
-
-    walk(df._jdf.queryExecution().executedPlan())
+    for _, name, key, val in _walk_metrics(
+            df._jdf.queryExecution().executedPlan()):
+        if name == "Exchange" and key == "shuffleRecordsWritten":
+            totals["shuffle_records"] += val
+        elif name == "Exchange" and key == "shuffleBytesWritten":
+            totals["shuffle_bytes"] += val
+        elif "Scan" in name and key == "numOutputRows":
+            totals["rows_read"] += val
     return totals
-
-
-def scan_output_rows(metrics: DataFrame) -> int:
-    """Total rows produced by scan nodes — the 'rows read' headline."""
-    from pyspark.sql import functions as F
-
-    row = (metrics
-           .filter(F.col("node").contains("Scan")
-                   & (F.col("metric") == "numOutputRows"))
-           .agg(F.sum("value").alias("s")).collect()[0])
-    return int(row.s or 0)

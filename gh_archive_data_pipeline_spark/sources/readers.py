@@ -3,7 +3,6 @@
 Covers the reference's scan surface (SURVEY.md §2.1):
 - S2 JSON-with-explicit-schema (/root/reference/pipeline/airflow/dags/load_data_task.py:117-121)
 - S3/S4 parquet lake scan (data_profiling.py:41)
-- S8 JDBC scan (declared surface)
 plus the fixture loader used by every registry query.
 
 Scale notes: all readers return lazily-planned DataFrames; filters/projections
@@ -13,7 +12,11 @@ via .explain → PushedFilters/ReadSchema). No data touches the driver.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,15 +32,42 @@ ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 
 def source_stamp(src: str) -> float:
     """Freshness fingerprint of a fixture source path (file or directory):
-    the newest mtime underneath. Shared by every materialized-index cache
-    (_ivf_cached_index / _srp_cached_index / _cached_minhash_index /
-    _ivf_appended_index) so a regenerated fixture triggers a rebuild
-    instead of silently serving stale data."""
+    the newest mtime underneath, so a regenerated fixture changes it."""
     if os.path.isdir(src):
         stamps = [os.path.getmtime(os.path.join(src, f))
                   for f in os.listdir(src)] or [os.path.getmtime(src)]
         return max(stamps)
     return os.path.getmtime(src)
+
+
+def fixture_memo(table: str):
+    """Decorator: build ``fn(spark, sf_dir, *extra)`` once per fixture
+    state. The key is ``(sf_dir, source_stamp(<sf_dir>/<table>.parquet),
+    *extra)``, so a regenerated fixture rebuilds instead of serving stale
+    data. Every trained artifact and materialized index a registry query
+    amortizes across invocations goes through this."""
+    def deco(fn):
+        cache: dict[tuple, object] = {}
+
+        @functools.wraps(fn)
+        def memo(spark: SparkSession, sf_dir: str, *extra):
+            key = (sf_dir,
+                   source_stamp(os.path.join(sf_dir, f"{table}.parquet")),
+                   *extra)
+            if key not in cache:
+                cache[key] = fn(spark, sf_dir, *extra)
+            return cache[key]
+
+        return memo
+
+    return deco
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh local temp directory, removed when the interpreter exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -158,43 +188,6 @@ def read_json_with_schema(spark: SparkSession, path: str, schema: StructType,
     return reader.json(path)
 
 
-def read_jdbc(spark: SparkSession, url: str, table: str,
-              properties: dict[str, str] | None = None,
-              partition_column: str | None = None,
-              lower_bound: int | None = None, upper_bound: int | None = None,
-              num_partitions: int | None = None) -> DataFrame:
-    """JDBC scan (S8). Partitioned read options exposed because a 100 TB
-    deployment must never read a warehouse table through a single connection."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("lowerBound", str(lower_bound))
-                  .option("upperBound", str(upper_bound))
-                  .option("numPartitions", str(num_partitions or 32)))
-    return reader.load()
-
-
-def read_csv_with_schema(spark: SparkSession, path: str, schema: str,
-                         header: bool = False,
-                         mode: str = "PERMISSIVE") -> DataFrame:
-    """CSV ingest with an explicit schema and corrupt-row capture: malformed
-    rows null-fill and land their raw text in ``_corrupt_record`` instead of
-    failing the job (or silently dropping, DROPMALFORMED). Explicit schema —
-    inference is a full extra pass over 100 TB and nondeterministic under
-    sampling."""
-    from pyspark.sql.types import StringType
-    from pyspark.sql.types import StructType as _St
-
-    st = _St.fromDDL(schema).add("_corrupt_record", StringType())
-    return (spark.read.schema(st)
-            .option("header", str(header).lower())
-            .option("mode", mode)
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .csv(path))
-
-
 def read_binary_files(spark: SparkSession, path: str,
                       glob: str | None = None) -> DataFrame:
     """Raw-asset ingest (images/audio/video files → the lake's binary
@@ -214,17 +207,3 @@ def read_binary_files(spark: SparkSession, path: str,
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def read_text_lines(spark: SparkSession, path: str,
-                    whole_file: bool = False,
-                    line_sep: str | None = None) -> DataFrame:
-    """Plain-text corpus ingest: one row per line (``value`` string), or
-    one row per FILE with ``whole_file=True`` (wholetext — the shape a
-    document-level pipeline wants before its own chunking, q115). A
-    custom ``line_sep`` handles corpora delimited by e.g. NUL or double
-    newline. Text is the rawest LLM-corpus format; everything downstream
-    (language ID, quality rules, dedup) starts from this scan."""
-    # NB: text() takes these as parameters, not .option()s — the method's
-    # own defaults overwrite reader options of the same name (verified).
-    return spark.read.text(path, wholetext=whole_file, lineSep=line_sep)

@@ -84,17 +84,21 @@ def vacuum(path: str, keep_last: int = 2) -> list[int]:
     return removable
 
 
-# q247's versioned table per fixture dir — built once per session, then
-# time-travel reads serve every repeated invocation (same idempotent-cache
-# pattern as the streaming upsert's gold table).
-_demo_cache: dict[str, str] = {}
-
-
 def _register_query() -> None:
     from pyspark.sql import functions as F
 
     from ..plans.registry import register
-    from .readers import load_table
+    from .readers import fixture_memo, load_table, scratch_dir
+
+    # q247's versioned table per fixture state — built once, then
+    # time-travel reads serve every repeated invocation
+    @fixture_memo("orders")
+    def demo_table(spark, sf_dir):
+        orders = load_table(spark, sf_dir, "orders")
+        path = os.path.join(scratch_dir("versioned_"), "t")
+        write_version(orders.filter(F.col("o_orderstatus") == "F"), path)
+        write_version(orders, path)
+        return path
 
     @register(
         "q247_time_travel",
@@ -114,16 +118,7 @@ def _register_query() -> None:
         atomic manifest, sources/versioned.py). The oracle recomputes both
         snapshots' counts from the raw table — if time travel leaked the
         overwrite into v0, the version-0 row count would betray it."""
-        import os
-        import tempfile
-
-        orders = load_table(spark, sf_dir, "orders")
-        if sf_dir not in _demo_cache:
-            path = os.path.join(tempfile.mkdtemp(prefix="versioned_"), "t")
-            write_version(orders.filter(F.col("o_orderstatus") == "F"), path)
-            write_version(orders, path)
-            _demo_cache[sf_dir] = path
-        path = _demo_cache[sf_dir]
+        path = demo_table(spark, sf_dir)
         cur = current_version(path)
         rows = []
         for v in list_versions(path):

@@ -2,7 +2,7 @@
 
 - K1/K5 partitioned parquet lake writes (Delta-optional)
 - K3/K4 JDBC warehouse writes with bulk-load options
-- K2 streaming parquet sink with checkpointing (see streaming.pipeline)
+- K2 checkpointed streaming upsert sink (see streaming.pipeline)
 """
 
 from __future__ import annotations
@@ -115,37 +115,6 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append",
     writer.save()
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   num_buckets: int = 32, sort_cols: list[str] | None = None,
-                   mode: str = "overwrite", fmt: str = "parquet") -> None:
-    """Bucketed managed table: pre-shuffles data into ``num_buckets`` hash
-    buckets on ``bucket_cols`` at WRITE time, so every later join or
-    aggregation on those columns is exchange-free — pay the shuffle once,
-    reuse it for every downstream query. ``sort_cols`` additionally sorts
-    within buckets, upgrading joins to zero-sort sort-merge.
-
-    This is the co-located-join lever for 100 TB fact⋈fact joins where
-    neither side broadcasts (bucket both on the join key with equal bucket
-    counts). Requires saveAsTable (bucket metadata lives in the catalog)."""
-    writer = (df.write.format(fmt).mode(mode)
-              .bucketBy(num_buckets, *bucket_cols))
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None,
-              compression: str = "zstd") -> None:
-    """ORC lake write — the columnar alternative where the surrounding stack
-    (Hive/Trino ACID tables) prefers ORC over parquet; same pushdown and
-    pruning properties under Spark's vectorized ORC reader."""
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def write_clustered(df: DataFrame, path: str, cluster_by: list[str],
                     num_files: int = 8, mode: str = "overwrite") -> None:
     """Clustered lake layout: range-repartition on the cluster keys, sort
@@ -190,17 +159,3 @@ def compact(spark, path: str, target_file_bytes: int = 128 * 1024 * 1024,
     shutil.rmtree(path)
     os.rename(tmp, path)
     return len(_glob.glob(os.path.join(path, "*.parquet")))
-
-
-def write_json(df, path: str, partition_by: list[str] | None = None,
-               compression: str | None = "gzip") -> None:
-    """JSON-lines batch export (K-family): the interchange format for
-    downstream tools that don't read parquet. Gzip-compressed by default —
-    line-JSON compresses ~10x and stays splittable at the file level (one
-    file per partition task, sized by the upstream repartition)."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)

@@ -3,14 +3,14 @@
 The reference's streaming path (Kafka → Structured Streaming → Delta append
 with checkpoint, /root/reference/pipeline/data_ingestion/
 spark_structured_datastream.py:56-79) rebuilt with:
-- a source-agnostic reader (kafka / file / rate) so the identical
-  transformation graph is testable with deterministic file sources;
+- a file-source reader, so the identical transformation graph is
+  testable with deterministic landing-zone files;
 - real watermarking (the reference disabled watermarks in its abandoned
   Flink path, flink_datastream.py:69);
 - `availableNow` trigger — bounded catch-up runs realizing the reference's
   "periodic cluster instead of always-on" cost note (README.md:297);
-- checkpointed parquet sink via `.start(path)` (the reference passed a path
-  to `.toTable()`, a latent bug noted in SURVEY.md §2.2 K2).
+- a checkpointed, key-idempotent upsert sink (`start_upsert_sink`) and an
+  in-memory drain (`run_to_memory`) for the registry's stream queries.
 
 Scale notes: stream state (windows, dedup sets) lives in the state store,
 keyed by group key — the watermark bounds its size; without a watermark,
@@ -28,20 +28,6 @@ from pyspark.sql.types import StructType
 # ---------------------------------------------------------------------------
 # sources (T1 / S5)
 # ---------------------------------------------------------------------------
-
-def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
-                      topics: str | list[str],
-                      starting_offsets: str = "earliest") -> DataFrame:
-    """Kafka source. Multi-topic subscription is one comma-joined option —
-    the reference's second .option("subscribe") silently overwrote the first
-    (spark_structured_datastream.py:59-61, SURVEY.md T1 latent bug)."""
-    subscribe = topics if isinstance(topics, str) else ",".join(topics)
-    return (spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", subscribe)
-            .option("startingOffsets", starting_offsets)
-            .load())
-
 
 def read_file_stream(spark: SparkSession, path: str, schema: StructType,
                      fmt: str = "parquet",
@@ -114,43 +100,8 @@ def dedup_within_watermark(events: DataFrame, keys: list[str],
 
 
 # ---------------------------------------------------------------------------
-# sinks / lifecycle (T2, T3, T9, K2)
+# sinks / lifecycle (T2, T3, T9)
 # ---------------------------------------------------------------------------
-
-def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                       output_mode: str = "append",
-                       available_now: bool = True,
-                       processing_time: str | None = None) -> StreamingQuery:
-    """K2/T2/T9: checkpointed parquet sink. availableNow=True drains all
-    currently-available input then stops — exactly-once batch catch-up; pass
-    processing_time for an always-on micro-batch cadence instead."""
-    writer = (df.writeStream.format("parquet")
-              .outputMode(output_mode)
-              .option("path", path)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def start_console_sink(df: DataFrame, output_mode: str = "append",
-                       num_rows: int = 20, truncate: bool = True,
-                       available_now: bool = True) -> StreamingQuery:
-    """K6: console debugging sink (reference
-    spark_structured_datastream.py:74, there commented out) — prints each
-    micro-batch to the driver's stdout. Strictly a development tap: the
-    driver materializes ``num_rows`` per batch, so it is never a
-    production drain (the checkpointed parquet/upsert sinks are)."""
-    writer = (df.writeStream.format("console")
-              .outputMode(output_mode)
-              .option("numRows", str(num_rows))
-              .option("truncate", str(truncate).lower()))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 def run_to_memory(df: DataFrame, name: str, spark: SparkSession,
                   output_mode: str = "complete",

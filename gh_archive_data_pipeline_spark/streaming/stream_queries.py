@@ -14,13 +14,36 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..session import ensure_runtime_confs
+from ..sources.readers import fixture_memo, scratch_dir
 from .pipeline import read_file_stream, run_to_memory, windowed_counts
 
 _counter = itertools.count()
 
-# One symlink dir + inferred schema per fixture dir — repeated registry/bench
-# invocations must not grow /tmp or re-list the parquet footer every call.
-_stream_dir_cache: dict[str, tuple[str, "object"]] = {}
+
+@fixture_memo("events")
+def _stream_source(spark: SparkSession, sf_dir: str,
+                   n_files: int) -> tuple[str, "object"]:
+    """(source dir, schema) of the events stream split into ``n_files``;
+    built once per fixture state so repeated registry/bench invocations
+    neither grow /tmp nor re-list the parquet footer."""
+    import glob
+    import os
+
+    path = f"{sf_dir}/events.parquet"
+    stream_dir = scratch_dir("events_stream_")
+    raw0 = spark.read.parquet(path)
+    if n_files <= 1:
+        os.symlink(path, os.path.join(stream_dir, "events.parquet"))
+    else:
+        (raw0.repartitionByRange(n_files, "ts")
+         .sortWithinPartitions("ts")
+         .write.mode("overwrite").parquet(stream_dir))
+        # file source batches by modification time: stamp range files in
+        # name order (range partition k = k-th time slice) so replay
+        # order is event-time order
+        for i, f in enumerate(sorted(glob.glob(f"{stream_dir}/part-*"))):
+            os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+    return stream_dir, raw0.schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str,
@@ -38,29 +61,8 @@ def _events_stream(spark: SparkSession, sf_dir: str,
     so nothing is dropped and results equal the single-batch run. Queries
     whose OUTPUT contract is per-batch (q76's applyInPandasWithState
     emissions) must keep n_files=1."""
-    import glob
-    import os
-    import tempfile
-
     ensure_runtime_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    key = f"{sf_dir}#{n_files}"
-    if key not in _stream_dir_cache:
-        stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-        raw0 = spark.read.parquet(path)
-        if n_files <= 1:
-            os.symlink(path, os.path.join(stream_dir, "events.parquet"))
-        else:
-            (raw0.repartitionByRange(n_files, "ts")
-             .sortWithinPartitions("ts")
-             .write.mode("overwrite").parquet(stream_dir))
-            # file source batches by modification time: stamp range files in
-            # name order (range partition k = k-th time slice) so replay
-            # order is event-time order
-            for i, f in enumerate(sorted(glob.glob(f"{stream_dir}/part-*"))):
-                os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-        _stream_dir_cache[key] = (stream_dir, raw0.schema)
-    stream_dir, schema = _stream_dir_cache[key]
+    stream_dir, schema = _stream_source(spark, sf_dir, n_files)
     raw = read_file_stream(
         spark, stream_dir, schema,
         max_files_per_trigger=1 if n_files > 1 else None)
@@ -74,7 +76,7 @@ def _events_stream(spark: SparkSession, sf_dir: str,
 def prepare_stream_fixtures(spark: SparkSession, sf_dir: str,
                             n_files_list: tuple[int, ...] = (1, 4)) -> None:
     """Pre-build the time-range-split stream source directories for a
-    fixture dir (idempotent; populates ``_stream_dir_cache``).
+    fixture dir (idempotent: each split is built once per fixture state).
 
     The split is SOURCE-LAYOUT preparation, not query work: it simulates a
     landing zone that already holds n time-ordered files (a real Kafka topic
@@ -349,10 +351,12 @@ def q152_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(hourly, name, spark, output_mode="append")
 
 
-# q195's gold table + checkpoint, cached per sf_dir: the foreachBatch upsert
-# is idempotent on keys and the checkpoint makes re-drains no-ops, so one
-# work dir per fixture serves every repeated registry/bench invocation.
-_upsert_dir_cache: dict[str, str] = {}
+# q195's gold table + checkpoint, one per fixture state: the foreachBatch
+# upsert is idempotent on keys and the checkpoint makes re-drains no-ops, so
+# one work dir per fixture serves every repeated registry/bench invocation.
+@fixture_memo("events")
+def _upsert_work_dir(spark: SparkSession, sf_dir: str) -> str:
+    return scratch_dir("stream_upsert_")
 
 
 @register(
@@ -378,14 +382,11 @@ def q195_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     converge to the same table (the exactly-once recipe for
     non-transactional sinks)."""
     import os
-    import tempfile
 
     from .pipeline import start_upsert_sink
 
     stream = _events_stream(spark, sf_dir, n_files=4)
-    if sf_dir not in _upsert_dir_cache:
-        _upsert_dir_cache[sf_dir] = tempfile.mkdtemp(prefix="stream_upsert_")
-    work = _upsert_dir_cache[sf_dir]
+    work = _upsert_work_dir(spark, sf_dir)
     gold = os.path.join(work, "gold")
     q = start_upsert_sink(stream, gold, os.path.join(work, "ck"),
                           keys=["user_id"], spark=spark,
@@ -517,11 +518,9 @@ def q379_stream_incremental_dedup(spark: SparkSession,
     (foreachBatch is at-least-once, so a retried batch REPLACES its own
     pairs partition and its own ``ingest=<batch>`` index partition instead
     of duplicating rows)."""
-    import atexit
     import glob
     import os
     import shutil
-    import tempfile
 
     from ..operators.dedup import (_cached_minhash_index,
                                    incremental_near_dup,
@@ -532,27 +531,23 @@ def q379_stream_incremental_dedup(spark: SparkSession,
     # per-call private copy of the standing-corpus index: the run MUTATES
     # its index (that's the point), so repeated invocations each start from
     # the pristine corpus-only state
-    idx = tempfile.mkdtemp(prefix="mh_stream_idx_")
+    idx = scratch_dir("mh_stream_idx_")
     shutil.rmtree(idx)
     shutil.copytree(_cached_minhash_index(spark, sf_dir), idx)
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 10 == 0)
     # landing zone: 4 doc_id-range files with increasing mtimes -> 4 real
     # micro-batches in a deterministic order (order only affects WHICH batch
     # emits a cross-batch pair, not the final set)
-    land = tempfile.mkdtemp(prefix="mh_stream_land_")
-    atexit.register(shutil.rmtree, land, ignore_errors=True)
+    land = scratch_dir("mh_stream_land_")
     (delta.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id")
      .write.mode("overwrite").parquet(land))
     for i, f in enumerate(sorted(glob.glob(f"{land}/part-*"))):
         os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
 
-    out = tempfile.mkdtemp(prefix="mh_stream_pairs_")
-    ckpt = tempfile.mkdtemp(prefix="mh_stream_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    out = scratch_dir("mh_stream_pairs_")
+    ckpt = scratch_dir("mh_stream_ckpt_")
     stream = read_file_stream(spark, land, docs.schema,
                               max_files_per_trigger=1)
 
@@ -577,30 +572,24 @@ def q379_stream_incremental_dedup(spark: SparkSession,
 
 _AVRO_SCHEMA_ID = 7
 
-# one framed-binary landing zone per fixture dir — same caching discipline
-# as _stream_dir_cache (repeated registry/bench invocations must not grow
-# /tmp or re-encode the fixture every call)
-_avro_stream_cache: dict[str, str] = {}
 
-
-def _avro_events_stream_dir(spark: SparkSession, sf_dir: str,
-                            n_files: int = 4) -> str:
+# one framed-binary landing zone per fixture state (repeated registry/bench
+# invocations must not grow /tmp or re-encode the fixture every call)
+@fixture_memo("events")
+def _avro_events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Encode the events fixture into Confluent-framed Avro-binary messages
     (magic 0x00 + big-endian schema id + Avro body — the reference
     producer's wire format, produce_fake_data.py:88-118) and land them as
-    ``n_files`` time-ordered parquet files of a single ``value binary``
-    column: the landing zone a Kafka topic dump would be."""
+    4 time-ordered parquet files of a single ``value binary`` column: the
+    landing zone a Kafka topic dump would be."""
     import glob
     import os
-    import tempfile
 
     from pyspark.sql.types import BinaryType
 
     from ..sources.readers import load_table
     from .avro_codec import encode_confluent_header, encode_event_body
 
-    if sf_dir in _avro_stream_cache:
-        return _avro_stream_cache[sf_dir]
     header = encode_confluent_header(_AVRO_SCHEMA_ID)
 
     @F.pandas_udf(BinaryType())
@@ -611,14 +600,13 @@ def _avro_events_stream_dir(spark: SparkSession, sf_dir: str,
             for a, b, c, d, e in zip(eid, uid, et, val, pr)])
 
     events = load_table(spark, sf_dir, "events")
-    land = tempfile.mkdtemp(prefix="avro_stream_")
-    (events.repartitionByRange(n_files, "ts").sortWithinPartitions("ts")
+    land = scratch_dir("avro_stream_")
+    (events.repartitionByRange(4, "ts").sortWithinPartitions("ts")
      .select(frame("event_id", "user_id", "event_type",
                    "value", "props").alias("value"))
      .write.mode("overwrite").parquet(land))
     for i, f in enumerate(sorted(glob.glob(f"{land}/part-*"))):
         os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    _avro_stream_cache[sf_dir] = land
     return land
 
 
@@ -711,39 +699,31 @@ def q396_stream_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # documents landing zone: 4 doc_id-bucket files with increasing mtimes ->
-# 4 real micro-batches; cached per fixture (same discipline as
-# _avro_stream_cache)
-_docs_stream_cache: dict[str, str] = {}
-
-
-def _docs_stream_dir(spark: SparkSession, sf_dir: str,
-                     n_files: int = 4) -> str:
-    import atexit
+# 4 real micro-batches; built once per fixture state
+@fixture_memo("documents")
+def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import os
     import shutil
-    import tempfile
 
     from ..sources.readers import load_table
 
-    if sf_dir not in _docs_stream_cache:
-        land = tempfile.mkdtemp(prefix="docs_stream_")
-        atexit.register(shutil.rmtree, land, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        # EXPLICIT batch key (doc_id % n), not repartitionByRange: the
-        # oracle must know which rows share a micro-batch without depending
-        # on data-valued range boundaries
-        for k in range(n_files):
-            tmp = f"{land}/_b{k}"
-            (docs.filter(F.col("doc_id") % n_files == k).coalesce(1)
-             .write.mode("overwrite").parquet(tmp))
-            part = glob.glob(f"{tmp}/part-*")[0]
-            dst = f"{land}/bucket{k}.parquet"
-            os.replace(part, dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
-        _docs_stream_cache[sf_dir] = land
-    return _docs_stream_cache[sf_dir]
+    n_files = 4
+    land = scratch_dir("docs_stream_")
+    docs = load_table(spark, sf_dir, "documents")
+    # EXPLICIT batch key (doc_id % n), not repartitionByRange: the
+    # oracle must know which rows share a micro-batch without depending
+    # on data-valued range boundaries
+    for k in range(n_files):
+        tmp = f"{land}/_b{k}"
+        (docs.filter(F.col("doc_id") % n_files == k).coalesce(1)
+         .write.mode("overwrite").parquet(tmp))
+        part = glob.glob(f"{tmp}/part-*")[0]
+        dst = f"{land}/bucket{k}.parquet"
+        os.replace(part, dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+    return land
 
 
 def _q407_oracle() -> str:
@@ -781,10 +761,6 @@ def q407_stream_quality_scoring(spark: SparkSession,
     counts the distinct micro-batches that contributed to each confusion
     cell, pinning the multi-batch structure itself (batch k = doc_id % 4
     == k by the landing zone's construction)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.classifier import (_cached_probe, _z_expr,
                                         quality_features)
 
@@ -793,10 +769,8 @@ def q407_stream_quality_scoring(spark: SparkSession,
     land = _docs_stream_dir(spark, sf_dir)
     schema = spark.read.parquet(f"{land}/bucket0.parquet").schema
 
-    out = tempfile.mkdtemp(prefix="probe_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="probe_stream_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    out = scratch_dir("probe_stream_out_")
+    ckpt = scratch_dir("probe_stream_ckpt_")
 
     def score_batch(batch, batch_id: int) -> None:
         feats = quality_features(batch)
@@ -876,10 +850,6 @@ def q422_stream_bloom_decontamination(spark: SparkSession,
     filter + probe + rollup bit-for-bit. This is the ingest-time shape: a
     benchmark suite's filter ships to every executor once and each
     arriving shard pays one scan."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (EVAL_DOCS, _bloom_hit_sql,
                                    _bloom_positions_h, bloom_bitmap,
                                    decon_shingle_hashes)
@@ -898,10 +868,8 @@ def q422_stream_bloom_decontamination(spark: SparkSession,
 
     land = _docs_stream_dir(spark, sf_dir)
     schema = spark.read.parquet(f"{land}/bucket0.parquet").schema
-    out = tempfile.mkdtemp(prefix="bloom_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="bloom_stream_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    out = scratch_dir("bloom_stream_out_")
+    ckpt = scratch_dir("bloom_stream_ckpt_")
 
     def probe_batch(batch, batch_id: int) -> None:
         tr = decon_shingle_hashes(batch.filter(F.col("doc_id") >= EVAL_DOCS))

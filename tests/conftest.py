@@ -97,7 +97,6 @@ SLOW_TESTS = frozenset([
     "test_properties.py::test_set_op_cardinalities",
     "test_selection.py::test_global_running_sum_invariant_to_partition_count",
     "test_selection.py::test_global_running_sum_matches_single_partition_window",
-    "test_streaming.py::test_jsonl_audit_sink_commit_protocol",
     "test_streaming.py::test_rocksdb_state_store_matches_default",
     "test_streaming.py::test_windowed_state_survives_restart",
 ])

@@ -133,23 +133,6 @@ def test_hll_incremental_distinct_error_bound(spark):
             for r in reg} == exact
 
 
-def test_csv_permissive_corrupt_capture(spark, tmp_path):
-    """S-coverage: malformed CSV rows land in the corrupt-record column
-    instead of killing the job (PERMISSIVE mode) — the ingest contract for
-    dirty landing zones."""
-    from gh_archive_data_pipeline_spark.sources.readers import read_csv_with_schema
-
-    p = tmp_path / "in.csv"
-    p.write_text("1,alpha,2.5\n2,beta,oops\n3,gamma,7.25\n")
-    df = read_csv_with_schema(
-        spark, str(p), "id long, name string, v double")
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].v == 2.5 and rows[1]._corrupt_record is None
-    assert rows[3].v == 7.25
-    bad = [r for r in rows.values() if r._corrupt_record is not None]
-    assert len(bad) == 1 and "oops" in bad[0]._corrupt_record
-
-
 def test_freq_items_superset_of_true_heavy_hitters(spark):
     """freqItems may return false positives but never misses a true heavy
     hitter above the support threshold."""
@@ -241,11 +224,13 @@ def test_zorder_clusters_both_dimensions(spark):
     better than a linear sort bounds its non-sorted dimension: with 16x16
     buckets split into 16 z-ordered chunks, each chunk spans at most half
     of each axis (a linear x-sort leaves y spanning the full axis)."""
-    from gh_archive_data_pipeline_spark.operators.layout import zvalue
+    from gh_archive_data_pipeline_spark.operators.layout import (
+        _interleave_sql,
+    )
 
     rows = [(x, y) for x in range(16) for y in range(16)]
     df = spark.createDataFrame(rows, "x int, y int").withColumn(
-        "z", zvalue("x", "y"))
+        "z", F.expr(_interleave_sql("x", "y", spark_dialect=True)))
     ordered = [ (r.x, r.y) for r in df.orderBy("z").collect() ]
     chunk = len(ordered) // 16
     for i in range(16):
@@ -3429,27 +3414,45 @@ def test_chunk_dedup_clean_fully_removed_doc(spark):
     assert got[1].cleaned_md5 == hashlib.md5(b"").hexdigest()
 
 
-def test_bloom_no_false_negatives_and_bounded_bits(spark):
-    """bloom_build/bloom_probe (q415 primitives): every inserted key must
-    hit (Bloom filters have no false negatives), the set-bit table is
-    bounded by m, and a disjoint probe set's hits are only ever FPs."""
+def _bloom_probe(spark, inserted_texts, probe_rows, m=1024):
+    """q415's production Bloom path on hand-made docs: 8-word shingle
+    hashes -> k positions -> packed bitmap -> scan-side hit expression.
+    Returns (set-bit row count, [(doc_id, hit)] per probe shingle)."""
     from gh_archive_data_pipeline_spark.operators.dedup import (
-        bloom_build,
-        bloom_probe,
+        _bloom_hit_sql,
+        _bloom_positions_h,
+        bloom_bitmap,
+        decon_shingle_hashes,
     )
 
-    inserted = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(50)], "k string")
-    bits = bloom_build(inserted, "k", m=1024, k=3)
-    assert bits.count() <= min(1024, 150)
-    probed = bloom_probe(inserted, "k", bits, m=1024, k=3)
-    assert probed.filter("bloom_hit = 0").count() == 0  # no false negatives
-    others = spark.createDataFrame(
-        [(f"other-{i}",) for i in range(200)], "k string")
-    fp = bloom_probe(others, "k", bits, m=1024, k=3).filter("bloom_hit = 1")
+    schema = "doc_id long, text string"
+    ins = decon_shingle_hashes(spark.createDataFrame(
+        list(enumerate(inserted_texts)), schema))
+    bits = (ins.select(F.explode(_bloom_positions_h(
+        F.col("h1"), F.col("h2"), m=m)).alias("pos")).distinct())
+    hit = F.expr(_bloom_hit_sql(bloom_bitmap(bits, m=m), m=m))
+    probed = decon_shingle_hashes(spark.createDataFrame(probe_rows, schema))
+    return bits.count(), [(r.doc_id, r.hit) for r in probed.select(
+        "doc_id", hit.alias("hit")).collect()]
+
+
+def _eight_words(key: str) -> str:
+    return f"{key} b c d e f g h"  # exactly one 8-word shingle
+
+
+def test_bloom_no_false_negatives_and_bounded_bits(spark):
+    """q415's Bloom primitives: every inserted key must hit (Bloom filters
+    have no false negatives), the set-bit table is bounded by m, and a
+    disjoint probe set's hits are only ever FPs."""
+    keys = [_eight_words(f"key-{i}") for i in range(50)]
+    n_bits, got = _bloom_probe(spark, keys, list(enumerate(keys)))
+    assert n_bits <= min(1024, 150)
+    assert len(got) == 50 and all(h for _, h in got)  # no false negatives
+    others = [(i, _eight_words(f"other-{i}")) for i in range(200)]
+    _, fp = _bloom_probe(spark, keys, others)
     # 150/1024 bits set -> per-key FP ~ (0.146)^3 ~ 0.3%; 200 probes
     # should see at most a handful (generous bound, deterministic hashes)
-    assert fp.count() <= 10
+    assert sum(h for _, h in fp) <= 10
 
 
 def test_tokenizer_fertility_invariants(spark):
@@ -3590,39 +3593,20 @@ def test_oov_audit_invariants(spark):
 def test_bloom_probe_empty_filter_all_misses(spark):
     """Probing an EMPTY filter (no eval set) must return zero hits, not
     error — the decontamination pipeline's no-benchmark edge."""
-    from gh_archive_data_pipeline_spark.operators.dedup import (
-        bloom_build,
-        bloom_probe,
-    )
-
-    empty = spark.createDataFrame([], "k string")
-    bits = bloom_build(empty, "k")
-    probes = spark.createDataFrame([("a",), ("b",)], "k string")
-    got = bloom_probe(probes, "k", bits).collect()
-    assert len(got) == 2 and all(r.bloom_hit == 0 for r in got)
+    _, got = _bloom_probe(spark, [], [(0, _eight_words("a")),
+                                      (1, _eight_words("b"))])
+    assert len(got) == 2 and not any(h for _, h in got)
 
 
 def test_bloom_probe_duplicate_rows_no_false_negative(spark):
     """Round-8 ADVICE regression: duplicate probe rows must NOT pool their
-    matched-position counts into 2k != k and fake a miss — an inserted key
-    probed twice (or thrice) hits on EVERY copy, and NULL keys read 0."""
-    from gh_archive_data_pipeline_spark.operators.dedup import (
-        bloom_build,
-        bloom_probe,
-    )
-
-    inserted = spark.createDataFrame([("dup",), ("solo",)], "k string")
-    bits = bloom_build(inserted, "k", m=1024, k=3)
-    probes = spark.createDataFrame(
-        [("dup",), ("dup",), ("dup",), ("solo",), (None,)], "k string")
-    got = bloom_probe(probes, "k", bits, m=1024, k=3).collect()
-    assert len(got) == 5
-    hits = {}
-    for r in got:
-        hits.setdefault(r.k, []).append(r.bloom_hit)
-    assert hits["dup"] == [1, 1, 1]      # every duplicate copy hits
-    assert hits["solo"] == [1]
-    assert hits[None] == [0]             # NULL key is a miss, not NULL
+    matched positions and fake a miss — an inserted text probed twice (or
+    thrice) hits on EVERY copy, and a NULL text yields no probe at all."""
+    dup, solo = _eight_words("dup"), _eight_words("solo")
+    _, got = _bloom_probe(spark, [dup, solo],
+                          [(0, dup), (1, dup), (2, dup), (3, solo),
+                           (4, None)])
+    assert sorted(got) == [(0, True), (1, True), (2, True), (3, True)]
 
 
 def test_ahash_brightness_invariance_and_self_distance():
@@ -4066,18 +4050,13 @@ def test_q123_pair_hof_matches_double_explode(spark, tmp_path):
         "m n o",          # simple ascending
     ]
     sf = _write_synth_docs(spark, tmp_path, texts)
+    from gh_archive_data_pipeline_spark.operators.text_queries import (
+        _token_pairs,
+    )
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
     docs = load_table(spark, sf, "documents")
-    ws_col = F.array_sort(F.array_distinct(
-        F.filter(F.split("text", " "), lambda t: t != "")))
-    new = (docs.select(ws_col.alias("ws"))
-           .select(F.explode(F.expr(
-               "flatten(transform(ws, (x, i) -> "
-               "transform(slice(ws, i + 2, size(ws) - i - 1), "
-               "y -> struct(x AS tok_a, y AS tok_b))))")).alias("pr"))
-           .select("pr.tok_a", "pr.tok_b")
-           .groupBy("tok_a", "tok_b").count())
+    new = _token_pairs(docs).groupBy("tok_a", "tok_b").count()
     toks = docs.select(F.array_distinct(
         F.filter(F.split("text", " "), lambda t: t != "")).alias("w"))
     old = (toks.select(F.explode("w").alias("tok_a"), "w")

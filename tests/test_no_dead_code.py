@@ -1,0 +1,94 @@
+"""Guard against unreachable package code.
+
+Every top-level function or class in the package that is not a registered
+query must be referenced from somewhere other than its own definition and
+the tests: another package module, ``bench.py``, ``tools/``,
+``perfbench/`` or ``__spark_entry__.py``. A reference is a name or
+attribute in code, or the name as a word inside a string literal (a
+docstring cross-reference such as ``:func:`ivf_vacuum```). Comments do not
+count. Code that only tests call either gets a real caller or goes.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+from collections import Counter
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(ROOT, "gh_archive_data_pipeline_spark")
+CALLERS = [PACKAGE, os.path.join(ROOT, "tools"), os.path.join(ROOT, "perfbench"),
+           os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "__spark_entry__.py")]
+
+# Kept without a non-test caller, each for a stated reason.
+ALLOWED = {
+    "write_delta": "README environment-blocked seam (no Delta jars); a test "
+                   "pins its clear error",
+    "jdbc_ddl_types": "README environment-blocked seam (no JDBC driver); a "
+                      "test pins the DDL type mapping",
+    "plan_metrics": "ROADMAP's metrics-as-data API: executed-plan metrics "
+                    "as a DataFrame",
+}
+
+_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _py_files(path: str):
+    if path.endswith(".py"):
+        yield path
+        return
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if x != "tests"]  # perfbench/tests
+        for f in files:
+            if f.endswith(".py"):
+                yield os.path.join(d, f)
+
+
+def _names(tree: ast.AST) -> Counter:
+    out: Counter = Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            out[n.attr] += 1
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.update(_WORD.findall(n.value))
+    return out
+
+
+def _is_registered(node) -> bool:
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", getattr(f, "attr", None)) == "register":
+            return True
+    return False
+
+
+def _unreferenced() -> dict[str, str]:
+    refs: Counter = Counter()
+    # name -> (where, uses of the name inside its own definition(s))
+    own: dict[str, tuple[str, int]] = {}
+    for root in CALLERS:
+        for path in _py_files(root):
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in tree.body:
+                names = _names(node)
+                refs.update(names)
+                if (path.startswith(PACKAGE + os.sep)
+                        and isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                        and not _is_registered(node)):
+                    where = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+                    seen = own.get(node.name, (where, 0))
+                    own[node.name] = (seen[0], seen[1] + names[node.name])
+    return {name: where for name, (where, n) in own.items()
+            if refs[name] == n}
+
+
+def test_no_package_code_only_tests_reach():
+    dead = {name: where for name, where in _unreferenced().items()
+            if name not in ALLOWED}
+    assert not dead, (
+        "top-level package code with no caller outside tests (give it a "
+        f"real caller or delete it): {dead}")

@@ -23,12 +23,17 @@ def docs(spark):
 # MinHash
 # ---------------------------------------------------------------------------
 
+def _signatures(df, k=64):
+    """doc_id -> MinHash signature, via the lanes q42 and q376 run."""
+    return {r.doc_id: r.mh for r in dedup.hashed_shingles(df).select(
+        "doc_id", dedup._minhash_array(k).alias("mh")).collect()}
+
+
 def test_identical_docs_identical_signatures(spark):
     df = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e f"), (3, "x y z w v u")],
         "doc_id long, text string")
-    sigs = {r["doc_id"]: [r[f"mh_{i}"] for i in range(64)]
-            for r in dedup.minhash_signatures(df).collect()}
+    sigs = _signatures(df)
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[3]
 
@@ -38,9 +43,7 @@ def test_minhash_component_agreement_estimates_jaccard(spark, docs):
     √(J(1−J)/64) ≤ 0.0625 — assert within 4σ for the closest fixture pair."""
     top = (dedup.ngram_jaccard_pairs(docs).orderBy(F.desc("jaccard"))
            .limit(1).collect()[0])
-    sigs = {r["doc_id"]: [r[f"mh_{i}"] for i in range(64)]
-            for r in dedup.minhash_signatures(
-                docs.filter(F.col("doc_id").isin(top.doc_a, top.doc_b))).collect()}
+    sigs = _signatures(docs.filter(F.col("doc_id").isin(top.doc_a, top.doc_b)))
     agree = sum(x == y for x, y in zip(sigs[top.doc_a], sigs[top.doc_b])) / 64
     assert abs(agree - top.jaccard) <= 0.25
 
@@ -312,8 +315,6 @@ def test_embedding_near_dup_lsh_prefilter_subset(spark):
 
 
 def test_hash_fan_guards(docs):
-    with pytest.raises(ValueError, match="codegen-safe cap"):
-        dedup.minhash_signatures(docs, num_hashes=512)
     with pytest.raises(ValueError, match="codegen-safe cap"):
         dedup.minhash_near_dup(docs, num_hashes=1024, bands=64)
     with pytest.raises(ValueError, match="must divide"):

@@ -183,20 +183,6 @@ def test_write_delta_raises_clear_error_without_jars(spark, tmp_path):
         write_delta(df, str(tmp_path / "d"))
 
 
-def test_orc_roundtrip(spark, tmp_path):
-    """ORC write/read round trip with partition pruning intact."""
-    from gh_archive_data_pipeline_spark.sources.writers import write_orc
-
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        "id long, grp string, v double")
-    out = str(tmp_path / "orc")
-    write_orc(df, out, partition_by=["grp"])
-    back = spark.read.orc(out)
-    assert back.count() == 3
-    assert {r.id for r in back.filter("grp = 'a'").collect()} == {1, 3}
-
-
 def test_clustered_write_disjoint_sorted_files(spark, tmp_path):
     """write_clustered must produce files with disjoint key ranges (the
     min/max-pruning precondition) and sorted content within each file."""
@@ -272,56 +258,6 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 5000
     assert back.agg({"id": "sum"}).collect()[0][0] == 5000 * 4999 // 2
-
-
-def test_incremental_ingestor_resumes_after_crash(tmp_path):
-    from gh_archive_data_pipeline_spark.pipeline.incremental_ingest import (
-        IncrementalIngestor,
-    )
-
-    bm = str(tmp_path / "bookmark.json")
-    units = [f"2024-01-01-{h}" for h in range(5)]
-    processed = []
-
-    def boom(u):
-        if u == units[2]:
-            raise RuntimeError("transient failure")
-        processed.append(u)
-        return u
-
-    ing = IncrementalIngestor(bm)
-    try:
-        ing.run(units, boom)
-    except RuntimeError:
-        pass
-    # two units committed before the crash; the failed one NOT bookmarked
-    assert processed == units[:2]
-    assert ing.pending(units) == units[2:]
-
-    # recovery run processes only the remainder (no double processing)
-    done_now = ing.run(units, lambda u: processed.append(u) or u)
-    assert list(done_now) == units[2:]
-    assert processed == units[:2] + units[2:]
-    assert ing.pending(units) == []
-
-    # late-discovered backfill hole is picked up on the next run
-    assert ing.pending(units + ["2023-12-31-23"]) == ["2023-12-31-23"]
-
-    # targeted reprocess
-    ing.bookmark.reset([units[1]])
-    assert ing.pending(units) == [units[1]]
-
-
-def test_incremental_ingestor_max_units_batching(tmp_path):
-    from gh_archive_data_pipeline_spark.pipeline.incremental_ingest import (
-        IncrementalIngestor,
-    )
-
-    ing = IncrementalIngestor(str(tmp_path / "bm.json"))
-    units = [str(i) for i in range(7)]
-    assert set(ing.run(units, lambda u: u, max_units=3)) == {"0", "1", "2"}
-    assert set(ing.run(units, lambda u: u, max_units=3)) == {"3", "4", "5"}
-    assert set(ing.run(units, lambda u: u)) == {"6"}
 
 
 def test_versioned_lake_time_travel(spark, tmp_path):
@@ -425,22 +361,6 @@ def test_read_binary_files_globs_and_loads_content(spark, tmp_path):
     assert "dt" in df.columns  # partition discovery
     one_day = df.filter("dt = '2024-01-02'")
     assert one_day.count() == 1
-
-
-def test_read_text_lines_and_whole_file(spark, tmp_path):
-    from gh_archive_data_pipeline_spark.sources.readers import (
-        read_text_lines)
-
-    p = tmp_path / "corpus"
-    p.mkdir()
-    (p / "d1.txt").write_text("line one\nline two\n")
-    (p / "d2.txt").write_text("solo\n")
-    lines = read_text_lines(spark, str(p))
-    assert sorted(r.value for r in lines.collect()) == [
-        "line one", "line two", "solo"]
-    docs = read_text_lines(spark, str(p), whole_file=True)
-    texts = sorted(r.value for r in docs.collect())
-    assert texts == ["line one\nline two\n", "solo\n"]
 
 
 def test_gold_dim_parity_on_multi_event_file(spark, tmp_path):

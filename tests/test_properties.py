@@ -70,21 +70,23 @@ def test_profiler_bounds(spark, values):
     assert row.sum_value == pytest.approx(sum(values), rel=1e-6, abs=1e-6)
 
 
+def _signatures(df, k=64):
+    """doc_id -> MinHash signature, via the lanes q42 and q376 run."""
+    return {r.doc_id: r.mh for r in dedup.hashed_shingles(df).select(
+        "doc_id", dedup._minhash_array(k).alias("mh")).collect()}
+
+
 @given(shift=st.integers(0, 3))
 @PROP_SETTINGS
 def test_minhash_signature_deterministic(spark, shift):
     """Same text → same signature regardless of row order / partitioning."""
     texts = ["a b c d e", "b c d e f", "c d e f g", "d e f g h"]
     rotated = texts[shift:] + texts[:shift]
-    base = {r["doc_id"]: [r[f"mh_{i}"] for i in range(64)]
-            for r in dedup.minhash_signatures(
-                spark.createDataFrame(list(enumerate(texts)),
-                                      "doc_id long, text string")).collect()}
-    rot = {r["doc_id"]: [r[f"mh_{i}"] for i in range(64)]
-           for r in dedup.minhash_signatures(
-               spark.createDataFrame(
-                   [(texts.index(t), t) for t in rotated],
-                   "doc_id long, text string").repartition(3)).collect()}
+    base = _signatures(spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"))
+    rot = _signatures(spark.createDataFrame(
+        [(texts.index(t), t) for t in rotated],
+        "doc_id long, text string").repartition(3))
     assert base == rot
 
 
@@ -220,8 +222,7 @@ def test_minhash_signature_matches_python_reference(spark):
     df = spark.createDataFrame(texts, "doc_id long, text string")
     k, p = 8, dedup.MINHASH_P
     a, b = dedup.minhash_coeffs(k)
-    got = {r.doc_id: [r[f"mh_{i}"] for i in range(k)]
-           for r in dedup.minhash_signatures(df, num_hashes=k).collect()}
+    got = _signatures(df, k)
     for doc_id, text in texts:
         w = text.split(" ")
         sh = {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}

@@ -45,6 +45,13 @@ def stream_dir(spark, tmp_path_factory):
     return str(d)
 
 
+def _parquet_sink(df, path, checkpoint):
+    """Checkpointed append-mode parquet sink, drained with availableNow."""
+    return (df.writeStream.format("parquet").outputMode("append")
+            .option("path", path).option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True).start())
+
+
 def _read(spark, stream_dir):
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType,
@@ -100,11 +107,11 @@ def test_sessionized_stream(spark, stream_dir):
 def test_parquet_sink_exactly_once_rerun(spark, stream_dir, tmp_path):
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     stream = _read(spark, stream_dir)
-    q = sp.start_parquet_sink(stream, out_dir, ckpt)
+    q = _parquet_sink(stream, out_dir, ckpt)
     q.awaitTermination(120)
     n1 = spark.read.parquet(out_dir).count()
     # second run with the same checkpoint: nothing new → no duplicate rows
-    q2 = sp.start_parquet_sink(_read(spark, stream_dir), out_dir, ckpt)
+    q2 = _parquet_sink(_read(spark, stream_dir), out_dir, ckpt)
     q2.awaitTermination(120)
     n2 = spark.read.parquet(out_dir).count()
     assert n1 == 6 and n2 == 6
@@ -161,7 +168,7 @@ def test_windowed_state_survives_restart(spark, tmp_path):
                .groupBy(F.window("ts", "10 minutes"))
                .agg(F.count(F.lit(1)).alias("n"))
                .select(F.col("window.start").alias("window_start"), "n"))
-        q = sp.start_parquet_sink(agg, out, ckpt)
+        q = _parquet_sink(agg, out, ckpt)
         assert q.awaitTermination(120)
 
     # run 1: watermark ends at 10:15 -> the 10:00 window finalizes; the
@@ -258,7 +265,7 @@ def test_confluent_framed_binary_stream_end_to_end(spark, tmp_path):
                      F.sum("value").alias("total"))
                 .select(F.col("window.start").alias("window_start"),
                         "event_type", "n", "total"))
-    q = sp.start_parquet_sink(windowed, out, ckpt)
+    q = _parquet_sink(windowed, out, ckpt)
     assert q.awaitTermination(120)
 
     got = {(r.window_start.hour, r.event_type): (r.n, r.total)
@@ -311,7 +318,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     def drain():
         counts = sp.windowed_counts(_read(spark, str(src)),
                                     watermark="10 minutes")
-        q = sp.start_parquet_sink(counts, out, ckpt)
+        q = _parquet_sink(counts, out, ckpt)
         q.awaitTermination(120)
 
     drain()
@@ -591,110 +598,6 @@ def test_transform_with_state_in_pandas(spark, stream_dir):
                 "spark.sql.streaming.stateStore.providerClass", before)
 
 
-def test_write_json_round_trip(spark, tmp_path):
-    """K-family JSON-lines export: partitioned gzip write, schema-stable
-    read-back."""
-    from gh_archive_data_pipeline_spark.sources.writers import write_json
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5), (3, "a", 3.5)],
-        "id long, grp string, v double")
-    out = str(tmp_path / "json_out")
-    write_json(df, out, partition_by=["grp"])
-    back = spark.read.schema("id long, v double, grp string").json(out)
-    assert sorted((r.id, r.grp, r.v) for r in back.collect()) == [
-        (1, "a", 1.5), (2, "b", 2.5), (3, "a", 3.5)]
-
-
-def test_jsonl_audit_sink_commit_protocol(spark, tmp_path):
-    """Custom Python DataSource WRITER: per-task part files + an atomic
-    driver-side manifest commit; the manifest row count must equal the
-    DataFrame's and every listed file must exist."""
-    import json as _json
-
-    from gh_archive_data_pipeline_spark.sources.jsonl_sink import (
-        JsonlAuditDataSource, read_manifest,
-    )
-
-    spark.dataSource.register(JsonlAuditDataSource)
-    out = str(tmp_path / "audit")
-    df = (spark.range(100)
-          .withColumn("label", F.concat(F.lit("row-"), F.col("id")))
-          .repartition(4))
-    df.write.format("jsonl_audit").option("path", out).mode("append").save()
-
-    manifest = read_manifest(out)
-    assert manifest["rows"] == 100
-    assert len(manifest["files"]) == 4
-    seen = []
-    for fname in manifest["files"]:
-        with open(f"{out}/{fname}") as fh:
-            seen += [_json.loads(line) for line in fh]
-    assert len(seen) == 100
-    assert {r["id"] for r in seen} == set(range(100))
-    assert all(r["label"] == f"row-{r['id']}" for r in seen)
-
-
-def test_supervisor_restarts_failed_query(spark, tmp_path):
-    """A transient foreachBatch failure kills the query; the supervisor
-    rebuilds it against the same checkpoint and the retry completes with
-    the batch delivered exactly once."""
-    from gh_archive_data_pipeline_spark.streaming.supervisor import (
-        run_supervised,
-    )
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    spark.range(10).selectExpr("id", "id * 2 AS x").write.parquet(str(src))
-    schema = spark.read.parquet(str(src)).schema
-    poison = tmp_path / "poison"
-    poison.touch()
-
-    def factory():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-
-        def write(batch, _bid):
-            if poison.exists():
-                poison.unlink()
-                raise RuntimeError("transient sink failure")
-            batch.write.mode("append").parquet(str(out))
-
-        return (stream.writeStream.foreachBatch(write)
-                .option("checkpointLocation", str(tmp_path / "ck"))
-                .trigger(availableNow=True).start())
-
-    res = run_supervised(factory, max_restarts=2, timeout_sec=90)
-    assert res.succeeded
-    assert res.restarts == 1
-    assert len(res.errors) == 1 and res.errors[0].startswith("attempt 0")
-    assert spark.read.parquet(str(out)).count() == 10  # exactly once
-
-
-def test_supervisor_gives_up_after_max_restarts(spark, tmp_path):
-    from gh_archive_data_pipeline_spark.streaming.supervisor import (
-        run_supervised,
-    )
-
-    src = tmp_path / "src"
-    spark.range(3).write.parquet(str(src))
-    schema = spark.read.parquet(str(src)).schema
-
-    def factory():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-
-        def write(batch, _bid):
-            raise RuntimeError("permanent failure")
-
-        return (stream.writeStream.foreachBatch(write)
-                .option("checkpointLocation", str(tmp_path / "ck2"))
-                .trigger(availableNow=True).start())
-
-    res = run_supervised(factory, max_restarts=2, backoff_sec=0.1,
-                         timeout_sec=60)
-    assert not res.succeeded
-    assert len(res.errors) == 3  # initial + 2 restarts, all recorded
-
-
 def test_alert_rules_planted_slow_batch(spark):
     """evaluate_alerts over a planted metrics table: a slow batch fires
     SlowBatch; the sustained=2 variant (the Prometheus FOR-clause analog)
@@ -790,19 +693,6 @@ def test_rocksdb_state_store_matches_default(spark, tmp_path):
     default = drain(None, "default_drain")
     assert rocks == default
     assert len(rocks) > 0
-
-
-def test_console_sink_drains_all_rows(spark, stream_dir):
-    """K6: the console sink runs to completion under availableNow, routes
-    to the console provider, and processes every input row (the print
-    itself lands on the JVM's stdout, outside pytest's capture — the
-    query's progress telemetry is the assertable surface)."""
-    q = sp.start_console_sink(_read(spark, stream_dir), num_rows=10)
-    assert q.awaitTermination(120)
-    progresses = q.recentProgress
-    assert progresses, "no micro-batch ran"
-    assert sum(p["numInputRows"] for p in progresses) == 6
-    assert "console" in progresses[-1]["sink"]["description"].lower()
 
 
 def test_avro_binary_codec_golden_vectors_and_round_trip():

@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import force_execute  # noqa: E402
+from bench import force_execute, prep  # noqa: E402
 from gh_archive_data_pipeline_spark.plans.metrics import (  # noqa: E402
     executed_shuffle_summary,
 )
@@ -30,18 +30,7 @@ def main() -> None:
     n_samples = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="minibench")
-    warm = spark.range(100_000).selectExpr("id % 7 AS k", "id * 1.5 AS v")
-    warm.groupBy("k").sum("v").count()
-    from gh_archive_data_pipeline_spark.streaming.stream_queries import (
-        prepare_stream_fixtures,
-    )
-    prepare_stream_fixtures(spark, sf_dir)
-    from gh_archive_data_pipeline_spark.operators.classifier import _cached_probe
-    from gh_archive_data_pipeline_spark.operators.dedup import (
-        _cached_minhash_index,
-    )
-    _cached_minhash_index(spark, sf_dir)
-    _cached_probe(spark, sf_dir)
+    prep(spark, sf_dir)
     specs = all_queries()
     names = [n for n in specs if any(s in n for s in subs)]
     for name in names:

@@ -4,7 +4,7 @@ Times each stage of q440's build_disposition_table (and the q443 tail)
 in isolation with the noop sink so stage cost is attributed to the stage
 that computes it, not the first downstream consumer of its checkpoint.
 
-Usage: python tools/profile_phases.py [q440|q295|q167|q374]
+Usage: python tools/profile_phases.py [q440|q295]
 """
 
 from __future__ import annotations
@@ -30,12 +30,12 @@ def noop(df, desc):
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "q440"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from bench import prep
     from gh_archive_data_pipeline_spark.session import get_spark
     from pyspark.sql import functions as F
 
     spark = get_spark(app_name=f"profile-{which}")
-    warm = spark.range(100_000).selectExpr("id % 7 AS k", "id * 1.5 AS v")
-    warm.groupBy("k").sum("v").count()
+    prep(spark, sf_dir)
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
     if which == "q440":
@@ -99,29 +99,6 @@ def main() -> None:
         o = degree_oriented(edges).select("s", "t")
         noop(o, "degree_oriented (edges re-eval x3)")
         print(f"  TOTAL: {time.monotonic() - t0:.2f}s")
-    elif which == "q374":
-        from gh_archive_data_pipeline_spark.operators.dedup import (
-            dedup_pipeline,
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        w = F.split(F.col("text"), " ")
-        quality = docs.select(
-            "doc_id", "text",
-            F.size(w).cast("bigint").alias("n_tokens"),
-            ((F.length("text") >= 200)
-             & (F.size(F.array_distinct(w)) / F.size(w) > 0.3))
-            .alias("q_ok"))
-        passing = quality.filter("q_ok").select("doc_id", "text")
-        fp = passing.withColumn("f", F.md5(
-            F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))))
-        keepers = fp.groupBy("f").agg(F.min("doc_id").alias("keeper"))
-        curated = (fp.join(keepers.withColumnRenamed("f", "kf"),
-                           (F.col("f") == F.col("kf"))
-                           & (F.col("doc_id") == F.col("keeper")))
-                   .select("doc_id", "text"))
-        noop(quality, "quality (one eval)")
-        noop(curated, "curated (one eval)")
-        noop(dedup_pipeline(curated, threshold=0.3), "dedup_pipeline")
     spark.stop()
 
 

@@ -16,21 +16,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, force_execute  # noqa: E402
+from bench import HEADLINE, force_execute, prep  # noqa: E402
 from gh_archive_data_pipeline_spark.plans.metrics import (  # noqa: E402
     executed_shuffle_summary,
 )
 from gh_archive_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 from gh_archive_data_pipeline_spark.session import get_spark  # noqa: E402
-from gh_archive_data_pipeline_spark.streaming.stream_queries import (  # noqa: E402
-    prepare_stream_fixtures,
-)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="snapshot_plan_metrics")
-    prepare_stream_fixtures(spark, sf_dir)
+    prep(spark, sf_dir)
     specs = all_queries()
     print("PLAN_SNAPSHOT: dict[str, dict] = {")
     for name in HEADLINE:
