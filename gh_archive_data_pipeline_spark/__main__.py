@@ -108,7 +108,7 @@ def _demo(spark, args) -> int:
     import time
 
     from .pipeline import stages
-    from .pipeline.runner import Pipeline
+    from .pipeline.runner import gh_archive_pipeline
 
     src = args.src or stages.REAL_SAMPLE
     if not os.path.exists(src):
@@ -117,18 +117,6 @@ def _demo(spark, args) -> int:
     out = args.out or tempfile.mkdtemp(prefix="gh_demo_")
     multi_line = not args.json_lines
     t0 = time.monotonic()
-
-    def silver_task():
-        silver = stages.to_silver(
-            stages.read_bronze(spark, src, multi_line=multi_line))
-        stages.write_silver(silver, f"{out}/silver")
-        return spark.read.parquet(f"{out}/silver")
-
-    def gold_task(silver):
-        gold = stages.build_gold(silver)
-        for name, df in gold.items():
-            df.write.mode("overwrite").parquet(f"{out}/gold/{name}")
-        return {n: spark.read.parquet(f"{out}/gold/{n}") for n in gold}
 
     def profile_task(gold):
         # the q392 parity frame: per-dim row count / key sum / value md5
@@ -162,9 +150,8 @@ def _demo(spark, args) -> int:
             json.dump(manifest, f, indent=2, sort_keys=True)
         return manifest
 
-    results = (Pipeline()
-               .add("silver", silver_task)
-               .add("gold", gold_task, upstream=("silver",))
+    results = (gh_archive_pipeline(spark, src, f"{out}/silver",
+                                   f"{out}/gold", multi_line=multi_line)
                .add("profile", profile_task, upstream=("gold",))
                .add("manifest", manifest_task,
                     upstream=("silver", "gold", "profile"))

@@ -5,7 +5,7 @@ Five strategies, all pure DataFrame ops (no Python in the hot path):
 - exact_dedup:        content-hash groupBy (D1/D3 exact pass)
 - ngram_jaccard:      word-shingle Jaccard similarity on candidate pairs
 - minhash_near_dup:   MinHash + LSH banding — the 100 TB-scale near-dup path
-- simhash:            64-bit SimHash fingerprints (Hamming-bucket dedup)
+- simhash_portable:   64-bit SimHash fingerprints (Hamming-bucket dedup)
 - embedding near-dup: see operators.similarity (cosine threshold)
 
 Scale design: MinHash/LSH is the only strategy whose cost is near-linear in
@@ -262,42 +262,14 @@ def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """SimHash fingerprints: per-token xxhash64, bitwise ±1 majority vote.
-
-    explode(tokens) → explode(bit index) is avoided: instead each bit's vote
-    is a sum over tokens of ±1 extracted with shiftright/bit-and — ``bits``
-    aggregate expressions in ONE groupBy(doc) pass.
-    """
-    if not 0 < bits <= 64:
-        raise ValueError(f"bits={bits}: signature packs into one bigint (≤64)")
-    toks = F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("token")
-    tok_df = docs.select(F.col(id_col), toks).withColumn(
-        "h", F.xxhash64("token"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v_{i}")
-        for i in range(bits)
-    ]
-    voted = tok_df.groupBy(id_col).agg(*votes)
-    sig = None
-    for i in range(bits):
-        bit = F.when(F.col(f"v_{i}") > 0, F.lit(1).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-        term = F.shiftleft(bit, i)
-        sig = term if sig is None else sig.bitwiseXOR(term)
-    return voted.select(F.col(id_col), sig.alias("simhash"))
-
-
 def simhash_portable(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash whose every step an ANSI SQL engine replays exactly.
 
-    Same majority-vote algorithm as :func:`simhash`, with two portability
-    substitutions: the token hash is md5 split into two 32-bit halves
-    (both positive in int64 — no engine-specific xxhash, no sign games),
+    Per-token hash, bitwise ±1 majority vote: 64 aggregate expressions in
+    ONE groupBy(doc) pass, no explode over bit indexes. Two portability
+    choices: the token hash is md5 split into two 32-bit halves (both
+    positive in int64 — no engine-specific xxhash, no sign games),
     and the fingerprint lands as TWO bigint columns (simhash_hi bits
     32..63, simhash_lo bits 0..31) because packing bit 63 would need
     two's-complement wraparound that SQL engines disagree on. Hamming
@@ -539,9 +511,8 @@ def _q43_oracle() -> str:
 @register("q43_simhash", sql=_q43_oracle())
 def q43_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 SimHash 64-bit fingerprints in oracle-portable (hi, lo) form —
-    every vote and packed bit hash-matched against DuckDB; the xxhash64
-    single-bigint variant (:func:`simhash`) stays pinned by the NumPy
-    reference unit test."""
+    every vote and packed bit hash-matched against DuckDB and pinned by
+    the NumPy reference unit test."""
     docs = load_table(spark, sf_dir, "documents")
     return simhash_portable(docs)
 
@@ -1749,9 +1720,7 @@ def q450_minhash_tombstone_probe(spark: SparkSession,
     duplicates) while delta-internal pairs and pairs with surviving
     corpus members are untouched. A fresh index is built in-query (the
     cached q376 index is shared state a delete must not mutate) — the
-    q448/q449 convention. :func:`compact_minhash_index` folding the
-    tombstones bit-equal to an index built from the surviving corpus is
-    pinned by unit test."""
+    q448/q449 convention."""
     docs = load_table(spark, sf_dir, "documents")
     d = scratch_dir("minhash_tomb_")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -1827,93 +1796,17 @@ def minhash_index_delete(spark: SparkSession, index_dir: str,
     land as one collision-free ``tombstones/delete=<uuid>`` parquet
     partition (canonical column ``id``); no index file moves. Every
     :func:`incremental_near_dup` probe anti-joins the set out of both its
-    band scan and its shingle verify scan, and
-    :func:`compact_minhash_index` folds deletions permanently — the
-    compacted index is bit-equal to one built from the surviving corpus
-    (signatures are a pure function of the text, pinned by unit test).
-    Re-ingesting a previously deleted id requires a compact first (the
-    no-resurrection rule shared by all three index planes). Returns the
-    partition name."""
+    band scan and its shingle verify scan, so probe results equal those
+    of an index built from the surviving corpus (signatures are a pure
+    function of the text, pinned by unit test). Re-ingesting a previously
+    deleted id requires a fresh build first (the no-resurrection rule
+    shared by all three index planes). Returns the partition name."""
     import uuid
 
     name = f"delete={uuid.uuid4().hex}"
     (ids.select(F.col(id_col).cast("long").alias("id")).distinct()
      .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
     return name
-
-
-def compact_minhash_index(spark: SparkSession, index_dir: str) -> None:
-    """Merge an index's accumulated ``ingest=*`` partitions back into a
-    single ``ingest=base`` generation — the maintenance pass a long-running
-    probe-then-append loop (q379) schedules offline: every streamed batch
-    adds a small-file partition, and a probe's scan cost is file count as
-    much as bytes. Params and probe results are unchanged (byte-identical
-    before and after — pinned by unit test); only the file layout is
-    rewritten — EXCEPT that accumulated :func:`minhash_index_delete`
-    tombstones are folded (tombstoned rows dropped from both tables, the
-    tombstones directory removed), which changes nothing a probe can see
-    because probes already anti-join the set. The swap is rename-based and
-    assumes the offline maintenance window every compaction strategy needs
-    without a transactional table format (Delta/Iceberg would make it
-    atomic). The delete+rename goes through the Hadoop FS API (not shutil)
-    so the swap also works when index_dir is an hdfs://-s3a:// URI."""
-    from ..sources.readers import hadoop_fs
-
-    def swap(cur: str, tmp: str) -> None:
-        # Hadoop FS signals failure by RETURN VALUE, not exception (S3A
-        # renames are copy+delete and fail non-exceptionally): an ignored
-        # false here after a successful delete would silently destroy the
-        # live index — fail loudly instead, the rewritten data is intact
-        # in the _compacting directory for manual recovery.
-        fs, cur_path = hadoop_fs(spark, cur)
-        _, tmp_path = hadoop_fs(spark, tmp)
-        if fs.exists(cur_path) and not fs.delete(cur_path, True):
-            raise IOError(f"compaction: could not delete {cur}")
-        if not fs.rename(tmp_path, cur_path):
-            raise IOError(
-                f"compaction: rename {tmp} -> {cur} failed; compacted "
-                f"data preserved at {tmp}")
-
-    tomb = _minhash_tombstones(spark, index_dir)
-    for part in ("shingles", "bands"):
-        cur = f"{index_dir}/{part}"
-        tmp = f"{index_dir}/{part}_compacting"
-        df = spark.read.parquet(cur).drop("ingest")
-        if tomb is not None:
-            # fold deletions: drop tombstoned rows from both tables (the
-            # id column is whatever the build used — the one column that
-            # isn't table structure)
-            idc = [c for c in df.columns
-                   if c not in ("hs", "band", "sig", "bkt")][0]
-            df = df.join(F.broadcast(tomb.withColumnRenamed("id", idc)),
-                         idc, "left_anti")
-        if part == "bands" and "bkt" in df.columns:
-            if df.isEmpty():
-                # same guard as the build: partitionBy on zero rows writes
-                # NO files, leaving the table schema-less — keep one empty
-                # schema'd file in an explicit bkt=0 directory instead
-                (df.drop("bkt").write.mode("overwrite")
-                 .parquet(f"{tmp}/ingest=base/bkt=0"))
-                swap(cur, tmp)
-                continue
-            # preserve the bucket layout probes prune on: re-cluster into
-            # one file per bucket (bkt values are unchanged — they're a
-            # pure function of (band, sig))
-            n_bkt = spark.read.parquet(
-                f"{index_dir}/params").collect()[0].num_buckets
-            (df.repartition(n_bkt, F.col("bkt"))
-             .write.mode("overwrite").partitionBy("bkt")
-             .parquet(f"{tmp}/ingest=base"))
-        else:
-            (df.repartition(spark.sparkContext.defaultParallelism)
-             .write.mode("overwrite").parquet(f"{tmp}/ingest=base"))
-        swap(cur, tmp)
-    if tomb is not None:
-        fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
-        if not fs.delete(tpath, True):
-            raise IOError(f"compaction: could not delete folded tombstones "
-                          f"at {tpath} — leaving them would re-suppress "
-                          "re-ingested ids")
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,9 @@ Linear sort clusters one column at the cost of every other; bit-interleaving
 two sort keys gives files whose min/max ranges are narrow in BOTH columns, so
 data skipping prunes on either predicate. This is the Spark-native analog of
 Delta/Iceberg `OPTIMIZE ZORDER BY` — we compute the Morton code as a plain
-column expression (pure bit arithmetic, whole-stage codegen) and feed it to
-the clustered writer (`sources/writers.py:write_clustered`).
+column expression (pure bit arithmetic, whole-stage codegen); a writer
+range-partitions and sorts on it (`repartitionByRange(n, "zval")
+.sortWithinPartitions("zval")`) to lay the files out.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ _Y_DUCK = f"cast((datepart('hour', ts) * 60 + datepart('minute', ts)) % {1 << ZB
 )
 def q131_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order key computation over events (user bucket × minute-of-day):
-    the layout key a compaction job would `write_clustered` by so reads
+    the layout key a writer would range-partition and sort by so reads
     filtering on either user or time prune files. Pure bit arithmetic —
     one narrow projection, TakeOrderedAndProject for the preview rows.
     """

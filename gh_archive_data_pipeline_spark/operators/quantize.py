@@ -14,7 +14,7 @@ memory-side scale lever those paths lack. Scale contract, 100 TB lens:
   8 x 16 x 8 doubles, IVF-codebook-sized. Fixed rounds, deterministic
   seeds (first k vectors by vec_id), so the whole float sequence replays
   in the DuckDB oracle exactly like q149's Lloyd loop.
-- **Encode** (``pq_encode``): one scan-side projection — each 64-dim float
+- **Encode** (``_codes_col``): one scan-side projection — each 64-dim float
   vector becomes 8 small ints (8 bytes at storage: 64x smaller than the
   512-byte raw vector). The codes table is what a 100 TB corpus keeps hot;
   raw vectors stay cold. No shuffle.
@@ -123,21 +123,6 @@ def pq_train(emb: DataFrame, m_sub: int = M_SUB, k: int = K_PQ,
 def _cached_codebooks(spark: SparkSession,
                       sf_dir: str) -> list[list[list[float]]]:
     return pq_train(load_table(spark, sf_dir, "embeddings"))
-
-
-def pq_encode(emb: DataFrame,
-              codebooks: list[list[list[float]]]) -> DataFrame:
-    """Encode each vector to its PQ codes — one scan-side projection, no
-    shuffle. Output: (vec_id, codes array<int>, qerr double) where qerr is
-    the total squared quantization error (sum of the 8 chosen subspace
-    distances, left-to-right)."""
-    picks = [F.expr(_argmin_cells(_sub_expr(s), codebooks[s]))
-             for s in range(len(codebooks))]
-    codes = F.array(*[p.getField("j") for p in picks]).alias("codes")
-    qerr = picks[0].getField("d2")
-    for p in picks[1:]:
-        qerr = qerr + p.getField("d2")
-    return emb.select("vec_id", codes, qerr.alias("qerr"))
 
 
 def adc_topk(emb: DataFrame, codebooks: list[list[list[float]]],

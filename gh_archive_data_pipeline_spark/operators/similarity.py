@@ -14,8 +14,6 @@ BEFORE any arithmetic so Spark and the DuckDB oracle see identical inputs.
 
 from __future__ import annotations
 
-import os
-import re
 import uuid
 
 import numpy as np
@@ -73,10 +71,11 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 def _srp_bucketer(planes_per_table: int, num_tables: int,
                   dim: int, seed: int):
-    """Signed-random-projection bucketing UDF shared by the LSH paths:
-    (L·k) × dim plane matrix; one Arrow-batched matmul hashes a whole
-    vector batch into all L tables at once (BLAS, not per-element HOF
-    eval). Returns array<long> of L bucket codes per vector."""
+    """Signed-random-projection bucketing UDF for embedding_near_dup's
+    Arrow strategy: (L·k) × dim plane matrix; one Arrow-batched matmul
+    hashes a whole vector batch into all L tables at once (BLAS, not
+    per-element HOF eval). Returns array<long> of L bucket codes per
+    vector."""
     import random
 
     from pyspark.sql.types import ArrayType, LongType
@@ -96,60 +95,6 @@ def _srp_bucketer(planes_per_table: int, num_tables: int,
         return pd.Series(list(codes))
 
     return buckets_of
-
-
-def lsh_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    planes_per_table: int = 4, num_tables: int = 16,
-                    dim: int = 64, seed: int = 42) -> DataFrame:
-    """Approximate top-k via multi-table signed-random-projection LSH.
-
-    L independent tables of ``planes_per_table`` hyperplanes each (generated
-    deterministically from ``seed``; L·k·dim literals — tiny). The corpus is
-    hashed once into (table, bucket) keys — L rows per vector — and each
-    query probes its L buckets; candidates are the union, scored exactly.
-
-    Recall for a pair with per-plane agreement p = 1−θ/π is 1−(1−p^k)^L:
-    with the defaults ≈0.87 at cosine 0.6, →1 as similarity grows. Raise
-    ``planes_per_table`` for high-similarity corpora (sparser buckets),
-    ``num_tables`` for recall. This is the shape that scales to 10^9 vectors:
-    hashing is one linear pass, and the candidate join and dedup move only
-    (id, table, bucket) int keys — never the vectors, which re-attach via
-    a broadcast of the surviving candidate ids into a second columnar
-    corpus scan (round-10 fix, same as srp_bucket_topk: the dedup used to
-    carry both vectors through its exchange).
-    """
-    buckets_of = _srp_bucketer(planes_per_table, num_tables, dim, seed)
-
-    def hashed(df, out_id, out_vec):
-        return df.select(
-            out_id, out_vec,
-            F.posexplode(buckets_of(F.col(out_vec))).alias("t", "b"))
-
-    cd = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
-    c = hashed(cd, "neighbor_id", "cv").select("neighbor_id", "t", "b")
-    qh = hashed(queries.select(F.col(id_col).alias("query_id"),
-                               _as_double(F.col(vec_col)).alias("qv")),
-                "query_id", "qv")
-    candidates = (
-        c.join(F.broadcast(qh.select("query_id", "t", "b")), ["t", "b"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qv = qh.select("query_id", "qv").dropDuplicates(["query_id"])
-    scored = (cd.join(F.broadcast(candidates), "neighbor_id")
-              .join(F.broadcast(qv), "query_id")
-              .select("query_id", "neighbor_id",
-                      cosine(F.col("qv"), F.col("cv")).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim", 6).alias("cosine_sim"), "rank")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -236,8 +181,12 @@ def srp_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                     dim: int = 64, seed: int = 42) -> DataFrame:
     """Multi-table SRP-LSH top-k with the hashing JVM-side (no Python hop).
 
-    Same table/bucket/verify architecture as :func:`lsh_bucket_topk`, but
-    the bucket codes are built-in expressions over ±1 plane literals:
+    L independent tables of ``planes_per_table`` ±1 hyperplanes each; the
+    corpus is hashed once into (table, bucket) keys — L rows per vector —
+    each query probes its L buckets, and candidates are the union, scored
+    exactly. Recall for a pair with per-plane agreement p = 1−θ/π is
+    1−(1−p^k)^L. The bucket codes are built-in expressions over the plane
+    literals:
     bucket_t = Σ_j 2^j·[dot(v, plane_tj) > 0]. Whole-stage codegen
     evaluates the hashing inside the corpus scan stage — no Arrow batch
     transfer — and the arithmetic is exactly reproducible in ANSI SQL,
@@ -588,11 +537,11 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
     # Same generation layout as the MinHash index: every write (the build
     # included) lands under its own ``ingest=<id>`` directory, so appends
     # are per-ingest OVERWRITES (retry-idempotent) and ``cell`` stays a
-    # discovered partition column that ivf_search prunes on. A REBUILD
-    # must clear the whole corpus/ tree first: mode("overwrite") below
-    # only replaces ingest=base, and stale prior ingest generations would
-    # otherwise survive into the new index (same non-transactional-swap
-    # caveat as compact_minhash_index — Delta/Iceberg would make it atomic).
+    # discovered partition column that ivf_search prunes on. Building over
+    # an existing index must clear the whole corpus/ tree first:
+    # mode("overwrite") below only replaces ingest=base, and stale prior
+    # ingest generations would otherwise survive into the new index (not
+    # transactional — Delta/Iceberg would make the swap atomic).
     # Hadoop FS, not shutil: index_dir may be an hdfs://-s3a:// URI.
     fs, corpus_path = hadoop_fs(spark, f"{index_dir}/corpus")
     if fs.exists(corpus_path):
@@ -604,151 +553,15 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
      .parquet(f"{index_dir}/corpus/ingest=base"))
 
 
-# A version claim is the canonical ``_v_<N>.lock`` or (on stores without an
-# atomic create) an election claim ``_v_<N>.lock.<uuid>``. Both shapes count
-# as a PERMANENT claim on version N for the next_v scan and for vacuum.
-_LOCK_RE = re.compile(r"^_v_(\d+)\.lock(\..+)?$")
-
-
-def _claim_version_lock(spark: SparkSession, fs, index_dir: str,
-                        next_v: int) -> None:
-    """Claim version number ``next_v`` ATOMICALLY by creating its lock, or
-    raise ``IOError`` if the number is already (or simultaneously) claimed.
-
-    Round-10 fix (judge-reproduced 3/3 under host load): Hadoop's
-    ``FileSystem.createNewFile`` is only as atomic as the underlying store.
-    On HDFS it is one namenode RPC (atomic); on RawLocalFileSystem it is
-    exists()-then-create — a TOCTOU window wide enough that two rebuilds
-    racing the same version BOTH passed the check and co-wrote ``v=N``
-    (the loser's committer then deleted the winner's ``_temporary`` and the
-    winner's published bytes carried the loser's writes). Dispatch on the
-    resolved scheme:
-
-    - ``file`` / scheme-less local path: ``java.io.File.createNewFile`` via
-      py4j — the real ``open(O_CREAT|O_EXCL)``; two racers cannot tie.
-    - ``hdfs`` / ``viewfs``: ``FileSystem.createNewFile`` — a single atomic
-      namenode create, safe as-is.
-    - anything else (s3a / gs / abfs — the Hadoop API has no conditional
-      PUT): lock-by-election. Each claimant PUTs a uniquely-named
-      ``_v_<N>.lock.<uuid>`` (never contended), lists ``_v_<N>.lock*``, and
-      only the lexicographically-smallest claim name proceeds; a claimant
-      also loses if the canonical ``.lock`` or the ``.ready`` marker is
-      already present (the round-9 stale-laggard protocol). This closes
-      the race window from build-duration to one PUT→LIST round trip —
-      the best the portable API offers; a deployment on S3 should swap in
-      a conditional PUT (If-None-Match) claim instead.
-    """
-    _, lock = hadoop_fs(spark, f"{index_dir}/_v_{next_v}.lock")
-    scheme = lock.toUri().getScheme()
-    if scheme in (None, "file"):
-        local = spark._jvm.java.io.File(lock.toUri().getPath())
-        parent = local.getParentFile()
-        if parent is not None:
-            parent.mkdirs()
-        if not local.createNewFile():
-            raise IOError(f"rebuild lock already exists: {lock} — "
-                          "a concurrent rebuild claimed this version")
-    elif scheme in ("hdfs", "viewfs"):
-        if not fs.createNewFile(lock):
-            raise IOError(f"rebuild lock already exists: {lock} — "
-                          "a concurrent rebuild claimed this version")
-    else:
-        _election_claim(spark, fs, index_dir, next_v)
-
-
-def _election_claim(spark: SparkSession, fs, index_dir: str,
-                    next_v: int) -> None:
-    """Lock-by-election claim for stores without an atomic create (see
-    :func:`_claim_version_lock`): PUT a unique ``_v_<N>.lock.<uuid>``, list
-    all claims for N, and proceed only if ours sorts first. Raises IOError
-    on loss. Exercised directly by unit tests (the dispatch only reaches it
-    on s3a/gs-style schemes, absent in the sandbox) — the fs operations it
-    uses are scheme-agnostic."""
-    _, lock = hadoop_fs(spark, f"{index_dir}/_v_{next_v}.lock")
-    _, ready = hadoop_fs(spark, f"{index_dir}/_v_{next_v}.ready")
-    if fs.exists(lock) or fs.exists(ready):
-        raise IOError(f"rebuild lock already exists: {lock} — "
-                      "a concurrent rebuild claimed this version")
-    claim_name = f"_v_{next_v}.lock.{uuid.uuid4().hex}"
-    _, claim = hadoop_fs(spark, f"{index_dir}/{claim_name}")
-    fs.create(claim, False).close()   # unique name: never contended
-    _, root = hadoop_fs(spark, index_dir)
-    rivals = sorted(
-        name for st in fs.listStatus(root)
-        for name in (st.getPath().getName(),)
-        if name.startswith(f"_v_{next_v}.lock"))
-    # the canonical .lock (a completed prior claim) sorts before every
-    # ".lock.<uuid>" election claim, so a stale laggard always loses
-    if rivals[0] != claim_name or fs.exists(ready):
-        raise IOError(f"rebuild lock already exists: {lock} — "
-                      "a concurrent rebuild claimed this version "
-                      f"(election lost to {rivals[0]})")
-    # canonicalize: the election winner records the plain .lock so the
-    # retained-claim protocol (and vacuum) see one shape everywhere. The
-    # lock CONTENT is our claim name, written non-overwrite and read back
-    # (round-11 ADVICE hardening): on a store with delayed listing
-    # visibility two claimants can each list before the rival's claim
-    # appears and both reach this line — the create(overwrite=False) plus
-    # the content check demotes whichever sees the rival's canonical lock
-    # first. Best effort, not a proof: the portable Hadoop API has no
-    # conditional PUT, so a deployment on such a store should swap in an
-    # If-None-Match claim (docstring recommendation stands).
-    try:
-        out = fs.create(lock, False)
-        out.writeBytes(claim_name)
-        out.close()
-    except Exception as e:
-        raise IOError(f"rebuild lock already exists: {lock} — "
-                      "a concurrent rebuild claimed this version "
-                      "(canonical lock created by a rival)") from e
-    jvm = spark._jvm
-    rd = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(lock)))
-    content = rd.readLine()
-    rd.close()
-    if content != claim_name:
-        raise IOError(f"rebuild lock already exists: {lock} — canonical "
-                      f"lock content {content!r} belongs to a rival "
-                      "claimant")
-
-
-def _ivf_current_version(spark: SparkSession, index_dir: str) -> int | None:
-    """Highest PUBLISHED rebuild version, or None for a fresh (flat)
-    build_ivf_index layout. Publication is a ``_v_<N>.ready`` marker file —
-    an atomic CREATE, the one primitive object stores and HDFS both give us
-    (FileSystem.rename won't overwrite, so versioned.py's manifest-replace
-    can't be expressed through the Hadoop API). A crashed rebuild leaves an
-    unmarked v=N directory that is never read and is skipped forward by the
-    next rebuild."""
-    fs, root = hadoop_fs(spark, index_dir)
-    if not fs.exists(root):
-        return None
-    versions = [int(name[3:-6]) for st in fs.listStatus(root)
-                for name in (st.getPath().getName(),)
-                if name.startswith("_v_") and name.endswith(".ready")]
-    return max(versions) if versions else None
-
-
-def ivf_active_root(spark: SparkSession, index_dir: str) -> str:
-    """Directory holding the ACTIVE index generation: ``{index_dir}/v=N``
-    once :func:`ivf_rebuild` has published a version, else ``index_dir``
-    itself (the fresh :func:`build_ivf_index` layout). Every reader and
-    appender resolves through this, so a rebuild atomically redirects
-    searches and future ingests without touching standing files."""
-    v = _ivf_current_version(spark, index_dir)
-    return index_dir if v is None else f"{index_dir}/v={v}"
-
-
 def ivf_balance(spark: SparkSession, index_dir: str,
                 overfull_factor: float = 2.0) -> DataFrame:
-    """Per-cell occupancy of the active index generation, split by ingest
-    generation, with an ``overfull`` flag (> ``overfull_factor`` × the
-    uniform share) — the drift signal of the frozen-codebook append trade.
+    """Per-cell occupancy of an IVF index, split by ingest generation,
+    with an ``overfull`` flag (> ``overfull_factor`` × the uniform share)
+    — the drift signal of the frozen-codebook append trade.
     Reads ONLY partition columns (cell, ingest): zero vector bytes, pure
     metadata shape, safe to run on every ingest cycle at 100 TB."""
-    root = ivf_active_root(spark, index_dir)
-    num_cells = spark.read.parquet(f"{root}/codebook").count()
-    cells = (spark.read.parquet(f"{root}/corpus")
+    num_cells = spark.read.parquet(f"{index_dir}/codebook").count()
+    cells = (spark.read.parquet(f"{index_dir}/corpus")
              .groupBy("cell")
              .agg(F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
                   F.sum(F.when(F.col("ingest") == "base", 1).otherwise(0))
@@ -764,293 +577,40 @@ def ivf_balance(spark: SparkSession, index_dir: str,
             .orderBy("cell"))
 
 
-def _ivf_tombstones(spark: SparkSession, root: str):
-    """The active generation's tombstoned vector ids (one
-    ``delete=<uuid>`` parquet partition per :func:`ivf_delete` call), or
-    None when nothing was deleted."""
-    fs, tpath = hadoop_fs(spark, f"{root}/tombstones")
+def _ivf_tombstones(spark: SparkSession, index_dir: str):
+    """The index's tombstoned vector ids (one ``delete=<uuid>`` parquet
+    partition per :func:`ivf_delete` call), or None when nothing was
+    deleted."""
+    fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
     if not fs.exists(tpath):
         return None
-    return spark.read.parquet(f"{root}/tombstones").select("vec_id")
-
-
-def _tombstone_partition_names(spark: SparkSession, root: str) -> list[str]:
-    """Names of the ``delete=<uuid>`` partitions currently under
-    ``{root}/tombstones`` — the rebuild's snapshot/diff unit."""
-    fs, tpath = hadoop_fs(spark, f"{root}/tombstones")
-    if not fs.exists(tpath):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(tpath)
-                  if st.getPath().getName().startswith("delete="))
+    return spark.read.parquet(f"{index_dir}/tombstones").select("vec_id")
 
 
 def ivf_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
                id_col: str = "vec_id") -> str:
-    """Tombstone-delete vectors from the ACTIVE index generation — the
-    removal plane the ingest/rebuild/vacuum family was missing (a training
-    corpus must honor takedown/GDPR erasure without rebuilding a 100 TB
-    index synchronously).
+    """Tombstone-delete vectors from a :func:`build_ivf_index` layout —
+    the index's removal plane (a training corpus must honor takedown/GDPR
+    erasure without rebuilding a 100 TB index synchronously).
 
     O(|delete|): the ids land as one new ``tombstones/delete=<uuid>``
-    parquet partition under the active root; no index row moves. Every
-    :func:`ivf_search` anti-joins the tombstone set out of its pruned
-    candidate scan, and the next :func:`ivf_rebuild` folds deletions in
-    permanently — the new generation is born tombstone-free (pinned
-    bit-equal to a fresh build over the surviving rows). Until a rebuild,
+    parquet partition; no index row moves. Every :func:`ivf_search`
+    anti-joins the tombstone set out of its pruned candidate scan.
     :func:`ivf_balance` occupancy still counts tombstoned rows (they
-    still occupy cell files) — :func:`ivf_maintain`'s tombstone-drift
-    trigger folds the backlog. Contract note: a tombstone suppresses the
+    still occupy cell files). Contract note: a tombstone suppresses the
     ID entirely, so re-ingesting a previously deleted id requires a
-    rebuild first (delete-then-append within one generation is not a
+    fresh :func:`build_ivf_index` first (delete-then-append is not a
     supported update path).
 
-    The partition name is a fresh uuid, NOT a dense counter (round-11
-    ADVICE fix): two concurrent deletes that both computed the same
-    ``delete=<n>`` would overwrite each other with ``mode('overwrite')``
-    and silently lose one caller's erasures — the same lost-erasure class
-    the version lock prevents for rebuilds. Nothing depends on dense
-    numbering; readers discover partitions by listing. Returns the
-    partition name."""
-    root = ivf_active_root(spark, index_dir)
+    The partition name is a fresh uuid, NOT a dense counter: two
+    concurrent deletes that both computed the same ``delete=<n>`` would
+    overwrite each other with ``mode('overwrite')`` and silently lose one
+    caller's erasures. Nothing depends on dense numbering; readers
+    discover partitions by listing. Returns the partition name."""
     name = f"delete={uuid.uuid4().hex}"
     (ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-     .write.mode("overwrite").parquet(f"{root}/tombstones/{name}"))
+     .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
     return name
-
-
-def _copy_late_tombstones(spark: SparkSession, old_root: str,
-                          new_root: str, known: set[str]) -> set[str]:
-    """Carry tombstones that landed under ``old_root`` AFTER the rebuild's
-    plan-time snapshot (``known`` partition names) forward into
-    ``new_root``'s live tombstone set. The new generation was built
-    folding only the snapshot, so a late delete would otherwise be
-    orphaned the moment the ``.ready`` marker flips readers over — the
-    deleted id silently resurfacing in ivf_search (round-11 ADVICE fix).
-    Returns ``known`` extended with the partitions copied."""
-    late = [n for n in _tombstone_partition_names(spark, old_root)
-            if n not in known]
-    if late:
-        (spark.read.parquet(*[f"{old_root}/tombstones/{n}" for n in late])
-         .select("vec_id").distinct()
-         .write.mode("overwrite")
-         .parquet(f"{new_root}/tombstones/delete={uuid.uuid4().hex}"))
-    return known | set(late)
-
-
-def ivf_rebuild(spark: SparkSession, index_dir: str,
-                num_cells: int | None = None,
-                id_col: str = "vec_id",
-                _pre_publish_hook=None) -> int:
-    """Fold every ingest generation back into a freshly-trained index and
-    publish it ATOMICALLY as ``{index_dir}/v=<next>`` — the offline
-    maintenance pass that closes the frozen-codebook loop: ivf_index_append
-    keeps ingest cost O(|delta|) by never retraining, cell balance drifts,
-    :func:`ivf_balance` reports the drift, and THIS operator repairs it.
-
-    The codebook is re-trained over the FULL standing corpus (base + all
-    ingests) with the same deterministic seeding discipline as
-    build_ivf_index (``num_cells`` lowest-id vectors; at 100 TB you'd
-    k-means a sample offline — the rebuild/publish machinery is identical),
-    so a rebuilt index is bit-equal to a fresh build over the same rows
-    (pinned by unit test). Publish is versioned.py's immutable-dir pattern
-    through the Hadoop FS API: write everything under an unpublished v=N,
-    then one atomic marker create — concurrent searches keep reading the
-    old generation until the marker lands, and a crash mid-write leaves
-    the active index untouched. Old generations stay for rollback until
-    :func:`ivf_vacuum`. Returns the published version number.
-
-    Delete-vs-rebuild race (round-11 ADVICE fix): the version lock only
-    serializes rebuild against rebuild — :func:`ivf_delete` keeps landing
-    tombstones under the still-active OLD root while a rebuild runs. The
-    rebuild folds a plan-time SNAPSHOT of the tombstone partitions, then
-    re-lists the old root's tombstones twice — immediately before the
-    marker create and again immediately after — and copies any partition
-    newer than the snapshot into the new generation's live tombstone set
-    (searches anti-join it; the NEXT rebuild folds it). The residual
-    window is one list→create round trip, plus the pathological crash
-    between marker and post-publish sweep; a deployment that needs zero
-    window must quiesce deletes across rebuilds (the tombstone writes are
-    O(|delete|), so a short quiesce is cheap). ``_pre_publish_hook(root)``
-    is a test seam: called after v=N is fully built but before the
-    pre-marker sweep, where a concurrent delete is indistinguishable from
-    one that raced the build."""
-    root = ivf_active_root(spark, index_dir)
-    if num_cells is None:
-        num_cells = spark.read.parquet(f"{root}/codebook").count()
-    full = (spark.read.parquet(f"{root}/corpus")
-            .select(F.col(id_col), F.col("v")))
-    # plan-time tombstone snapshot: fold EXACTLY these partitions; anything
-    # landing later is carried forward by the pre/post-marker sweeps below
-    snap = set(_tombstone_partition_names(spark, root))
-    if snap:
-        # fold deletions permanently: the new generation is born
-        # tombstone-free of the snapshot (ivf_delete's contract)
-        tomb = (spark.read.parquet(
-            *[f"{root}/tombstones/{n}" for n in sorted(snap)])
-            .select("vec_id"))
-        full = full.join(
-            F.broadcast(tomb.withColumnRenamed("vec_id", id_col)),
-            id_col, "left_anti")
-    fs, idx_path = hadoop_fs(spark, index_dir)
-    listed = [st.getPath().getName() for st in fs.listStatus(idx_path)]
-    next_v = 1 + max(
-        [int(n[2:]) for n in listed if n.startswith("v=")]
-        + [int(n[3:-6]) for n in listed
-           if n.startswith("_v_") and n.endswith(".ready")]
-        + [int(m.group(1)) for n in listed
-           for m in (_LOCK_RE.match(n),) if m]
-        + [-1])
-    # Claim the version number ATOMICALLY before writing a single byte of
-    # v=N — the loser raises HERE, while the old order (build first,
-    # discover the marker collision after) let the loser delete-and-rewrite
-    # a v=N the winner had already published. The claim primitive is
-    # scheme-dispatched (see _claim_version_lock): O_EXCL on local FS,
-    # namenode create on HDFS, lock-by-election on object stores — Hadoop's
-    # own createNewFile is a TOCTOU on LocalFileSystem/s3a (round-10 fix).
-    # A crash between lock and marker leaks one version number (the lock is
-    # counted by the next_v scan above and never reused); the partial v=N
-    # is invisible to readers (no .ready) and cleared by ivf_vacuum.
-    _claim_version_lock(spark, fs, index_dir, next_v)
-    new_root = f"{index_dir}/v={next_v}"
-    build_ivf_index(full, new_root, num_cells=num_cells,
-                    id_col=id_col, vec_col="v")
-    if _pre_publish_hook is not None:
-        _pre_publish_hook(root)
-    # pre-marker sweep: tombstones that landed on the old root during the
-    # build travel into the new generation as LIVE tombstones
-    snap = _copy_late_tombstones(spark, root, new_root, snap)
-    _, marker = hadoop_fs(spark, f"{index_dir}/_v_{next_v}.ready")
-    # the lock makes a marker collision unreachable short of manual marker
-    # creation, but createNewFile's contract is still return-value-reported
-    if not fs.createNewFile(marker):  # atomic publish
-        raise IOError(f"publish marker already exists: {marker} — "
-                      "a concurrent rebuild raced this version")
-    # post-marker sweep: a delete that resolved the old root before the
-    # marker but finished writing after the pre-marker list lands here
-    _copy_late_tombstones(spark, root, new_root, snap)
-    # The lock is a PERMANENT claim on this version number — deliberately
-    # NOT deleted after publish. Round-9 find (surfaced by the two-writer
-    # race test under host load): a laggard that computed the same next_v
-    # BEFORE this publish would, after a post-publish lock delete, succeed
-    # at createNewFile and clobber the published v=N's files before its
-    # own marker create finally failed. With the lock retained, every
-    # stale claimant fails AT THE LOCK, before touching a byte — whatever
-    # the scheduling. The marker pins the same number anyway; vacuum
-    # removes the lock together with its generation.
-    return next_v
-
-
-def ivf_maintain(spark: SparkSession, index_dir: str,
-                 overfull_factor: float = 2.0,
-                 tombstone_frac: float = 0.2,
-                 id_col: str = "vec_id") -> bool:
-    """The maintenance scheduler's body: rebuild IFF the index has
-    drifted, else leave it untouched. Two independent drift signals
-    (round-11 added the second — the trigger was previously blind to
-    deletion-heavy workloads, whose index looks balanced while the
-    effective corpus shrinks and every search pays a growing tombstone
-    anti-join):
-
-    - any overfull cell per :func:`ivf_balance` (the q386 append-skew
-      signal);
-    - tombstone backlog: tombstone rows / corpus rows >=
-      ``tombstone_frac`` (the rebuild folds the backlog, restoring
-      anti-join-free searches). Row counts come from parquet footer
-      metadata — no vector bytes move. Overlapping delete batches can
-      overcount the backlog, which only triggers the fold EARLY (each
-      batch is internally distinct via ivf_delete; cross-batch repeats
-      are rare and benign). Pass ``tombstone_frac=0`` to rebuild on any
-      tombstone, or ``None`` to disable the signal.
-
-    Returns whether a rebuild was published. Both trigger reads are
-    metadata-only, so the no-op path costs no vector I/O — cheap enough
-    to run after every ingest batch."""
-    root = ivf_active_root(spark, index_dir)
-    drifted = False
-    if tombstone_frac is not None:
-        fs, tpath = hadoop_fs(spark, f"{root}/tombstones")
-        if fs.exists(tpath):
-            n_tomb = spark.read.parquet(f"{root}/tombstones").count()
-            if n_tomb:
-                n_corpus = spark.read.parquet(f"{root}/corpus").count()
-                drifted = (n_corpus > 0
-                           and n_tomb / n_corpus >= tombstone_frac)
-    if not drifted:
-        drifted = (ivf_balance(spark, index_dir, overfull_factor)
-                   .filter("overfull").limit(1).count() > 0)
-    if drifted:
-        ivf_rebuild(spark, index_dir, id_col=id_col)
-    return drifted
-
-
-def ivf_vacuum(spark: SparkSession, index_dir: str,
-               keep_last: int = 1) -> list[str]:
-    """Drop all index generations except the newest ``keep_last`` published
-    versions (never the active one). The pre-rebuild flat layout counts as
-    the OLDEST generation in that accounting: with ``keep_last=2`` and one
-    published version, the flat layout is the second retained rollback
-    generation and survives. Orphan ``.lock`` markers (and their partial,
-    never-published ``v=N`` dirs) from crashed rebuilds older than the
-    active version are swept too. Every ``fs.delete`` return value is
-    checked — a false return (seen on object stores) would otherwise leave
-    a generation on disk that ``removed`` claims is gone. Returns the paths
-    removed."""
-
-    def _checked_delete(name: str, recursive: bool) -> bool:
-        """Delete if present; raise on a reported-failed delete."""
-        _, p = hadoop_fs(spark, f"{index_dir}/{name}")
-        if not fs.exists(p):
-            return False
-        if not fs.delete(p, recursive):
-            raise IOError(f"fs.delete reported failure for {p} — the "
-                          "generation is still on disk; not claiming it "
-                          "as removed")
-        return True
-
-    fs, idx_path = hadoop_fs(spark, index_dir)
-    cur = _ivf_current_version(spark, index_dir)
-    if cur is None:
-        return []   # nothing published -> flat layout is the active index
-    listed = [st.getPath().getName() for st in fs.listStatus(idx_path)]
-    published = sorted(int(n[3:-6]) for n in listed
-                       if n.startswith("_v_") and n.endswith(".ready"))
-    # generations oldest -> newest, the flat pre-rebuild layout first;
-    # keep_last=0 means "only the active version survives" — [:-0] would
-    # slice to [] and silently keep everything
-    flat_gen = -1   # sorts before every published version
-    gens: list[int] = [flat_gen] + published
-    keep = set(gens[-keep_last:]) if keep_last > 0 else set()
-    keep.add(cur)   # the active version is never dropped
-    # claims for version v: the canonical .lock plus any election .lock.<uuid>
-    claims: dict[int, list[str]] = {}
-    for n in listed:
-        m = _LOCK_RE.match(n)
-        if m:
-            claims.setdefault(int(m.group(1)), []).append(n)
-    removed = []
-    for v in (v for v in published if v not in keep):
-        _checked_delete(f"v={v}", True)
-        _checked_delete(f"_v_{v}.ready", False)
-        for name in claims.get(v, []):
-            _checked_delete(name, False)
-        removed.append(f"{index_dir}/v={v}")
-    # crashed-rebuild debris: a claim older than the active version whose
-    # .ready never landed — its v=N dir (if any) is partial and unreadable
-    for v in sorted(claims):
-        if v < cur and v not in published:
-            _checked_delete(f"v={v}", True)
-            deleted = [_checked_delete(name, False) for name in claims[v]]
-            if any(deleted):
-                removed.append(f"{index_dir}/_v_{v}.lock")
-    if flat_gen not in keep:
-        # "tombstones" included (round-11 ADVICE fix): once a version is
-        # active the flat root's tombstones are never read again, but
-        # leaving the deleted-id list on disk after vacuum claims the
-        # generation removed defeats the erasure contract
-        for name in ("corpus", "codebook", "tombstones"):
-            if _checked_delete(name, True):
-                removed.append(f"{index_dir}/{name}")
-    return removed
 
 
 def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -1068,7 +628,6 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     pruned corpus against broadcast (query, cell) pairs; only the
     per-partition top-k candidate rows reach the final rank window's
     exchange (WindowGroupLimit), never the full corpus."""
-    index_dir = ivf_active_root(spark, index_dir)
     cb = F.broadcast(spark.read.parquet(f"{index_dir}/codebook"))
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("csim").desc(), F.col("cell").asc())
@@ -1087,8 +646,8 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     tomb = _ivf_tombstones(spark, index_dir)
     if tomb is not None:
         # ivf_delete's read path: tombstoned ids never reach scoring
-        # (broadcast anti-join — a backlog big enough to strain the
-        # broadcast is rebuild-drift by contract)
+        # (broadcast anti-join; a backlog big enough to strain the
+        # broadcast calls for a fresh build over the survivors)
         corpus = corpus.join(
             F.broadcast(tomb.withColumnRenamed("vec_id", id_col)),
             id_col, "left_anti")
@@ -1261,8 +820,8 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     if tomb is not None:
         # srp_delete's read path (same contract as ivf_search): tombstoned
         # ids never become candidates — broadcast anti-join on the pruned
-        # bucket scan; a backlog big enough to strain the broadcast is
-        # compaction drift by contract (srp_compact folds it)
+        # bucket scan; a backlog big enough to strain the broadcast calls
+        # for a fresh build over the survivors
         bucket_rows = bucket_rows.join(
             F.broadcast(tomb.withColumnRenamed("vec_id", "neighbor_id")),
             "neighbor_id", "left_anti")
@@ -1302,57 +861,13 @@ def srp_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
     Same O(|delete|) contract as :func:`ivf_delete`: the ids land as one
     collision-free ``tombstones/delete=<uuid>`` parquet partition; no
     bucket file moves; every :func:`srp_search` anti-joins the set out of
-    its pruned bucket scan, and :func:`srp_compact` folds deletions
-    permanently. Re-ingesting a previously deleted id requires a compact
-    first (same no-resurrection rule as IVF). Returns the partition
-    name."""
+    its pruned bucket scan. Re-ingesting a previously deleted id requires
+    a fresh build first (same no-resurrection rule as IVF). Returns the
+    partition name."""
     name = f"delete={uuid.uuid4().hex}"
     (ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
      .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
     return name
-
-
-def srp_compact(spark: SparkSession, index_dir: str) -> None:
-    """Fold accumulated :func:`srp_delete` tombstones into the bucket
-    files — the offline maintenance pass that restores anti-join-free
-    searches. Bucket membership is a pure function of the vector, so
-    filtering tombstoned rows out of the standing layout is BIT-EQUAL to
-    rebuilding the index from the surviving corpus (pinned by unit test);
-    no re-hash runs. The ``tb`` partition layout is preserved (one file
-    per bucket) and the swap is the same rename-based
-    offline-window protocol as ``compact_minhash_index`` — Hadoop FS API
-    throughout, return values checked, rewritten data preserved in the
-    ``_compacting`` directory on a failed swap."""
-    tomb = _srp_tombstones(spark, index_dir)
-    if tomb is None:
-        return
-    cur = f"{index_dir}/buckets"
-    tmp = f"{index_dir}/buckets_compacting"
-    survivors = (spark.read.parquet(cur)
-                 .join(F.broadcast(tomb
-                                   .withColumnRenamed("vec_id",
-                                                      "neighbor_id")),
-                       "neighbor_id", "left_anti"))
-    if survivors.isEmpty():
-        # partitionBy on zero rows writes NO files, leaving a schema-less
-        # (unreadable) table — keep one empty schema'd file in an explicit
-        # tb=0 directory instead (the build_minhash_index guard)
-        survivors.drop("tb").write.mode("overwrite").parquet(f"{tmp}/tb=0")
-    else:
-        (survivors.repartition("tb")
-         .write.mode("overwrite").partitionBy("tb").parquet(tmp))
-    fs, cur_path = hadoop_fs(spark, cur)
-    _, tmp_path = hadoop_fs(spark, tmp)
-    if fs.exists(cur_path) and not fs.delete(cur_path, True):
-        raise IOError(f"srp_compact: could not delete {cur}")
-    if not fs.rename(tmp_path, cur_path):
-        raise IOError(f"srp_compact: rename {tmp} -> {cur} failed; "
-                      f"compacted data preserved at {tmp}")
-    _, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
-    if not fs.delete(tpath, True):
-        raise IOError(f"srp_compact: could not delete folded tombstones "
-                      f"at {tpath} — leaving them would re-suppress "
-                      "re-ingested ids")
 
 
 @fixture_memo("embeddings")
@@ -1390,9 +905,7 @@ def q449_srp_tombstone_search(spark: SparkSession,
     the bucket scan (hashing, probing and scoring untouched — buckets are
     a pure function of the vector, so deletion only shrinks the candidate
     set). A fresh index is built in-query (the cached q365 index is
-    shared state a delete must not mutate) — the q448 convention.
-    :func:`srp_compact` folding the tombstones bit-equal to a fresh build
-    over the survivors is pinned by unit test."""
+    shared state a delete must not mutate) — the q448 convention."""
     emb = load_table(spark, sf_dir, "embeddings")
     d = scratch_dir("srp_tomb_")
     build_srp_index(emb, d)
@@ -2106,9 +1619,6 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
     from .dedup import check_ingest_id
 
     check_ingest_id(ingest_id)
-    # appends land in the ACTIVE generation, so a rebuild redirects future
-    # ingests along with searches
-    index_dir = ivf_active_root(spark, index_dir)
     # Hadoop FS, not os.listdir: index_dir may be an hdfs://-s3a:// URI,
     # where os.path would silently skip this guard.
     fs, corpus_path = hadoop_fs(spark, f"{index_dir}/corpus")
@@ -2319,7 +1829,7 @@ def q386_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns — column-pruned to zero vector bytes read — and a broadcast
     one-row total; the oracle replays the frozen-codebook assignment
     semantics in SQL. The same computation, generalized over any index
-    via :func:`ivf_balance` (num_cells read from the codebook it audits),
-    is what :func:`ivf_maintain` consumes as its rebuild trigger."""
+    via :func:`ivf_balance` (num_cells read from the codebook it
+    audits)."""
     return ivf_balance(spark, _ivf_appended_index(spark, sf_dir),
                        overfull_factor=2.0)

@@ -7,8 +7,6 @@ UDFs, so the whole hot path stays inside whole-stage codegen.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -634,29 +632,6 @@ def _token_pairs(docs: DataFrame) -> DataFrame:
             .select("pr.tok_a", "pr.tok_b"))
 
 
-def zlib_ratio_udf():
-    """zlib level-6 compression ratio per text — the PRODUCTION
-    compressibility kernel (Arrow-batched pandas UDF), unit-pinned against
-    direct zlib calls. No SQL engine can replay zlib, so the registry
-    query (q175) carries the portable dictionary-proxy surrogate instead;
-    this kernel stays the deployment's quality signal."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def compression_ratio(texts: pd.Series) -> pd.Series:
-        import zlib
-
-        def ratio(t: str) -> float:
-            raw = t.encode("utf-8")
-            if not raw:
-                return 1.0
-            return round(len(zlib.compress(raw, 6)) / len(raw), 6)
-
-        return texts.map(ratio)
-
-    return compression_ratio
-
-
 def _trigram_ratio():
     """Distinct char-trigram share — the LZ77-dictionary proxy: repetitive
     boilerplate reuses trigrams (low ratio), high-entropy junk doesn't
@@ -669,17 +644,6 @@ def _trigram_ratio():
                F.size(F.array_distinct(tri)).cast("double")
                / (F.length("text") - 2))
         .otherwise(F.lit(1.0)), 6)
-
-
-def compression_signals(docs: DataFrame) -> DataFrame:
-    """Both compressibility signals per document: the honest zlib ratio
-    (production kernel) and its portable trigram-dictionary surrogate.
-    The unit test pins zlib against direct calls and that the two signals
-    order repetitive-vs-random text the same way."""
-    return docs.select(
-        "doc_id", F.length("text").cast("bigint").alias("n_chars"),
-        zlib_ratio_udf()("text").alias("zlib_ratio"),
-        _trigram_ratio().alias("trigram_ratio"))
 
 
 @register(
@@ -702,10 +666,8 @@ def q175_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise/junk; the useful middle band survives) — now ORACLE-checked via
     the portable surrogate: the distinct char-trigram share, an LZ77
     dictionary proxy whose integer arithmetic both engines replay exactly.
-    The honest zlib measurement is NOT lost: :func:`zlib_ratio_udf` /
-    :func:`compression_signals` remain the production kernel, unit-pinned
-    against direct zlib calls and against the surrogate's ordering on
-    crafted repetitive-vs-random inputs (was rows-only before round 7)."""
+    A unit test pins that the surrogate orders crafted repetitive and
+    random inputs the way zlib's compression ratio does."""
     docs = load_table(spark, sf_dir, "documents")
     return (docs.select("doc_id",
                         F.length("text").cast("bigint").alias("n_chars"),

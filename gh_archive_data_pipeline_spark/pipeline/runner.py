@@ -53,19 +53,25 @@ class Pipeline:
 
 
 def gh_archive_pipeline(spark, bronze_path: str, silver_path: str,
-                        gold_path: str) -> Pipeline:
-    """The reference pipeline as a Pipeline instance over local parquet."""
+                        gold_path: str, multi_line: bool = False) -> Pipeline:
+    """The reference pipeline as a Pipeline instance over local parquet:
+    task ``silver`` (bronze scan, normalize, partitioned write) then task
+    ``gold`` (the four dims, one parquet directory each). ``multi_line``
+    is :func:`stages.read_bronze`'s: real GH Archive hours are JSON-lines,
+    the reference's checked-in sample is one pretty-printed object."""
+    from ..sources.writers import write_parquet
     from . import stages
 
     def silver_task():
-        silver = stages.to_silver(stages.read_bronze(spark, bronze_path))
+        silver = stages.to_silver(
+            stages.read_bronze(spark, bronze_path, multi_line=multi_line))
         stages.write_silver(silver, silver_path)
         return spark.read.parquet(silver_path)
 
     def gold_task(silver):
         gold = stages.build_gold(silver)
         for name, df in gold.items():
-            df.write.mode("overwrite").parquet(f"{gold_path}/{name}")
+            write_parquet(df, f"{gold_path}/{name}")
         return {n: spark.read.parquet(f"{gold_path}/{n}") for n in gold}
 
     return (Pipeline()

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import read_json_with_schema
+from ..sources.writers import write_parquet
 from .schema import CREATED_AT_FORMAT, GH_EVENT_SCHEMA
 
 
@@ -54,10 +55,7 @@ def write_silver(silver: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Partitioned lake write. partitionBy(event_date) realizes the
     reference's per-date folder naming (load_data_task.py:135-145) as real
     partition pruning; maxRecordsPerFile caps file size at scale."""
-    (silver.write.mode(mode)
-     .option("maxRecordsPerFile", 5_000_000)
-     .partitionBy("event_date")
-     .parquet(path))
+    write_parquet(silver, path, mode=mode, partition_by=["event_date"])
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,9 @@ Mirrors the capability of the reference's session builder
 for the driver's local[{SPARK_GRAFT_CPUS}] harness but with every knob
 expressed the way a multi-executor cluster would want it (AQE, shuffle
 partition sizing, Arrow transfers). The reference's MinIO/s3a credential
-plumbing is :func:`load_s3a_config` — an explicit opt-in, since the local
-harness reads only local parquet.
+plumbing is an explicit opt-in through ``confs``, e.g.
+``get_spark(confs={"spark.hadoop.fs.s3a.endpoint": ...})``, since the
+local harness reads only local parquet.
 """
 
 from __future__ import annotations
@@ -57,38 +58,6 @@ def get_spark(app_name: str = "gh-archive-spark", master: str | None = None,
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def load_s3a_config(spark: SparkSession, endpoint: str,
-                    access_key: str, secret_key: str, *,
-                    ssl_enabled: bool = False,
-                    path_style_access: bool = True,
-                    extra: dict[str, str] | None = None) -> SparkSession:
-    """Point the session's Hadoop filesystem layer at an S3-compatible
-    object store (MinIO in the reference deployment).
-
-    Re-expression of reference pipeline/connectors/spark_context_manager.py
-    :28-48 (``load_minio_config``): the same fs.s3a.* keys land on the
-    JVM's live hadoopConfiguration — runtime-settable, so this works on a
-    session the engine did not build. After this call, every reader/writer
-    accepts ``s3a://bucket/...`` paths (given hadoop-aws + aws-sdk jars on
-    the classpath; without them Spark raises its standard
-    "FileSystem for scheme s3a" error at first use — nothing here can or
-    should mask that)."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    settings = {
-        "fs.s3a.endpoint": endpoint,
-        "fs.s3a.access.key": access_key,
-        "fs.s3a.secret.key": secret_key,
-        "fs.s3a.connection.ssl.enabled": str(ssl_enabled).lower(),
-        "fs.s3a.path.style.access": str(path_style_access).lower(),
-        "fs.s3a.aws.credentials.provider":
-            "org.apache.hadoop.fs.s3a.SimpleAWSCredentialsProvider",
-        **(extra or {}),
-    }
-    for key, value in settings.items():
-        hconf.set(key, value)
     return spark
 
 

@@ -1,3 +1,3 @@
-from .readers import ALL_TABLES, load_table, load_tables, read_json_with_schema
+from .readers import ALL_TABLES, load_table, read_json_with_schema
 
-__all__ = ["ALL_TABLES", "load_table", "load_tables", "read_json_with_schema"]
+__all__ = ["ALL_TABLES", "load_table", "read_json_with_schema"]

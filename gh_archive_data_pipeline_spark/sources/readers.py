@@ -117,12 +117,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                *names: str) -> dict[str, DataFrame]:
-    """Load several fixture tables at once (defaults to all of them)."""
-    return {n: load_table(spark, sf_dir, n) for n in (names or ALL_TABLES)}
-
-
 def plan_size_bytes(df: DataFrame) -> int:
     """Optimizer-estimated size of ``df`` in bytes (plan statistics — no
     job). On any introspection failure returns ``sys.maxsize`` so callers

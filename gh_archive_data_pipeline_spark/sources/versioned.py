@@ -9,15 +9,14 @@ published data, so concurrent readers are consistent without locks.
 
 This is the core MVCC idea Delta/Iceberg implement with transaction logs;
 the manifest here is the single-writer simplification (the reference's
-Airflow DAG is single-writer per table too). Retention: old versions stay
-until ``vacuum`` drops them — time travel works for anything retained.
+Airflow DAG is single-writer per table too). Retention: every version
+stays on disk, so time travel reaches any version ever written.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,8 +54,7 @@ def write_version(df: DataFrame, path: str) -> int:
 def read_version(spark: SparkSession, path: str,
                  version: int | None = None) -> DataFrame:
     """Read the published version (default) or a specific one (time
-    travel). Raises if the requested version was never written or was
-    vacuumed."""
+    travel). Raises if the requested version was never written."""
     v = current_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no published version at {path}")
@@ -71,17 +69,6 @@ def list_versions(path: str) -> list[int]:
         return []
     return sorted(int(d.split("=", 1)[1]) for d in os.listdir(path)
                   if d.startswith("v="))
-
-
-def vacuum(path: str, keep_last: int = 2) -> list[int]:
-    """Drop all but the newest ``keep_last`` versions (never the published
-    one). Returns the versions removed."""
-    versions = list_versions(path)
-    cur = current_version(path)
-    removable = [v for v in versions[:-keep_last] if v != cur]
-    for v in removable:
-        shutil.rmtree(os.path.join(path, f"v={v}"))
-    return removable
 
 
 def _register_query() -> None:

@@ -115,47 +115,3 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append",
     writer.save()
 
 
-def write_clustered(df: DataFrame, path: str, cluster_by: list[str],
-                    num_files: int = 8, mode: str = "overwrite") -> None:
-    """Clustered lake layout: range-repartition on the cluster keys, sort
-    within each partition, write one file per partition. Files then hold
-    disjoint key ranges with tight parquet min/max stats, so point and
-    range predicates on the cluster keys skip whole files/row-groups at
-    scan time — the sorted-layout complement to directory partitioning
-    (low-cardinality keys partition; high-cardinality keys cluster)."""
-    (df.repartitionByRange(num_files, *cluster_by)
-     .sortWithinPartitions(*cluster_by)
-     .write.mode(mode).parquet(path))
-
-
-def compact(spark, path: str, target_file_bytes: int = 128 * 1024 * 1024,
-            cluster_by: list[str] | None = None) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(bytes/target) files (optionally re-clustered), atomically swapped
-    in. Returns the new file count.
-
-    The streaming-sink hangover the reference flags (README.md:299): every
-    micro-batch appends files, and a year of hours is 10^5 tiny files whose
-    footer/open cost dominates scans. Compaction is a maintenance job, not
-    a query — run it on cold partitions (here: whole dir; at scale: per
-    partition, skipping ones already compact)."""
-    import glob as _glob
-    import math
-    import os
-    import shutil
-    import uuid
-
-    total = sum(os.path.getsize(f)
-                for f in _glob.glob(os.path.join(path, "*.parquet")))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path}.__compact_{uuid.uuid4().hex[:8]}"
-    if cluster_by:
-        (df.repartitionByRange(n_files, *cluster_by)
-         .sortWithinPartitions(*cluster_by)
-         .write.mode("overwrite").parquet(tmp))
-    else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return len(_glob.glob(os.path.join(path, "*.parquet")))

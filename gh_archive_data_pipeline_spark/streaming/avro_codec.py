@@ -36,20 +36,6 @@ def strip_confluent_header(value: Column) -> Column:
     return F.substring(value, CONFLUENT_HEADER_BYTES + 1, (1 << 31) - 1)
 
 
-def decode_confluent_avro(value: Column, avro_schema_json: str) -> Column:
-    """Header-strip + from_avro. Requires the spark-avro jar (external
-    package); raises a clear error when absent so callers can fall back to
-    JSON twins (the reference topics carry both encodings)."""
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as exc:  # pragma: no cover - jar/environment dependent
-        raise RuntimeError(
-            "from_avro requires the org.apache.spark:spark-avro package on "
-            "the session classpath"
-        ) from exc
-    return from_avro(strip_confluent_header(value), avro_schema_json)
-
-
 def encode_confluent_header(schema_id: int) -> bytes:
     """Producer-side framing: magic 0x00 + schema id (big-endian int32)."""
     return b"\x00" + schema_id.to_bytes(4, "big")
@@ -64,8 +50,9 @@ def encode_confluent_header(schema_id: int) -> bytes:
 # (https://avro.apache.org/docs/current/specification/ — zigzag-varint longs,
 # length-prefixed utf-8 strings, little-endian IEEE-754 doubles). This is the
 # actual wire format: bytes produced here are decodable by any Avro reader
-# with the matching schema, and decode_confluent_avro remains the jar-backed
-# fast path when the package IS on the classpath.
+# with the matching schema; with the package on the classpath,
+# ``from_avro(strip_confluent_header(value), schema_json)`` is the JVM-side
+# decode.
 
 EVENTS_AVRO_SCHEMA = {
     "type": "record",

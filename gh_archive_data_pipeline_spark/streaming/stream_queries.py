@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from ..plans.registry import register
 from ..session import ensure_runtime_confs
 from ..sources.readers import fixture_memo, scratch_dir
-from .pipeline import read_file_stream, run_to_memory, windowed_counts
+from .pipeline import (read_file_stream, run_to_memory, sessionized,
+                       windowed_counts)
 
 _counter = itertools.count()
 
@@ -436,22 +437,13 @@ def q201_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     final watermark (= max event time) are emitted as finalized. The
     gaps-and-islands oracle applies the same cutoff, so streaming session
     merging must agree with first-principles sessionization exactly."""
-    ev = (_events_stream(spark, sf_dir, n_files=4)
-          .select(F.col("ts").cast("timestamp").alias("ts"),
-                  "user_id", "value")
-          .withWatermark("ts", "0 seconds"))
-    sessions = (ev.groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                           "user_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                     F.round(F.sum("value"), 4).alias("session_value")))
+    sessions = sessionized(_events_stream(spark, sf_dir, n_files=4),
+                           gap="30 minutes", watermark="0 seconds")
     name = f"stream_sessions_{next(_counter)}"
-    out = run_to_memory(
-        sessions.select("user_id",
-                        F.col("w.start").cast("timestamp_ntz")
-                        .alias("session_start"),
-                        "n_events", "session_value"),
+    return run_to_memory(
+        sessions.select("user_id", "session_start", "n_events",
+                        "session_value"),
         name, spark, output_mode="append")
-    return out
 
 
 @register(
@@ -633,19 +625,19 @@ def q396_stream_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow stream that extracts the schema id from the 5-byte header
     with pure JVM expressions (confluent_schema_id / strip_confluent_header)
     and decodes the Avro body with the pure-Python binary codec in an
-    Arrow-batched pandas UDF (the spark-avro jar is absent here;
-    decode_confluent_avro is the jar-backed twin). The oracle computes the
-    same per-type counts, id sums and a field digest from the PLAIN table —
-    framing and body codec are deterministic, so encode∘decode must be the
-    identity on every field of every row for the hash to match. Floats ride
+    Arrow-batched pandas UDF (the spark-avro jar is absent here). The
+    oracle computes the same per-type counts, id sums and a field digest
+    from the PLAIN table — framing and body codec are deterministic, so
+    encode∘decode must be the identity on every field of every row for the
+    hash to match. Floats ride
     the digest as exact floor-cents (registry convention). At 100 TB the
     decode is embarrassingly parallel — one Arrow-batched projection per
     partition, no shuffle until the final per-type aggregate.
 
     Scale note: per-row Python varint walking is the declared cost of a
     jar-less Avro decode (q389's honest-Python-kernel contract); with the
-    spark-avro package on the classpath the same query runs fully JVM-side
-    via decode_confluent_avro."""
+    spark-avro package on the classpath the same query could decode fully
+    JVM-side with ``from_avro``."""
     from pyspark.sql.types import (BinaryType, DoubleType, LongType,
                                    StringType, StructField, StructType)
 

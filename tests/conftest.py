@@ -49,10 +49,8 @@ SLOW_TESTS = frozenset([
     "test_new_operators.py::test_bucket_pruned_probe_reads_less_and_matches_flat",
     "test_new_operators.py::test_connected_components_converges_on_long_chain",
     "test_new_operators.py::test_incremental_reconcile_equals_full_sweep_and_is_bounded",
-    "test_new_operators.py::test_ivf_delete_hides_ids_and_rebuild_folds_them",
-    "test_new_operators.py::test_ivf_rebuild_carries_tombstones_written_during_rebuild",
-    "test_new_operators.py::test_ivf_rebuild_equals_fresh_build_and_folds_generations",
-    "test_new_operators.py::test_minhash_index_delete_hides_docs_and_compact_folds",
+    "test_new_operators.py::test_ivf_delete_hides_ids",
+    "test_new_operators.py::test_minhash_index_delete_hides_docs",
     "test_new_operators.py::test_out_of_order_drain_plus_sweep_equals_clean_drain",
     "test_new_operators.py::test_q440_funnel_invariants",
     "test_new_operators.py::test_q444_streamed_build_equals_one_shot_q440",
@@ -61,7 +59,7 @@ SLOW_TESTS = frozenset([
     "test_new_operators.py::test_stream_corpus_build_decon_reference_derived_once",
     "test_new_operators.py::test_stream_corpus_build_out_of_order_arrival_raises",
     "test_new_operators.py::test_stream_corpus_build_partial_landing_zone_rewritten",
-    "test_operators.py::test_srp_delete_hides_ids_and_compact_folds_them",
+    "test_operators.py::test_srp_delete_hides_ids",
     "test_operators.py::test_srp_index_search_matches_inline_srp",
     "test_oracle_parity.py::test_query_matches_oracle[q152_stream_chained_windows]",
     "test_oracle_parity.py::test_query_matches_oracle[q168_dedup_pipeline]",

@@ -391,32 +391,25 @@ def test_dedup_pipeline_consistency(spark):
         assert cluster_of[p.doc_a] == cluster_of[p.doc_b]
 
 
-def test_compression_ratio_matches_zlib_and_orders_repetition(spark):
-    """compression_signals' zlib kernel must equal direct zlib on fixture
-    rows, and BOTH signals (zlib, trigram surrogate) must order repetitive
-    text strictly below high-entropy text — the property that lets the
-    oracle-checked surrogate stand in for zlib in the registry."""
+def test_trigram_ratio_orders_repetition_like_zlib(spark):
+    """q175's trigram surrogate must order repetitive text strictly below
+    high-entropy text, as zlib's compression ratio does — the property
+    that lets the oracle-checked surrogate stand in for zlib."""
     import zlib
 
     from gh_archive_data_pipeline_spark.operators.text_queries import (
-        compression_signals)
+        _trigram_ratio)
 
-    sf = "/root/testdata/sf0.001"
-    docs_df = spark.read.parquet(f"{sf}/documents.parquet")
-    rows = compression_signals(docs_df).collect()
-    docs = {r.doc_id: r.text for r in docs_df.collect()}
-    assert len(rows) == len(docs)
-    for r in rows[:20]:
-        raw = docs[r.doc_id].encode()
-        assert r.zlib_ratio == round(len(zlib.compress(raw, 6)) / len(raw), 6)
-
-    crafted = spark.createDataFrame(
-        [(1, "spam " * 200), (2, "".join(chr(33 + (i * 7919) % 90)
-                                         for i in range(1000)))],
-        "doc_id long, text string")
-    got = {r.doc_id: r for r in compression_signals(crafted).collect()}
-    assert got[1].zlib_ratio < 0.1 < got[2].zlib_ratio
-    assert got[1].trigram_ratio < got[2].trigram_ratio
+    texts = {1: "spam " * 200,
+             2: "".join(chr(33 + (i * 7919) % 90) for i in range(1000))}
+    crafted = spark.createDataFrame(list(texts.items()),
+                                    "doc_id long, text string")
+    got = {r.doc_id: r.trigram_ratio for r in crafted.select(
+        "doc_id", _trigram_ratio().alias("trigram_ratio")).collect()}
+    zl = {d: len(zlib.compress(t.encode(), 6)) / len(t.encode())
+          for d, t in texts.items()}
+    assert zl[1] < 0.1 < zl[2]
+    assert got[1] < got[2]
 
 
 def test_audio_energy_frames_deterministic_and_bounded(spark):
@@ -2074,75 +2067,6 @@ def test_parse_media_header_golden_vectors():
     assert parse_media_header(b"\xff\xd8\xff")["header_ok"] is False
 
 
-def test_ivf_rebuild_equals_fresh_build_and_folds_generations(
-        spark, sf_dir, tmp_path):
-    """The frozen-codebook maintenance loop's repair step: after build +
-    append + rebuild, (a) search results are identical to a FRESH build
-    over the same rows (the rebuild is a real re-train, not a merge), (b)
-    the appended generations are folded into a single ingest=base, (c) the
-    publish is versioned — searches and future appends resolve to v=0
-    while the pre-rebuild flat layout survives until vacuum."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators.similarity import (
-        build_ivf_index, ivf_index_append, ivf_rebuild, ivf_search,
-        ivf_vacuum)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter("vec_id < 10")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter("vec_id % 10 != 0"), idx, num_cells=16)
-    ivf_index_append(spark, idx, emb.filter("vec_id % 10 = 0"),
-                     ingest_id="d1")
-    assert ivf_rebuild(spark, idx) == 0
-
-    fresh = str(tmp_path / "fresh")
-    build_ivf_index(emb, fresh, num_cells=16)
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    got = sorted(ivf_search(spark, idx, queries).collect(), key=key)
-    want = sorted(ivf_search(spark, fresh, queries).collect(), key=key)
-    assert got == want
-
-    gens = {r.ingest for r in spark.read.parquet(f"{idx}/v=0/corpus")
-            .select("ingest").distinct().collect()}
-    assert gens == {"base"}, "rebuild must fold ingest generations"
-    # vacuum drops the superseded flat layout; search is byte-identical
-    removed = ivf_vacuum(spark, idx)
-    assert f"{idx}/corpus" in removed and not os.path.isdir(f"{idx}/corpus")
-    assert sorted(ivf_search(spark, idx, queries).collect(), key=key) == want
-    # post-rebuild appends land in the ACTIVE generation
-    ivf_index_append(spark, idx, emb.filter("vec_id % 10 = 0"),
-                     ingest_id="d2")
-    assert os.path.isdir(f"{idx}/v=0/corpus/ingest=d2")
-    assert not os.path.isdir(f"{idx}/corpus")
-
-
-def test_ivf_maintain_fires_exactly_on_overfull(spark, sf_dir, tmp_path):
-    """ivf_maintain's trigger contract: it rebuilds IFF ivf_balance flags
-    an overfull cell at the given factor — no rebuild (and no published
-    version) above the worst cell's occupancy, exactly one published
-    rebuild below it."""
-    from gh_archive_data_pipeline_spark.operators.similarity import (
-        _ivf_current_version, build_ivf_index, ivf_balance,
-        ivf_index_append, ivf_maintain)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter("vec_id % 10 != 0"), idx, num_cells=16)
-    ivf_index_append(spark, idx, emb.filter("vec_id % 10 = 0"),
-                     ingest_id="d1")
-    worst = max(r.occupancy_ratio
-                for r in ivf_balance(spark, idx).collect())
-    # factor above the worst cell: no flag -> no rebuild, nothing published
-    assert ivf_maintain(spark, idx, overfull_factor=worst + 0.1) is False
-    assert _ivf_current_version(spark, idx) is None
-    # factor below it: flag -> rebuild published as v=0
-    assert ivf_maintain(spark, idx, overfull_factor=worst - 0.01) is True
-    assert _ivf_current_version(spark, idx) == 0
-
-
 def test_embedding_near_dup_rejects_unknown_hashing(spark, sf_dir):
     """A typo'd hashing knob ('portabel') must fail loudly, not silently
     fall through to the BLAS bucketer and lose the oracle-exact hashing
@@ -2190,51 +2114,16 @@ def test_probe_then_append_emits_cross_batch_pairs(spark, tmp_path):
     assert pairs2 == {(10, 30)}         # EARLIER BATCH dup seen after append
 
 
-def test_compact_minhash_index_preserves_probe_results(spark, sf_dir,
-                                                       tmp_path):
-    """Compaction is layout-only: after several streamed appends, merging
-    the ingest partitions must shrink the file count and leave probe
-    results byte-identical."""
-    import glob
-
-    from gh_archive_data_pipeline_spark.operators.dedup import (
-        build_minhash_index, compact_minhash_index, incremental_near_dup,
-        minhash_index_append)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    idx = str(tmp_path / "idx")
-    build_minhash_index(docs.filter("doc_id % 10 > 4"), idx)
-    for i, sel in enumerate(("doc_id % 10 = 1", "doc_id % 10 = 2")):
-        minhash_index_append(spark, idx, docs.filter(sel), ingest_id=f"b{i}")
-    probe = docs.filter("doc_id % 10 = 0")
-    before = {(r.doc_a, r.doc_b, r.jaccard)
-              for r in incremental_near_dup(spark, idx, probe).collect()}
-    n_files_before = len(glob.glob(f"{idx}/bands/**/*.parquet",
-                                   recursive=True))
-    compact_minhash_index(spark, idx)
-    n_files_after = len(glob.glob(f"{idx}/bands/**/*.parquet",
-                                  recursive=True))
-    after = {(r.doc_a, r.doc_b, r.jaccard)
-             for r in incremental_near_dup(spark, idx, probe).collect()}
-    assert after == before and before
-    assert n_files_after < n_files_before
-
-
-def test_minhash_index_delete_hides_docs_and_compact_folds(spark, sf_dir,
-                                                           tmp_path):
-    """minhash_index_delete's full contract (round-11 removal plane):
-    (a) pairs whose corpus member is tombstoned vanish from the probe
-    while surviving pairs are untouched — probe results equal a probe
-    against an index built WITHOUT the deleted docs; (b) delete batches
-    accumulate under collision-free uuid partitions; (c) compaction folds
-    the tombstones (directory gone, probe results unchanged, tables
-    bit-equal to the survivors-only build)."""
+def test_minhash_index_delete_hides_docs(spark, sf_dir, tmp_path):
+    """minhash_index_delete's contract: (a) pairs whose corpus member is
+    tombstoned vanish from the probe while surviving pairs are untouched —
+    probe results equal a probe against an index built WITHOUT the
+    deleted docs; (b) delete batches accumulate under collision-free uuid
+    partitions."""
     import os
 
     from gh_archive_data_pipeline_spark.operators.dedup import (
-        build_minhash_index, compact_minhash_index, incremental_near_dup,
-        minhash_index_delete)
+        build_minhash_index, incremental_near_dup, minhash_index_delete)
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2264,17 +2153,6 @@ def test_minhash_index_delete_hides_docs_and_compact_folds(spark, sf_dir,
     surv = {(r.doc_a, r.doc_b)
             for r in incremental_near_dup(spark, surv_idx, probe).collect()}
     assert got == surv and got
-
-    compact_minhash_index(spark, idx)
-    assert not os.path.isdir(f"{idx}/tombstones")
-    after = {(r.doc_a, r.doc_b)
-             for r in incremental_near_dup(spark, idx, probe).collect()}
-    assert after == got
-    # the folded tables carry no tombstoned rows
-    sh_ids = {r.doc_id for r in
-              spark.read.parquet(f"{idx}/shingles")
-              .select("doc_id").distinct().collect()}
-    assert not (sh_ids & deleted)
 
 
 def test_hard_negative_mining_semantics(spark, sf_dir):
@@ -2369,40 +2247,6 @@ def test_bucket_pruned_probe_reads_less_and_matches_flat(spark, sf_dir,
     assert pruned_s["rows_read"] < flat_s["rows_read"]
     # the pruned scan must skip a nontrivial share of the bands table
     assert pruned_s["rows_read"] < flat_s["rows_read"] - 0.1 * total_bands
-
-
-def test_compact_empty_bucketed_index_stays_readable(spark, tmp_path):
-    """Review regression: compacting an index built from an EMPTY corpus
-    must not strip the bands table's schema (partitionBy on zero rows
-    writes no files) — probes after compaction still work."""
-    from gh_archive_data_pipeline_spark.operators.dedup import (
-        build_minhash_index, compact_minhash_index, incremental_near_dup)
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    delta = spark.createDataFrame(
-        [(1, "red fox jumps high"), (2, "red fox jumps high")],
-        "doc_id long, text string")
-    idx = str(tmp_path / "empty_idx")
-    build_minhash_index(empty, idx)
-    compact_minhash_index(spark, idx)
-    pairs = {(r.doc_a, r.doc_b)
-             for r in incremental_near_dup(spark, idx, delta).collect()}
-    assert pairs == {(1, 2)}  # delta-internal dup still found
-
-
-class _FalseDeleteFS:
-    """Wraps the real Hadoop FileSystem, delegating everything except
-    ``delete``, which reports failure by returning False — the object-store
-    failure mode the vacuum's return-value checks exist for."""
-
-    def __init__(self, real):
-        self._real = real
-
-    def delete(self, path, recursive):
-        return False
-
-    def __getattr__(self, name):
-        return getattr(self._real, name)
 
 
 def test_q444_streamed_build_equals_one_shot_q440(spark, sf_dir):
@@ -2786,224 +2630,10 @@ def test_chunk_dispositions_below_trim_threshold_keeps_whole_doc(spark):
     assert rows[1].kept_tokens == 112
 
 
-def test_ivf_rebuild_two_writer_race_loser_raises_before_touching(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """VERDICT-r8 item 7: two concurrent rebuilds racing the SAME version
-    number — exactly one publishes, the loser raises IOError at the lock
-    (i.e. BEFORE writing a byte of v=N), and the winner's generation is
-    byte-for-byte intact after the race. A barrier inside the patched
-    hadoop_fs holds both threads until BOTH have listed the index and
-    computed the same next_v, so the createNewFile collision is
-    deterministic, not scheduling luck."""
-    import hashlib
-    import os
-    import threading
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import (
-        hadoop_fs as real_hadoop_fs,
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-
-    barrier = threading.Barrier(2, timeout=120)
-
-    def racing_hadoop_fs(spark_, path):
-        # both writers have listed + computed next_v by the time they ask
-        # for the lock path; release them into createNewFile together
-        if path.endswith(".lock"):
-            barrier.wait()
-        return real_hadoop_fs(spark_, path)
-
-    monkeypatch.setattr(sim, "hadoop_fs", racing_hadoop_fs)
-
-    def tree_md5(root: str) -> dict[str, str]:
-        out = {}
-        for dirpath, _, files in os.walk(root):
-            for f in files:
-                p = os.path.join(dirpath, f)
-                rel = os.path.relpath(p, root)
-                with open(p, "rb") as fh:
-                    out[rel] = hashlib.md5(fh.read()).hexdigest()
-        return out
-
-    results: dict[str, object] = {}
-
-    def writer(tag: str):
-        try:
-            v = sim.ivf_rebuild(spark, idx)
-            # winner: snapshot its published generation IMMEDIATELY so the
-            # post-join compare proves the loser never touched it
-            results[tag] = ("published", v, tree_md5(f"{idx}/v={v}"))
-        except IOError as e:
-            results[tag] = ("raised", str(e))
-        except BaseException as e:  # anything else fails the race contract
-            results[tag] = ("unexpected", f"{type(e).__name__}: {e}")
-
-    t1 = threading.Thread(target=writer, args=("a",))
-    t2 = threading.Thread(target=writer, args=("b",))
-    t1.start(); t2.start(); t1.join(120); t2.join(120)
-
-    outcomes = sorted(r[0] for r in results.values())
-    assert outcomes == ["published", "raised"], results
-    winner = next(r for r in results.values() if r[0] == "published")
-    loser = next(r for r in results.values() if r[0] == "raised")
-    _, v, snap = winner
-    assert v == 0
-    assert "lock already exists" in loser[1]
-    # loser raised at the lock: winner's v=0 is byte-for-byte what the
-    # winner published, and no second generation ever appeared
-    assert tree_md5(f"{idx}/v=0") == snap and snap
-    assert os.path.exists(f"{idx}/_v_0.ready")
-    # the winner's lock SURVIVES publish (round-9 protocol fix): deleting
-    # it re-opened the version number to a laggard whose next_v predated
-    # the publish — the laggard would re-create the lock and clobber the
-    # published v=0's files before its marker create finally failed
-    assert os.path.exists(f"{idx}/_v_0.lock")
-    assert not os.path.isdir(f"{idx}/v=1")
-    # and the published index actually answers searches (sanity)
-    monkeypatch.setattr(sim, "hadoop_fs", real_hadoop_fs)
-    queries = emb.filter("vec_id < 5")
-    assert sim.ivf_search(spark, idx, queries).count() == 25
-
-
-def test_election_claim_winner_canonicalizes(spark, tmp_path):
-    """Object-store claim path (round-10): a lone claimant wins the
-    election and records the canonical ``.lock`` beside its uuid claim."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import hadoop_fs
-
-    idx = str(tmp_path / "ivf")
-    os.makedirs(idx)
-    fs, _ = hadoop_fs(spark, idx)
-    sim._election_claim(spark, fs, idx, 0)
-    names = sorted(os.listdir(idx))
-    assert "_v_0.lock" in names
-    assert any(n.startswith("_v_0.lock.") for n in names)
-
-
-def test_election_claim_loses_to_existing_claims(spark, tmp_path):
-    """A claimant must lose to (a) a canonical .lock, (b) a published
-    .ready, and (c) a rival election claim that sorts first — each raising
-    before any byte of v=N could be written."""
-    import os
-
-    import pytest
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import hadoop_fs
-
-    idx = str(tmp_path / "ivf")
-    os.makedirs(idx)
-    fs, _ = hadoop_fs(spark, idx)
-
-    open(f"{idx}/_v_0.lock", "w").close()
-    with pytest.raises(IOError, match="lock already exists"):
-        sim._election_claim(spark, fs, idx, 0)
-
-    open(f"{idx}/_v_1.ready", "w").close()
-    with pytest.raises(IOError, match="lock already exists"):
-        sim._election_claim(spark, fs, idx, 1)
-
-    # rival uuid claim sorting first: force our uuid to the top of the sort
-    open(f"{idx}/_v_2.lock.0000rival", "w").close()
-
-    class _BigUuid:
-        hex = "ffffffffffffffffffffffffffffffff"
-
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(sim.uuid, "uuid4", lambda: _BigUuid())
-        with pytest.raises(IOError, match="election lost"):
-            sim._election_claim(spark, fs, idx, 2)
-    # the loser's claim file stays (a permanent claim on the number) but
-    # no canonical lock was forged for it
-    assert not os.path.exists(f"{idx}/_v_2.lock")
-
-
-def test_election_claim_two_writer_race_single_winner(spark, tmp_path):
-    """Deterministic two-writer election (the object-store claim path):
-    both claimants PUT their uuid claim, a barrier holds each until BOTH
-    claims exist, then both list — so both see both claims and exactly
-    one (the lexicographically-smaller uuid) proceeds while the other
-    raises. Unlike the O_EXCL race test this cannot tie by construction:
-    the decision is made from identical listings."""
-    import os
-    import threading
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import hadoop_fs
-
-    idx = str(tmp_path / "ivf")
-    os.makedirs(idx)
-    barrier = threading.Barrier(2, timeout=60)
-
-    class BarrierFS:
-        """Holds listStatus until both claimants have written."""
-
-        def __init__(self, real):
-            self._real = real
-
-        def listStatus(self, p):
-            barrier.wait()
-            return self._real.listStatus(p)
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    results: dict[str, str] = {}
-
-    def claimant(tag: str):
-        fs, _ = hadoop_fs(spark, idx)
-        try:
-            sim._election_claim(spark, BarrierFS(fs), idx, 0)
-            results[tag] = "won"
-        except IOError as e:
-            results[tag] = f"lost: {e}"
-
-    ts = [threading.Thread(target=claimant, args=(t,)) for t in "ab"]
-    [t.start() for t in ts]
-    [t.join(90) for t in ts]
-    outcomes = sorted(v.split(":")[0] for v in results.values())
-    assert outcomes == ["lost", "won"], results
-    assert os.path.exists(f"{idx}/_v_0.lock")
-    assert "election lost" in next(v for v in results.values()
-                                   if v.startswith("lost"))
-
-
-def test_ivf_rebuild_skips_election_claimed_version(spark, sf_dir, tmp_path):
-    """An orphan election claim (``_v_N.lock.<uuid>`` with no .ready — a
-    crashed object-store rebuild) permanently retires version N: the next
-    rebuild publishes N+1, and vacuum sweeps the orphan claim once a newer
-    version is active."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-    open(f"{idx}/_v_0.lock.deadbeef", "w").close()   # crashed claimant
-    assert sim.ivf_rebuild(spark, idx) == 1          # 0 is claimed forever
-    removed = sim.ivf_vacuum(spark, idx, keep_last=1)
-    assert f"{idx}/_v_0.lock" in removed
-    assert not os.path.exists(f"{idx}/_v_0.lock.deadbeef")
-    assert os.path.isdir(f"{idx}/v=1")
-
-
-def test_ivf_delete_hides_ids_and_rebuild_folds_them(spark, sf_dir,
-                                                     tmp_path):
-    """ivf_delete's full contract: (a) tombstoned ids never surface as
+def test_ivf_delete_hides_ids(spark, sf_dir, tmp_path):
+    """ivf_delete's contract: (a) tombstoned ids never surface as
     neighbors and survivor ranks re-pack densely; (b) delete batches
-    accumulate (two calls -> two delete partitions, union applied);
-    (c) ivf_rebuild folds deletions permanently — the published
-    generation carries no tombstones and its search is BIT-EQUAL to a
-    fresh build over the surviving rows."""
+    accumulate (two calls -> two delete partitions, union applied)."""
     import os
 
     from gh_archive_data_pipeline_spark.operators import similarity as sim
@@ -3033,214 +2663,6 @@ def test_ivf_delete_hides_ids_and_rebuild_folds_them(spark, sf_dir,
         by_q.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, len(v) + 1))
                for v in by_q.values())
-
-    # rebuild folds: new generation tombstone-free, bit-equal to a fresh
-    # build over the surviving rows
-    v = sim.ivf_rebuild(spark, idx)
-    assert not os.path.isdir(f"{idx}/v={v}/tombstones")
-    fresh = str(tmp_path / "fresh")
-    sim.build_ivf_index(
-        emb.filter("vec_id % 7 != 3 AND vec_id % 11 != 5"), fresh,
-        num_cells=16)
-    # (pre-rebuild tombstone search is NOT compared: it probes the
-    # original full-corpus codebook; rebuild retrains on survivors, so
-    # only rebuild-vs-fresh is bit-equal by determinism)
-    a = sorted(map(tuple, sim.ivf_search(spark, idx, queries).collect()))
-    b = sorted(map(tuple, sim.ivf_search(spark, fresh, queries).collect()))
-    assert a == b and a
-
-
-def test_ivf_rebuild_carries_tombstones_written_during_rebuild(
-        spark, sf_dir, tmp_path):
-    """The delete-vs-rebuild race (round-11 ADVICE, medium): a tombstone
-    written to the still-active old root WHILE a rebuild is running must
-    not be orphaned when the .ready marker flips readers to the new
-    generation. The pre-publish hook lands a delete at the worst moment —
-    after v=N is fully built from the tombstone snapshot, before the
-    marker — and the id must still (a) never surface in post-rebuild
-    searches, via the carried-forward live tombstone set, and (b) be
-    folded permanently by the NEXT rebuild."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-    sim.ivf_delete(spark, idx, emb.filter("vec_id % 7 = 3")
-                   .select("vec_id"))
-
-    def late_delete(old_root):
-        # a concurrent client deletes against the ACTIVE (old) root —
-        # ivf_delete resolves the same root because no marker exists yet
-        assert sim.ivf_active_root(spark, idx) == old_root
-        sim.ivf_delete(spark, idx, emb.filter("vec_id % 11 = 5")
-                       .select("vec_id"))
-
-    v = sim.ivf_rebuild(spark, idx, _pre_publish_hook=late_delete)
-    # the late ids ride the new generation as LIVE tombstones…
-    assert os.path.isdir(f"{idx}/v={v}/tombstones")
-    rows = sim.ivf_search(spark, idx,
-                          emb.filter("vec_id < 5"), k=5).collect()
-    assert rows and all(r.neighbor_id % 7 != 3 and r.neighbor_id % 11 != 5
-                        for r in rows)
-    # …and the next rebuild folds them permanently
-    v2 = sim.ivf_rebuild(spark, idx)
-    assert not os.path.isdir(f"{idx}/v={v2}/tombstones")
-    rows2 = sim.ivf_search(spark, idx,
-                           emb.filter("vec_id < 5"), k=5).collect()
-    assert rows2 and all(r.neighbor_id % 7 != 3 and r.neighbor_id % 11 != 5
-                         for r in rows2)
-
-
-def test_ivf_vacuum_sweeps_flat_generation_tombstones(spark, sf_dir,
-                                                      tmp_path):
-    """round-11 ADVICE (low): vacuuming the flat pre-rebuild generation
-    must remove its tombstones directory too — the deleted-id list
-    persisting after the generation is 'removed' defeats erasure."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-    sim.ivf_delete(spark, idx, emb.filter("vec_id % 7 = 3")
-                   .select("vec_id"))
-    sim.ivf_rebuild(spark, idx)
-    sim.ivf_vacuum(spark, idx, keep_last=1)
-    assert not os.path.isdir(f"{idx}/tombstones")
-    assert not os.path.isdir(f"{idx}/corpus")
-
-
-def test_ivf_maintain_tombstone_drift_trigger(spark, sf_dir, tmp_path):
-    """round-11 VERDICT item 3: deletes ALONE (cells perfectly balanced,
-    no appends) must trip ivf_maintain once the tombstone fraction
-    crosses the threshold; the rebuild folds the backlog so post-rebuild
-    searches drop the anti-join (no tombstones under the active root)."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-    n = emb.count()
-    sim.ivf_delete(spark, idx, emb.filter("vec_id % 10 = 3")
-                   .select("vec_id"))   # ~10% backlog
-    # below threshold (and balanced cells): no rebuild
-    assert sim.ivf_maintain(spark, idx, tombstone_frac=0.5) is False
-    assert sim.ivf_active_root(spark, idx) == idx
-    # at/over threshold: deletes alone trip the fold
-    assert sim.ivf_maintain(spark, idx, tombstone_frac=0.05) is True
-    root = sim.ivf_active_root(spark, idx)
-    assert root != idx
-    assert not os.path.isdir(f"{root}/tombstones")
-    surv = spark.read.parquet(f"{root}/corpus").count()
-    assert surv == n - emb.filter("vec_id % 10 = 3").count()
-    # disabled signal: a fresh backlog no longer triggers
-    sim.ivf_delete(spark, idx, emb.filter("vec_id % 10 = 4")
-                   .select("vec_id"))
-    assert sim.ivf_maintain(spark, idx, tombstone_frac=None) is False
-
-
-def test_ivf_vacuum_raises_on_failed_delete(spark, sf_dir, tmp_path,
-                                            monkeypatch):
-    """A false return from fs.delete must raise, never leave the path on
-    disk while ``removed`` claims it was deleted (the round-7 verdict's
-    remaining FS-return-value gap)."""
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-    assert sim.ivf_rebuild(spark, idx) == 0
-
-    real_hadoop_fs = sim.hadoop_fs
-
-    def fake_hadoop_fs(spark_, path):
-        fs, p = real_hadoop_fs(spark_, path)
-        return _FalseDeleteFS(fs), p
-
-    monkeypatch.setattr(sim, "hadoop_fs", fake_hadoop_fs)
-    with pytest.raises(IOError, match="fs.delete reported failure"):
-        sim.ivf_vacuum(spark, idx)   # default keep_last=1 drops the flat dir
-    monkeypatch.undo()
-    # nothing was claimed removed and the flat layout is intact
-    import os
-    assert os.path.isdir(f"{idx}/corpus")
-    # the real vacuum still works afterwards
-    removed = sim.ivf_vacuum(spark, idx)
-    assert f"{idx}/corpus" in removed and not os.path.isdir(f"{idx}/corpus")
-
-
-def test_ivf_vacuum_flat_layout_counts_in_keep_last(spark, sf_dir, tmp_path):
-    """ADVICE r7: the flat pre-rebuild layout is the OLDEST generation in
-    the keep_last accounting — with one published version and keep_last=2
-    it is a retained rollback generation, not unconditional debris."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators.similarity import (
-        build_ivf_index, ivf_rebuild, ivf_vacuum)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, num_cells=16)
-    assert ivf_rebuild(spark, idx) == 0
-    # keep_last=2: generations = [flat, v0]; both retained -> no-op
-    assert ivf_vacuum(spark, idx, keep_last=2) == []
-    assert os.path.isdir(f"{idx}/corpus")
-    # keep_last=1: only v0 retained -> flat dropped
-    removed = ivf_vacuum(spark, idx, keep_last=1)
-    assert f"{idx}/corpus" in removed
-    assert not os.path.isdir(f"{idx}/corpus")
-
-
-def test_ivf_rebuild_loser_raises_before_touching_files(spark, sf_dir,
-                                                        tmp_path,
-                                                        monkeypatch):
-    """ADVICE r7 race: when a concurrent rebuild owns the version's lock,
-    the loser must raise at the CLAIM step — before build_ivf_index could
-    delete/rewrite a v=N directory the winner may already have published."""
-    import os
-
-    from gh_archive_data_pipeline_spark.operators import similarity as sim
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
-
-    real_hadoop_fs = sim.hadoop_fs
-
-    def fake_hadoop_fs(spark_, path):
-        # a rival rebuild claims the lock in the window between our
-        # listStatus and our claim — the O_EXCL create must then fail
-        if path.endswith(".lock"):
-            open(path, "w").close()
-        return real_hadoop_fs(spark_, path)
-
-    monkeypatch.setattr(sim, "hadoop_fs", fake_hadoop_fs)
-    builds = []
-    monkeypatch.setattr(sim, "build_ivf_index",
-                        lambda *a, **k: builds.append(a))
-    with pytest.raises(IOError, match="rebuild lock already exists"):
-        sim.ivf_rebuild(spark, idx)
-    assert builds == [], "loser must not write a byte after losing the claim"
-    monkeypatch.undo()
-    assert not os.path.isdir(f"{idx}/v=0")
-    # a pre-existing lock from a crashed rebuild is skipped, not reused
-    open(f"{idx}/_v_0.lock", "w").close()
-    assert sim.ivf_rebuild(spark, idx) == 1
-    # vacuum sweeps the crashed claim's debris
-    removed = sim.ivf_vacuum(spark, idx)
-    assert f"{idx}/_v_0.lock" in removed
-    assert not os.path.exists(f"{idx}/_v_0.lock")
 
 
 def test_bpe_ignores_empty_tokens_from_ragged_whitespace(spark):

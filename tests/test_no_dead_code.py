@@ -1,12 +1,15 @@
-"""Guard against unreachable package code.
+"""Guard against unreachable package code and dangling cross-references.
 
 Every top-level function or class in the package that is not a registered
 query must be referenced from somewhere other than its own definition and
 the tests: another package module, ``bench.py``, ``tools/``,
 ``perfbench/`` or ``__spark_entry__.py``. A reference is a name or
-attribute in code, or the name as a word inside a string literal (a
-docstring cross-reference such as ``:func:`ivf_vacuum```). Comments do not
-count. Code that only tests call either gets a real caller or goes.
+attribute in code; a word in a docstring, string or comment does not
+count, so a docstring that cites a function keeps nothing alive. Code that
+only tests call either gets a real caller or goes.
+
+Every Sphinx ``:func:`` / ``:class:`` cross-reference in the package must
+name a function or class the package defines.
 """
 
 from __future__ import annotations
@@ -27,11 +30,14 @@ ALLOWED = {
                    "pins its clear error",
     "jdbc_ddl_types": "README environment-blocked seam (no JDBC driver); a "
                       "test pins the DDL type mapping",
+    "write_jdbc": "the gold -> Postgres sink, a README environment-blocked "
+                  "seam (no database); a test pins the options it sends, "
+                  "jdbc_write_options",
     "plan_metrics": "ROADMAP's metrics-as-data API: executed-plan metrics "
                     "as a DataFrame",
 }
 
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_XREF = re.compile(r":(?:func|class):`~?([\w.]+)`")
 
 
 def _py_files(path: str):
@@ -52,8 +58,6 @@ def _names(tree: ast.AST) -> Counter:
             out[n.id] += 1
         elif isinstance(n, ast.Attribute):
             out[n.attr] += 1
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            out.update(_WORD.findall(n.value))
     return out
 
 
@@ -92,3 +96,21 @@ def test_no_package_code_only_tests_reach():
     assert not dead, (
         "top-level package code with no caller outside tests (give it a "
         f"real caller or delete it): {dead}")
+
+
+def test_docstring_cross_references_resolve():
+    defined = set()
+    xrefs = []
+    for path in _py_files(PACKAGE):
+        with open(path) as f:
+            src = f.read()
+        defined.update(n.name for n in ast.walk(ast.parse(src, path))
+                       if isinstance(n, (ast.FunctionDef, ast.ClassDef)))
+        rel = os.path.relpath(path, ROOT)
+        xrefs += [(m.group(1), f"{rel}:{src.count(chr(10), 0, m.start()) + 1}")
+                  for m in _XREF.finditer(src)]
+    assert xrefs
+    dangling = [(name, where) for name, where in xrefs
+                if name.rsplit(".", 1)[-1] not in defined]
+    assert not dangling, (
+        f"cross-references to nothing the package defines: {dangling}")

@@ -183,31 +183,6 @@ def test_write_delta_raises_clear_error_without_jars(spark, tmp_path):
         write_delta(df, str(tmp_path / "d"))
 
 
-def test_clustered_write_disjoint_sorted_files(spark, tmp_path):
-    """write_clustered must produce files with disjoint key ranges (the
-    min/max-pruning precondition) and sorted content within each file."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from gh_archive_data_pipeline_spark.sources.writers import write_clustered
-
-    df = spark.range(10_000).select(
-        (F.col("id") * 7919 % 10_000).alias("k"), F.col("id").alias("v"))
-    out = str(tmp_path / "clustered")
-    write_clustered(df, out, cluster_by=["k"], num_files=4)
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) == 4
-    ranges = []
-    for f in files:
-        ks = [r.k for r in spark.read.parquet(f).collect()]
-        assert ks == sorted(ks), "file content not sorted"
-        ranges.append((min(ks), max(ks)))
-    ranges.sort()
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo, f"overlapping file ranges: {ranges}"
-
-
 def test_gharchive_python_datasource(spark, tmp_path):
     """Custom Python DataSource: one input partition per hour file, gzip and
     plain files mixed, nested actor/repo/org flattened to analytic columns."""
@@ -245,21 +220,6 @@ def test_gharchive_python_datasource(spark, tmp_path):
     assert {r.h: r["count"] for r in hours} == {"15": 3, "16": 2}
 
 
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    """Small-file compaction: 50 tiny files → 1, content identical."""
-    from gh_archive_data_pipeline_spark.sources.writers import compact
-
-    out = str(tmp_path / "many")
-    spark.range(5000).repartition(50).write.parquet(out)
-    import glob
-    assert len(glob.glob(f"{out}/*.parquet")) == 50
-    n = compact(spark, out, target_file_bytes=1 << 30)
-    assert n == 1
-    back = spark.read.parquet(out)
-    assert back.count() == 5000
-    assert back.agg({"id": "sum"}).collect()[0][0] == 5000 * 4999 // 2
-
-
 def test_versioned_lake_time_travel(spark, tmp_path):
     from gh_archive_data_pipeline_spark.sources import versioned as V
 
@@ -274,15 +234,9 @@ def test_versioned_lake_time_travel(spark, tmp_path):
     old = V.read_version(spark, path, version=0)
     assert old.count() == 3
     assert {r.x for r in old.collect()} == {0, 10, 20}
-    # a third write + vacuum(keep_last=2) drops only v0
-    V.write_version(spark.range(7), path)
-    assert V.vacuum(path, keep_last=2) == [0]
-    assert V.list_versions(path) == [1, 2]
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError):
-        V.read_version(spark, path, version=0)
-    # published version still intact after vacuum
-    assert V.read_version(spark, path).count() == 7
+    assert V.list_versions(path) == [0, 1]
+    with pytest.raises(FileNotFoundError):
+        V.read_version(spark, path, version=2)
 
 
 def test_versioned_lake_publish_is_atomic(spark, tmp_path):
@@ -297,25 +251,6 @@ def test_versioned_lake_publish_is_atomic(spark, tmp_path):
     V.write_version(spark.range(9), path)
     assert df_old.count() == 4  # unchanged by the concurrent publish
     assert V.read_version(spark, path).count() == 9
-
-
-def test_load_s3a_config_lands_on_hadoop_conf(spark):
-    """Reference parity (spark_context_manager.py:28-48): the s3a/MinIO
-    settings must land on the LIVE JVM hadoopConfiguration — the layer
-    Spark's FileSystem resolution actually consults — including on a
-    session this engine did not build."""
-    from gh_archive_data_pipeline_spark.session import load_s3a_config
-
-    load_s3a_config(spark, endpoint="http://minio.local:9000",
-                    access_key="ak", secret_key="sk",
-                    extra={"fs.s3a.attempts.maximum": "1"})
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert hconf.get("fs.s3a.endpoint") == "http://minio.local:9000"
-    assert hconf.get("fs.s3a.access.key") == "ak"
-    assert hconf.get("fs.s3a.secret.key") == "sk"
-    assert hconf.get("fs.s3a.path.style.access") == "true"
-    assert hconf.get("fs.s3a.connection.ssl.enabled") == "false"
-    assert hconf.get("fs.s3a.attempts.maximum") == "1"
 
 
 def test_appended_generations_with_evolved_schema_read_as_union(spark,
@@ -363,22 +298,14 @@ def test_read_binary_files_globs_and_loads_content(spark, tmp_path):
     assert one_day.count() == 1
 
 
-def test_gold_dim_parity_on_multi_event_file(spark, tmp_path):
-    """q392's dim-summary parity beyond the one-event sample: a crafted
-    JSON-lines hour exercising every divergence the five-field semantics
-    must handle — the same actor (id, login) appearing with two different
-    avatar_urls (2 distinct users, not 1), an org struct with a missing
-    field (dropped by na.drop AND by the oracle's five-field null filter),
-    a full org (kept), and a duplicate event id (fact dedup keeps the
-    earliest). Spark's gold_dim_summary and the DuckDB oracle must agree
-    on every (n_rows, id_sum, detail-md5) triple."""
-    import json
-
-    import duckdb
-
-    from gh_archive_data_pipeline_spark.pipeline.stages import (
-        dim_summary_oracle, gold_dim_summary)
-
+@pytest.fixture
+def multi_event_hour(tmp_path):
+    """A crafted JSON-lines hour exercising every divergence the
+    five-field semantics must handle: the same actor (id, login) appearing
+    with two different avatar_urls (2 distinct users, not 1), an org
+    struct with a missing field (dropped by na.drop AND by the oracle's
+    five-field null filter), a full org (kept), and a duplicate event id
+    (fact dedup keeps the earliest)."""
     def ev(eid, created, av, org):
         return {
             "id": eid, "type": "PushEvent", "public": True,
@@ -401,7 +328,19 @@ def test_gold_dim_parity_on_multi_event_file(spark, tmp_path):
     with open(path, "w") as f:
         for e in events:
             f.write(json.dumps(e) + "\n")
+    return path
 
+
+def test_gold_dim_parity_on_multi_event_file(spark, multi_event_hour):
+    """q392's dim-summary parity beyond the one-event sample: Spark's
+    gold_dim_summary and the DuckDB oracle must agree on every (n_rows,
+    id_sum, detail-md5) triple of the crafted multi-event hour."""
+    import duckdb
+
+    from gh_archive_data_pipeline_spark.pipeline.stages import (
+        dim_summary_oracle, gold_dim_summary)
+
+    path = multi_event_hour
     sp = {r.gold_table: (r.n_rows, r.id_sum, r.detail)
           for r in gold_dim_summary(spark, path, multi_line=False).collect()}
     du = {r[0]: (r[1], r[2], r[3])
@@ -435,4 +374,24 @@ def test_cli_demo_end_to_end(spark, tmp_path):
     assert manifest["gold"]["organizations"]["n_rows"] == 0  # sample has none
     assert os.path.isdir(f"{out}/gold/events")
     # the shared session survived main()'s teardown guard
+    assert spark.range(1).count() == 1
+
+
+def test_cli_demo_json_lines_end_to_end(spark, multi_event_hour, tmp_path):
+    """The demo command over a JSON-lines hour (``--src ... --json-lines``,
+    the shape of real GH Archive hours): the ELT pipeline's silver and
+    gold tasks, the profile and the manifest with its round-trip
+    self-check, and the per-dim counts the crafted hour dictates."""
+    import json
+
+    from gh_archive_data_pipeline_spark.__main__ import main
+
+    out = str(tmp_path / "demo")
+    assert main(["demo", "--src", multi_event_hour, "--json-lines",
+                 "--out", out]) == 0
+    with open(f"{out}/manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest["silver_rows"] == 3
+    assert {name: d["n_rows"] for name, d in manifest["gold"].items()} == {
+        "events": 2, "organizations": 1, "repos": 1, "users": 2}
     assert spark.range(1).count() == 1

@@ -1,15 +1,18 @@
 """Product-quantization plane: training against a NumPy reference running
-the identical algorithm, encode/ADC invariants, and the planted-structure
-sanity check (vectors sitting ON a codebook centroid quantize with zero
-error in that subspace)."""
+the identical algorithm, encode (the codes column q402 writes) and ADC
+invariants, and the planted-structure sanity check (vectors sitting ON a
+codebook centroid quantize with zero error in that subspace)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from gh_archive_data_pipeline_spark.operators.quantize import (
-    DSUB, K_PQ, M_SUB, ROUNDS, adc_topk, pq_encode, pq_train,
+    DSUB, K_PQ, M_SUB, ROUNDS, _argmin_cells, _codes_col, _sub_expr, adc_topk,
+    pq_train,
 )
 
 DIM = M_SUB * DSUB
@@ -60,13 +63,23 @@ def test_pq_train_matches_numpy_reference(gapped):
         np.testing.assert_allclose(np.array(cbs[s]), ref[s], rtol=1e-9)
 
 
+def _encode(emb, cbs):
+    """PQ codes as q402 computes them (``_codes_col``) plus the total
+    squared quantization error, summed from each subspace's chosen d2."""
+    d2 = [F.expr(_argmin_cells(_sub_expr(s), cbs[s])).getField("d2")
+          for s in range(M_SUB)]
+    qerr = sum(d2[1:], d2[0])
+    return emb.select("vec_id", _codes_col(cbs).alias("codes"),
+                      qerr.alias("qerr"))
+
+
 def test_pq_encode_zero_error_on_centroid_vectors(spark, gapped):
     """A vector that IS a training centroid must encode to that centroid
     with (near-)zero quantization error in every subspace."""
     X, emb = gapped
     cbs = pq_train(emb)
     probe = np.concatenate([np.array(cbs[s][3]) for s in range(M_SUB)])
-    coded = pq_encode(_emb_df(spark, probe[None, :]), cbs).collect()[0]
+    coded = _encode(_emb_df(spark, probe[None, :]), cbs).collect()[0]
     assert list(coded.codes) == [3] * M_SUB
     assert coded.qerr == 0.0
 
@@ -74,7 +87,7 @@ def test_pq_encode_zero_error_on_centroid_vectors(spark, gapped):
 def test_pq_encode_codes_shape_and_qerr_nonnegative(gapped):
     _X, emb = gapped
     cbs = pq_train(emb)
-    rows = pq_encode(emb, cbs).collect()
+    rows = _encode(emb, cbs).collect()
     assert len(rows) == 400
     for r in rows:
         assert len(r.codes) == M_SUB

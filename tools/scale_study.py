@@ -25,6 +25,9 @@ exactly, but cross-replica shingle/n-gram overlap drops to zero — without
 it every doc has N-1 exact near-duplicates and a near-dup join's OUTPUT
 (not its work) explodes ~N^2 (measured: q42 emitted 27.3M pairs at 100×
 unsalted vs 256 at 1×; real 100× corpora grow content, not copies).
+The engine's STOPWORDS are exempt from the salt: they are function words
+every replica shares, and the quality probe (q401/q440/q443) gates on the
+stopword share, so salting them would gate every replica doc out.
 embeddings get the vector analog: each replica applies one fixed SIGNED
 PERMUTATION (roll by i mod dim + per-replica Rademacher sign flips) — an
 orthogonal transform, so norms and all within-replica cosines are
@@ -45,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from gh_archive_data_pipeline_spark.operators.text_queries import STOPWORDS  # noqa: E402
 from gh_archive_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 from gh_archive_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -232,7 +236,8 @@ def build_scaled(spark, n: int, out_dir: str, tables=None) -> None:
                 if table == "documents" and i > 0:
                     salted = F.array_join(
                         F.transform(F.split("text", " "),
-                                    lambda w: F.concat(w, F.lit(f"_r{i}"))),
+                                    lambda w: F.when(w.isin(*STOPWORDS), w)
+                                    .otherwise(F.concat(w, F.lit(f"_r{i}")))),
                         " ")
                     r = r.withColumn("text", salted)
                     if "n_chars" in r.columns:
@@ -268,6 +273,9 @@ def time_queries(spark, sf_dir: str) -> dict[str, float]:
         n, _ = force_execute(qs[name].fn(spark, sf_dir))
         out[name] = round(time.monotonic() - t, 3)
         print(f"#   {name}: {out[name]}s ({n} rows)", file=sys.stderr)
+        if n == 0:
+            # an empty result times nothing: a degenerate replica, not scale
+            raise SystemExit(f"{name} returned 0 rows at {sf_dir}")
     return out
 
 
