@@ -58,7 +58,23 @@ def gh_archive_pipeline(spark, bronze_path: str, silver_path: str,
     task ``silver`` (bronze scan, normalize, partitioned write) then task
     ``gold`` (the four dims, one parquet directory each). ``multi_line``
     is :func:`stages.read_bronze`'s: real GH Archive hours are JSON-lines,
-    the reference's checked-in sample is one pretty-printed object."""
+    the reference's checked-in sample is one pretty-printed object.
+
+    The four dim writes are independent, so ``gold`` submits them at once,
+    one thread each: an hour's dims run on stages of 1-3 tasks, and written
+    one after another they leave most cores idle while each write plans and
+    commits. Every thread target is wrapped by
+    ``inheritable_thread_target(spark)``, so the caller's job group, local
+    properties and tags carry into the writes. All four writes finish before
+    ``gold`` returns; if any raised, the first (in dim order) propagates.
+
+    Every table is read back with the schema it was written from
+    (``spark.read.schema(df.schema)``): the engine knows that schema, so
+    the read-back starts no schema-inference job over the files."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     from ..sources.writers import write_parquet
     from . import stages
 
@@ -66,13 +82,20 @@ def gh_archive_pipeline(spark, bronze_path: str, silver_path: str,
         silver = stages.to_silver(
             stages.read_bronze(spark, bronze_path, multi_line=multi_line))
         stages.write_silver(silver, silver_path)
-        return spark.read.parquet(silver_path)
+        return spark.read.schema(silver.schema).parquet(silver_path)
 
     def gold_task(silver):
         gold = stages.build_gold(silver)
-        for name, df in gold.items():
-            write_parquet(df, f"{gold_path}/{name}")
-        return {n: spark.read.parquet(f"{gold_path}/{n}") for n in gold}
+        with ThreadPoolExecutor(max_workers=len(gold)) as pool:
+            # one wrap per target: each wrap clones the caller's local
+            # properties, and every write sets its own SQL execution id there
+            writes = [pool.submit(inheritable_thread_target(spark)(write_parquet),
+                                  df, f"{gold_path}/{name}")
+                      for name, df in gold.items()]
+        for w in writes:
+            w.result()
+        return {n: spark.read.schema(df.schema).parquet(f"{gold_path}/{n}")
+                for n, df in gold.items()}
 
     return (Pipeline()
             .add("silver", silver_task)

@@ -51,11 +51,12 @@ def to_silver(bronze: DataFrame) -> DataFrame:
     )
 
 
-def write_silver(silver: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partitioned lake write. partitionBy(event_date) realizes the
-    reference's per-date folder naming (load_data_task.py:135-145) as real
-    partition pruning; maxRecordsPerFile caps file size at scale."""
-    write_parquet(silver, path, mode=mode, partition_by=["event_date"])
+def write_silver(silver: DataFrame, path: str) -> None:
+    """Partitioned lake write, overwriting ``path``. partitionBy(event_date)
+    realizes the reference's per-date folder naming
+    (load_data_task.py:135-145) as real partition pruning;
+    :func:`write_parquet` caps file size at scale."""
+    write_parquet(silver, path, partition_by=["event_date"])
 
 
 # ---------------------------------------------------------------------------

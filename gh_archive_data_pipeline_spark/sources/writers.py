@@ -10,17 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list[str] | None = None,
-                  max_records_per_file: int = 5_000_000,
-                  coalesce: int | None = None) -> None:
-    """Lake write (reference Delta overwrite, load_data_task.py:140-145,
-    generalized). ``coalesce`` tames the small-file problem the reference
-    flags for streaming output (README.md:299); ``maxRecordsPerFile`` caps
-    file size so single partitions can't produce multi-GB files at scale."""
-    if coalesce:
-        df = df.coalesce(coalesce)
-    writer = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
+def write_parquet(df: DataFrame, path: str,
+                  partition_by: list[str] | None = None) -> None:
+    """Lake write: overwrite ``path`` with ``df`` as parquet, optionally
+    partitioned (reference Delta overwrite, load_data_task.py:140-145).
+    ``maxRecordsPerFile`` is fixed at 5,000,000 so one partition cannot
+    produce a multi-GB file at scale."""
+    writer = df.write.mode("overwrite").option("maxRecordsPerFile", 5_000_000)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -150,17 +150,26 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
     re-deliver a batch after failure; the merge is idempotent on keys, so
     replays converge — the exactly-once recipe for non-transactional sinks.
 
+    The existing table is read back with the micro-batch's schema (the
+    table was written from frames of that schema), so a batch starts no
+    schema-inference job over it. Existence check, delete and rename go
+    through the Hadoop FileSystem of ``path`` (:func:`readers.hadoop_fs`),
+    so a ``file://``, ``hdfs://`` or ``s3a://`` sink path works like a
+    local one.
+
     Scale note: this demo rewrites the whole table per batch, which is the
     contract of a parquet-only sink. At 100 TB the same function bodies a
     partition-scoped rewrite (join batch keys → affected partitions →
     rewrite only those) or a Delta/Iceberg MERGE — the streaming plumbing
     (checkpoint, trigger, idempotent batch fn) is unchanged.
     """
-    import os
-    import shutil
     import uuid
 
     from pyspark.sql import Window
+
+    from ..sources.readers import hadoop_fs
+
+    fs, table = hadoop_fs(spark, path)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         # "last write wins": by the caller's event-time columns when given
@@ -171,15 +180,18 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
         latest = (batch.withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") == 1).drop("__rn"))
         out = latest
-        if os.path.exists(path):
-            existing = batch.sparkSession.read.parquet(path)
+        exists = fs.exists(table)
+        if exists:
+            existing = batch.sparkSession.read.schema(latest.schema).parquet(path)
             kept = existing.join(latest.select(*keys), keys, "left_anti")
             out = kept.unionByName(latest)
         tmp = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
         out.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        if exists and not fs.delete(table, True):
+            raise OSError(f"could not delete {path}")
+        _, staged = hadoop_fs(spark, tmp)
+        if not fs.rename(staged, table):
+            raise OSError(f"could not rename {tmp} to {path}")
 
     return (df.writeStream
             .foreachBatch(merge_batch)

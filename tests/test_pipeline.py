@@ -162,6 +162,68 @@ def test_full_pipeline_runner(spark, bronze_path, tmp_path):
     assert gold["users"].count() == 3
 
 
+def _wait_listener_bus(spark):
+    """Let the status tracker see every job event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_pipeline_jobs_stay_in_caller_job_group(spark, bronze_path, tmp_path):
+    """The gold dims are written from pool threads: every job the run
+    starts, those included, must carry the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _wait_listener_bus(spark)
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("elt-under-test", "gh_archive_pipeline run")
+    try:
+        gh_archive_pipeline(spark, bronze_path, str(tmp_path / "silver"),
+                            str(tmp_path / "gold")).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _wait_listener_bus(spark)
+    grouped = tracker.getJobIdsForGroup("elt-under-test")
+    # silver write + four gold writes, at least one job each
+    assert len(grouped) >= 5
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+
+
+def test_pipeline_read_backs_match_written_tables(spark, bronze_path,
+                                                  tmp_path):
+    """Read-backs carry the written schema instead of inferring it; they
+    must equal what inference over the written files gives."""
+    silver_path, gold_path = str(tmp_path / "silver"), str(tmp_path / "gold")
+    results = gh_archive_pipeline(spark, bronze_path, silver_path,
+                                  gold_path).run()
+    tables = {silver_path: results["silver"],
+              **{f"{gold_path}/{n}": df for n, df in results["gold"].items()}}
+    assert len(tables) == 5
+    for path, df in tables.items():
+        inferred = spark.read.parquet(path)
+        assert df.schema == inferred.schema, path
+        assert df.count() == inferred.count(), path
+    assert results["silver"].count() == 5
+
+
+def test_pipeline_raises_when_a_dim_write_fails(spark, bronze_path, tmp_path,
+                                                monkeypatch):
+    """A dim write raising in its pool thread still fails the run."""
+    from gh_archive_data_pipeline_spark.sources import writers
+
+    real = writers.write_parquet
+
+    def failing(df, path, **kwargs):
+        if path.endswith("/repos"):
+            raise RuntimeError("planted repos write failure")
+        return real(df, path, **kwargs)
+
+    monkeypatch.setattr(writers, "write_parquet", failing)
+    pipe = gh_archive_pipeline(spark, bronze_path, str(tmp_path / "silver"),
+                               str(tmp_path / "gold"))
+    with pytest.raises(RuntimeError, match="planted repos write failure"):
+        pipe.run()
+
+
 def test_runner_topology_and_context():
     order = []
     pipe = (Pipeline()

@@ -389,6 +389,29 @@ def test_upsert_sink_replaces_keys(spark, tmp_path):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
+def test_upsert_sink_on_file_uri(spark, tmp_path):
+    """The sink's existence check, delete and rename go through the Hadoop
+    FileSystem, so a ``file://`` sink path drains like a local one: the
+    second batch replaces key 2 and appends key 3."""
+    src = tmp_path / "src"
+    gold = (tmp_path / "gold").as_uri()
+    ck = str(tmp_path / "ck")
+    schema = "k long, v string"
+    empty = spark.createDataFrame([], schema).schema
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).coalesce(1) \
+        .write.parquet(str(src / "f1"))
+    spark.createDataFrame([(2, "B"), (3, "c")], schema).coalesce(1) \
+        .write.parquet(str(src / "f2"))
+    stream = sp.read_file_stream(spark, f"{src}/*/*.parquet", empty,
+                                 max_files_per_trigger=1)
+    q = sp.start_upsert_sink(stream, gold, ck, keys=["k"], spark=spark)
+    assert q.awaitTermination(60)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 2
+    got = {r.k: r.v for r in spark.read.parquet(gold).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+
+
 def test_replay_streaming_source(spark, tmp_path):
     """Custom Python streaming source: replays a parquet table through the
     real offset lifecycle in rows_per_batch micro-batches; the drained
