@@ -1,20 +1,28 @@
-"""Benchmark harness: runs the headline registry queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line with per-query wall seconds.
+"""Benchmark harness: runs the headline registry queries on the fixtures at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 set) in the package's default
+session (local[$SPARK_GRAFT_CPUS], else every CPU this process may use) and
+prints ONE JSON line with per-query wall seconds and executed-plan counters.
 
 Each query is executed TWICE back-to-back and the per-query MIN is reported
 (the JSON line's "runs" dict records the actual per-query sample count —
 q195_stream_upsert is deliberately single-sampled because its checkpoint
 makes a re-drain a no-op; total_wall_sec_incl_session still counts
 everything). Min-of-k is the standard steady-state benchmark statistic: it
-measures the code's cost, not the host's mood — this repo's BASELINE.md
-documents a shared-host VM whose transient contention was measured to
-inflate individual queries up to 20x in one run and 1.0x minutes later
-(round-3 note below), and a single cold sample cannot distinguish that from
-a plan regression. The first sample still pays any per-query cold cost
-(fresh shuffle files, broadcast builds), so caching can't hide real work:
-run 1 is the cold number, run 2 the warm one, and MIN simply drops whichever
-was contention-poisoned.
+measures the code's cost, not the host's mood — BASELINE.md documents a
+shared-host VM whose transient contention was measured to inflate
+individual queries up to 20x in one run and 1.0x minutes later, and a
+single cold sample cannot distinguish that from a plan regression. The
+first sample still pays any per-query cold cost (fresh shuffle files,
+broadcast builds), so caching can't hide real work: run 1 is the cold
+number, run 2 the warm one, and MIN simply drops whichever was
+contention-poisoned.
+
+A run at sf0.1 is compared with the pins in bench_pins.json for its core
+count: "plan_regressions" (the primary gate: counters that drifted from
+the pins), "vs_baseline" and "vs_baseline_total" (raw wall ratios). A core
+count with no entry is compared with nothing: "plan_regressions" reads
+"unpinned". "host" reports the CPU steal
+and load the run saw, to tell a contended run's walls from a slow plan.
 
 When BOTH samples are poisoned (observed in rounds 3 and 4: a query whose
 executed-plan counters were bit-identical to the snapshot reported 4-6×
@@ -37,397 +45,45 @@ from gh_archive_data_pipeline_spark.plans.metrics import (  # noqa: E402
 )
 from gh_archive_data_pipeline_spark.plans.registry import all_queries  # noqa: E402
 from gh_archive_data_pipeline_spark.session import get_spark  # noqa: E402
+from perfbench.probes import load1, steal_s  # noqa: E402
 
-# Clean-run per-query baseline seconds at sf0.1 (BASELINE.md "Round-3
-# re-snapshot" tables). Statistic matches what bench.py reports: per-query
-# MIN of two back-to-back samples under the prune-proof hash-reduce action,
-# measured on an idle machine — so a vs_baseline ratio compares like with
-# like, and a real regression is distinguishable from ambient CPU
-# contention (measured up to 20x transient inflation on this shared host).
-BASELINE_SEC = {
-    "q01_pricing_summary": 0.651,
-    # q03 re-pinned round 9 (VERDICT r8 item 3): the round-1 0.906 pin was
-    # ~30-50% hot for this VM class — worst suite ratio on two independent
-    # runs (driver + judge idle: 1.56x raw) with plan counters bit-equal.
-    # New pin = min-of-2 at suite position (cold joins, warm JVM) on an
-    # idle host (load 0.58); warm steady-state reads 0.74-0.85.
-    "q03_shipping_priority": 1.123,
-    "q05_region_revenue": 0.942,
-    "q07_customer_order_stats": 0.509,
-    "q12_dedup_first_event": 0.384,
-    "q19_top_parts_per_brand": 0.312,
-    "q31_top_words": 0.346,
-    "q40_dedup_exact": 0.318,
-    "q42_minhash_near_dup": 2.731,
-    "q44_embedding_topk": 0.732,
-    # q45 re-pinned round 10 (0.903 -> 1.326, BASELINE.md protocol case
-    # (b)): the plan changed deliberately — vectors no longer ride the
-    # candidate-dedup exchange (8.5 MB -> 1 MB shuffled), re-attached via
-    # a second corpus scan instead. The old pin was also a known-hot
-    # outlier (flagged worst suite ratio with bit-equal counters in
-    # rounds 8-10; it came from the one abnormally fast canary run).
-    # Min across two back-to-back runs at suite position (1.658 @ canary
-    # 1.169 / 1.326 @ canary 1.037).
-    "q45_embedding_lsh_topk": 1.326,
-    "q47_text_stats": 0.35,
-    "q50_tumbling_window": 0.325,
-    "q52_session_windows": 0.423,
-    "q53_asof_last_purchase": 0.558,
-    "q59_stream_tumbling_window": 2.0,
-    "q84_dedup_clusters": 0.923,
-    "q87_reconcile_tables": 0.612,
-    "q89_tfidf_top_terms": 0.533,
-    "q125_repetition_ngrams": 0.805,
-    "q144_ngram_novelty": 0.968,
-    "q129_weighted_sample": 0.208,
-    "q167_market_basket": 1.782,
-    "q178_rolling_distinct_users": 0.617,
-    "q188_bpe_pair_counts": 0.326,
-    "q189_pagerank_event_graph": 1.421,
-    "q195_stream_upsert": 2.362,
-    "q201_stream_sessions": 2.134,
-    "q286_poisson_bootstrap": 0.849,
-    "q295_triangle_count": 4.263,
-    "q315_kneser_ney": 0.815,
-    "q316_scaling_curve": 1.397,
-    # round 6: data-selection plane (min-of-2 on idle host, same protocol)
-    "q380_dsir_weights": 3.682,
-    "q381_shard_binpack": 1.125,
-    "q382_perplexity_filter": 2.906,
-    "q383_arrow_token_stats": 0.389,
-    # round 7 (min-of-2 on idle host, same protocol): media-header parse,
-    # DoReMi reweight (LM + per-source agg + driver loop), span-dedup
-    # removal, BPE encode (merge table amortized, trained in prep)
-    "q389_media_header_audit": 0.607,
-    "q391_doremi_reweight": 2.557,
-    "q393_span_dedup_clean": 1.53,
-    "q394_bpe_encode": 1.152,
-    "q395_sequence_packing": 1.941,
-    # round 8 (min-of-2 on idle host, same protocol): logistic quality
-    # probe (16 GD rounds trained in-query), IVF-PQ search (codebook
-    # amortized in prep), Gram-PCA projection report, unigram-LM training
-    "q401_quality_probe": 7.64,
-    "q402_ivf_pq_search": 2.742,
-    "q403_pca_projection_report": 0.713,
-    "q404_unigram_lm_tokenizer": 1.525,
-    # round-8 continuation (min across two back-to-back bench runs, host
-    # canary 1.26-1.39; q412/q419/q421 re-pinned from the idle 1.05-canary
-    # run that beat them): RRF hybrid fusion, Bloom
-    # decontamination + exact FP audit, MaxSim late interaction, k-center
-    "q412_rrf_hybrid_search": 0.912,
-    "q415_bloom_decontamination": 1.668,
-    "q419_maxsim_late_interaction": 6.072,
-    "q421_kcenter_coreset": 1.122,
-    # round 9 (min-of-2, host settling to idle — canary triad 1.09/0.91/
-    # 2.02 pre, 0.79/0.57/0.53 post; probe weights prepped, q401
-    # convention): composed corpus-build pipeline, chunk-grain
-    # reconciliation, epoch shuffle plan
-    "q440_corpus_build_pipeline": 8.742,
-    "q441_chunk_disposition_reconcile": 2.657,
-    # q442 re-pinned round 10 (1.098 -> 1.375): the rank path changed
-    # DELIBERATELY to the distributed default (VERDICT-r9 item 2) — the
-    # extra materialization + bounded offset collect is the honest cost
-    # of removing the single-task-per-shard window; plan counters
-    # re-snapshot at the same time. Protocol: per-query min across two
-    # back-to-back bench runs at suite position (BASELINE.md round-10
-    # addendum; second run's canary ratio 0.869).
-    "q442_epoch_shuffle_plan": 1.375,
-    # round 10 (same min-across-two-runs protocol): composed
-    # funnel->pack->epoch plan; shard-partitioned plan export round-trip
-    "q443_pipeline_epoch_plan": 6.902,
-    "q445_epoch_plan_export": 1.675,
-}
+PINS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "bench_pins.json")
 
-# Snapshot of each headline query's executed-plan work counters at sf0.1
-# (shuffle records written across all Exchanges + rows produced by scans).
-# These are accumulator totals from the plan that actually ran — immune to
-# host contention — so THEY are the primary regression gate; wall time is
-# the secondary signal. Values regenerated by tools/snapshot_plan_metrics.py.
-PLAN_SNAPSHOT: dict[str, dict] = {
-    # q440's counters cover the post-checkpoint manifest rollups only (the
-    # disposition table materializes via lazy localCheckpoint inside the
-    # timed window, like q421) — wall time still measures the whole funnel
-    # re-snapshot round 11 (deliberate plan change): funnel counts and
-    # kept stats merged into ONE per-split conditional rollup — a second
-    # disposition-checkpoint read and a join removed (rows_read 12128 ->
-    # 7153)
-    "q440_corpus_build_pipeline": {"shuffle_records": 2273,
-                                   "rows_read": 7153},
-    "q441_chunk_disposition_reconcile": {"shuffle_records": 80502,
-                                         "rows_read": 1254170},
-    # q442/q443/q445 counters cover the post-checkpoint rank + rollup only
-    # (epoch_order's bucketed rank materializes its keyed frame once,
-    # round-10 distributed default) — wall time still measures the whole
-    # plan build including the eager checkpoint, the q440 convention
-    "q442_epoch_shuffle_plan": {"shuffle_records": 271, "rows_read": 484},
-    "q443_pipeline_epoch_plan": {"shuffle_records": 137, "rows_read": 256},
-    "q445_epoch_plan_export": {"shuffle_records": 5, "rows_read": 135},
-    "q01_pricing_summary": {"shuffle_records": 7, "rows_read": 600000},
-    "q03_shipping_priority": {"shuffle_records": 13345, "rows_read": 765000},
-    "q05_region_revenue": {"shuffle_records": 6, "rows_read": 765030},
-    "q07_customer_order_stats": {"shuffle_records": 15001, "rows_read": 165000},
-    "q12_dedup_first_event": {"shuffle_records": 7501, "rows_read": 100000},
-    "q19_top_parts_per_brand": {"shuffle_records": 76, "rows_read": 20000},
-    "q31_top_words": {"shuffle_records": 31, "rows_read": 5000},
-    "q40_dedup_exact": {"shuffle_records": 4993, "rows_read": 5000},
-    "q42_minhash_near_dup": {"shuffle_records": 4142, "rows_read": 325000},
-    "q44_embedding_topk": {"shuffle_records": 51, "rows_read": 4000},
-    # q45 re-snapshot round 10 (deliberate plan change): candidate dedup
-    # exchanges int pairs only, vectors re-attach via a second columnar
-    # corpus scan (rows_read 4001 -> 6001, shuffle_bytes 8.5 MB -> 1 MB)
-    "q45_embedding_lsh_topk": {"shuffle_records": 16385, "rows_read": 6001},
-    "q47_text_stats": {"shuffle_records": 1, "rows_read": 5000},
-    "q50_tumbling_window": {"shuffle_records": 3601, "rows_read": 100000},
-    "q52_session_windows": {"shuffle_records": 100002, "rows_read": 100000},
-    "q53_asof_last_purchase": {"shuffle_records": 120086, "rows_read": 200000},
-    "q59_stream_tumbling_window": {"shuffle_records": 32, "rows_read": 3600},
-    "q84_dedup_clusters": {"shuffle_records": 41, "rows_read": 40},
-    "q87_reconcile_tables": {"shuffle_records": 298484, "rows_read": 300000},
-    "q89_tfidf_top_terms": {"shuffle_records": 1433, "rows_read": 3600},
-    # re-snapshot round 11 (deliberate plan change): per-doc bigram counts
-    # are scan-side run lengths of the sorted bigram array — ZERO query
-    # shuffles (the 1 record is the bench harness's own hash-reduce
-    # partial); the old explode shuffled every bigram instance twice
-    "q125_repetition_ngrams": {"shuffle_records": 1, "rows_read": 5000},
-    # re-snapshot round 11 (deliberate plan change): per-doc gram dedup is
-    # scan-side (array_distinct) and novel counts come from grouping the
-    # owner table by first_owner — the (doc,gram) dedup exchange and the
-    # owner join-back are gone; still two doc scans (n_grams branch +
-    # owner branch), same rows_read as before
-    "q144_ngram_novelty": {"shuffle_records": 29653, "rows_read": 10000},
-    "q129_weighted_sample": {"shuffle_records": 0, "rows_read": 5000},
-    # re-snapshot round 11 (deliberate plan change, second pass): basket
-    # pairs are enumerated scan-side from the per-order SORTED brand array
-    # (bounded ≤7 brands/order) instead of the basket SELF-JOIN — the two
-    # self-join exchanges (each carrying every (order,brand) row) + both
-    # SMJ sorts + the count_distinct partial-dedup exchange are gone;
-    # n_orders is a plain count of the grouped frame. The checkpoint
-    # boundary moved with the shape (the materialized stage product is now
-    # the per-order array frame, whose ONE orderkey exchange runs in the
-    # checkpoint build — the q380/q421 counter convention; wall time still
-    # times it), so post-checkpoint counters are the brand/pair partial
-    # aggs only. rows_read is checkpoint re-reads (3 consumers) + scans.
-    "q167_market_basket": {"shuffle_records": 1957, "rows_read": 441708},
-    "q178_rolling_distinct_users": {"shuffle_records": 84929, "rows_read": 200000},
-    "q188_bpe_pair_counts": {"shuffle_records": 112, "rows_read": 5000},
-    "q189_pagerank_event_graph": {"shuffle_records": 26, "rows_read": 65},
-    "q195_stream_upsert": {"shuffle_records": 2, "rows_read": 1500},
-    "q201_stream_sessions": {"shuffle_records": 32, "rows_read": 95405},
-    "q286_poisson_bootstrap": {"shuffle_records": 41225, "rows_read": 200000},
-    "q295_triangle_count": {"shuffle_records": 248268, "rows_read": 1218965},
-    "q315_kneser_ney": {"shuffle_records": 3787, "rows_read": 20000},
-    # re-snapshot round 11 (deliberate plan change): the eval split
-    # pre-aggregates to (word, count) before the (k, word) LM lookup join —
-    # the join carries |eval vocab| x 4 rows instead of |eval tokens| x 4
-    "q316_scaling_curve": {"shuffle_records": 323, "rows_read": 15004},
-    "q360_q9_shape": {"shuffle_records": 176, "rows_read": 771025},
-    "q364_q20_shape": {"shuffle_records": 43177, "rows_read": 621025},
-    # re-snapshot round 11 (deliberate plan change): exact-dedup keeper
-    # selection is a window-min over the fingerprint (phase1_exact's
-    # shape) — one fp pass + one exchange instead of groupBy-keepers +
-    # join-back (two fp derivations; and at scale the keepers side is
-    # corpus-sized, so the broadcast that made the old form look cheap
-    # locally cannot exist). rows_read drops one full doc scan.
-    # second round-11 change: the redundant is_curated annotation join is
-    # gone (dedup_pipeline labels every curated doc, so is_curated ==
-    # is_rep IS NOT NULL) — it re-derived the whole curated subtree
-    # (second doc scan + normalize-md5 + fingerprint exchange) because
-    # the two lineages share no exchange (rows_read 18313 -> 13313,
-    # records 14948 -> 11631).
-    # shuffle_records lists BOTH admissible values: the final quality ->
-    # reps LeftOuter join plans as SMJ (both sides corpus-sized at scale)
-    # and AQE converts it to BHJ at runtime; whether the 5000-row quality
-    # exchange materializes before the conversion is a stage-submission
-    # race (timing/host-load dependent, adjudicated this round from the
-    # executed plans: AQEShuffleRead-local present vs absent). The same
-    # race made the pre-change counter read 14948 idle / 9948 under load
-    # (and round-10's 11627/6627) — both plans are the same query, one
-    # exchange cheaper when AQE wins the race early.
-    "q374_corpus_curation": {"shuffle_records": [11631, 6631],
-                             "rows_read": 13313},
-    # re-snapshotted round 6 (889 -> 1802) when the bands table gained its
-    # bucket-partitioned layout, and round 8 (1802 -> 1218) when the FIXTURE
-    # index's num_buckets was sized to the corpus (64 -> 8, per
-    # build_minhash_index's own sizing rule): fewer bucket directories means
-    # the candidate distinct's map-side partial dedup collapses more rows
-    # pre-exchange — layout change, identical join work and output (pairs
-    # pinned by oracle; a 100 TB build still passes thousands of buckets).
-    "q376_incremental_near_dup": {"shuffle_records": 1218, "rows_read": 186000},
-    "q377_semantic_dedup": {"shuffle_records": 2001, "rows_read": 2001},
-    # selection plane: the prefix-sum localCheckpoint truncates lineage, so
-    # counters cover the final job (range exchange + offset join + window)
-    "q380_dsir_weights": {"shuffle_records": 5001, "rows_read": 5001},
-    "q381_shard_binpack": {"shuffle_records": 5134, "rows_read": 5001},
-    # rows_read excludes the train-slice LM build since its localCheckpoint
-    # (the materialized-model pass runs as its own job ahead of scoring)
-    # re-snapshot round 11 (deliberate plan change): the tertile row count
-    # reads the ranked (checkpoint-backed) frame instead of re-deriving
-    # the whole bigram scoring stream — one explode+LM-join pass removed
-    "q382_perplexity_filter": {"shuffle_records": 5002, "rows_read": 10002},
-    "q383_arrow_token_stats": {"shuffle_records": 1, "rows_read": 5000},
-    "q389_media_header_audit": {"shuffle_records": 1, "rows_read": 5000},
-    # q391's returned frame is the 20-row driver result (the distributed LM
-    # scoring runs inside the query body's collect) — counters pin only the
-    # final job; wall time and the scale study carry the real cost signal
-    "q391_doremi_reweight": {"shuffle_records": 32, "rows_read": 20},
-    "q393_span_dedup_clean": {"shuffle_records": 237518, "rows_read": 10000},
-    "q394_bpe_encode": {"shuffle_records": 5034, "rows_read": 10000},
-    "q395_sequence_packing": {"shuffle_records": 5001, "rows_read": 5001},
-    # round 8. q401/q404: training jobs run inside the query body against
-    # localCheckpointed frames (the q391 convention) — counters pin the
-    # final scoring/report job; the scale study carries the training cost.
-    "q401_quality_probe": {"shuffle_records": 5, "rows_read": 5000},
-    "q402_ivf_pq_search": {"shuffle_records": 51, "rows_read": 2050},
-    "q403_pca_projection_report": {"shuffle_records": 31, "rows_read": 2000},
-    "q404_unigram_lm_tokenizer": {"shuffle_records": 32, "rows_read": 40},
-    # round-8 continuation. q421: localCheckpoint truncates lineage, so
-    # rows_read counts only the checkpoint re-reads (the corpus scans
-    # happen at checkpoint time, before the timed plan).
-    "q412_rrf_hybrid_search": {"shuffle_records": 201, "rows_read": 14000},
-    # re-snapshot round 11 (deliberate plan change): the per-doc shingle
-    # distinct moved scan-side (array_distinct on the md5 prefix) — the
-    # full-shingle-table distinct exchange gone (7 Exchanges -> 6); then
-    # (second pass) the Bloom probe became a scan-side bitmap-literal
-    # test — the positions explode -> set-bit join -> per-shingle
-    # groupBy(doc,h1,h2) exchange (non-combinable, the query's largest)
-    # is gone outright (259477 -> 6206 records); the filter's set-bit
-    # table is collected once at build (bounded by m=8192 bits) so the
-    # bits lineage also leaves the timed plan (rows_read 20000 -> 10000)
-    # re-snapshot round 12 (deliberate plan change): ev (the benchmark
-    # slice's distinct shingle pairs) is checkpointed, so its derivation
-    # — one full doc scan + shingle pass + distinct exchange — runs once
-    # instead of once per consumer (bitmap build + exact-audit
-    # broadcast): records 6206 -> 4976 (the 1230-pair ev distinct left
-    # the measured plan), rows_read 10000 -> 6230 (5000-row corpus scan
-    # + the 1230-row ev checkpoint read replaces the second 5000-row
-    # parquet scan)
-    "q415_bloom_decontamination": {"shuffle_records": 4976,
-                                   "rows_read": 6230},
-    # q419 re-snapshot round 11 (deliberate plan change): the corpus side
-    # now passes the small-file parallelism gate (+5000 repartition
-    # records) so token vectors + MaxSim HOFs parallelize; md5 and both
-    # norms hoisted out of the per-pair cosine (5.3 s -> 2.3 s warm)
-    "q419_maxsim_late_interaction": {"shuffle_records": 30021,
-                                     "rows_read": 10000},
-    "q421_kcenter_coreset": {"shuffle_records": 5, "rows_read": 5},
-}
-
-# Host-speed canary: a fixed, seeded, CPU-bound calibration workload whose
-# idle-host time is committed below. Rounds 3/4/6 all produced driver-run
-# BENCH files whose inflation (up to 1.5× total / 5 queries >2×) was pure
-# host contention — provable only by an idle re-run hours later. The canary
-# makes a contended run self-adjudicating: its runtime moves ONLY with host
-# speed (in-memory range → modular key → two-level hash agg; no I/O, no
-# fixture, no plan choice), so canary_sec / CANARY_BASELINE_SEC is a direct
-# contention measurement taken by the same process that produced the wall
-# numbers. It cannot mask a real regression: plan counters (the primary
-# gate) are unaffected, and normalization is reported ALONGSIDE raw ratios,
-# never instead of them.
-# Idle-host calibration: median-of-3 after the canary's own untimed warmup,
-# measured on load < 1.5 with bench's exact protocol (see BASELINE.md
-# round-7 addendum). The workload is sized ~0.4 s idle ON PURPOSE: a
-# contended host stretches a canary sample by the contention factor
-# (observed 20x+ on this VM), and an oversized canary then blows the
-# harness's wall budget — the first 48M-row version was killed mid-sample
-# by a 580 s timeout when a contention window landed on the post-suite
-# canary. At this size even 20x contention costs ~8 s/sample, and the
-# ratio signal is just as unmistakable. Idle-host calibration: two
-# sessions of four consecutive medians (0.837/0.570/0.561/0.605 and
-# 0.975/0.603/0.593/0.616, load < 2.5) — the committed value is their
-# grand mean; the first median of a session runs ~0.3 s hot (JIT still
-# settling), which bounds idle-run ratio noise at ~±15%.
-CANARY_BASELINE_SEC = 0.67
+# bench_pins.json holds, per core count (the session's defaultParallelism),
+# the sf0.1 pins a run is compared against:
+# - "wall_sec": per-query wall seconds, the same statistic bench reports
+#   (min of two back-to-back samples at suite position). The secondary
+#   signal: wall time on a shared host moves with contention.
+# - "plan": each headliner's executed-plan work counters (shuffle records
+#   written across all Exchanges + rows produced by scans). Accumulator
+#   totals of the plan that actually ran, immune to host contention, so
+#   they are the primary regression gate. A few follow the core count,
+#   not spark.sql.shuffle.partitions (q59/q201/q391/q404 read one record
+#   per core; q167's map-side combine collapses more rows with fewer map
+#   tasks), which is why the pins are keyed by it. Re-pin by copying a
+#   run's "plan_metrics" (BASELINE.md "Pins per core count").
+# Counter scopes that read small on purpose:
+# - a localCheckpoint truncates lineage, so the counters cover only the
+#   plan after it: q380/q421 (selection-plane prefix sums, k-center), q440
+#   (manifest rollups over the disposition table), q442/q443/q445 (rank +
+#   rollup over epoch_order's keyed frame), q167 (brand/pair partial aggs
+#   over the per-order array frame; rows_read = 3 checkpoint re-reads +
+#   scans), q382 (scoring after the train-slice LM build). Wall time still
+#   times the whole build, checkpoints included.
+# - q391/q401/q404 train or score inside the query body's own collect, so
+#   their counters pin only the final job; the scale study carries the
+#   training cost.
+# - q125's 1 record is the harness's own hash-reduce partial: its bigram
+#   counts are scan-side, with no query shuffle at all.
+# - q374 lists two admissible shuffle_records (see check_plan_snapshot).
 
 
-def canary_once(spark) -> float:
-    """One timed run of the fixed calibration workload."""
-    from pyspark.sql import functions as F
-
-    t0 = time.monotonic()
-    (spark.range(0, 12_000_000, 1, 32)
-     .selectExpr("id % 9973 AS k", "id * 2.5 + 1.0 AS v")
-     .groupBy("k")
-     .agg(F.sum("v").alias("s"), F.avg("v").alias("a"),
-          F.count(F.lit(1)).alias("c"))
-     .agg(F.bit_xor(F.xxhash64("k", "s", "a", "c")).alias("h"))
-     .collect())
-    return time.monotonic() - t0
-
-
-def drain_prep_tail(spark, limit: int = 8, within: float = 3.0,
-                    consecutive: int = 2) -> None:
-    """Quiesce trailing async work from the standing-index/codebook prep
-    before the recorded canary triad. Round-8 adjudication: two independent
-    runs (driver 51.3 s, judge's idle re-run 23.9 s) inflated the SAME
-    pre-loop canary sample — the third — while surrounding samples read
-    0.5–1.8 s; that is not ambient contention but ContextCleaner /
-    localCheckpoint cleanup from ``_cached_codebooks`` landing a couple of
-    seconds after the prep call returns. A short sleep lets the cleaner
-    fire, then untimed canary runs absorb it until one lands within
-    ``within``× of the committed idle baseline (bounded by ``limit`` so a
-    genuinely contended host proceeds and the RECORDED samples still show
-    its contention — this drain can only eat the prep artifact plus at
-    most ``limit`` spiked warmups, never the run's sustained load).
-    ``consecutive`` quiet samples are required before returning: the
-    cleanup burst can land a sample or two AFTER the first quiet one (a
-    31 s first RECORDED sample was measured behind a single-quiet drain),
-    so one quiet reading alone doesn't prove the tail has passed."""
-    time.sleep(3.0)
-    quiet = 0
-    for _ in range(limit):
-        if canary_once(spark) <= CANARY_BASELINE_SEC * within:
-            quiet += 1
-            if quiet >= consecutive:
-                return
-        else:
-            quiet = 0
-
-
-def host_speed_canary(spark, samples: int = 3) -> float:
-    """Median seconds of the fixed calibration workload (one untimed warmup
-    run first — the plan's codegen/classloading is a one-time JVM cost, not
-    host speed). Median, not min: the point is to measure SUSTAINED
-    contention, which min-of-k deliberately discards."""
-    canary_once(spark)  # untimed warmup
-    times = sorted(canary_once(spark) for _ in range(samples))
-    return times[samples // 2]
-
-
-def capped_host_ratio(canary_samples: list[float],
-                      raw_per_query: dict[str, float]) -> tuple[float, float]:
-    """(measured, used) host-contention ratio from the full canary sample
-    list. ``measured`` is the median of ALL samples over the committed idle
-    baseline — with pre/mid/post interleaving, one contention spike landing
-    on a single sample can no longer dominate (BENCH_r07's failure: a
-    (pre+post)/2 of two samples implied ~65x while the queries themselves
-    ran 0.84-2.77x raw). ``used`` is the normalization divisor: additionally
-    capped at the WORST raw per-query inflation, because a host ratio larger
-    than anything any query experienced is self-evidently not what the
-    suite's min-of-k timings absorbed — normalizing by it would only
-    manufacture an uninformative near-zero total."""
-    s = sorted(canary_samples)
-    n = len(s)
-    median = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-    measured = median / CANARY_BASELINE_SEC
-    cap = max(raw_per_query.values()) if raw_per_query else measured
-    return round(measured, 3), round(min(measured, cap), 3)
-
-
-def normalized_vs_baseline(timings: dict[str, float],
-                           baseline: dict[str, float],
-                           host_ratio: float) -> tuple[dict[str, float],
-                                                       float | None]:
-    """Contention-normalized per-query and total vs-baseline ratios over the
-    timing/baseline intersection. ``host_ratio`` is clamped to >= 1.0 so
-    normalization can only EXCUSE measured slowness on a contended host,
-    never flatter the numbers on a fast one (ratio < 1 reports raw)."""
-    norm = max(1.0, host_ratio)
-    inter = [n for n in timings if n in baseline]
-    per = {n: round(timings[n] / (baseline[n] * norm), 2) for n in inter}
-    base_total = sum(baseline[n] for n in inter)
-    total = (round(sum(timings[n] for n in inter) / (base_total * norm), 2)
-             if base_total else None)
-    return per, total
+def pins_for(cores: int) -> dict | None:
+    """The pin entry measured at ``cores``, or None: a core count with no
+    entry is unpinned, never compared against another host's numbers."""
+    with open(PINS_PATH, encoding="utf-8") as f:
+        return json.load(f).get(str(cores))
 
 
 # Drift beyond this ratio (either direction) flags a plan regression: a
@@ -438,16 +94,13 @@ PLAN_TOLERANCE = 1.25
 
 
 def check_plan_snapshot(plan: dict[str, dict],
-                        snapshot: dict[str, dict] | None = None
-                        ) -> dict[str, dict]:
-    """Compare measured plan counters to the snapshot; return the entries
-    that drifted beyond PLAN_TOLERANCE (empty dict = no plan regressions).
-    ``snapshot`` defaults to the committed PLAN_SNAPSHOT (overridable for
-    tests)."""
-    snap = PLAN_SNAPSHOT if snapshot is None else snapshot
+                        snapshot: dict[str, dict]) -> dict[str, dict]:
+    """Compare measured plan counters to the snapshot (a pin entry's
+    "plan"); return the entries that drifted beyond PLAN_TOLERANCE (empty
+    dict = no plan regressions)."""
     bad: dict[str, dict] = {}
     for name, got in plan.items():
-        want = snap.get(name)
+        want = snapshot.get(name)
         if not want:
             continue
         for key in ("shuffle_records", "rows_read"):
@@ -600,26 +253,39 @@ def force_execute(df):
     return row["n"], agg
 
 
+def compare_to_pins(timings: dict[str, float], plan: dict[str, dict],
+                    pins: dict | None) -> dict:
+    """The output keys that compare a run with its core count's pins: raw
+    per-query and total wall ratios over the timing/pin intersection (a
+    headliner without a wall pin doesn't skew the total) and the
+    plan-counter gate. Without pins the gate reads "unpinned" and no wall
+    ratio is reported."""
+    if pins is None:
+        return {"plan_regressions": "unpinned"}
+    walls = pins["wall_sec"]
+    inter = [n for n in timings if n in walls]
+    out = {"vs_baseline": {n: round(timings[n] / walls[n], 2) for n in inter}}
+    if inter:
+        out["vs_baseline_total"] = round(
+            sum(timings[n] for n in inter) / sum(walls[n] for n in inter), 2)
+    # PRIMARY regression gate: wall time on a shared host can transiently
+    # inflate 20x (BASELINE.md round-3 note) — shuffle records and scan rows
+    # cannot. A >25% drift in either means the physical plan changed.
+    out["plan_regressions"] = check_plan_snapshot(plan, pins["plan"])
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     t_start = time.monotonic()
+    steal0 = steal_s()
     spark = get_spark(app_name="bench")
+    cores = spark.sparkContext.defaultParallelism
+    # the pins are sf0.1 numbers: any other scale factor runs unpinned
+    pins = pins_for(cores) if sf == 0.1 else None
+    walls = pins["wall_sec"] if pins else {}
     prep(spark, sf_dir)
-    # Host-speed canary, sampled BEFORE the loop (3 samples after warmup),
-    # once every CANARY_EVERY headliners DURING it, and AFTER it (3 samples)
-    # — the round-7 lesson: with only a pre/post pair, one contention spike
-    # landing on a single sample implied a ~65x host ratio the queries never
-    # saw. The MEDIAN of the full interleaved list is the run's contention
-    # estimate; no single window can dominate it.
-    CANARY_EVERY = 10
-    canary_samples: list[float] = []
-    canary_once(spark)  # untimed warmup (pays codegen/JIT, not host speed)
-    # drain the prep's trailing async cleanup BEFORE recording (round-8
-    # fix: the third pre-loop sample read 23-51 s on two independent runs
-    # from ContextCleaner work the codebook prep left behind)
-    drain_prep_tail(spark)
-    canary_samples += [round(canary_once(spark), 3) for _ in range(3)]
     specs = all_queries()
     timings: dict[str, float] = {}
     runs: dict[str, int] = {}
@@ -640,10 +306,7 @@ def main() -> None:
     RESAMPLE_TRIGGER = 1.5
     RESAMPLE_MAX = 2
     resampled: dict[str, int] = {}
-    for qi, name in enumerate(HEADLINE):
-        if qi and qi % CANARY_EVERY == 0:
-            # single mid-suite sample: the JVM is hot, so no warmup needed
-            canary_samples.append(round(canary_once(spark), 3))
+    for name in HEADLINE:
         spec = specs[name]
         samples = []
         agg = None
@@ -658,11 +321,11 @@ def main() -> None:
 
         for _ in range(1 if name in repeat_unsafe else 2):
             n = one_sample()
-        base = BASELINE_SEC.get(name)
-        if (base and sf == 0.1 and name not in repeat_unsafe
+        base = walls.get(name)
+        if (base and name not in repeat_unsafe
                 and min(samples) / base > RESAMPLE_TRIGGER):
             snap_probe = executed_shuffle_summary(agg)
-            if not check_plan_snapshot({name: snap_probe}):
+            if not check_plan_snapshot({name: snap_probe}, pins["plan"]):
                 extras = 0
                 while (extras < RESAMPLE_MAX
                        and min(samples) / base > RESAMPLE_TRIGGER):
@@ -676,18 +339,11 @@ def main() -> None:
         # totals (shuffle records/bytes, scan rows), immune to host
         # contention; extraction happens outside the timed window.
         plan[name] = executed_shuffle_summary(agg)
-        base = BASELINE_SEC.get(name)
-        ratio = f" [{timings[name] / base:.2f}x base]" if base and sf == 0.1 else ""
+        ratio = f" [{timings[name] / base:.2f}x base]" if base else ""
         print(f"# {name}: {timings[name]}s min of {samples} ({n} rows){ratio}"
               f" shuffle_records={plan[name]['shuffle_records']}"
               f" rows_read={plan[name]['rows_read']}",
               file=sys.stderr)
-    # same drain before the post triad: the post samples sit right after
-    # the last headliner's cleanup tail (a 38 s post-sample spike was
-    # measured in the round-9 q03 re-pin session, same signature as the
-    # pre-loop sample-3 artifact)
-    drain_prep_tail(spark)
-    canary_samples += [round(canary_once(spark), 3) for _ in range(3)]
     total = round(time.monotonic() - t_start, 3)
     out = {
         "metric": "headline_suite_wall",
@@ -695,6 +351,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cores": cores,
         "runs": runs,
         "stat": "min",
         "total_wall_sec_incl_session": total,
@@ -702,56 +359,13 @@ def main() -> None:
         # queries that breached RESAMPLE_TRIGGER×baseline on plan-identical
         # counters and got extra contention-adjudication samples
         "resampled": resampled,
+        # what the host did over the run (perfbench's probes): CPU steal is
+        # time the hypervisor gave to other guests, so a run with seconds
+        # of steal read its walls on a contended host
+        "host": {"steal_s": round(steal_s() - steal0, 2),
+                 "load1": round(load1(), 2)},
     }
-    # raw ratios first: the worst raw per-query inflation caps the
-    # normalization divisor below
-    raw_per, raw_total = ({}, None)
-    if sf == 0.1:
-        # raw ratios over the intersection only — queries added after the
-        # baseline snapshot don't skew the comparison
-        raw_per, raw_total = normalized_vs_baseline(
-            timings, BASELINE_SEC, 1.0)
-        out["vs_baseline"] = raw_per
-        if raw_total is not None:
-            out["vs_baseline_total"] = raw_total
-    host_ratio, host_ratio_used = capped_host_ratio(canary_samples, raw_per)
-    # host-speed canary: ratio > ~1.2 means the host was measurably
-    # contended during THIS run and raw vs_baseline overstates cost — read
-    # vs_baseline_normalized (and the plan_regressions gate, which
-    # contention cannot touch) instead. ratio = median of the full
-    # pre/mid/post sample list; ratio_used = the normalization divisor,
-    # capped at the worst raw per-query inflation (a host ratio beyond what
-    # any query experienced cannot be what min-of-k absorbed).
-    out["host_speed"] = {"samples": canary_samples,
-                         "baseline_sec": CANARY_BASELINE_SEC,
-                         "ratio": host_ratio,
-                         "ratio_used": host_ratio_used}
-    if sf == 0.1:
-        # contention-normalized twins (reported ALONGSIDE raw, never
-        # instead): divide by the capped canary ratio, clamped >= 1. Read
-        # the two as BOUNDS, not point estimates: min-of-k absorbs
-        # contention the canary medians deliberately don't, so under heavy
-        # load the raw ratio OVERSTATES plan cost and the normalized one
-        # UNDERSTATES it (planted-load demo in BASELINE.md: raw 1.33x,
-        # normalized 0.17x, truth = the idle run's 1.02x). The plan-counter
-        # gate stays the only point-estimate regression signal.
-        out["vs_baseline_normalized"], norm_total = normalized_vs_baseline(
-            timings, BASELINE_SEC, host_ratio_used)
-        if norm_total is not None:
-            out["vs_baseline_total_normalized"] = norm_total
-        if (raw_total and norm_total and norm_total > 0
-                and raw_total / norm_total > 5):
-            out["host_speed"]["warning"] = (
-                f"raw ({raw_total}x) and normalized ({norm_total}x) totals "
-                "disagree by >5x — the canary saw contention the per-query "
-                "min-of-k largely absorbed; treat them as loose bounds and "
-                "adjudicate with plan_regressions or an idle re-run")
-        # PRIMARY regression gate: compare the executed plan's work counters
-        # against the committed snapshot. Wall time on this shared host can
-        # transiently inflate 20× (BASELINE.md round-3 note; round-3's q286
-        # "3.97×" was pure contention) — shuffle records and scan rows
-        # cannot. A >25% drift in either means the physical plan changed.
-        out["plan_regressions"] = check_plan_snapshot(plan)
+    out.update(compare_to_pins(timings, plan, pins))
     print(json.dumps(out))
     spark.stop()
 

@@ -2,7 +2,7 @@
 
 Mirrors the capability of the reference's session builder
 (/root/reference/pipeline/connectors/spark_context_manager.py:46-73), tuned
-for the driver's local[{SPARK_GRAFT_CPUS}] harness but with every knob
+for a local[cores] harness sized to the host but with every knob
 expressed the way a multi-executor cluster would want it (AQE, shuffle
 partition sizing, Arrow transfers). The reference's MinIO/s3a credential
 plumbing is an explicit opt-in through ``confs``, e.g.
@@ -16,18 +16,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Confs that must be set at session-build time.
+# Confs that must be set at session-build time (host_confs adds the two
+# sized to the host).
 BUILD_CONFS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    # local mode = single JVM: the driver heap carries all executor work;
-    # size it to the host (overridable for small containers).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
 
 # Confs that are runtime-settable and REQUIRED for correctness against the
@@ -42,19 +39,41 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def host_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the number of CPUs this process may run
+    on (its affinity mask, which a container's cpuset narrows)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def host_confs() -> dict[str, str]:
+    """Build-time confs sized to this host: one shuffle partition per core
+    (the core count the default master uses), and a driver heap of
+    min(48g, 3/4 of physical memory) — local mode is one JVM, so the driver
+    heap carries all executor work, and the last quarter stays for the
+    Python workers and the OS. ``$SPARK_GRAFT_DRIVER_MEM`` overrides the
+    heap for a deployment."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return {
+        "spark.sql.shuffle.partitions": str(host_cores()),
+        "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                                or f"{min(48 * 1024, phys_mb * 3 // 4)}m"),
+    }
+
+
 def get_spark(app_name: str = "gh-archive-spark", master: str | None = None,
               confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession suitable for the engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` when the
-    env var is unset). On a real cluster the caller passes the cluster master
-    URL; nothing else in the engine assumes local mode.
+    ``master`` defaults to ``local[host_cores()]``. On a real cluster the
+    caller passes the cluster master URL; nothing else in the engine assumes
+    local mode.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = f"local[{host_cores()}]"
     builder = SparkSession.builder.master(master).appName(app_name)
-    for key, value in {**BUILD_CONFS, **RUNTIME_CONFS, **(confs or {})}.items():
+    for key, value in {**host_confs(), **BUILD_CONFS, **RUNTIME_CONFS,
+                       **(confs or {})}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -82,7 +82,6 @@ SLOW_TESTS = frozenset([
     "test_oracle_parity.py::test_query_matches_oracle[q449_srp_tombstone_search]",
     "test_oracle_parity.py::test_query_matches_oracle[q450_minhash_tombstone_probe]",
     "test_oracle_parity.py::test_query_matches_oracle[q60_stream_dedup]",
-    "test_plan_quality.py::test_host_speed_canary_detects_planted_load",
     "test_plan_quality.py::test_q440_composition_adds_no_shuffle_seams",
     "test_properties.py::test_bpe_train_matches_reference_and_is_prefix_stable",
     "test_properties.py::test_bucketed_interval_join_equals_naive",

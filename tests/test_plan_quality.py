@@ -13,8 +13,6 @@ import contextlib
 import io
 import os
 
-import pytest
-
 from gh_archive_data_pipeline_spark.plans.registry import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -493,147 +491,63 @@ def test_plan_snapshot_gate_accepts_listed_alternates():
         assert "shuffle_records" in flagged.get("q_demo", {}), regressed
 
 
-def test_normalized_vs_baseline_clamps_and_scales():
-    """The canary normalization contract: a contended run (host_ratio > 1)
-    scales reported ratios down by exactly the measured contention; a fast
-    host (ratio < 1) is clamped to 1.0 so normalization can excuse slowness
-    but never flatter the numbers; queries missing a baseline entry are
-    excluded from both per-query and total."""
-    from bench import normalized_vs_baseline
+def test_bench_pins_cover_exactly_the_headliners():
+    """Every pinned core count holds counters for exactly the headline set,
+    and every wall pin names a headliner: a renamed or dropped headliner
+    can't leave a stale pin, and a new one can't run ungated."""
+    import json
 
-    timings = {"qa": 3.0, "qb": 1.0, "q_new": 9.9}
-    baseline = {"qa": 1.0, "qb": 1.0}
-    # contended run measured 2x slow: raw 3.0x/1.0x -> normalized 1.5x/0.5x
-    per, total = normalized_vs_baseline(timings, baseline, 2.0)
-    assert per == {"qa": 1.5, "qb": 0.5}
-    assert total == 1.0  # (3+1)/(2*2)
-    # fast host clamps: identical to raw
-    per_fast, total_fast = normalized_vs_baseline(timings, baseline, 0.8)
-    per_raw, total_raw = normalized_vs_baseline(timings, baseline, 1.0)
-    assert (per_fast, total_fast) == (per_raw, total_raw) == (
-        {"qa": 3.0, "qb": 1.0}, 2.0)
-    # empty intersection -> no total
-    assert normalized_vs_baseline({"x": 1.0}, baseline, 1.0) == ({}, None)
-
-
-def test_drain_prep_tail_bounded_and_stops_when_quiet(monkeypatch):
-    """Round-9 canary fix: the pre/post-triad drain (a) returns only after
-    TWO consecutive untimed canaries land within 3x of idle baseline (the
-    cleanup burst can straddle a single quiet sample — a 31 s first
-    recorded sample was measured behind a single-quiet drain), (b) a
-    spike between quiet samples resets the requirement, (c) it gives up
-    after at most 8 runs on a persistently loaded host (it can only eat
-    the prep artifact, never mask sustained contention)."""
     import bench
 
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    calls = []
-
-    def fake_canary(spark):
-        calls.append(1)
-        # two spiked samples (the prep tail), then quiet
-        return (bench.CANARY_BASELINE_SEC * 30 if len(calls) < 3
-                else bench.CANARY_BASELINE_SEC)
-
-    monkeypatch.setattr(bench, "canary_once", fake_canary)
-    bench.drain_prep_tail(None)
-    assert len(calls) == 4  # spike, spike, quiet, quiet
-    # a spike BETWEEN quiet samples resets the consecutive counter
-    calls.clear()
-    pattern = [1.0, 30.0, 1.0, 1.0]  # quiet, late burst, quiet, quiet
-
-    def straddle(spark):
-        calls.append(1)
-        return bench.CANARY_BASELINE_SEC * pattern[len(calls) - 1]
-
-    monkeypatch.setattr(bench, "canary_once", straddle)
-    bench.drain_prep_tail(None)
-    assert len(calls) == 4
-    # persistently loaded host: bounded at `limit` runs, then proceeds
-    calls.clear()
-    monkeypatch.setattr(
-        bench, "canary_once",
-        lambda spark: (calls.append(1), bench.CANARY_BASELINE_SEC * 30)[1])
-    bench.drain_prep_tail(None)
-    assert len(calls) == 8
+    with open(bench.PINS_PATH, encoding="utf-8") as f:
+        pins = json.load(f)
+    assert pins
+    for cores, entry in pins.items():
+        assert int(cores) > 0
+        assert set(entry["plan"]) == set(bench.HEADLINE), cores
+        assert set(entry["wall_sec"]) <= set(bench.HEADLINE), cores
+        assert bench.pins_for(int(cores)) == entry
 
 
-def test_capped_host_ratio_median_and_cap():
-    """The round-8 canary contract: (a) the ratio is the MEDIAN of the full
-    interleaved pre/mid/post sample list, so one contention spike landing on
-    one sample cannot dominate (BENCH_r07: a 2-sample mean implied ~65x
-    while queries ran 0.84-2.77x); (b) the normalization divisor is capped
-    at the worst raw per-query inflation — a host ratio beyond what any
-    query experienced is not what min-of-k absorbed."""
-    from bench import CANARY_BASELINE_SEC, capped_host_ratio
+def test_unpinned_core_count_reports_unpinned():
+    """A core count with no pin entry is reported as unpinned — never
+    compared against another host's pins, never a silent empty gate."""
+    import bench
 
-    b = CANARY_BASELINE_SEC
-    # seven near-idle samples, one 65x spike: median stays ~1x
-    samples = [b, b * 1.1, b * 0.9, b * 65, b, b * 1.2, b]
-    measured, used = capped_host_ratio(samples, {"qa": 1.5, "qb": 2.77})
-    assert measured == 1.0 and used == 1.0
-    # sustained 10x contention, worst query only 2.77x raw: divisor capped
-    measured, used = capped_host_ratio([b * 10] * 5, {"qa": 1.5, "qb": 2.77})
-    assert measured == 10.0 and used == 2.77
-    # sustained contention BELOW the worst query: divisor = the median
-    measured, used = capped_host_ratio([b * 2] * 4, {"qa": 3.0})
-    assert measured == 2.0 and used == 2.0
-    # no baseline intersection (sf != 0.1): no cap to apply
-    measured, used = capped_host_ratio([b * 4] * 3, {})
-    assert measured == used == 4.0
-    # even-length list: mean of the middle two
-    measured, used = capped_host_ratio([b, b, b * 3, b * 3], {"qa": 9.0})
-    assert measured == used == 2.0
+    assert bench.pins_for(3) is None
+    plan = {"q01_pricing_summary": {"shuffle_records": 7, "rows_read": 1}}
+    out = bench.compare_to_pins({"q01_pricing_summary": 0.5}, plan, None)
+    assert out == {"plan_regressions": "unpinned"}
+    # a pinned entry compares walls over the intersection and gates counters
+    pins = {"wall_sec": {"q01_pricing_summary": 0.25},
+            "plan": {"q01_pricing_summary": {"shuffle_records": 7,
+                                             "rows_read": 600000}}}
+    out = bench.compare_to_pins({"q01_pricing_summary": 0.5, "q_new": 9.0},
+                                plan, pins)
+    assert out["vs_baseline"] == {"q01_pricing_summary": 2.0}
+    assert out["vs_baseline_total"] == 2.0
+    assert "rows_read" in out["plan_regressions"]["q01_pricing_summary"]
 
 
-def test_host_speed_canary_detects_planted_load(spark):
-    """The canary must move with host contention: its median under planted
-    CPU load (multiprocessing busy-spinners on every core) reads measurably
-    slower than an unloaded median taken by the same session moments
-    apart. This is the property that lets a driver-run BENCH adjudicate
-    its own contention instead of needing an idle re-run."""
-    import multiprocessing as mp
+def test_session_defaults_fit_the_host(monkeypatch):
+    """With no overrides, one core count sizes the shuffle partitions (the
+    default master uses the same count) and the driver heap is no larger
+    than physical memory; the deployment override still wins."""
+    from gh_archive_data_pipeline_spark.session import host_confs, host_cores
 
-    from bench import CANARY_BASELINE_SEC, host_speed_canary
-
-    load1 = float(open("/proc/loadavg").read().split()[0])
-    if load1 > 8.0:
-        pytest.skip(f"ambient host load {load1} — the 'quiet' sample would "
-                    "already be contended and the planted-load contrast "
-                    "meaningless (this shared VM sees 20x neighbor windows)")
-    quiet = host_speed_canary(spark, samples=3)
-    # loadavg is a lagging, whole-minute statistic: a concurrent local[8]
-    # pytest job was observed to keep it under the gate while stretching
-    # this "quiet" sample to 2.3x the committed idle baseline — and the
-    # baseline itself is the better contention detector. Retry once, then
-    # skip rather than assert a contrast whose quiet side is already loaded.
-    if quiet > CANARY_BASELINE_SEC * 1.5:
-        quiet = host_speed_canary(spark, samples=3)
-    if quiet > CANARY_BASELINE_SEC * 1.5:
-        pytest.skip(f"quiet canary sample {quiet:.2f}s > 1.5x the idle "
-                    f"baseline {CANARY_BASELINE_SEC}s — ambient contention "
-                    "that loadavg missed; the planted-load contrast would "
-                    "be meaningless")
-
-    stop = mp.Event()
-
-    def burn(ev):
-        while not ev.is_set():
-            sum(i * i for i in range(10_000))
-
-    procs = [mp.Process(target=burn, args=(stop,), daemon=True)
-             for _ in range(os.cpu_count() or 8)]
-    for p in procs:
-        p.start()
-    try:
-        loaded = host_speed_canary(spark, samples=3)
-    finally:
-        stop.set()
-        for p in procs:
-            p.join(timeout=10)
-    # full-core spinners roughly halve the JVM's share; 1.3x is a wide
-    # margin that still proves the signal direction
-    assert loaded > quiet * 1.3, (quiet, loaded)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    confs = host_confs()
+    assert host_cores() == len(os.sched_getaffinity(0))
+    assert confs["spark.sql.shuffle.partitions"] == str(host_cores())
+    mem = confs["spark.driver.memory"]
+    assert mem.endswith("m")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
+    assert 0 < int(mem[:-1]) <= min(48 * 1024, phys_mb)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert host_confs() == {"spark.sql.shuffle.partitions": "3",
+                            "spark.driver.memory": "6g"}
 
 
 def test_executed_shuffle_summary_sees_through_aqe(spark):
