@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import fixture_memo, load_table, scratch_dir
+from ..sources.readers import (collect_parquet, fixture_memo, load_table,
+                               read_parquet, scratch_dir)
 from ..plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1546,8 +1547,10 @@ def _check_index_params(spark: SparkSession, index_dir: str, num_hashes: int,
     Returns the build's ``num_buckets`` (None for a pre-bucket-layout
     index, whose bands table has no ``bkt`` partition column — probes fall
     back to the full scan and appends keep the flat layout, so old indexes
-    stay correct, just unpruned)."""
-    p = spark.read.parquet(f"{index_dir}/params").collect()[0]
+    stay correct, just unpruned). The params row is collected once per
+    ``params`` file state (:func:`collect_parquet`), so a repeated probe
+    starts no job here and a rebuilt index is read again."""
+    p = collect_parquet(spark, f"{index_dir}/params")[0]
     got = (num_hashes, bands, ngram, hash_fn)
     built = (p.num_hashes, p.bands, p.ngram, p.hash_fn)
     if got != built:
@@ -1576,6 +1579,15 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
     :func:`minhash_near_dup` — the result is bit-identical to running the
     full-corpus pipeline and keeping only pairs with a delta member (pinned
     by unit test and by the q376 oracle).
+
+    Jobs before the caller's action, on an index probed before: the
+    ``params`` check and the ``bands``/``shingles``/``tombstones`` reads
+    start none (memoized per file state, sources/readers.py). Three remain:
+    the delta-shingles checkpoint (the shingles feed both the band rows and
+    the verify scan); the delta-bands checkpoint (without it the bucket
+    collect and the action each re-sign the delta: measured 458 vs 171 ms
+    at sf0.01); and the bucket collect, whose static ``bkt IN (...)``
+    filter is what prunes the bands scan at file listing.
     """
     _check_hash_fan(num_hashes, "num_hashes")
     if num_hashes % bands:
@@ -1588,7 +1600,7 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
     delta_bands = _band_rows(delta_sh, id_col, num_hashes,
                              bands).localCheckpoint()
     tomb = _minhash_tombstones(spark, index_dir)
-    corpus_bands = spark.read.parquet(f"{index_dir}/bands")
+    corpus_bands = read_parquet(spark, f"{index_dir}/bands")
     if num_buckets is not None:
         # Prune the index scan to the delta's bucket directories: a
         # band-match requires equal (band, sig), hence an equal bucket, so
@@ -1634,7 +1646,8 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
         .select("doc_a", "doc_b")
     )
     candidates = cross.unionByName(internal).distinct()
-    index_sh = spark.read.parquet(f"{index_dir}/shingles").select(id_col, "hs")
+    index_sh = (read_parquet(spark, f"{index_dir}/shingles")
+                .select(id_col, "hs"))
     if tomb is not None:
         index_sh = index_sh.join(
             F.broadcast(tomb.withColumnRenamed("id", id_col)),
@@ -1787,7 +1800,7 @@ def _minhash_tombstones(spark: SparkSession, index_dir: str):
     fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
     if not fs.exists(tpath):
         return None
-    return spark.read.parquet(f"{index_dir}/tombstones").select("id")
+    return read_parquet(spark, f"{index_dir}/tombstones").select("id")
 
 
 def minhash_index_delete(spark: SparkSession, index_dir: str,

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.arrays import sorted_pairs
 from ..plans.registry import register
 
 
@@ -229,37 +230,42 @@ def copurchase_edges(spark: SparkSession, sf_dir: str,
     """Undirected co-purchase edges oriented low-id -> high-id: users who
     purchased within the same hour. Shared by the graph-statistics queries
     (q295/q309/q310); the per-hour pair blowup is bounded by hour-group
-    size (k users -> k^2/2 pairs).
+    size (k users -> k(k-1)/2 pairs).
+
+    Plan: one aggregation collects each hour's purchasers as a sorted
+    distinct array (``array_sort(collect_set(user_id))``), the pairs are
+    emitted on the aggregate's side with :func:`sorted_pairs` (exactly the
+    i < j pairs, no k^2 post-filter), and one ``distinct`` merges users who
+    share several hours: one exchange of per-hour arrays where an hour
+    self-join exchanges per-user rows twice, for the same edge set (pinned
+    by unit test against the self-join). Purchases with a NULL hour (NULL
+    ``ts``) or a NULL ``user_id`` form no edge.
 
     The 100× scale study (BASELINE.md round 4) measured this sub-linear
     because real event data grows hour COUNT, not hour-group size. The
     documented hazard is a FLASH event — one hour whose group genuinely
-    densifies to k users and would emit k²/2 pairs on a single join key.
-    ``max_group_size`` is that mitigation: each hour group keeps its k
-    lowest user_ids (deterministic, rank via one window on the already-
-    shuffled group key), capping any key's join fan-out at k²/2 while
-    leaving every group under the cap EXACTLY intact. A capped flash hour
-    yields a uniform subsample of its clique — acceptable for the graph
-    STATISTICS these edges feed (triangle counts / degree distributions),
-    which is why the cap is an explicit opt-in, not a default."""
+    densifies to k users and would emit k²/2 pairs from one array.
+    ``max_group_size`` is that mitigation: each hour's sorted array is
+    sliced to its k lowest user_ids (deterministic), capping any hour's
+    fan-out at k(k-1)/2 while leaving every group under the cap EXACTLY
+    intact. A NULL user_id never takes one of the k slots (``collect_set``
+    drops it). A capped flash hour yields a uniform subsample of its
+    clique — acceptable for the graph STATISTICS these edges feed
+    (triangle counts / degree distributions), which is why the cap is an
+    explicit opt-in, not a default."""
     from ..sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    pur = (ev.filter(F.col("event_type") == "purchase")
-           .select("user_id", F.date_trunc("hour", "ts").alias("h"))
-           .distinct())
+    users = F.array_sort(F.collect_set("user_id"))
     if max_group_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("h").orderBy("user_id")
-        pur = (pur.withColumn("__rn", F.row_number().over(w))
-               .filter(F.col("__rn") <= max_group_size)
-               .drop("__rn"))
-    a, b = pur.alias("a"), pur.alias("b")
-    return (a.join(b, (F.col("a.h") == F.col("b.h"))
-                   & (F.col("a.user_id") < F.col("b.user_id")))
-            .select(F.col("a.user_id").alias("u"),
-                    F.col("b.user_id").alias("v"))
+        users = F.slice(users, 1, max_group_size)
+    groups = (ev.filter(F.col("event_type") == "purchase")
+              .select("user_id", F.date_trunc("hour", "ts").alias("h"))
+              .filter(F.col("h").isNotNull())
+              .groupBy("h")
+              .agg(users.alias("us")))
+    return (groups.select(F.explode(sorted_pairs("us", "u", "v")).alias("p"))
+            .select("p.u", "p.v")
             .distinct())
 
 
@@ -275,18 +281,23 @@ def degree_oriented(edges: DataFrame) -> DataFrame:
     out-neighborhood has size <= sqrt(2m), so the wedge self-join on ``s``
     generates at most O(m^1.5) rows TOTAL and no single join key explodes —
     a hub of degree k contributes 0 wedges as an apex (all its edges point
-    IN) instead of k^2/2. The two degree-annotation joins added here are
-    linear and shuffle on node id, the same key profile as the wedge joins
-    they protect."""
+    IN) instead of k^2/2. The two degree-annotation joins broadcast the
+    degree table (one row per node, at most 2m rows and in practice far
+    fewer) and stream the edge list, which keeps its own partitioning. The
+    hint is needed because Catalyst sizes an exploded-array frame like
+    :func:`copurchase_edges`' output at a few bytes a row: left alone it
+    broadcasts the EDGES and streams the degree aggregate, whose few
+    coalesced partitions then carry every oriented edge (at 10x sf0.1: one
+    task, q295 twice as slow)."""
     deg = (edges.select(F.col("u").alias("node"))
            .unionAll(edges.select(F.col("v").alias("node")))
            .groupBy("node")
            .agg(F.count(F.lit(1)).alias("d")))
     ed = (edges
-          .join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")),
-                "u")
-          .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")),
-                "v"))
+          .join(F.broadcast(deg.select(F.col("node").alias("u"),
+                                       F.col("d").alias("du"))), "u")
+          .join(F.broadcast(deg.select(F.col("node").alias("v"),
+                                       F.col("d").alias("dv"))), "v"))
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
     return ed.select(
@@ -346,9 +357,12 @@ def q295_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1; clique-shaped hour groups make most wedges close) and was
     measured 14x slower at 2x data when the closing join fell out of
     broadcast range. A hub user contributes zero out-edges as an apex, so
-    no join key concentrates its neighborhood. The co-occurrence blowup is
-    bounded per hour-group (k users -> k^2/2 pairs), the same contract as
-    q41's candidate windows."""
+    no join key concentrates its neighborhood. The edges come from one
+    sorted purchaser array per hour (:func:`copurchase_edges`: pairs
+    emitted from the array, one distinct), so the co-occurrence blowup is
+    bounded per hour-group (k users -> k(k-1)/2 pairs), the same contract
+    as q41's candidate windows; ``max_group_size`` caps k when a flash
+    hour makes that bound too loose."""
     edges = copurchase_edges(spark, sf_dir)
     # Materialize the oriented edge list ONCE (localCheckpoint truncates
     # lineage): deg, adjacency, the edge-iterator join and n_edges all read
@@ -479,8 +493,11 @@ def q310_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
            .unionAll(edges.select(F.col("v").alias("node")))
            .groupBy("node")
            .agg(F.count(F.lit(1)).cast("double").alias("d")))
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("da"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("db"))
+    # broadcast hints: see degree_oriented (same estimate, same cure)
+    du = F.broadcast(deg.select(F.col("node").alias("u"),
+                                F.col("d").alias("da")))
+    dv = F.broadcast(deg.select(F.col("node").alias("v"),
+                                F.col("d").alias("db")))
     ends = edges.join(du, "u").join(dv, "v").select("da", "db")
     sym = ends.unionAll(ends.select(F.col("db").alias("da"),
                                     F.col("da").alias("db")))

@@ -22,7 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import fixture_memo, hadoop_fs, load_table, scratch_dir
+from ..sources.readers import (collect_parquet, fixture_memo, hadoop_fs,
+                               load_table, read_parquet, scratch_dir)
 from ..plans.registry import register
 
 
@@ -560,8 +561,8 @@ def ivf_balance(spark: SparkSession, index_dir: str,
     — the drift signal of the frozen-codebook append trade.
     Reads ONLY partition columns (cell, ingest): zero vector bytes, pure
     metadata shape, safe to run on every ingest cycle at 100 TB."""
-    num_cells = spark.read.parquet(f"{index_dir}/codebook").count()
-    cells = (spark.read.parquet(f"{index_dir}/corpus")
+    num_cells = read_parquet(spark, f"{index_dir}/codebook").count()
+    cells = (read_parquet(spark, f"{index_dir}/corpus")
              .groupBy("cell")
              .agg(F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
                   F.sum(F.when(F.col("ingest") == "base", 1).otherwise(0))
@@ -584,7 +585,7 @@ def _ivf_tombstones(spark: SparkSession, index_dir: str):
     fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
     if not fs.exists(tpath):
         return None
-    return spark.read.parquet(f"{index_dir}/tombstones").select("vec_id")
+    return read_parquet(spark, f"{index_dir}/tombstones").select("vec_id")
 
 
 def ivf_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
@@ -628,7 +629,7 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     pruned corpus against broadcast (query, cell) pairs; only the
     per-partition top-k candidate rows reach the final rank window's
     exchange (WindowGroupLimit), never the full corpus."""
-    cb = F.broadcast(spark.read.parquet(f"{index_dir}/codebook"))
+    cb = F.broadcast(read_parquet(spark, f"{index_dir}/codebook"))
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("csim").desc(), F.col("cell").asc())
     probes = (queries
@@ -641,7 +642,7 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
               .select("query_id", "qv", "cell"))
     # bounded driver state: <= num_cells ints, no matter how many queries
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
-    corpus = (spark.read.parquet(f"{index_dir}/corpus")
+    corpus = (read_parquet(spark, f"{index_dir}/corpus")
               .filter(F.col("cell").isin(cells)))   # static partition prune
     tomb = _ivf_tombstones(spark, index_dir)
     if tomb is not None:
@@ -804,7 +805,7 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     verify + per-query top-k. Returns exactly what the non-materialized
     :func:`srp_bucket_topk` returns — the layout changes cost, not
     semantics (pinned by unit test)."""
-    p = spark.read.parquet(f"{index_dir}/params").collect()[0]
+    p = collect_parquet(spark, f"{index_dir}/params")[0]
     planes_df = _srp_planes_df(spark, p.planes_per_table, p.num_tables,
                                p.dim, p.seed)
     probes = (_srp_hash(queries.select(F.col(id_col).alias("query_id"),
@@ -814,7 +815,7 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
               .withColumn("tb", F.col("t") * (1 << p.planes_per_table)
                           + F.col("b")))
     keys = [r.tb for r in probes.select("tb").distinct().collect()]
-    bucket_rows = (spark.read.parquet(f"{index_dir}/buckets")
+    bucket_rows = (read_parquet(spark, f"{index_dir}/buckets")
                    .filter(F.col("tb").isin(keys)))  # static partition prune
     tomb = _srp_tombstones(spark, index_dir)
     if tomb is not None:
@@ -850,7 +851,7 @@ def _srp_tombstones(spark: SparkSession, index_dir: str):
     fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
     if not fs.exists(tpath):
         return None
-    return spark.read.parquet(f"{index_dir}/tombstones").select("vec_id")
+    return read_parquet(spark, f"{index_dir}/tombstones").select("vec_id")
 
 
 def srp_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
@@ -1632,7 +1633,7 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
         raise ValueError(
             f"{index_dir}/corpus uses the old corpus/cell=N layout; rebuild "
             "the index with build_ivf_index before appending ingests")
-    cb_rows = (spark.read.parquet(f"{index_dir}/codebook")
+    cb_rows = (read_parquet(spark, f"{index_dir}/codebook")
                .orderBy("cell").collect())
     cell_of = _unit_argmax_udf(
         np.array([list(map(float, r.centroid)) for r in cb_rows]))

@@ -8,6 +8,16 @@ plus the fixture loader used by every registry query.
 Scale notes: all readers return lazily-planned DataFrames; filters/projections
 applied by callers push down to the parquet scan through Catalyst (verified
 via .explain → PushedFilters/ReadSchema). No data touches the driver.
+
+Schema memo: a bare ``spark.read.parquet`` runs one Spark job per call to
+infer the schema from the files' footers (~65 ms of driver time per read on
+a small fixture, the largest per-call cost of a sub-second query).
+:func:`read_parquet` — behind :func:`load_table` and every engine-artifact
+read (index params, bands, shingles, codebooks, tombstones) — infers once
+per ``(path, source_stamp(path), spark.sql.legacy.parquet.nanosAsLong)``
+and hands the schema back on later reads, the role a metastore plays for a
+query engine. A rewritten or appended path changes its stamp and infers
+again; files are still listed on every read, so a new partition is seen.
 """
 
 from __future__ import annotations
@@ -17,6 +27,7 @@ import functools
 import os
 import shutil
 import tempfile
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,14 +41,28 @@ TPCH_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 
 
-def source_stamp(src: str) -> float:
-    """Freshness fingerprint of a fixture source path (file or directory):
-    the newest mtime underneath, so a regenerated fixture changes it."""
-    if os.path.isdir(src):
-        stamps = [os.path.getmtime(os.path.join(src, f))
-                  for f in os.listdir(src)] or [os.path.getmtime(src)]
+def source_stamp(src: str, spark: SparkSession | None = None) -> float:
+    """Freshness fingerprint of a source path (file or directory): the
+    newest mtime of the path and its direct children, so a regenerated
+    file, a rewritten table or an added/removed partition directory changes
+    it. A local path is stat'ed directly; any other scheme (``hdfs://``,
+    ``s3a://``) resolves through :func:`hadoop_fs`, which needs ``spark``.
+    (An object store that reports no directory mtimes still sees a
+    rewritten table through its new files' times.)"""
+    url = urlparse(src)
+    if url.scheme in ("", "file"):
+        local = url.path if url.scheme else src
+        stamps = [os.path.getmtime(local)]
+        if os.path.isdir(local):
+            stamps += [os.path.getmtime(os.path.join(local, f))
+                       for f in os.listdir(local)]
         return max(stamps)
-    return os.path.getmtime(src)
+    fs, path = hadoop_fs(spark, src)
+    st = fs.getFileStatus(path)
+    stamps = [st.getModificationTime()]
+    if st.isDirectory():
+        stamps += [c.getModificationTime() for c in fs.listStatus(path)]
+    return max(stamps) / 1000.0
 
 
 def fixture_memo(table: str):
@@ -52,7 +77,8 @@ def fixture_memo(table: str):
         @functools.wraps(fn)
         def memo(spark: SparkSession, sf_dir: str, *extra):
             key = (sf_dir,
-                   source_stamp(os.path.join(sf_dir, f"{table}.parquet")),
+                   source_stamp(os.path.join(sf_dir, f"{table}.parquet"),
+                                spark),
                    *extra)
             if key not in cache:
                 cache[key] = fn(spark, sf_dir, *extra)
@@ -83,8 +109,58 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# (path, source_stamp(path), nanosAsLong) -> the schema Spark inferred there
+_SCHEMAS: dict[tuple, StructType] = {}
+# (path, source_stamp(path), nanosAsLong) -> a small table's collected rows
+_ROWS: dict[tuple, list] = {}
+
+
+def _stamp_key(spark: SparkSession, path: str) -> tuple:
+    """Memo key of a parquet read, taken after ``ensure_runtime_confs`` so
+    the driver harness's plain session keys (and infers) exactly what the
+    engine's own session does. nanosAsLong is part of the key because it
+    changes the inferred type of a TIMESTAMP(NANOS) column."""
+    ensure_runtime_confs(spark)
+    return (path, source_stamp(path, spark),
+            spark.conf.get(NANOS_AS_LONG, None))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job after
+    the first read of a given file state (module docstring: the memo key).
+    A partitioned directory's memoized schema carries its discovered
+    partition columns with their inferred types (``bkt int``, ``ingest
+    string``); Spark still lists the files on every read, so a partition
+    appended since the first read is scanned."""
+    key = _stamp_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
+def collect_parquet(spark: SparkSession, path: str) -> list:
+    """The rows of a small parquet table (an index's one-row ``params``),
+    collected once per file state on the same key as :func:`read_parquet`:
+    a probe that checks its index's build parameters on every call starts
+    no job, and a rebuilt index is read again."""
+    key = _stamp_key(spark, path)
+    if key not in _ROWS:
+        _ROWS[key] = read_parquet(spark, path).collect()
+    return _ROWS[key]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing physical-encoding quirks.
+
+    The scan goes through :func:`read_parquet`, so only the first read of
+    a fixture file (per ``source_stamp`` and nanosAsLong setting) runs a
+    schema-inference job; later reads of the unchanged file plan with the
+    memoized schema and start no job before the caller's action.
 
     ``events.ts`` has shipped in two physical encodings across fixture
     generations: parquet TIMESTAMP(NANOS) (read as raw int64 via
@@ -94,8 +170,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       - ``ts_ns``  int64 nanos (exact event-time arithmetic without
                    interval types; also what a 100 TB layout would sort by)
     """
-    ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         if dict(df.dtypes).get("ts") == "bigint":
             df = (

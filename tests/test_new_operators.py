@@ -1834,6 +1834,68 @@ def test_copurchase_group_cap_bounds_flash_hour(spark, tmp_path):
     assert len([r for r in full if r.u < 2000]) == 100 * 99 // 2
 
 
+def _selfjoin_copurchase_edges(ev, max_group_size=None):
+    """Reference: co-purchase edges as an hour self-join over distinct
+    (user, hour) rows, capped by a row_number window."""
+    from pyspark.sql import Window
+
+    pur = (ev.filter(F.col("event_type") == "purchase")
+           .select("user_id", F.date_trunc("hour", "ts").alias("h"))
+           .distinct())
+    if max_group_size is not None:
+        w = Window.partitionBy("h").orderBy("user_id")
+        pur = (pur.withColumn("__rn", F.row_number().over(w))
+               .filter(F.col("__rn") <= max_group_size)
+               .drop("__rn"))
+    a, b = pur.alias("a"), pur.alias("b")
+    return (a.join(b, (F.col("a.h") == F.col("b.h"))
+                   & (F.col("a.user_id") < F.col("b.user_id")))
+            .select(F.col("a.user_id").alias("u"),
+                    F.col("b.user_id").alias("v"))
+            .distinct())
+
+
+def test_copurchase_edges_equal_hour_self_join(spark, tmp_path):
+    """The per-hour sorted-array edges equal the hour self-join: repeated
+    purchases by one user, a user in several hours, a NULL ts, a NULL
+    user_id, a non-purchase event, and caps below and above group sizes.
+    The one difference is documented: under a cap the self-join's window
+    ranked a NULL user_id first and gave it a slot; the array does not."""
+    from gh_archive_data_pipeline_spark.operators.graph import (
+        copurchase_edges,
+    )
+
+    h10, h11 = dt.datetime(2024, 1, 1, 10, 5), dt.datetime(2024, 1, 1, 11, 7)
+    rows = [(5, h10), (3, h10), (3, h10.replace(minute=40)), (8, h10),
+            (1, h10), (None, h10),                       # hour 10: 1 3 5 8
+            (3, h11), (8, h11), (9, h11),                # hour 11: 3 8 9
+            (4, None), (6, None)]                        # no hour
+    ev = spark.createDataFrame(
+        [(i, ts, u, "purchase", 1.0) for i, (u, ts) in enumerate(rows)]
+        + [(99, h10, 7, "view", 1.0)],
+        "event_id long, ts timestamp_ntz, user_id long, "
+        "event_type string, value double")
+    d = str(tmp_path / "edges_fixture")
+    ev.write.mode("overwrite").parquet(f"{d}/events.parquet")
+    ev = spark.read.parquet(f"{d}/events.parquet")
+    known = ev.filter(F.col("user_id").isNotNull())
+
+    def edges(df):
+        return sorted((r.u, r.v) for r in df.collect())
+
+    got = edges(copurchase_edges(spark, d))
+    assert got == edges(_selfjoin_copurchase_edges(ev))
+    assert got == [(1, 3), (1, 5), (1, 8), (3, 5), (3, 8), (3, 9), (5, 8),
+                   (8, 9)]
+    for cap in (0, 1, 2, 3, 4, 10):          # below, at and above 3 and 4
+        assert (edges(copurchase_edges(spark, d, max_group_size=cap))
+                == edges(_selfjoin_copurchase_edges(known, cap))), cap
+    # cap 2: the array keeps users 1, 3 of hour 10; the window kept NULL, 1
+    assert edges(copurchase_edges(spark, d, max_group_size=2)) == [
+        (1, 3), (3, 8)]
+    assert edges(_selfjoin_copurchase_edges(ev, 2)) == [(3, 8)]
+
+
 # ---------------------------------------------------------------------------
 # Round 4: incremental dedup index (q376) + SemDeDup (q377)
 # ---------------------------------------------------------------------------

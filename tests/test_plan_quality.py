@@ -529,6 +529,18 @@ def test_unpinned_core_count_reports_unpinned():
     assert "rows_read" in out["plan_regressions"]["q01_pricing_summary"]
 
 
+def test_wall_resample_off_when_session_oversubscribes_cpus(monkeypatch):
+    """A session with more cores than the affinity mask allows (local[8]
+    on 4 CPUs) takes no wall-triggered resamples; up to the mask it does."""
+    import bench
+
+    monkeypatch.setattr(bench.os, "sched_getaffinity",
+                        lambda pid: {0, 1, 2, 3})
+    assert not bench.wall_resample_allowed(8)
+    assert bench.wall_resample_allowed(4)
+    assert bench.wall_resample_allowed(2)
+
+
 def test_session_defaults_fit_the_host(monkeypatch):
     """With no overrides, one core count sizes the shuffle partitions (the
     default master uses the same count) and the driver heap is no larger
