@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import (collect_parquet, fixture_memo, load_table,
-                               read_parquet, scratch_dir)
+from ..sources import index_store
+from ..sources.readers import (fixture_memo, load_table, read_parquet,
+                               scan_parallel, scratch_dir)
 from ..plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -226,13 +227,8 @@ def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
     _check_hash_fan(num_hashes, "num_hashes")
     if num_hashes % bands:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    spark = docs.sparkSession
-    # Small-file parallelism gate: a one-split local fixture serializes the
-    # md5-shingle + 64-lane signature compute on one core; cluster scans
-    # have many splits so this shuffle never happens at scale.
-    if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    sh = hashed_shingles(docs, id_col, ngram, hash_fn).localCheckpoint()
+    sh = hashed_shingles(scan_parallel(docs), id_col, ngram,
+                         hash_fn).localCheckpoint()
     # band rows (signatures shuffle-free in one nested-HOF pass, band key =
     # raw lane-value slice: exact, no re-hash, SQL-replayable) come from the
     # SHARED _band_rows helper — the same expressions the materialized index
@@ -1455,19 +1451,6 @@ def _band_rows(sh: DataFrame, id_col: str, num_hashes: int,
     ).select(id_col, "bs.band", "bs.sig")
 
 
-def check_ingest_id(ingest_id: str) -> None:
-    """Shared ingest-id contract for every materialized-index append
-    (MinHash bands/shingles, IVF corpus): 'base' would silently OVERWRITE
-    the build's own generation; '/' or '=' produce broken partition
-    paths; empty/whitespace-only ids write a bare ``ingest=`` directory —
-    an ambiguous partition value some readers surface as empty-string,
-    which corrupts ingest=='base' generation splits (q386). One helper so
-    the rule can never drift between indexes."""
-    if (not ingest_id.strip() or ingest_id == "base"
-            or "/" in ingest_id or "=" in ingest_id):
-        raise ValueError(f"invalid ingest_id: {ingest_id!r}")
-
-
 def _band_bucket(num_buckets: int):
     """Partition-directory key for a band row: xxhash64 of the (band, sig)
     join key, folded into ``num_buckets``. A pair can only band-match if
@@ -1488,7 +1471,9 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
     ``{index_dir}/shingles`` (id, hs) for exact-Jaccard verification and
     ``{index_dir}/bands`` (id, band, sig) for candidate probing, the
     latter PARTITIONED into ``bkt=<hash(band,sig) % num_buckets>``
-    directories.
+    directories. The directory follows the shared index layout
+    (sources/index_store.py): the build clears the index's own sub-trees
+    and writes the ``params`` row and the ``ingest=base`` generations.
 
     This is the cross-run contract a 100 TB corpus needs: the corpus is
     shingled/signed ONCE, and every future ingest batch dedups against the
@@ -1508,22 +1493,13 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     if num_buckets < 1:
         raise ValueError(f"num_buckets={num_buckets} must be >= 1")
-    spark = docs.sparkSession
-    # Layout: every write (the build included) lands in its own
-    # ``ingest=<id>`` partition directory, so incremental appends are
-    # per-ingest OVERWRITES — retry-idempotent — and readers see ``ingest``
-    # as a partition column they simply don't select. Params persist
-    # alongside so probe/append can refuse a mismatched configuration
-    # instead of silently missing every corpus duplicate.
-    (spark.createDataFrame(
-        [(num_hashes, bands, ngram, hash_fn, num_buckets)],
-        "num_hashes int, bands int, ngram int, hash_fn string, "
-        "num_buckets int")
-     .coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/params"))
-    if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    sh = hashed_shingles(docs, id_col, ngram, hash_fn).localCheckpoint()
-    sh.write.mode("overwrite").parquet(f"{index_dir}/shingles/ingest=base")
+    index_store.begin_build(
+        docs.sparkSession, index_dir, ("shingles", "bands"),
+        dict(num_hashes=num_hashes, bands=bands, ngram=ngram,
+             hash_fn=hash_fn, num_buckets=num_buckets))
+    sh = hashed_shingles(scan_parallel(docs), id_col, ngram,
+                         hash_fn).localCheckpoint()
+    index_store.write_generation(sh, index_dir, "shingles", None, None)
     br = _band_rows(sh, id_col, num_hashes, bands)
     if sh.isEmpty():
         # empty corpus: partitionBy writes NO files at all, leaving a
@@ -1533,31 +1509,34 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
         br.write.mode("overwrite").parquet(
             f"{index_dir}/bands/ingest=base/bkt=0")
     else:
-        (br.withColumn("bkt", _band_bucket(num_buckets))
-         .repartition(num_buckets, F.col("bkt"))
-         .write.mode("overwrite").partitionBy("bkt")
-         .parquet(f"{index_dir}/bands/ingest=base"))
+        _write_bands(br, index_dir, None, num_buckets)
 
 
-def _check_index_params(spark: SparkSession, index_dir: str, num_hashes: int,
-                        bands: int, ngram: int, hash_fn: str) -> int | None:
-    """Refuse to probe/append with parameters that differ from the build's:
-    a bands/ngram/hash_fn mismatch would make the band join match nothing
-    and silently return only delta-internal pairs (zero corpus recall).
-    Returns the build's ``num_buckets`` (None for a pre-bucket-layout
-    index, whose bands table has no ``bkt`` partition column — probes fall
-    back to the full scan and appends keep the flat layout, so old indexes
-    stay correct, just unpruned). The params row is collected once per
-    ``params`` file state (:func:`collect_parquet`), so a repeated probe
-    starts no job here and a rebuilt index is read again."""
-    p = collect_parquet(spark, f"{index_dir}/params")[0]
-    got = (num_hashes, bands, ngram, hash_fn)
-    built = (p.num_hashes, p.bands, p.ngram, p.hash_fn)
-    if got != built:
-        raise ValueError(
-            f"index at {index_dir} was built with (num_hashes, bands, "
-            f"ngram, hash_fn)={built}, called with {got}")
-    return getattr(p, "num_buckets", None)
+def _write_bands(br: DataFrame, index_dir: str, ingest_id: str | None,
+                 num_buckets: int) -> None:
+    """One ``bands`` generation in ``bkt=`` directories: one shuffle on
+    the bucket key so the generation is exactly ``num_buckets`` files, the
+    same scheme for the build and every append, so partition discovery
+    sees one depth and probes prune appended generations too."""
+    index_store.write_generation(
+        br.withColumn("bkt", _band_bucket(num_buckets))
+        .repartition(num_buckets, F.col("bkt")),
+        index_dir, "bands", ingest_id, "bkt")
+
+
+def _minhash_buckets(spark: SparkSession, index_dir: str, num_hashes: int,
+                     bands: int, ngram: int, hash_fn: str) -> int:
+    """The build's ``num_buckets``, after refusing parameters that differ
+    from the build's: a bands/ngram/hash_fn mismatch would make the band
+    join match nothing and silently return only delta-internal pairs
+    (zero corpus recall)."""
+    _check_hash_fan(num_hashes, "num_hashes")
+    if num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    num_buckets, = index_store.check_params(
+        spark, index_dir, "num_buckets", num_hashes=num_hashes, bands=bands,
+        ngram=ngram, hash_fn=hash_fn)
+    return num_buckets
 
 
 def incremental_near_dup(spark: SparkSession, index_dir: str,
@@ -1581,49 +1560,39 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
     by unit test and by the q376 oracle).
 
     Jobs before the caller's action, on an index probed before: the
-    ``params`` check and the ``bands``/``shingles``/``tombstones`` reads
-    start none (memoized per file state, sources/readers.py). Three remain:
+    ``params`` check, the tombstone existence check and the
+    ``bands``/``shingles`` reads start none (sources/index_store.py,
+    memoized per file state in sources/readers.py). Three remain:
     the delta-shingles checkpoint (the shingles feed both the band rows and
     the verify scan); the delta-bands checkpoint (without it the bucket
     collect and the action each re-sign the delta: measured 458 vs 171 ms
     at sf0.01); and the bucket collect, whose static ``bkt IN (...)``
     filter is what prunes the bands scan at file listing.
     """
-    _check_hash_fan(num_hashes, "num_hashes")
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    num_buckets = _check_index_params(
-        spark, index_dir, num_hashes, bands, ngram, hash_fn)
-    if delta.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        delta = delta.repartition(spark.sparkContext.defaultParallelism)
-    delta_sh = hashed_shingles(delta, id_col, ngram, hash_fn).localCheckpoint()
+    num_buckets = _minhash_buckets(spark, index_dir, num_hashes, bands,
+                                   ngram, hash_fn)
+    delta_sh = hashed_shingles(scan_parallel(delta), id_col, ngram,
+                               hash_fn).localCheckpoint()
     delta_bands = _band_rows(delta_sh, id_col, num_hashes,
                              bands).localCheckpoint()
-    tomb = _minhash_tombstones(spark, index_dir)
     corpus_bands = read_parquet(spark, f"{index_dir}/bands")
-    if num_buckets is not None:
-        # Prune the index scan to the delta's bucket directories: a
-        # band-match requires equal (band, sig), hence an equal bucket, so
-        # unprobed buckets cannot hold candidates and cost zero I/O. The
-        # collect is bounded driver state (<= num_buckets distinct ints,
-        # whatever the delta size); when the delta covers every bucket the
-        # filter is skipped — same degeneracy contract as IVF nprobe=all.
-        bkts = [r.b for r in delta_bands
-                .select(_band_bucket(num_buckets).alias("b"))
-                .distinct().collect()]
-        if len(bkts) < num_buckets:
-            corpus_bands = corpus_bands.filter(F.col("bkt").isin(bkts))
-    # explicit column select drops the layout's partition columns
-    corpus_bands = corpus_bands.select(id_col, "band", "sig")
-    if tomb is not None:
-        # minhash_index_delete's read path: tombstoned corpus docs never
-        # become candidates (broadcast anti-join on the pruned band scan;
-        # the shingle verify scan is anti-joined below so a tombstoned
-        # doc can't verify either). Delta-side rows are the caller's live
-        # data and are never suppressed — re-ingesting a deleted id
-        # requires a compact first (the IVF no-resurrection rule).
-        tomb_as = F.broadcast(tomb.withColumnRenamed("id", id_col))
-        corpus_bands = corpus_bands.join(tomb_as, id_col, "left_anti")
+    # Prune the index scan to the delta's bucket directories: a band-match
+    # requires equal (band, sig), hence an equal bucket, so unprobed
+    # buckets cannot hold candidates and cost zero I/O. The collect is
+    # bounded driver state (<= num_buckets distinct ints, whatever the
+    # delta size); when the delta covers every bucket the filter is
+    # skipped — same degeneracy contract as IVF nprobe=all.
+    bkts = [r.b for r in delta_bands
+            .select(_band_bucket(num_buckets).alias("b"))
+            .distinct().collect()]
+    if len(bkts) < num_buckets:
+        corpus_bands = corpus_bands.filter(F.col("bkt").isin(bkts))
+    # Deleted corpus docs never become candidates (anti-joined out of the
+    # pruned band scan) and never verify (out of the shingle scan below).
+    # Delta-side rows are the caller's live data and are never suppressed.
+    # The explicit column select drops the layout's partition columns.
+    corpus_bands = index_store.live(
+        spark, index_dir, corpus_bands.select(id_col, "band", "sig"), id_col)
     # corpus x delta: broadcast the delta side; the index scan streams.
     # doc_x != doc_y guard: in an at-least-once retry the batch's own rows
     # may already sit in the index (appended before the checkpoint commit),
@@ -1646,12 +1615,10 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
         .select("doc_a", "doc_b")
     )
     candidates = cross.unionByName(internal).distinct()
-    index_sh = (read_parquet(spark, f"{index_dir}/shingles")
-                .select(id_col, "hs"))
-    if tomb is not None:
-        index_sh = index_sh.join(
-            F.broadcast(tomb.withColumnRenamed("id", id_col)),
-            id_col, "left_anti")
+    index_sh = index_store.live(
+        spark, index_dir,
+        read_parquet(spark, f"{index_dir}/shingles").select(id_col, "hs"),
+        id_col)
     all_sh = index_sh.unionByName(delta_sh)
     # verify: candidates broadcast twice; the shingle scans never shuffle.
     with_a = (all_sh.select(F.col(id_col).alias("doc_a"),
@@ -1732,7 +1699,7 @@ def q450_minhash_tombstone_probe(spark: SparkSession,
     """The dedup-index removal plane (round 11 — the MinHash sibling of
     q448/q449): build the q376 signature index over the standing corpus
     (doc_id % 10 != 0), TOMBSTONE every corpus doc with ``doc_id % 9 ==
-    4`` via :func:`minhash_index_delete` (one O(|delete|) parquet
+    4`` via :func:`index_store.delete` (one O(|delete|) parquet
     partition, no index file moves), then probe the ingest delta
     (doc_id % 10 == 0) — pairs whose corpus member was deleted must
     vanish (the deleted doc can no longer suppress fresh ingests as
@@ -1744,8 +1711,9 @@ def q450_minhash_tombstone_probe(spark: SparkSession,
     d = scratch_dir("minhash_tomb_")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     build_minhash_index(corpus, d, num_buckets=8)
-    minhash_index_delete(
-        spark, d, corpus.filter(F.col("doc_id") % 9 == 4).select("doc_id"))
+    index_store.delete(
+        spark, d, corpus.filter(F.col("doc_id") % 9 == 4).select("doc_id"),
+        "doc_id")
     delta = docs.filter(F.col("doc_id") % 10 == 0)
     return incremental_near_dup(spark, d, delta, threshold=0.3)
 
@@ -1766,66 +1734,15 @@ def minhash_index_append(spark: SparkSession, index_dir: str,
     the write OVERWRITES that directory only — so a retried batch (at-least-
     once foreachBatch delivery) replaces its own rows instead of duplicating
     them. Callers must pass a stable id per logical batch (q379 uses the
-    streaming batch id)."""
-    _check_hash_fan(num_hashes, "num_hashes")
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    check_ingest_id(ingest_id)
-    num_buckets = _check_index_params(
-        spark, index_dir, num_hashes, bands, ngram, hash_fn)
-    if delta.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        delta = delta.repartition(spark.sparkContext.defaultParallelism)
-    sh = hashed_shingles(delta, id_col, ngram, hash_fn).localCheckpoint()
-    sh.write.mode("overwrite").parquet(
-        f"{index_dir}/shingles/ingest={ingest_id}")
-    br = _band_rows(sh, id_col, num_hashes, bands)
-    if num_buckets is None:  # pre-bucket index: keep its flat layout
-        br.write.mode("overwrite").parquet(
-            f"{index_dir}/bands/ingest={ingest_id}")
-    else:
-        # same directory scheme as the build so partition discovery sees
-        # one consistent depth and probes prune appended generations too
-        (br.withColumn("bkt", _band_bucket(num_buckets))
-         .repartition(num_buckets, F.col("bkt"))
-         .write.mode("overwrite").partitionBy("bkt")
-         .parquet(f"{index_dir}/bands/ingest={ingest_id}"))
-
-
-def _minhash_tombstones(spark: SparkSession, index_dir: str):
-    """The signature index's tombstoned document ids (one ``delete=<uuid>``
-    parquet partition per :func:`minhash_index_delete` call, canonical
-    column name ``id``), or None when nothing was deleted."""
-    from ..sources.readers import hadoop_fs
-
-    fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
-    if not fs.exists(tpath):
-        return None
-    return read_parquet(spark, f"{index_dir}/tombstones").select("id")
-
-
-def minhash_index_delete(spark: SparkSession, index_dir: str,
-                         ids: DataFrame, id_col: str = "doc_id") -> str:
-    """Tombstone-delete documents from a :func:`build_minhash_index`
-    layout — the removal plane the incremental dedup index was missing
-    (round-11 VERDICT item 1): a takedown must stop a deleted document's
-    shingles from suppressing future ingests as duplicates, without
-    rewriting the standing index synchronously.
-
-    Same O(|delete|) contract as ``ivf_delete``/``srp_delete``: the ids
-    land as one collision-free ``tombstones/delete=<uuid>`` parquet
-    partition (canonical column ``id``); no index file moves. Every
-    :func:`incremental_near_dup` probe anti-joins the set out of both its
-    band scan and its shingle verify scan, so probe results equal those
-    of an index built from the surviving corpus (signatures are a pure
-    function of the text, pinned by unit test). Re-ingesting a previously
-    deleted id requires a fresh build first (the no-resurrection rule
-    shared by all three index planes). Returns the partition name."""
-    import uuid
-
-    name = f"delete={uuid.uuid4().hex}"
-    (ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-     .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
-    return name
+    streaming batch id); an invalid id is refused before anything is
+    written (:func:`index_store.write_generation`)."""
+    num_buckets = _minhash_buckets(spark, index_dir, num_hashes, bands,
+                                   ngram, hash_fn)
+    sh = hashed_shingles(scan_parallel(delta), id_col, ngram,
+                         hash_fn).localCheckpoint()
+    index_store.write_generation(sh, index_dir, "shingles", ingest_id, None)
+    _write_bands(_band_rows(sh, id_col, num_hashes, bands), index_dir,
+                 ingest_id, num_buckets)
 
 
 # ---------------------------------------------------------------------------

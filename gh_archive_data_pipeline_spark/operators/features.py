@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from ..sources.readers import load_table
+from ..sources.readers import load_table, scan_parallel
 
 
 @register(
@@ -1287,16 +1287,9 @@ def q286_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, so the shuffle is 32 tiny partial rows per partition
     regardless of fact size. No driver collect; the replica residue (32
     means) broadcasts into the final CI aggregate."""
-    ev = (load_table(spark, sf_dir, "events")
-          .filter(F.col("event_type") == "purchase")
-          .select("event_id", "value"))
-    # Small-file parallelism: the local fixture reads as ONE split, which
-    # serializes all hashing on a single core. Repartition ONLY when the
-    # scan has fewer splits than cores — on a cluster reading TBs the scan
-    # already has thousands of splits and this never fires (an unconditional
-    # repartition would shuffle the entire filtered fact).
-    if ev.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        ev = ev.repartition(spark.sparkContext.defaultParallelism)
+    ev = scan_parallel(load_table(spark, sf_dir, "events")
+                       .filter(F.col("event_type") == "purchase")
+                       .select("event_id", "value"))
     hashes = F.array(*[
         F.md5(F.concat(F.lit(f"boot-{g}-"), F.col("event_id").cast("string")))
         for g in range(_Q286_REPLICAS // 4)])

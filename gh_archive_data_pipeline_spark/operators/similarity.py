@@ -14,16 +14,15 @@ BEFORE any arithmetic so Spark and the DuckDB oracle see identical inputs.
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.readers import (collect_parquet, fixture_memo, hadoop_fs,
-                               load_table, read_parquet, scratch_dir)
+from ..sources import index_store
+from ..sources.readers import (fixture_memo, hadoop_fs, load_table,
+                               read_parquet, scan_parallel, scratch_dir)
 from ..plans.registry import register
 
 
@@ -209,14 +208,8 @@ def srp_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     def hashed(df, out_id, out_vec):
         return _srp_hash(df, out_id, out_vec, planes_df)
 
-    cd = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
-    # Small-file parallelism gate (same rationale as q286's): the local
-    # fixture reads as one split, serializing the L·k·dim-flop/vector
-    # hashing on a single core; a cluster-scale scan already has many
-    # splits, so this branch never fires (and never shuffles) there.
-    if cd.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        cd = cd.repartition(spark.sparkContext.defaultParallelism)
+    cd = scan_parallel(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                     _as_double(F.col(vec_col)).alias("cv")))
     c = hashed(cd, "neighbor_id", "cv").select("neighbor_id", "t", "b")
     qh = hashed(queries.select(F.col(id_col).alias("query_id"),
                                _as_double(F.col(vec_col)).alias("qv")),
@@ -517,7 +510,9 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
     index IS the physical layout, so probing a cell is reading a directory.
 
     ``{index_dir}/corpus`` is written ``partitionBy("cell")`` (one shuffle on
-    cell, then directory-per-cell files) and ``{index_dir}/codebook`` holds
+    cell, then directory-per-cell files) as the ``ingest=base`` generation
+    of the shared index layout (sources/index_store.py; the build first
+    clears the index's own sub-trees), and ``{index_dir}/codebook`` holds
     the ``num_cells`` centroid vectors. ``ivf_search`` then prunes the scan
     to the probed cells — at 100 TB a search touches nprobe/num_cells of the
     corpus BYTES, not just rows, because pruning happens at file listing.
@@ -531,27 +526,16 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
     cb = np.array([r.v for r in seeds])                  # (C, dim) codebook
     cell_of = _unit_argmax_udf(cb)
     spark = corpus.sparkSession
+    index_store.begin_build(spark, index_dir, ("codebook", "corpus"), None)
     (spark.createDataFrame(
         [(i, list(map(float, v))) for i, v in enumerate(cb)],
         f"cell int, centroid array<double>")
      .coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebook"))
-    # Same generation layout as the MinHash index: every write (the build
-    # included) lands under its own ``ingest=<id>`` directory, so appends
-    # are per-ingest OVERWRITES (retry-idempotent) and ``cell`` stays a
-    # discovered partition column that ivf_search prunes on. Building over
-    # an existing index must clear the whole corpus/ tree first:
-    # mode("overwrite") below only replaces ingest=base, and stale prior
-    # ingest generations would otherwise survive into the new index (not
-    # transactional — Delta/Iceberg would make the swap atomic).
-    # Hadoop FS, not shutil: index_dir may be an hdfs://-s3a:// URI.
-    fs, corpus_path = hadoop_fs(spark, f"{index_dir}/corpus")
-    if fs.exists(corpus_path):
-        fs.delete(corpus_path, True)
-    (corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-     .withColumn("cell", cell_of(F.col("v")))
-     .repartition("cell")   # co-locate each cell's rows -> one file per cell
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{index_dir}/corpus/ingest=base"))
+    index_store.write_generation(
+        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        .withColumn("cell", cell_of(F.col("v")))
+        .repartition("cell"),   # co-locate each cell's rows -> one file each
+        index_dir, "corpus", None, "cell")
 
 
 def ivf_balance(spark: SparkSession, index_dir: str,
@@ -560,7 +544,8 @@ def ivf_balance(spark: SparkSession, index_dir: str,
     with an ``overfull`` flag (> ``overfull_factor`` × the uniform share)
     — the drift signal of the frozen-codebook append trade.
     Reads ONLY partition columns (cell, ingest): zero vector bytes, pure
-    metadata shape, safe to run on every ingest cycle at 100 TB."""
+    metadata shape, safe to run on every ingest cycle at 100 TB. Deleted
+    ids still count: they occupy cell files until the next build."""
     num_cells = read_parquet(spark, f"{index_dir}/codebook").count()
     cells = (read_parquet(spark, f"{index_dir}/corpus")
              .groupBy("cell")
@@ -576,42 +561,6 @@ def ivf_balance(spark: SparkSession, index_dir: str,
                     F.round(share, 6).alias("occupancy_ratio"),
                     (share > overfull_factor).alias("overfull"))
             .orderBy("cell"))
-
-
-def _ivf_tombstones(spark: SparkSession, index_dir: str):
-    """The index's tombstoned vector ids (one ``delete=<uuid>`` parquet
-    partition per :func:`ivf_delete` call), or None when nothing was
-    deleted."""
-    fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
-    if not fs.exists(tpath):
-        return None
-    return read_parquet(spark, f"{index_dir}/tombstones").select("vec_id")
-
-
-def ivf_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
-               id_col: str = "vec_id") -> str:
-    """Tombstone-delete vectors from a :func:`build_ivf_index` layout —
-    the index's removal plane (a training corpus must honor takedown/GDPR
-    erasure without rebuilding a 100 TB index synchronously).
-
-    O(|delete|): the ids land as one new ``tombstones/delete=<uuid>``
-    parquet partition; no index row moves. Every :func:`ivf_search`
-    anti-joins the tombstone set out of its pruned candidate scan.
-    :func:`ivf_balance` occupancy still counts tombstoned rows (they
-    still occupy cell files). Contract note: a tombstone suppresses the
-    ID entirely, so re-ingesting a previously deleted id requires a
-    fresh :func:`build_ivf_index` first (delete-then-append is not a
-    supported update path).
-
-    The partition name is a fresh uuid, NOT a dense counter: two
-    concurrent deletes that both computed the same ``delete=<n>`` would
-    overwrite each other with ``mode('overwrite')`` and silently lose one
-    caller's erasures. Nothing depends on dense numbering; readers
-    discover partitions by listing. Returns the partition name."""
-    name = f"delete={uuid.uuid4().hex}"
-    (ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-     .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
-    return name
 
 
 def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -642,16 +591,11 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
               .select("query_id", "qv", "cell"))
     # bounded driver state: <= num_cells ints, no matter how many queries
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
-    corpus = (read_parquet(spark, f"{index_dir}/corpus")
-              .filter(F.col("cell").isin(cells)))   # static partition prune
-    tomb = _ivf_tombstones(spark, index_dir)
-    if tomb is not None:
-        # ivf_delete's read path: tombstoned ids never reach scoring
-        # (broadcast anti-join; a backlog big enough to strain the
-        # broadcast calls for a fresh build over the survivors)
-        corpus = corpus.join(
-            F.broadcast(tomb.withColumnRenamed("vec_id", id_col)),
-            id_col, "left_anti")
+    # static partition prune; deleted ids never reach scoring
+    corpus = index_store.live(
+        spark, index_dir,
+        read_parquet(spark, f"{index_dir}/corpus")
+        .filter(F.col("cell").isin(cells)), id_col)
     scored = (corpus.join(F.broadcast(probes), "cell")
               .filter(F.col("query_id") != F.col(id_col))
               .select("query_id", F.col(id_col).alias("neighbor_id"),
@@ -742,7 +686,7 @@ def q358_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q448_ivf_tombstone_search(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """The ANN removal plane (round 10): build the q358 index, TOMBSTONE
-    every ``vec_id % 7 == 3`` via :func:`ivf_delete` (one O(|delete|)
+    every ``vec_id % 7 == 3`` via :func:`index_store.delete` (one O(|delete|)
     parquet append, no index row moves), and search — deleted vectors
     must never surface as neighbors, and the survivors' ranks re-pack.
     The oracle is q358's deterministic IVF replay with the deletion
@@ -755,9 +699,9 @@ def q448_ivf_tombstone_search(spark: SparkSession,
     emb = load_table(spark, sf_dir, "embeddings")
     d = scratch_dir("ivf_tomb_")
     build_ivf_index(emb, d, num_cells=16)
-    ivf_delete(spark, d,
-               emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
-               .select("vec_id"))
+    index_store.delete(spark, d,
+                       emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
+                       .select("vec_id"), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivf_search(spark, d, queries, k=5, nprobe=4)
 
@@ -774,20 +718,20 @@ def build_srp_index(corpus: DataFrame, index_dir: str,
     ``tb = t·2^planes + b`` (one combined column so pruning is a single
     IN-set). That is the standard multi-table LSH storage trade —
     ``num_tables``× the corpus bytes — bought back at search time: a query
-    batch reads ONLY its probed bucket directories. ``{index_dir}/params``
-    records the plane-generation parameters so search re-derives the same
-    seeded planes."""
+    batch reads ONLY its probed bucket directories. The build clears the
+    index's own sub-trees and writes ``{index_dir}/params``, the
+    plane-generation parameters, so search re-derives the same seeded
+    planes (shared index layout, sources/index_store.py; the buckets table
+    has no ingest generations)."""
     spark = corpus.sparkSession
-    (spark.createDataFrame(
-        [(planes_per_table, num_tables, dim, seed)],
-        "planes_per_table int, num_tables int, dim int, seed int")
-     .coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/params"))
+    index_store.begin_build(
+        spark, index_dir, ("buckets",),
+        dict(planes_per_table=planes_per_table, num_tables=num_tables,
+             dim=dim, seed=seed))
     planes_df = _srp_planes_df(spark, planes_per_table, num_tables, dim,
                                seed)
-    cd = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
-    if cd.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        cd = cd.repartition(spark.sparkContext.defaultParallelism)
+    cd = scan_parallel(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                     _as_double(F.col(vec_col)).alias("cv")))
     (_srp_hash(cd, "neighbor_id", "cv", planes_df)
      .withColumn("tb", F.col("t") * (1 << planes_per_table) + F.col("b"))
      .repartition("tb")     # co-locate each bucket's rows -> one file each
@@ -805,27 +749,22 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     verify + per-query top-k. Returns exactly what the non-materialized
     :func:`srp_bucket_topk` returns — the layout changes cost, not
     semantics (pinned by unit test)."""
-    p = collect_parquet(spark, f"{index_dir}/params")[0]
-    planes_df = _srp_planes_df(spark, p.planes_per_table, p.num_tables,
-                               p.dim, p.seed)
+    planes_per_table, num_tables, dim, seed = index_store.check_params(
+        spark, index_dir, "planes_per_table", "num_tables", "dim", "seed")
+    planes_df = _srp_planes_df(spark, planes_per_table, num_tables, dim,
+                               seed)
     probes = (_srp_hash(queries.select(F.col(id_col).alias("query_id"),
                                        _as_double(F.col(vec_col))
                                        .alias("qv")),
                         "query_id", "qv", planes_df)
-              .withColumn("tb", F.col("t") * (1 << p.planes_per_table)
+              .withColumn("tb", F.col("t") * (1 << planes_per_table)
                           + F.col("b")))
     keys = [r.tb for r in probes.select("tb").distinct().collect()]
-    bucket_rows = (read_parquet(spark, f"{index_dir}/buckets")
-                   .filter(F.col("tb").isin(keys)))  # static partition prune
-    tomb = _srp_tombstones(spark, index_dir)
-    if tomb is not None:
-        # srp_delete's read path (same contract as ivf_search): tombstoned
-        # ids never become candidates — broadcast anti-join on the pruned
-        # bucket scan; a backlog big enough to strain the broadcast calls
-        # for a fresh build over the survivors
-        bucket_rows = bucket_rows.join(
-            F.broadcast(tomb.withColumnRenamed("vec_id", "neighbor_id")),
-            "neighbor_id", "left_anti")
+    # static partition prune; deleted ids never become candidates
+    bucket_rows = index_store.live(
+        spark, index_dir,
+        read_parquet(spark, f"{index_dir}/buckets")
+        .filter(F.col("tb").isin(keys)), "neighbor_id")
     candidates = (bucket_rows
                   .join(F.broadcast(probes.select("query_id", "qv", "tb",
                                                   "t", "b")),
@@ -842,33 +781,6 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
             .filter(F.col("rank") <= k)
             .select("query_id", "neighbor_id",
                     F.round("sim", 6).alias("cosine_sim"), "rank"))
-
-
-def _srp_tombstones(spark: SparkSession, index_dir: str):
-    """The SRP index's tombstoned vector ids (one ``delete=<uuid>``
-    parquet partition per :func:`srp_delete` call), or None when nothing
-    was deleted."""
-    fs, tpath = hadoop_fs(spark, f"{index_dir}/tombstones")
-    if not fs.exists(tpath):
-        return None
-    return read_parquet(spark, f"{index_dir}/tombstones").select("vec_id")
-
-
-def srp_delete(spark: SparkSession, index_dir: str, ids: DataFrame,
-               id_col: str = "vec_id") -> str:
-    """Tombstone-delete vectors from a :func:`build_srp_index` layout —
-    the removal plane the SRP index was missing (round-11 VERDICT item 1:
-    a takedown/GDPR story that covers one index of three isn't a story).
-    Same O(|delete|) contract as :func:`ivf_delete`: the ids land as one
-    collision-free ``tombstones/delete=<uuid>`` parquet partition; no
-    bucket file moves; every :func:`srp_search` anti-joins the set out of
-    its pruned bucket scan. Re-ingesting a previously deleted id requires
-    a fresh build first (same no-resurrection rule as IVF). Returns the
-    partition name."""
-    name = f"delete={uuid.uuid4().hex}"
-    (ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-     .write.mode("overwrite").parquet(f"{index_dir}/tombstones/{name}"))
-    return name
 
 
 @fixture_memo("embeddings")
@@ -898,7 +810,7 @@ def q449_srp_tombstone_search(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """The SRP removal plane (round 11 — the LSH sibling of q448): build
     the q365 bucket-partitioned index, TOMBSTONE every ``vec_id % 7 == 3``
-    via :func:`srp_delete` (one O(|delete|) parquet partition, no bucket
+    via :func:`index_store.delete` (one O(|delete|) parquet partition, no bucket
     file moves), and search — deleted vectors must never surface as
     neighbors and survivor ranks re-pack. The oracle is q45's
     full-fidelity SRP replay with the deletion predicate applied on the
@@ -910,9 +822,9 @@ def q449_srp_tombstone_search(spark: SparkSession,
     emb = load_table(spark, sf_dir, "embeddings")
     d = scratch_dir("srp_tomb_")
     build_srp_index(emb, d)
-    srp_delete(spark, d,
-               emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
-               .select("vec_id"))
+    index_store.delete(spark, d,
+                       emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
+                       .select("vec_id"), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
     return srp_search(spark, d, queries, k=5)
 
@@ -1617,9 +1529,6 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
     staying frozen is the standard IVF ingest trade — cell balance drifts
     as the data distribution moves, and the remedy is an offline re-train
     + rebuild, not per-batch retraining."""
-    from .dedup import check_ingest_id
-
-    check_ingest_id(ingest_id)
     # Hadoop FS, not os.listdir: index_dir may be an hdfs://-s3a:// URI,
     # where os.path would silently skip this guard.
     fs, corpus_path = hadoop_fs(spark, f"{index_dir}/corpus")
@@ -1637,11 +1546,11 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
                .orderBy("cell").collect())
     cell_of = _unit_argmax_udf(
         np.array([list(map(float, r.centroid)) for r in cb_rows]))
-    (delta.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-     .withColumn("cell", cell_of(F.col("v")))
-     .repartition("cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{index_dir}/corpus/ingest={ingest_id}"))
+    index_store.write_generation(
+        delta.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        .withColumn("cell", cell_of(F.col("v")))
+        .repartition("cell"),
+        index_dir, "corpus", ingest_id, "cell")
 
 
 @fixture_memo("embeddings")

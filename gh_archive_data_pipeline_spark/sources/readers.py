@@ -13,7 +13,7 @@ Schema memo: a bare ``spark.read.parquet`` runs one Spark job per call to
 infer the schema from the files' footers (~65 ms of driver time per read on
 a small fixture, the largest per-call cost of a sub-second query).
 :func:`read_parquet` — behind :func:`load_table` and every engine-artifact
-read (index params, bands, shingles, codebooks, tombstones) — infers once
+read (index params, bands, shingles, codebooks, deletes) — infers once
 per ``(path, source_stamp(path), spark.sql.legacy.parquet.nanosAsLong)``
 and hands the schema back on later reads, the role a metastore plays for a
 query engine. A rewritten or appended path changes its stamp and infers
@@ -206,11 +206,12 @@ def plan_size_bytes(df: DataFrame) -> int:
 
 
 def scan_parallel(df: DataFrame) -> DataFrame:
-    """Small-file parallelism gate (round 11, generalizing the
-    minhash_near_dup gate): when the scan has fewer partitions than the
-    cluster has slots, round-robin repartition so downstream SCAN-SIDE
-    compute (shingling, md5 token vectors, feature extraction, HOF
-    vector math) uses every core instead of one.
+    """Small-file parallelism gate, the one copy every scan-side compute
+    site uses: when the scan has fewer partitions than the cluster has
+    slots, round-robin repartition so downstream SCAN-SIDE compute
+    (MinHash shingling and signatures, SRP hashing, md5 token vectors,
+    bootstrap hashing, feature extraction, HOF vector math) uses every
+    core instead of one.
 
     A single-row-group parquet file — the shape of every local fixture
     table — is unsplittable, so the scan and EVERYTHING until the first
@@ -218,9 +219,11 @@ def scan_parallel(df: DataFrame) -> DataFrame:
     chain single-threaded on local[32]). Cluster scans have many splits,
     so ``getNumPartitions() >= defaultParallelism`` holds and this
     shuffle never happens at scale — the gate is input-layout-adaptive,
-    not core-count-tuned. Use it ONLY where per-row compute dominates
-    the scan: for scans feeding a plain aggregation the extra exchange
-    of full-width rows costs more than the single-task partial agg.
+    not core-count-tuned, where an unconditional repartition would
+    shuffle the entire (filtered) input. Use it ONLY where per-row
+    compute dominates the scan: for scans feeding a plain aggregation
+    the extra exchange of full-width rows costs more than the
+    single-task partial agg.
 
     Round-robin placement (deterministic under Spark's
     sort-before-repartition) only moves rows between tasks; callers'

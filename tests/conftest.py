@@ -46,6 +46,9 @@ def sf_dir():
 SLOW_TESTS = frozenset([
     "test_classifier.py::test_probe_is_not_degenerate",
     "test_classifier.py::test_train_matches_numpy_gd",
+    "test_fixture_memo.py::test_rebuild_over_a_used_index_equals_a_fresh_build[ivf]",
+    "test_fixture_memo.py::test_rebuild_over_a_used_index_equals_a_fresh_build[minhash]",
+    "test_fixture_memo.py::test_rebuild_over_a_used_index_equals_a_fresh_build[srp]",
     "test_new_operators.py::test_bucket_pruned_probe_reads_less_and_matches_flat",
     "test_new_operators.py::test_connected_components_converges_on_long_chain",
     "test_new_operators.py::test_incremental_reconcile_equals_full_sweep_and_is_bounded",

@@ -1,7 +1,10 @@
 """fixture_memo / scratch_dir: build once per fixture state, rebuild when the
 table file changes, and leave no temp directory behind at exit.
 read_parquet / collect_parquet: infer a schema (or collect a params row)
-once per file state, and again when the file changes."""
+once per file state, and again when the file changes.
+index_store: the one index layout the MinHash, IVF and SRP planes share —
+params checks, tombstone deletes, and a rebuild over a used directory that
+gives the index a fresh build gives."""
 
 from __future__ import annotations
 
@@ -160,18 +163,131 @@ def test_memoized_index_read_keeps_partitions_and_sees_appends(
 def test_check_index_params_rereads_a_rebuilt_index(spark, sf_dir,
                                                     tmp_path):
     from gh_archive_data_pipeline_spark.operators.dedup import (
-        _check_index_params, build_minhash_index)
+        build_minhash_index)
+    from gh_archive_data_pipeline_spark.sources.index_store import (
+        check_params)
     from gh_archive_data_pipeline_spark.sources.readers import load_table
+
+    def check(bands):
+        return check_params(spark, idx, "num_buckets", num_hashes=64,
+                            bands=bands, ngram=3, hash_fn="md5_60")
 
     docs = load_table(spark, sf_dir, "documents").limit(20)
     idx = str(tmp_path / "mh_idx")
     build_minhash_index(docs, idx, bands=32, num_buckets=4)
-    assert _check_index_params(spark, idx, 64, 32, 3, "md5_60") == 4
-    nb, jobs = _jobs_started(
-        spark, lambda: _check_index_params(spark, idx, 64, 32, 3, "md5_60"))
-    assert (nb, jobs) == (4, 0)
+    assert check(32) == (4,)
+    nb, jobs = _jobs_started(spark, lambda: check(32))
+    assert (nb, jobs) == ((4,), 0)
 
     build_minhash_index(docs, idx, bands=16, num_buckets=2)   # rebuilt
     with pytest.raises(ValueError, match="built with"):
-        _check_index_params(spark, idx, 64, 32, 3, "md5_60")
-    assert _check_index_params(spark, idx, 64, 16, 3, "md5_60") == 2
+        check(32)
+    assert check(16) == (2,)
+
+
+# ---------------------------------------------------------------------------
+# index_store: the shared index layout
+# ---------------------------------------------------------------------------
+
+def test_live_without_tombstones_starts_no_job(spark, tmp_path):
+    from gh_archive_data_pipeline_spark.sources import index_store
+
+    df = spark.range(5)
+    out, jobs = _jobs_started(
+        spark, lambda: index_store.live(spark, str(tmp_path), df, "id"))
+    assert out is df and jobs == 0
+
+
+def test_deletes_accumulate(spark, tmp_path):
+    from gh_archive_data_pipeline_spark.sources import index_store
+    from gh_archive_data_pipeline_spark.sources.readers import read_parquet
+
+    idx = str(tmp_path)
+    d1 = index_store.delete(
+        spark, idx, spark.range(10).withColumnRenamed("id", "vec_id"),
+        "vec_id")
+    d2 = index_store.delete(
+        spark, idx, spark.range(5, 20).withColumnRenamed("id", "doc_id"),
+        "doc_id")
+    assert d1 != d2 and d1.startswith("delete=") and d2.startswith("delete=")
+    assert sorted(os.listdir(f"{idx}/tombstones")) == sorted([d1, d2])
+    assert dict(read_parquet(spark, f"{idx}/tombstones").dtypes)["id"] == \
+        "bigint"                                       # canonical column
+    rows = spark.range(30).withColumnRenamed("id", "neighbor_id")
+    kept = index_store.live(spark, idx, rows, "neighbor_id")
+    assert sorted(r.neighbor_id for r in kept.collect()) == list(range(20, 30))
+
+
+def test_minhash_params_without_num_buckets_raise(spark, tmp_path):
+    """An index whose params row has no ``num_buckets`` (the layout before
+    bucketed bands) is refused with a rebuild message, by the probe and by
+    the append alike."""
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        incremental_near_dup, minhash_index_append)
+    from gh_archive_data_pipeline_spark.sources import index_store
+
+    idx = str(tmp_path)
+    index_store.begin_build(spark, idx, (), dict(
+        num_hashes=64, bands=32, ngram=3, hash_fn="md5_60"))
+    delta = spark.createDataFrame([(1, "a b c d e")],
+                                  "doc_id long, text string")
+    with pytest.raises(ValueError, match="num_buckets.*rebuild the index"):
+        incremental_near_dup(spark, idx, delta)
+    with pytest.raises(ValueError, match="num_buckets.*rebuild the index"):
+        minhash_index_append(spark, idx, delta, "b1")
+
+
+@pytest.mark.parametrize("plane", ["minhash", "ivf", "srp"])
+def test_rebuild_over_a_used_index_equals_a_fresh_build(spark, sf_dir,
+                                                        tmp_path, plane):
+    """A build into a directory that already holds an index — after an
+    append and a delete (MinHash) or a delete (IVF, SRP) — answers exactly
+    as a build into an empty directory: no earlier generation or tombstone
+    survives it."""
+    from gh_archive_data_pipeline_spark.operators import similarity as sim
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        build_minhash_index, incremental_near_dup, minhash_index_append)
+    from gh_archive_data_pipeline_spark.sources import index_store
+    from gh_archive_data_pipeline_spark.sources.readers import load_table
+
+    if plane == "minhash":
+        src = load_table(spark, sf_dir, "documents")
+        corpus, delta = src.filter("doc_id % 10 != 0"), src.filter(
+            "doc_id % 10 = 0")
+
+        def build(idx):
+            build_minhash_index(corpus, idx, num_buckets=8)
+
+        def use(idx):
+            minhash_index_append(spark, idx, delta, "b0")
+            index_store.delete(spark, idx, corpus.filter("doc_id % 9 = 4"),
+                               "doc_id")
+
+        def answer(idx):
+            return incremental_near_dup(spark, idx, delta)
+    else:
+        src = load_table(spark, sf_dir, "embeddings")
+        if plane == "ivf":
+            def build(idx):
+                sim.build_ivf_index(src, idx, num_cells=16)
+            search = sim.ivf_search
+        else:
+            def build(idx):
+                sim.build_srp_index(src, idx)
+            search = sim.srp_search
+
+        def use(idx):
+            index_store.delete(spark, idx, src.filter("vec_id % 7 = 3"),
+                               "vec_id")
+
+        def answer(idx):
+            return search(spark, idx, src.filter("vec_id < 10"), k=5)
+
+    fresh, used = str(tmp_path / "fresh"), str(tmp_path / "used")
+    build(fresh)
+    build(used)
+    use(used)
+    build(used)
+    assert sorted(os.listdir(used)) == sorted(os.listdir(fresh))
+    want = sorted(map(tuple, answer(fresh).collect()))
+    assert want and sorted(map(tuple, answer(used).collect())) == want

@@ -2177,15 +2177,16 @@ def test_probe_then_append_emits_cross_batch_pairs(spark, tmp_path):
 
 
 def test_minhash_index_delete_hides_docs(spark, sf_dir, tmp_path):
-    """minhash_index_delete's contract: (a) pairs whose corpus member is
-    tombstoned vanish from the probe while surviving pairs are untouched —
-    probe results equal a probe against an index built WITHOUT the
-    deleted docs; (b) delete batches accumulate under collision-free uuid
-    partitions."""
+    """index_store.delete on a MinHash index: (a) pairs whose corpus
+    member is tombstoned vanish from the probe while surviving pairs are
+    untouched — probe results equal a probe against an index built WITHOUT
+    the deleted docs; (b) delete batches accumulate under collision-free
+    uuid partitions."""
     import os
 
     from gh_archive_data_pipeline_spark.operators.dedup import (
-        build_minhash_index, incremental_near_dup, minhash_index_delete)
+        build_minhash_index, incremental_near_dup)
+    from gh_archive_data_pipeline_spark.sources.index_store import delete
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2195,10 +2196,10 @@ def test_minhash_index_delete_hides_docs(spark, sf_dir, tmp_path):
     build_minhash_index(corpus, idx, num_buckets=8)
     full = {(r.doc_a, r.doc_b)
             for r in incremental_near_dup(spark, idx, probe).collect()}
-    d1 = minhash_index_delete(
-        spark, idx, corpus.filter("doc_id % 9 = 4").select("doc_id"))
-    d2 = minhash_index_delete(
-        spark, idx, corpus.filter("doc_id % 9 = 7").select("doc_id"))
+    d1 = delete(
+        spark, idx, corpus.filter("doc_id % 9 = 4").select("doc_id"), "doc_id")
+    d2 = delete(
+        spark, idx, corpus.filter("doc_id % 9 = 7").select("doc_id"), "doc_id")
     assert d1 != d2
     assert sorted(os.listdir(f"{idx}/tombstones")) == sorted([d1, d2])
 
@@ -2693,12 +2694,14 @@ def test_chunk_dispositions_below_trim_threshold_keeps_whole_doc(spark):
 
 
 def test_ivf_delete_hides_ids(spark, sf_dir, tmp_path):
-    """ivf_delete's contract: (a) tombstoned ids never surface as
-    neighbors and survivor ranks re-pack densely; (b) delete batches
-    accumulate (two calls -> two delete partitions, union applied)."""
+    """index_store.delete on an IVF index: (a) tombstoned ids never
+    surface as neighbors and survivor ranks re-pack densely; (b) delete
+    batches accumulate (two calls -> two delete partitions, union
+    applied)."""
     import os
 
     from gh_archive_data_pipeline_spark.operators import similarity as sim
+    from gh_archive_data_pipeline_spark.sources.index_store import delete
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2708,10 +2711,10 @@ def test_ivf_delete_hides_ids(spark, sf_dir, tmp_path):
 
     import pyspark.sql.functions as F  # noqa: N812
 
-    d1 = sim.ivf_delete(
-        spark, idx, emb.filter("vec_id % 7 = 3").select("vec_id"))
-    d2 = sim.ivf_delete(
-        spark, idx, emb.filter("vec_id % 11 = 5").select("vec_id"))
+    d1 = delete(
+        spark, idx, emb.filter("vec_id % 7 = 3").select("vec_id"), "vec_id")
+    d2 = delete(
+        spark, idx, emb.filter("vec_id % 11 = 5").select("vec_id"), "vec_id")
     # collision-free partition naming (round-11 ADVICE): two delete calls
     # can never overwrite each other's tombstones
     assert d1 != d2 and d1.startswith("delete=") and d2.startswith("delete=")

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gh_archive_data_pipeline_spark.operators import dedup, profiler, similarity
+from gh_archive_data_pipeline_spark.sources import index_store
 from gh_archive_data_pipeline_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -223,9 +224,9 @@ def test_srp_index_scan_is_partition_pruned(spark, tmp_path):
 
 
 def test_srp_delete_hides_ids(spark, tmp_path):
-    """srp_delete's contract: (a) tombstoned ids never surface as
-    neighbors and survivor ranks re-pack; (b) delete batches accumulate
-    under collision-free uuid partitions; (c) search over the tombstoned
+    """index_store.delete on an SRP index: (a) tombstoned ids never
+    surface as neighbors and survivor ranks re-pack; (b) delete batches
+    accumulate under collision-free uuid partitions; (c) search over the tombstoned
     index equals search over a fresh build of the surviving rows
     (bucketing is a pure function of the vector)."""
     import os
@@ -234,10 +235,10 @@ def test_srp_delete_hides_ids(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5)
     idx = str(tmp_path / "srp_idx")
     similarity.build_srp_index(emb, idx)
-    d1 = similarity.srp_delete(
-        spark, idx, emb.filter("vec_id % 7 = 3").select("vec_id"))
-    d2 = similarity.srp_delete(
-        spark, idx, emb.filter("vec_id % 11 = 5").select("vec_id"))
+    d1 = index_store.delete(
+        spark, idx, emb.filter("vec_id % 7 = 3").select("vec_id"), "vec_id")
+    d2 = index_store.delete(
+        spark, idx, emb.filter("vec_id % 11 = 5").select("vec_id"), "vec_id")
     assert d1 != d2
     assert sorted(os.listdir(f"{idx}/tombstones")) == sorted([d1, d2])
     before = sorted(map(tuple, similarity.srp_search(
