@@ -1734,8 +1734,9 @@ def minhash_index_append(spark: SparkSession, index_dir: str,
     the write OVERWRITES that directory only — so a retried batch (at-least-
     once foreachBatch delivery) replaces its own rows instead of duplicating
     them. Callers must pass a stable id per logical batch (q379 uses the
-    streaming batch id); an invalid id is refused before anything is
-    written (:func:`index_store.write_generation`)."""
+    streaming batch id); an invalid id is refused before the first job
+    (:func:`index_store.check_ingest_id`)."""
+    index_store.check_ingest_id(ingest_id)
     num_buckets = _minhash_buckets(spark, index_dir, num_hashes, bands,
                                    ngram, hash_fn)
     sh = hashed_shingles(scan_parallel(delta), id_col, ngram,

@@ -587,7 +587,8 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
     from pyspark.sql.types import StructType
 
     from ..streaming.stream_queries import ensure_runtime_confs
-    from ..streaming.pipeline import read_file_stream
+    from ..streaming.pipeline import (await_drain, read_file_stream,
+                                      stamp_arrival, start_foreach_batch)
     from .dedup import (
         _dispositions_from_matches,
         build_minhash_index,
@@ -611,16 +612,16 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
     ckpt = f"{state_dir}/ckpt"
     decon_dir = f"{state_dir}/decon"
 
-    # landing zone: candidates in n_batches doc_id-range files with
-    # increasing mtimes -> deterministic micro-batches (the q379
-    # convention); a restart reuses the existing zone untouched
+    # landing zone: candidates in n_batches doc_id-range files ->
+    # deterministic micro-batches (the q379 convention); a restart reuses
+    # the existing zone untouched
     corpus0 = (docs.filter(F.col("doc_id") >= EVAL_DOCS)
                .select("doc_id", "source", "text"))
     # _LAND_OK gates restart reuse (ADVICE r10): gating on isdir(land)
     # alone let a crash DURING the landing write (partial part-file set,
     # or complete files with unstamped mtimes) be silently reused by a
     # restart, dropping the unwritten tail from the drain. The marker is
-    # written only after the utime stamping completes; a restart that
+    # written only after the arrival stamping completes; a restart that
     # finds the zone unmarked rewrites it (mode overwrite, deterministic
     # content and stamping — convergent).
     land_ok = f"{state_dir}/_LAND_OK"
@@ -629,10 +630,7 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
          .sortWithinPartitions("doc_id")
          .write.mode("overwrite").parquet(land))
         files = sorted(glob.glob(f"{land}/part-*"))
-        if reverse_arrival:
-            files = list(reversed(files))
-        for i, f in enumerate(files):
-            os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+        stamp_arrival(files[::-1] if reverse_arrival else files)
         open(land_ok, "w").close()
 
     # standing state bootstrap (first run only): chunk MinHash index
@@ -719,12 +717,8 @@ def stream_corpus_build(spark: SparkSession, sf_dir: str,
 
     stream = read_file_stream(spark, land, corpus0.schema,
                               max_files_per_trigger=1)
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_corpus_build drain exceeded 300s")
+    await_drain(start_foreach_batch(stream, process, ckpt), 300,
+                "stream_corpus_build")
     return spark.read.parquet(out).drop("batch")
 
 

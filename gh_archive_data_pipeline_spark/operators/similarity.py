@@ -1523,12 +1523,15 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
     regardless of index size. The per-ingest OVERWRITE makes a retried
     batch (at-least-once delivery) replace its own rows instead of
     duplicating them — the same convention as ``minhash_index_append``;
-    callers pass a stable id per logical batch. This is the vector sibling
-    of the MinHash index's incremental probe (q376): the corpus is
-    quantized once, every later batch only pays for itself. The codebook
+    callers pass a stable id per logical batch, and an invalid id is
+    refused before the first job (:func:`index_store.check_ingest_id`).
+    This is the vector sibling of the MinHash index's incremental probe
+    (q376): the corpus is quantized once, every later batch only pays for
+    itself. The codebook
     staying frozen is the standard IVF ingest trade — cell balance drifts
     as the data distribution moves, and the remedy is an offline re-train
     + rebuild, not per-batch retraining."""
+    index_store.check_ingest_id(ingest_id)
     # Hadoop FS, not os.listdir: index_dir may be an hdfs://-s3a:// URI,
     # where os.path would silently skip this guard.
     fs, corpus_path = hadoop_fs(spark, f"{index_dir}/corpus")

@@ -346,8 +346,9 @@ def publish_unigram_artifact(spark: SparkSession, docs, store_dir: str,
                              rounds: int = EM_ROUNDS) -> int:
     """Train (or retrain) the unigram vocabulary and publish it as an
     immutable versioned table (sources/versioned.py: the write lands in
-    ``v=N`` and the manifest swap is the atomic publish — the same
-    contract the IVF rebuild uses). The artifact stores (piece, c): the
+    ``v=N`` and the manifest swap is the atomic publish, so a reader sees
+    the old version or the new one, never a partial write). The artifact
+    stores (piece, c): the
     integer counts ARE the model; log-probs are requantized at load so a
     loader can never desync from the stored state."""
     from ..sources.versioned import write_version

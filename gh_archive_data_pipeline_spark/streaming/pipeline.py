@@ -7,10 +7,23 @@ spark_structured_datastream.py:56-79) rebuilt with:
   testable with deterministic landing-zone files;
 - real watermarking (the reference disabled watermarks in its abandoned
   Flink path, flink_datastream.py:69);
-- `availableNow` trigger — bounded catch-up runs realizing the reference's
-  "periodic cluster instead of always-on" cost note (README.md:297);
 - a checkpointed, key-idempotent upsert sink (`start_upsert_sink`) and an
   in-memory drain (`run_to_memory`) for the registry's stream queries.
+
+The drain contract, stated once for every stream the package runs:
+- **availableNow**: a drain is a bounded catch-up run over what has landed,
+  then the query stops — the reference's "periodic cluster instead of
+  always-on" cost note (README.md:297);
+- **checkpoint**: a foreachBatch drain (`start_foreach_batch`) names its
+  checkpoint, so a restarted drain resumes after the last committed batch
+  and a re-delivered batch must be idempotent in the batch function;
+- **a loud timeout**: `await_drain` stops a drain that has not finished and
+  raises `TimeoutError` naming it — a silent partial drain would surface
+  downstream as a WRONG result;
+- **arrival order by mtime**: the file source orders micro-batches by file
+  modification time, so a landing zone is stamped by `stamp_arrival` in the
+  order its files must arrive, and read with ``maxFilesPerTrigger=1`` for
+  one file per micro-batch.
 
 Scale notes: stream state (windows, dedup sets) lives in the state store,
 keyed by group key — the watermark bounds its size; without a watermark,
@@ -18,6 +31,9 @@ state grows forever, which is why every stateful helper here requires one.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +54,13 @@ def read_file_stream(spark: SparkSession, path: str, schema: StructType,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
+
+
+def stamp_arrival(files: list[str]) -> None:
+    """Stamp landing ``files`` with increasing mtimes in the order given, so
+    the file source delivers them as micro-batches in that order."""
+    for i, f in enumerate(files):
+        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
 
 
 # ---------------------------------------------------------------------------
@@ -127,12 +150,7 @@ def run_to_memory(df: DataFrame, name: str, spark: SparkSession,
              .start())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    if not q.awaitTermination(timeout_sec):
-        # A silent partial drain would surface as a WRONG result downstream;
-        # a loud timeout is strictly better.
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain {name!r} did not finish in {timeout_sec}s")
+    await_drain(q, timeout_sec, name)
     return spark.table(name)
 
 
@@ -193,8 +211,25 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
         if not fs.rename(staged, table):
             raise OSError(f"could not rename {tmp} to {path}")
 
+    return start_foreach_batch(df, merge_batch, checkpoint)
+
+
+def start_foreach_batch(df: DataFrame,
+                        fn: Callable[[DataFrame, int], None],
+                        checkpoint: str) -> StreamingQuery:
+    """Start an availableNow drain of ``df`` that runs ``fn(batch,
+    batch_id)`` per micro-batch, checkpointed at ``checkpoint``."""
     return (df.writeStream
-            .foreachBatch(merge_batch)
+            .foreachBatch(fn)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
+
+
+def await_drain(q: StreamingQuery, timeout_s: int, name: str) -> None:
+    """Wait for the drain ``q``; on timeout stop it and raise
+    ``TimeoutError`` naming ``name``."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming drain {name!r} did not finish in {timeout_s}s")

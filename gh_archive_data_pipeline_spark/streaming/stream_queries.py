@@ -1,7 +1,13 @@
-"""Registry queries that execute REAL Structured Streaming (file source →
-availableNow → memory sink) and return the drained result as a batch
-DataFrame — so the driver's DuckDB oracle pins streaming semantics, not just
-the batch twins in batch_equivalents.
+"""Registry queries that execute REAL Structured Streaming and return the
+drained result as a batch DataFrame — so each query's DuckDB oracle pins
+streaming semantics, not just the batch twins in batch_equivalents.
+
+Every query lands, runs and times out through the helpers of
+``streaming/pipeline.py`` (whose docstring states the drain contract):
+landing zones are ordered by ``stamp_arrival`` and read by
+``read_file_stream``; aggregations drain through ``run_to_memory``, and
+per-batch side-effect loops through ``start_foreach_batch`` (or
+``start_upsert_sink``) then ``await_drain``.
 """
 
 from __future__ import annotations
@@ -15,7 +21,8 @@ from pyspark.sql import functions as F
 from ..plans.registry import register
 from ..session import ensure_runtime_confs
 from ..sources.readers import fixture_memo, scratch_dir
-from .pipeline import (read_file_stream, run_to_memory, sessionized,
+from .pipeline import (await_drain, read_file_stream, run_to_memory,
+                       sessionized, stamp_arrival, start_foreach_batch,
                        windowed_counts)
 
 _counter = itertools.count()
@@ -39,11 +46,8 @@ def _stream_source(spark: SparkSession, sf_dir: str,
         (raw0.repartitionByRange(n_files, "ts")
          .sortWithinPartitions("ts")
          .write.mode("overwrite").parquet(stream_dir))
-        # file source batches by modification time: stamp range files in
-        # name order (range partition k = k-th time slice) so replay
-        # order is event-time order
-        for i, f in enumerate(sorted(glob.glob(f"{stream_dir}/part-*"))):
-            os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+        # range partition k = k-th time slice: name order is event-time order
+        stamp_arrival(sorted(glob.glob(f"{stream_dir}/part-*")))
     return stream_dir, raw0.schema
 
 
@@ -54,14 +58,13 @@ def _events_stream(spark: SparkSession, sf_dir: str,
 
     ``n_files=1`` symlinks the single fixture file (zero-copy) → one
     micro-batch. ``n_files>1`` rewrites the fixture ONCE per (sf_dir, n)
-    into n time-RANGE-partitioned files with increasing mtimes and reads
-    with maxFilesPerTrigger=1, so an availableNow drain executes n real
-    micro-batches in event-time order — watermarks advance between batches
-    and state genuinely carries across them. Time-ordered splits are what
-    make this safe: a later batch never contains rows behind the watermark,
-    so nothing is dropped and results equal the single-batch run. Queries
-    whose OUTPUT contract is per-batch (q76's applyInPandasWithState
-    emissions) must keep n_files=1."""
+    into n time-RANGE-partitioned files landed in event-time order, so a
+    drain executes n real micro-batches in that order — watermarks advance
+    between batches and state genuinely carries across them. Time-ordered
+    splits are what make this safe: a later batch never contains rows
+    behind the watermark, so nothing is dropped and results equal the
+    single-batch run. Queries whose OUTPUT contract is per-batch (q76's
+    applyInPandasWithState emissions) must keep n_files=1."""
     ensure_runtime_confs(spark)
     stream_dir, schema = _stream_source(spark, sf_dir, n_files)
     raw = read_file_stream(
@@ -392,10 +395,9 @@ def q195_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = start_upsert_sink(stream, gold, os.path.join(work, "ck"),
                           keys=["user_id"], spark=spark,
                           order_by=["ts", "event_id"])
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("q195_stream_upsert drain exceeded 120s")
-    return (spark.read.parquet(gold)
+    await_drain(q, 120, "q195_stream_upsert")
+    # the sink writes frames of the stream's schema: read back with it
+    return (spark.read.schema(stream.schema).parquet(gold)
             .select("user_id",
                     F.col("event_id").alias("last_event_id"),
                     F.col("event_type").alias("last_event_type"),
@@ -511,7 +513,6 @@ def q379_stream_incremental_dedup(spark: SparkSession,
     pairs partition and its own ``ingest=<batch>`` index partition instead
     of duplicating rows)."""
     import glob
-    import os
     import shutil
 
     from ..operators.dedup import (_cached_minhash_index,
@@ -529,14 +530,13 @@ def q379_stream_incremental_dedup(spark: SparkSession,
 
     docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 10 == 0)
-    # landing zone: 4 doc_id-range files with increasing mtimes -> 4 real
-    # micro-batches in a deterministic order (order only affects WHICH batch
-    # emits a cross-batch pair, not the final set)
+    # landing zone: 4 doc_id-range files -> 4 real micro-batches in a
+    # deterministic order (order only affects WHICH batch emits a
+    # cross-batch pair, not the final set)
     land = scratch_dir("mh_stream_land_")
     (delta.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id")
      .write.mode("overwrite").parquet(land))
-    for i, f in enumerate(sorted(glob.glob(f"{land}/part-*"))):
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+    stamp_arrival(sorted(glob.glob(f"{land}/part-*")))
 
     out = scratch_dir("mh_stream_pairs_")
     ckpt = scratch_dir("mh_stream_ckpt_")
@@ -548,13 +548,8 @@ def q379_stream_incremental_dedup(spark: SparkSession,
         pairs.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
         minhash_index_append(spark, idx, batch, ingest_id=f"b{batch_id}")
 
-    q = (stream.writeStream.foreachBatch(probe_then_append)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("q379_stream_incremental_dedup drain exceeded "
-                           "180s")
+    await_drain(start_foreach_batch(stream, probe_then_append, ckpt), 180,
+                "q379_stream_incremental_dedup")
     return spark.read.parquet(out).select("doc_a", "doc_b", "jaccard")
 
 
@@ -575,7 +570,6 @@ def _avro_events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     4 time-ordered parquet files of a single ``value binary`` column: the
     landing zone a Kafka topic dump would be."""
     import glob
-    import os
 
     from pyspark.sql.types import BinaryType
 
@@ -597,8 +591,7 @@ def _avro_events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
      .select(frame("event_id", "user_id", "event_type",
                    "value", "props").alias("value"))
      .write.mode("overwrite").parquet(land))
-    for i, f in enumerate(sorted(glob.glob(f"{land}/part-*"))):
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+    stamp_arrival(sorted(glob.glob(f"{land}/part-*")))
     return land
 
 
@@ -690,10 +683,12 @@ def q396_stream_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q407 — train offline, score online: the quality probe over a real stream
 # ---------------------------------------------------------------------------
 
-# documents landing zone: 4 doc_id-bucket files with increasing mtimes ->
-# 4 real micro-batches; built once per fixture state
+# documents landing zone: 4 doc_id-bucket files -> 4 real micro-batches;
+# built once per fixture state
 @fixture_memo("documents")
-def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
+def _docs_stream_dir(spark: SparkSession,
+                     sf_dir: str) -> tuple[str, "object"]:
+    """(landing dir, schema) of the documents stream."""
     import glob
     import os
     import shutil
@@ -706,16 +701,16 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     # EXPLICIT batch key (doc_id % n), not repartitionByRange: the
     # oracle must know which rows share a micro-batch without depending
     # on data-valued range boundaries
-    for k in range(n_files):
+    files = [f"{land}/bucket{k}.parquet" for k in range(n_files)]
+    for k, dst in enumerate(files):
         tmp = f"{land}/_b{k}"
         (docs.filter(F.col("doc_id") % n_files == k).coalesce(1)
          .write.mode("overwrite").parquet(tmp))
         part = glob.glob(f"{tmp}/part-*")[0]
-        dst = f"{land}/bucket{k}.parquet"
         os.replace(part, dst)
         shutil.rmtree(tmp)
-        os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
-    return land
+    stamp_arrival(files)
+    return land, docs.schema
 
 
 def _q407_oracle() -> str:
@@ -758,8 +753,7 @@ def q407_stream_quality_scoring(spark: SparkSession,
 
     ensure_runtime_confs(spark)
     w, b = _cached_probe(spark, sf_dir)
-    land = _docs_stream_dir(spark, sf_dir)
-    schema = spark.read.parquet(f"{land}/bucket0.parquet").schema
+    land, schema = _docs_stream_dir(spark, sf_dir)
 
     out = scratch_dir("probe_stream_out_")
     ckpt = scratch_dir("probe_stream_ckpt_")
@@ -777,12 +771,8 @@ def q407_stream_quality_scoring(spark: SparkSession,
          .write.mode("overwrite").parquet(f"{out}/batch={batch_id}"))
 
     stream = read_file_stream(spark, land, schema, max_files_per_trigger=1)
-    q = (stream.writeStream.foreachBatch(score_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("q407_stream_quality_scoring drain exceeded 180s")
+    await_drain(start_foreach_batch(stream, score_batch, ckpt), 180,
+                "q407_stream_quality_scoring")
     res = spark.read.parquet(out)
     return (res.groupBy("label", "pred")
             .agg(F.sum("n").cast("bigint").alias("n"),
@@ -858,8 +848,7 @@ def q422_stream_bloom_decontamination(spark: SparkSession,
     # q415; the per-batch explode -> join -> per-shingle groupBy is gone)
     hit_sql = _bloom_hit_sql(bloom_bitmap(bits))
 
-    land = _docs_stream_dir(spark, sf_dir)
-    schema = spark.read.parquet(f"{land}/bucket0.parquet").schema
+    land, schema = _docs_stream_dir(spark, sf_dir)
     out = scratch_dir("bloom_stream_out_")
     ckpt = scratch_dir("bloom_stream_ckpt_")
 
@@ -882,12 +871,8 @@ def q422_stream_bloom_decontamination(spark: SparkSession,
          .write.mode("overwrite").parquet(f"{out}/batch={batch_id}"))
 
     stream = read_file_stream(spark, land, schema, max_files_per_trigger=1)
-    q = (stream.writeStream.foreachBatch(probe_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("q422 stream drain exceeded 180s")
+    await_drain(start_foreach_batch(stream, probe_batch, ckpt), 180,
+                "q422_stream_bloom_decontamination")
     res = spark.read.parquet(out)
     return (res.groupBy("bucket")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -2046,12 +2046,17 @@ def test_ivf_append_preserves_standing_files_and_serves_delta(spark, sf_dir,
 def test_ivf_append_guards(spark, sf_dir, tmp_path):
     """ivf_index_append's safety contract (same as minhash_index_append):
     ingest_id must not be 'base' (would overwrite the build's generation)
-    or contain path/partition metacharacters; appending into an index laid
+    or contain path/partition metacharacters, and both appends refuse such
+    an id before starting a Spark job; appending into an index laid
     out before the generation contract (corpus/cell=N directly) fails with
     a rebuild message instead of writing mixed-depth partitions; and a
     REBUILD into an existing index_dir clears stale prior generations."""
     import os
 
+    from test_fixture_memo import _jobs_started
+
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        _cached_minhash_index, minhash_index_append)
     from gh_archive_data_pipeline_spark.operators.similarity import (
         build_ivf_index, ivf_index_append)
     from gh_archive_data_pipeline_spark.sources.readers import load_table
@@ -2061,11 +2066,25 @@ def test_ivf_append_guards(spark, sf_dir, tmp_path):
     delta = emb.filter("vec_id % 10 = 0")
     idx = str(tmp_path / "ivf")
     build_ivf_index(corpus, idx, num_cells=16)
+    mh_idx = _cached_minhash_index(spark, sf_dir)
+    mh_delta = load_table(spark, sf_dir, "documents").filter("doc_id % 10 = 0")
+
+    def refusal(append, index_dir, rows, bad):
+        try:
+            append(spark, index_dir, rows, ingest_id=bad)
+        except ValueError as e:
+            return str(e)
+
     # empty/whitespace ids would write a bare 'ingest=' partition directory
     # (ambiguous value, corrupts q386-style generation splits) — rejected
     for bad in ("base", "a/b", "a=b", "", "  "):
-        with pytest.raises(ValueError, match="invalid ingest_id"):
-            ivf_index_append(spark, idx, delta, ingest_id=bad)
+        for append, index_dir, rows in (
+                (ivf_index_append, idx, delta),
+                (minhash_index_append, mh_idx, mh_delta)):
+            msg, jobs = _jobs_started(
+                spark, lambda: refusal(append, index_dir, rows, bad))
+            assert msg and "invalid ingest_id" in msg, (append, bad)
+            assert jobs == 0, (append, bad, jobs)
     # rebuild clears stale generations: append one, rebuild, gone
     ivf_index_append(spark, idx, delta, ingest_id="d1")
     assert os.path.isdir(f"{idx}/corpus/ingest=d1")

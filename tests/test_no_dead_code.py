@@ -8,6 +8,12 @@ attribute in code; a word in a docstring, string or comment does not
 count, so a docstring that cites a function keeps nothing alive. Code that
 only tests call either gets a real caller or goes.
 
+Every package module must be imported by one of those callers other than
+itself (``__init__.py`` and the ``python -m`` entry point ``__main__.py``
+aside). Names are counted package-wide, so a module whose top-level names
+all collide with names defined elsewhere (say, its own ``register``) would
+pass the name check while nothing outside the tests imports it.
+
 Every Sphinx ``:func:`` / ``:class:`` cross-reference in the package must
 name a function or class the package defines.
 """
@@ -88,6 +94,56 @@ def _unreferenced() -> dict[str, str]:
                     own[node.name] = (seen[0], seen[1] + names[node.name])
     return {name: where for name, (where, n) in own.items()
             if refs[name] == n}
+
+
+def _module(path: str) -> str:
+    """Dotted module name of ``path`` relative to the repo root."""
+    name = os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
+    return name.removesuffix(".__init__")
+
+
+def _imports(path: str, tree: ast.AST) -> set[str]:
+    """Every module an import statement in ``tree`` may load: the named
+    module, its parent packages, and ``from`` targets that are modules."""
+    here = _module(path)
+    if not path.endswith("__init__.py"):
+        here = here.rpartition(".")[0]
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            mods = [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom):
+            base = n.module or ""
+            if n.level:
+                pkg = here.rsplit(".", n.level - 1)[0] if n.level > 1 else here
+                base = f"{pkg}.{base}" if base else pkg
+            mods = [base] + [f"{base}.{a.name}" for a in n.names]
+        else:
+            continue
+        for m in mods:
+            parts = m.split(".")
+            out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return out
+
+
+def _unimported_modules() -> list[str]:
+    imported: dict[str, set[str]] = {}
+    for root in CALLERS:
+        for path in _py_files(root):
+            with open(path) as f:
+                imported[_module(path)] = _imports(path, ast.parse(f.read(), path))
+    return sorted(
+        os.path.relpath(path, ROOT) for path in _py_files(PACKAGE)
+        if os.path.basename(path) not in ("__init__.py", "__main__.py")
+        and not any(_module(path) in mods
+                    for who, mods in imported.items() if who != _module(path)))
+
+
+def test_every_package_module_has_a_non_test_importer():
+    dead = _unimported_modules()
+    assert not dead, (
+        "package modules no caller outside tests imports (give them a real "
+        f"caller or delete them): {dead}")
 
 
 def test_no_package_code_only_tests_reach():

@@ -245,43 +245,6 @@ def test_write_delta_raises_clear_error_without_jars(spark, tmp_path):
         write_delta(df, str(tmp_path / "d"))
 
 
-def test_gharchive_python_datasource(spark, tmp_path):
-    """Custom Python DataSource: one input partition per hour file, gzip and
-    plain files mixed, nested actor/repo/org flattened to analytic columns."""
-    import gzip
-    import json
-
-    from gh_archive_data_pipeline_spark.sources import gharchive_source
-
-    def ev(i, hour, login="alice"):
-        return {"id": str(i), "type": "PushEvent",
-                "actor": {"id": 10 + i, "login": login},
-                "repo": {"id": 100 + i, "name": f"r/{i}"},
-                "org": {"id": 900, "login": "org"} if i % 2 == 0 else None,
-                "created_at": f"2015-01-01T{hour:02d}:00:00Z"}
-
-    f1 = tmp_path / "2015-01-01-15.json.gz"
-    with gzip.open(f1, "wt") as fh:
-        fh.write("\n".join(json.dumps(ev(i, 15)) for i in range(3)))
-    f2 = tmp_path / "2015-01-01-16.json"
-    f2.write_text("\n".join(json.dumps(ev(i + 3, 16)) for i in range(2)))
-
-    gharchive_source.register(spark)
-    df = (spark.read.format("gharchive")
-          .option("path", str(tmp_path)).load())
-    assert df.rdd.getNumPartitions() == 2      # one per hour file
-    rows = {r.id: r for r in df.collect()}
-    assert len(rows) == 5
-    assert rows["0"].actor_login == "alice" and rows["0"].org_login == "org"
-    assert rows["1"].org_login is None         # null org flattens to NULL
-    assert rows["3"].repo_name == "r/3"
-    # source composes with the existing silver stage transformations
-    from pyspark.sql import functions as F
-    hours = (df.select(F.substring("created_at", 12, 2).alias("h"))
-             .groupBy("h").count().collect())
-    assert {r.h: r["count"] for r in hours} == {"15": 3, "16": 2}
-
-
 def test_versioned_lake_time_travel(spark, tmp_path):
     from gh_archive_data_pipeline_spark.sources import versioned as V
 

@@ -412,41 +412,6 @@ def test_upsert_sink_on_file_uri(spark, tmp_path):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
-def test_replay_streaming_source(spark, tmp_path):
-    """Custom Python streaming source: replays a parquet table through the
-    real offset lifecycle in rows_per_batch micro-batches; the drained
-    memory sink must hold exactly the source rows."""
-    import time
-
-    from gh_archive_data_pipeline_spark.streaming import replay_source
-
-    src = str(tmp_path / "ev.parquet")
-    spark.createDataFrame(
-        [(i, i % 3, "click" if i % 2 else "view", float(i)) for i in range(25)],
-        "event_id long, user_id long, event_type string, value double"
-    ).coalesce(1).write.parquet(src)
-    f = [str(p) for p in (tmp_path / "ev.parquet").glob("*.parquet")][0]
-
-    replay_source.register(spark)
-    stream = (spark.readStream.format("replay")
-              .option("path", f).option("rows_per_batch", "10").load())
-    q = (stream.writeStream.format("memory").queryName("t_replay")
-         .outputMode("append").start())
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table("t_replay").count() >= 25:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    got = {r.event_id: r for r in spark.table("t_replay").collect()}
-    assert len(got) == 25
-    assert got[7].event_type == "click" and got[7].value == 7.0
-    # 10-row batches: at least 3 micro-batches committed
-    assert q.lastProgress is None or q.lastProgress["batchId"] >= 2
-
-
 def test_rate_source_processing_time_lifecycle(spark):
     """T9 processingTime trigger + the rate source: start a continuous
     micro-batch query, wait for at least one non-empty batch, stop it
