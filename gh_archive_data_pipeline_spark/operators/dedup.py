@@ -362,17 +362,25 @@ def _minhash_pairs_ctes(threshold: float = 0.3, num_hashes: int = 64,
     same md5-60-bit shingle hashes, same (a·h+b) mod p lanes, same band
     slices, same exact verify. Ends with ``verified`` (doc_a, doc_b,
     jaccard >= threshold). ``source`` is the relation (table or earlier
-    CTE) providing (doc_id, text). Shared by the q42/q168/q374 oracles."""
+    CTE) providing (doc_id, text). Shared by the 14 MinHash oracles
+    (q42, q168, q374 and the funnels built on them).
+
+    ``sigs`` is relational: each shingle hash meets the ``mh_lanes``
+    (i, a, b) rows, and lane i is the ``min`` aggregate per (doc_id, i),
+    gathered in lane order. Every (a·(h mod p) + b) stays below 2^62, so
+    BIGINT holds it exactly. A doc whose ``hs`` is empty has no lanes and
+    drops out of ``sigs``; it can never be a candidate, as with all-NULL
+    lanes, which never join."""
     rows = num_hashes // bands
     a, b = minhash_coeffs(num_hashes)
     p = MINHASH_P
-    a_lit = ",".join(map(str, a))
-    b_lit = ",".join(map(str, b))
+    lanes = ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
     # shingle concat generated FROM ngram so an oracle built with ngram != 3
     # matches the Spark side instead of silently diverging (w[i] .. w[i+n-1])
     concat = " || ' ' || ".join(
         f"w[i+{k}]" if k else "w[i]" for k in range(ngram))
     return f"""
+    mh_lanes(i, a, b) AS (VALUES {lanes}),
     toks AS (
         SELECT doc_id, string_split(text, ' ') AS w FROM {source}
     ),
@@ -385,21 +393,20 @@ def _minhash_pairs_ctes(threshold: float = 0.3, num_hashes: int = 64,
                     ELSE [array_to_string(w, ' ')] END AS s
         FROM toks
     ),
-    hs AS (
+    hs AS MATERIALIZED (
         SELECT doc_id,
                list_distinct(list_transform(s,
                    x -> CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT))) AS hs
         FROM sh
     ),
     sigs AS (
-        SELECT doc_id,
-               list_transform(range(0, {num_hashes}),
-                   i -> list_min(list_transform(hs,
-                        h -> ([{a_lit}][i + 1]::BIGINT * (h % {p})
-                              + [{b_lit}][i + 1]::BIGINT) % {p}))) AS mh
-        FROM hs
+        SELECT doc_id, list(m ORDER BY i) AS mh
+        FROM (SELECT d.doc_id, l.i, min((l.a * (d.h % {p}) + l.b) % {p}) AS m
+              FROM (SELECT doc_id, unnest(hs) AS h FROM hs) d, mh_lanes l
+              GROUP BY d.doc_id, l.i)
+        GROUP BY doc_id
     ),
-    stacked AS (
+    stacked AS MATERIALIZED (
         SELECT doc_id, unnest(range(0, {bands})) AS band,
                unnest(list_transform(range(0, {bands}),
                    b -> mh[b * {rows} + 1 : (b + 1) * {rows}])) AS sig

@@ -13,8 +13,9 @@ Conventions that keep the driver's order-insensitive value-hash compare green
 - for SUMS of monetary-style doubles (and anything near-cancelling or
   large-magnitude), aggregate exact integer cents instead: per-row
   ``floor(x*100 + 0.5)`` cast to bigint, summed, divided back. Two
-  reasons, both measured (round 4, SPARK_REHEARSAL_EXACT=1): double
-  summation order differs between engines (417657971.58 vs .60 at 4.2e8),
+  reasons, both measured (round 4, under the bit-exact compare that is
+  now ``perfbench.oracle.mismatch``): double summation order differs
+  between engines (417657971.58 vs .60 at 4.2e8),
   and round() itself disagrees within an ULP of a tie (Spark BigDecimal
   half-up vs DuckDB float math) while floor/*/+ are pure IEEE ops with
   bit-identical results on identical inputs;

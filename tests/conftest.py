@@ -42,7 +42,10 @@ def sf_dir():
 # pytest.ini's `addopts = -m "not slow"`. Run the FULL suite with
 #     python -m pytest tests/ -q -m "slow or not slow"
 # The list is explicit (not duration-sniffed at runtime) so the tier
-# content is auditable and stable across hosts.
+# content is auditable and stable across hosts. When a test drops under
+# 10 s it moves back to the fast tier: the q42, q429, q441 and q450
+# parity cases did once their shared MinHash oracle CTE computed each
+# lane's minimum as an aggregate (2.7-6.4 s each at sf0.001).
 SLOW_TESTS = frozenset([
     "test_classifier.py::test_probe_is_not_degenerate",
     "test_classifier.py::test_train_matches_numpy_gd",
@@ -70,12 +73,9 @@ SLOW_TESTS = frozenset([
     "test_oracle_parity.py::test_query_matches_oracle[q376_incremental_near_dup]",
     "test_oracle_parity.py::test_query_matches_oracle[q379_stream_incremental_dedup]",
     "test_oracle_parity.py::test_query_matches_oracle[q416_mmr_diversify]",
-    "test_oracle_parity.py::test_query_matches_oracle[q429_chunk_near_dup]",
-    "test_oracle_parity.py::test_query_matches_oracle[q42_minhash_near_dup]",
     "test_oracle_parity.py::test_query_matches_oracle[q432_matryoshka_recall]",
     "test_oracle_parity.py::test_query_matches_oracle[q434_curated_corpus_export]",
     "test_oracle_parity.py::test_query_matches_oracle[q440_corpus_build_pipeline]",
-    "test_oracle_parity.py::test_query_matches_oracle[q441_chunk_disposition_reconcile]",
     "test_oracle_parity.py::test_query_matches_oracle[q443_pipeline_epoch_plan]",
     "test_oracle_parity.py::test_query_matches_oracle[q444_stream_corpus_build]",
     "test_oracle_parity.py::test_query_matches_oracle[q445_epoch_plan_export]",
@@ -83,7 +83,6 @@ SLOW_TESTS = frozenset([
     "test_oracle_parity.py::test_query_matches_oracle[q447_incremental_reconcile]",
     "test_oracle_parity.py::test_query_matches_oracle[q448_ivf_tombstone_search]",
     "test_oracle_parity.py::test_query_matches_oracle[q449_srp_tombstone_search]",
-    "test_oracle_parity.py::test_query_matches_oracle[q450_minhash_tombstone_probe]",
     "test_oracle_parity.py::test_query_matches_oracle[q60_stream_dedup]",
     "test_plan_quality.py::test_q440_composition_adds_no_shuffle_seams",
     "test_properties.py::test_bpe_train_matches_reference_and_is_prefix_stable",

@@ -97,6 +97,23 @@ def test_load_table_infers_once_per_file_state(spark, sf_dir, tmp_path):
     assert jobs >= 1
 
 
+def test_q422_bloom_filter_built_once_per_fixture(spark, sf_dir):
+    """A warm q422 call reuses its Bloom filter: the set-bit table a
+    rebuild collects (the jobs every warm call used to start) is not
+    collected again."""
+    from gh_archive_data_pipeline_spark.streaming.stream_queries import (
+        _eval_bloom_hit_sql)
+
+    _eval_bloom_hit_sql(spark, sf_dir)
+    built, jobs = _jobs_started(
+        spark, lambda: _eval_bloom_hit_sql.__wrapped__(spark, sf_dir))
+    assert jobs >= 1
+    again, jobs = _jobs_started(
+        spark, lambda: _eval_bloom_hit_sql(spark, sf_dir))
+    assert jobs == 0
+    assert again == built
+
+
 def test_memo_key_carries_nanos_as_long(spark, tmp_path, monkeypatch):
     """Toggling nanosAsLong re-infers: a TIMESTAMP(NANOS) column reads as
     whatever a bare spark.read.parquet gives under each setting, never as

@@ -1,82 +1,62 @@
 """Local replica of the driver's correctness gate: every registry query with
 an oracle must match DuckDB on row count, column names, and values
 (order-insensitive, exact after the query's own rounding).
+
+The compare is ``perfbench.oracle.mismatch``, the one comparator the
+benchmark and ``tools/driver_rehearsal.py`` also use. Floats compare
+BIT-EXACT: the driver hashes exact values, and a relative tolerance hides
+large-magnitude rounding-edge flips (round 4: 2 cents at 4.2e8 = 5e-11
+relative). The whole registry is exact under the floor-cents convention
+(plans/registry.py module docstring). ``test_mismatch_rules`` pins those
+rules, so a looser comparator cannot slip in unnoticed.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pandas as pd
 import pytest
 
 from gh_archive_data_pipeline_spark.plans.registry import all_queries
-from gh_archive_data_pipeline_spark.sources.readers import ALL_TABLES
+from perfbench.oracle import duckdb_lake, mismatch
 
 # Default sf0.001 for fast CI; override to sf0.01 to mimic the driver's gate.
 SF = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
 
-
-def _duck(sql: str) -> pd.DataFrame:
-    con = duckdb.connect()
-    for t in ALL_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con.execute(sql).fetchdf()
+_SPECS = all_queries()
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            continue
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
-
-
-def _compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str) -> None:
-    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
-        f"{name}: column mismatch {sorted(spark_pdf.columns)} vs {sorted(duck_pdf.columns)}"
-    )
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"{name}: row count {len(spark_pdf)} vs {len(duck_pdf)}"
-    )
-    a, b = _normalize(spark_pdf), _normalize(duck_pdf)
-    for col in a.columns:
-        av, bv = a[col].tolist(), b[col].tolist()
-        for i, (x, y) in enumerate(zip(av, bv)):
-            if isinstance(x, float) and isinstance(y, float):
-                if math.isnan(x) and math.isnan(y):
-                    continue
-                # BIT-EXACT: the driver hashes exact values, and a relative
-                # tolerance hides large-magnitude rounding-edge flips
-                # (round 4: 2 cents at 4.2e8 = 5e-11 relative). The whole
-                # registry is exact under the floor-cents convention
-                # (plans/registry.py module docstring).
-                assert x == y, f"{name}.{col}[{i}]: {x!r} != {y!r} (exact)"
-            else:
-                xn = x is None or (isinstance(x, float) and math.isnan(x)) or x is pd.NaT
-                yn = y is None or (isinstance(y, float) and math.isnan(y)) or y is pd.NaT
-                if xn and yn:
-                    continue
-                assert x == y, f"{name}.{col}[{i}]: {x!r} != {y!r}"
-
-
-_SPECS = [(n, s) for n, s in all_queries().items()]
-
-
-@pytest.mark.parametrize("name", [n for n, _ in _SPECS])
+@pytest.mark.parametrize("name", list(_SPECS))
 def test_query_matches_oracle(spark, name):
-    spec = dict(_SPECS)[name]
-    result = spec.fn(spark, SF)
-    spark_pdf = result.toPandas()
+    spec = _SPECS[name]
+    spark_pdf = spec.fn(spark, SF).toPandas()
     if spec.sql is None:
-        assert len(spark_pdf) >= 0  # rows-only contract: runs, stable schema
-        return
-    duck_pdf = _duck(spec.sql)
-    _compare(spark_pdf, duck_pdf, name)
+        return  # rows-only contract: runs, stable schema
+    problem = mismatch(spark_pdf, duckdb_lake(SF).execute(spec.sql).fetchdf())
+    assert problem is None, f"{name}: {problem}"
+
+
+def test_mismatch_rules():
+    nan = float("nan")
+    # floats are bit-exact: a one-ULP sum-order flip is a difference
+    assert mismatch(pd.DataFrame({"x": [0.1 + 0.2]}),
+                    pd.DataFrame({"x": [0.3]})) is not None
+    # NaN equals NaN, and None / NaT / NaN are all one NULL
+    assert mismatch(pd.DataFrame({"x": [nan, 1.0]}),
+                    pd.DataFrame({"x": [nan, 1.0]})) is None
+    assert mismatch(pd.DataFrame({"x": [None, pd.NaT, nan]}, dtype=object),
+                    pd.DataFrame({"x": [nan, None, pd.NaT]}, dtype=object)) is None
+    # row order and column order do not matter
+    assert mismatch(pd.DataFrame({"a": [1, 2], "b": ["x", "y"]}),
+                    pd.DataFrame({"b": ["y", "x"], "a": [2, 1]})) is None
+    # a timestamp column read at ns (Spark) equals the same at us (DuckDB)
+    ts = ["2024-01-01 10:00:00", "2024-01-02 11:30:00.000001"]
+    assert mismatch(
+        pd.DataFrame({"t": pd.Series(ts, dtype="datetime64[ns]")}),
+        pd.DataFrame({"t": pd.Series(ts, dtype="datetime64[us]")})) is None
+    # a row-count and a column-name difference are each named
+    assert "rows 2 != 1" in mismatch(pd.DataFrame({"a": [1, 2]}),
+                                     pd.DataFrame({"a": [1]}))
+    assert "['b']" in mismatch(pd.DataFrame({"a": [1]}),
+                               pd.DataFrame({"b": [1]}))

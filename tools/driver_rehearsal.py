@@ -1,61 +1,42 @@
 """Full driver rehearsal: run EVERY registry query and its DuckDB oracle
 side-by-side from a plain SparkSession (no engine confs — exactly how the
-driver's harness does it), compare rows/columns/values, and report per-query
-wall time. This is the end-to-end dress rehearsal for CORRECTNESS_r{N}.
+driver's harness does it) and print one line per query as it finishes:
+
+    name  verdict  spark_s  oracle_s  [first difference or error]
+
+The verdict is ``pass`` (oracle-equal), ``fail`` (differs from the oracle),
+``rows-only`` (no oracle; the query ran to completion), ``spark-error`` or
+``oracle-error``; a side that did not finish prints ``-``. This is the
+end-to-end dress rehearsal for CORRECTNESS_r{N}, and at sf0.1 its output
+is the per-query record.
 
 Usage: python tools/driver_rehearsal.py [sf_dir] [name_filter]
 (sf_dir default /root/testdata/sf0.01; name_filter = comma-separated
-substrings — run only queries whose name contains one, e.g. "q386,q388")
+substrings — run only queries whose name contains one, e.g. "q386,q388").
+Run it from the repository root: Spark's Python workers import the
+package from the working directory.
 
-Floats compare BIT-EXACT by default — the driver hashes exact values, so
-a relative tolerance is a blind spot for large-magnitude floats whose
-rounding-edge flips are relatively tiny (round 4 found 417657971.58 vs
-.60: 2 cents at 4.2e8 = 5e-11 relative, invisible at 1e-9 — fatal to the
-hash). The whole registry is bit-exact at sf0.001 and sf0.01 since round
-4 (floor-cents convention); SPARK_REHEARSAL_TOLERANT=1 restores the old
-1e-9 compare for debugging a new query's drift.
+Results compare with ``perfbench.oracle.mismatch``, the one comparator the
+parity test and the benchmark use: same column names and row count, rows
+in any order, floats BIT-EXACT (the driver hashes exact values), NULL
+equal to NULL and NaN equal to NaN.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
+from collections import Counter
 
-import duckdb
-import pandas as pd
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-EXACT = os.environ.get("SPARK_REHEARSAL_TOLERANT") != "1"
+from perfbench.oracle import duckdb_lake, mismatch  # noqa: E402
 
 
-def compare(spdf: pd.DataFrame, ddf: pd.DataFrame) -> str | None:
-    if sorted(spdf.columns) != sorted(ddf.columns):
-        return f"columns {sorted(spdf.columns)} vs {sorted(ddf.columns)}"
-    if len(spdf) != len(ddf):
-        return f"rows {len(spdf)} vs {len(ddf)}"
-    cols = sorted(spdf.columns)
-    a = spdf.reindex(cols, axis=1).sort_values(by=cols, ignore_index=True)
-    b = ddf.reindex(cols, axis=1).sort_values(by=cols, ignore_index=True)
-    for c in cols:
-        av, bv = a[c].tolist(), b[c].tolist()
-        for i, (x, y) in enumerate(zip(av, bv)):
-            if isinstance(x, float) and isinstance(y, float):
-                if math.isnan(x) and math.isnan(y):
-                    continue
-                if EXACT:
-                    if x != y:
-                        return f"{c}[{i}]: {x!r} != {y!r} (exact)"
-                elif abs(x - y) > 1e-9 * max(1.0, abs(y)):
-                    return f"{c}[{i}]: {x!r} != {y!r}"
-            else:
-                xn = x is None or x is pd.NaT or (isinstance(x, float) and math.isnan(x))
-                yn = y is None or y is pd.NaT or (isinstance(y, float) and math.isnan(y))
-                if xn and yn:
-                    continue
-                if x != y:
-                    return f"{c}[{i}]: {x!r} != {y!r}"
-    return None
+def _s(t: float | None) -> str:
+    return "-" if t is None else f"{t:.1f}"
 
 
 def main() -> None:
@@ -65,49 +46,40 @@ def main() -> None:
              .config("spark.ui.enabled", "false")
              .config("spark.sql.shuffle.partitions", "8").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, ".")
     import __spark_entry__ as mod
     qs, oracles = mod.queries(), mod.oracle_sql()
     if len(sys.argv) > 2:
         subs = sys.argv[2].split(",")
         qs = {n: f for n, f in qs.items() if any(s in n for s in subs)}
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-    n_ok = n_rows_only = 0
-    failures: list[tuple[str, str]] = []
-    slow: list[tuple[str, float]] = []
+    con = duckdb_lake(sf)
+    verdicts: Counter = Counter()
     for name in sorted(qs):
+        spark_s = oracle_s = detail = None
         t0 = time.monotonic()
         try:
             spdf = qs[name](spark, sf).toPandas()
+            spark_s = time.monotonic() - t0
         except Exception as e:  # noqa: BLE001
-            failures.append((name, f"SPARK ERROR: {str(e)[:160]}"))
-            continue
-        dt = time.monotonic() - t0
-        if dt > 8:
-            slow.append((name, round(dt, 1)))
-        if name not in oracles:
-            n_rows_only += 1
-            continue
-        try:
-            ddf = con.execute(oracles[name]).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"ORACLE ERROR: {str(e)[:160]}"))
-            continue
-        err = compare(spdf, ddf)
-        if err:
-            failures.append((name, err))
+            verdict, detail = "spark-error", str(e)[:160]
         else:
-            n_ok += 1
-    print(f"\n=== rehearsal @ {sf}: {n_ok} oracle-matched, "
-          f"{n_rows_only} rows-only, {len(failures)} failures ===")
-    for name, err in failures:
-        print("FAIL", name, "--", err)
-    if slow:
-        print("slow (>8s):", slow)
+            if name not in oracles:
+                verdict = "rows-only"
+            else:
+                t0 = time.monotonic()
+                try:
+                    ddf = con.execute(oracles[name]).fetchdf()
+                    oracle_s = time.monotonic() - t0
+                except Exception as e:  # noqa: BLE001
+                    verdict, detail = "oracle-error", str(e)[:160]
+                else:
+                    detail = mismatch(spdf, ddf)
+                    verdict = "fail" if detail else "pass"
+        verdicts[verdict] += 1
+        print(f"{name}\t{verdict}\t{_s(spark_s)}\t{_s(oracle_s)}"
+              + (f"\t{detail}" if detail else ""), flush=True)
+    print(f"\n=== rehearsal @ {sf}: "
+          + ", ".join(f"{n} {v}" for v, n in sorted(verdicts.items()))
+          + " ===")
     spark.stop()
 
 
