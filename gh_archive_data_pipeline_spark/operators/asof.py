@@ -22,13 +22,12 @@ from ..plans.registry import register
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str | list[str],
-              left_ts: str, right_ts: str,
-              value_cols: list[str], suffix: str = "_asof") -> DataFrame:
+              left_ts: str, right_ts: str, value_cols: list[str]) -> DataFrame:
     """Left as-of join: for each left row, the most recent right row with
     ``right_ts <= left_ts`` on the same key(s).
 
     ``value_cols`` are the right-side columns to carry; they appear in the
-    output as ``<col><suffix>`` (plus ``<right_ts><suffix>``).
+    output as ``<col>_p`` (plus ``<right_ts>_p``).
     """
     keys = [on] if isinstance(on, str) else list(on)
     carried = [right_ts, *value_cols]
@@ -36,13 +35,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: str | list[str],
         *keys,
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__side"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in carried],
+        *[F.col(c).alias(f"{c}_p") for c in carried],
     )
     l = left.select(
         "*",
         F.col(left_ts).alias("__ts"),
         F.lit(1).alias("__side"),
-        *[F.lit(None).cast(dict(r.dtypes)[f"{c}{suffix}"]).alias(f"{c}{suffix}")
+        *[F.lit(None).cast(dict(r.dtypes)[f"{c}_p"]).alias(f"{c}_p")
           for c in carried],
     )
     unioned = l.unionByName(r, allowMissingColumns=True)
@@ -50,13 +49,12 @@ def asof_join(left: DataFrame, right: DataFrame, on: str | list[str],
          .rowsBetween(Window.unboundedPreceding, 0))
     filled = unioned.select(
         "*",
-        *[F.last(f"{c}{suffix}", ignorenulls=True).over(w)
+        *[F.last(f"{c}_p", ignorenulls=True).over(w)
           .alias(f"__filled_{c}") for c in carried],
     )
     out = filled.filter(F.col("__side") == 1)
     for c in carried:
-        out = out.drop(f"{c}{suffix}").withColumnRenamed(f"__filled_{c}",
-                                                         f"{c}{suffix}")
+        out = out.drop(f"{c}_p").withColumnRenamed(f"__filled_{c}", f"{c}_p")
     return out.drop("__ts", "__side")
 
 
@@ -82,7 +80,7 @@ def q53_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = asof_join(
         ev.select("event_id", "user_id", "event_type", "ts"),
         purchases, on="user_id", left_ts="ts", right_ts="ts",
-        value_cols=["value"], suffix="_p",
+        value_cols=["value"],
     )
     return joined.select(
         "event_id", "user_id", "event_type",

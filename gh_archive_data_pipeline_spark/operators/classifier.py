@@ -102,11 +102,10 @@ _GD_INTERP_MAX_BYTES = int(os.environ.get(
     "SPARK_GRAFT_GD_INTERP_MAX_BYTES", str(256 * 1024 * 1024)))
 
 
-def train_quality_probe(docs: DataFrame, rounds: int = ROUNDS,
-                        lr: float = LR) -> tuple[list[float], float]:
+def train_quality_probe(docs: DataFrame) -> tuple[list[float], float]:
     """Batch-GD logistic regression on :func:`quality_features`. Returns
-    (weights, bias). Zero init, fixed ``rounds``, full-batch gradient —
-    deterministic and exactly replayable.
+    (weights, bias). Zero init, ROUNDS rounds at rate LR, full-batch
+    gradient — deterministic and exactly replayable.
 
     The round's weights enter as plan LITERALS (round-11 optimization):
     the earlier broadcast-one-row-frame form paid a BroadcastExchange +
@@ -116,13 +115,12 @@ def train_quality_probe(docs: DataFrame, rounds: int = ROUNDS,
     literal multiplication is the same IEEE op, row order unchanged).
     Compile count is 16 per TRAINING RUN regardless of corpus size, so
     the trade only improves at scale."""
-    w, b, _ = train_quality_probe_with_feats(docs, rounds, lr)
+    w, b, _ = train_quality_probe_with_feats(docs)
     return w, b
 
 
 def train_quality_probe_with_feats(
-        docs: DataFrame, rounds: int = ROUNDS,
-        lr: float = LR) -> tuple[list[float], float, DataFrame]:
+        docs: DataFrame) -> tuple[list[float], float, DataFrame]:
     """:func:`train_quality_probe` that ALSO hands back the checkpointed
     feature frame it trained on, so a caller scoring the same corpus
     (q401) reads the once-materialized features instead of re-deriving
@@ -133,7 +131,7 @@ def train_quality_probe_with_feats(
     small = plan_size_bytes(docs) <= _GD_INTERP_MAX_BYTES
     w, b = [0.0] * 5, 0.0
     with _interp_mode(spark, small):
-        for _ in range(rounds):
+        for _ in range(ROUNDS):
             p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_z_expr(w, b)))
             r = (feats
                  .select((p - F.col("y")).alias("e"),
@@ -144,8 +142,8 @@ def train_quality_probe_with_feats(
                         .alias(f"g{j + 1}") for j in range(5)])
                  .collect()[0])
             n = float(r["n"])
-            w = [w[j] - lr * float(r[f"g{j + 1}"]) / n for j in range(5)]
-            b = b - lr * float(r["gb"]) / n
+            w = [w[j] - LR * float(r[f"g{j + 1}"]) / n for j in range(5)]
+            b = b - LR * float(r["gb"]) / n
     return w, b, feats
 
 
@@ -213,15 +211,15 @@ def _feats_select_sql(src: str = "documents") -> str:
                     FROM {src}))"""
 
 
-def _probe_train_ctes(rounds: int = ROUNDS, lr: float = LR) -> str:
+def _probe_train_ctes() -> str:
     """CTE text replaying train_quality_probe round by round."""
     stages = []
-    for k in range(1, rounds + 1):
+    for k in range(1, ROUNDS + 1):
         stages.append(f"""
     r{k} AS MATERIALIZED (
-        SELECT w1 - {lr!r} * g1 / n AS w1, w2 - {lr!r} * g2 / n AS w2,
-               w3 - {lr!r} * g3 / n AS w3, w4 - {lr!r} * g4 / n AS w4,
-               w5 - {lr!r} * g5 / n AS w5, b - {lr!r} * gb / n AS b
+        SELECT w1 - {LR!r} * g1 / n AS w1, w2 - {LR!r} * g2 / n AS w2,
+               w3 - {LR!r} * g3 / n AS w3, w4 - {LR!r} * g4 / n AS w4,
+               w5 - {LR!r} * g5 / n AS w5, b - {LR!r} * gb / n AS b
         FROM (SELECT count(*)::DOUBLE AS n, sum(e) AS gb,
                      sum(e * x1) AS g1, sum(e * x2) AS g2,
                      sum(e * x3) AS g3, sum(e * x4) AS g4,

@@ -19,24 +19,24 @@ from ..plans.registry import register
 from ..sources.readers import load_table
 
 
-def _sorted_run_pairs(df: DataFrame, sorted_col: str = "s") -> DataFrame:
+def _sorted_run_pairs(df: DataFrame) -> DataFrame:
     """Explode a pre-SORTED array column into (v, c) run-length pairs — the
     round-11 scan-side multiset-count kernel (q125's run-length trick in
     pair form): per-row value counts leave the scan as one row per DISTINCT
     value instead of one row per instance, without any exchange. ``df`` must
     carry ``doc_id`` and the sorted array column."""
     bounds = (
-        f"filter(sequence(1, size({sorted_col})), i -> i = 1 OR"
-        f" element_at({sorted_col}, i) != element_at({sorted_col}, i - 1))"
+        f"filter(sequence(1, size(s)), i -> i = 1 OR"
+        f" element_at(s, i) != element_at(s, i - 1))"
     )
     pairs = (
         "transform(sequence(1, size(bnd)),"
-        f" k -> struct(element_at({sorted_col}, element_at(bnd, k)) AS v,"
+        f" k -> struct(element_at(s, element_at(bnd, k)) AS v,"
         "             (CASE WHEN k < size(bnd) THEN element_at(bnd, k + 1)"
-        f"              ELSE size({sorted_col}) + 1 END)"
+        f"              ELSE size(s) + 1 END)"
         "              - element_at(bnd, k) AS c))"
     )
-    return (df.select("doc_id", sorted_col, F.expr(bounds).alias("bnd"))
+    return (df.select("doc_id", "s", F.expr(bounds).alias("bnd"))
             .select("doc_id", F.explode(F.expr(pairs)).alias("p"))
             .select("doc_id", F.col("p.v").alias("v"), F.col("p.c").alias("c")))
 

@@ -30,48 +30,50 @@ from ..plans.registry import register
 # Reusable operators
 # ---------------------------------------------------------------------------
 
-# Widest hash fan-out we allow in a single aggregate pass. Each hash is one
-# aggregate expression; past a few hundred, generated code blows the JVM's
-# 64KB-per-method limit / spark.sql.codegen.maxFields and Spark silently falls
-# back to interpreted mode (slow) or fails to compile. 128 is comfortably
-# inside the codegen envelope while being more permutations than MinHash
-# accuracy ever needs (error ~ 1/sqrt(k) ⇒ k=128 → ±9%).
-_MAX_HASH_FAN = 128
+# The one MinHash+LSH configuration every MinHash path runs: the Spark
+# signatures, the stored index params row and the DuckDB oracle all read
+# these. 64 lanes in 32 bands of 2 rows over word trigrams; the lane
+# coefficients come from a Random seeded with MINHASH_SEED.
+MINHASH_HASHES = 64
+MINHASH_BANDS = 32
+MINHASH_NGRAM = 3
+MINHASH_SEED = 42
+
+# The params row a MinHash index records beside its num_buckets. An index
+# written with other lanes, bands, n-gram width or shingle hash (by other
+# code) is refused: its band join would match nothing and silently return
+# only delta-internal pairs (zero corpus recall).
+_MINHASH_PARAMS = dict(num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
+                       ngram=MINHASH_NGRAM, hash_fn="md5_60")
 
 
-def _check_hash_fan(k: int, what: str) -> None:
-    if not 0 < k <= _MAX_HASH_FAN:
-        raise ValueError(
-            f"{what}={k} exceeds the codegen-safe cap {_MAX_HASH_FAN}; "
-            f"see _MAX_HASH_FAN in operators/dedup.py")
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup by content hash; keeps the lowest doc_id per duplicate
+    group.
 
-
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", normalize: bool = True) -> DataFrame:
-    """Exact dedup by content hash; keeps the lowest id per duplicate group.
-
-    Hash-groupBy over md5(normalized text): one shuffle keyed on the hash —
-    duplicate clusters co-locate regardless of corpus size.
+    Hash-groupBy over md5(lower-cased, whitespace-collapsed text): one
+    shuffle keyed on the hash — duplicate clusters co-locate regardless of
+    corpus size.
     """
-    text = F.col(text_col)
-    if normalize:
-        text = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    text = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
         df.withColumn("fingerprint", F.md5(text))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Add a ``shingles`` column: distinct word n-grams (default trigrams).
+def shingles(df: DataFrame) -> DataFrame:
+    """Add a ``shingles`` column: distinct word n-grams of MINHASH_NGRAM
+    (three) words.
 
     Tokenization happens in its own projection so the split() runs once per
     row, not once per reference inside the gram-builder expressions.
     """
+    n = MINHASH_NGRAM
     toks = F.col("__toks")
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
@@ -80,7 +82,7 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
         ),
     )
     return (
-        df.withColumn("__toks", F.split(F.col(text_col), " "))
+        df.withColumn("__toks", F.split(F.col("text"), " "))
         .withColumn(
             "shingles",
             F.when(F.size(toks) >= n, F.array_distinct(grams))
@@ -90,9 +92,9 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        n: int = 3) -> DataFrame:
-    """Exact Jaccard similarity over word n-gram sets for all id-ordered pairs.
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact Jaccard similarity over word trigram sets for all id-ordered
+    pairs.
 
     Output: doc_a, doc_b, jaccard. Quadratic — use only on a candidate set
     (post-LSH) or a bounded window; minhash_near_dup is the scale path.
@@ -107,14 +109,16 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     intersect sees even under a within-document collision, so the Jaccard
     stays a true set ratio over the hashed sets; an actual collision would
     shift the value vs the string-set oracle by ~1/|shingles|)."""
-    sh = (shingles(docs, n=n)
-          .select(F.col(id_col),
+    sh = (shingles(docs)
+          .select(F.col("doc_id"),
                   F.array_distinct(F.expr(
                       "transform(shingles, s -> cast(conv(substring("
                       "md5(s), 1, 15), 16, 10) as bigint))"))
                   .alias("shingles")))
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    a = sh.select(F.col("doc_id").alias("doc_a"),
+                  F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("doc_b"),
+                  F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     return (
@@ -132,17 +136,16 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 MINHASH_P = 2_147_483_647
 
 
-def minhash_coeffs(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]:
+def minhash_coeffs() -> tuple[list[int], list[int]]:
     """Seeded (a_i, b_i) coefficients of the (a·h + b) mod p lane family."""
     import random
 
-    rnd = random.Random(seed)
-    return ([rnd.randrange(1, MINHASH_P) for _ in range(num_hashes)],
-            [rnd.randrange(0, MINHASH_P) for _ in range(num_hashes)])
+    rnd = random.Random(MINHASH_SEED)
+    return ([rnd.randrange(1, MINHASH_P) for _ in range(MINHASH_HASHES)],
+            [rnd.randrange(0, MINHASH_P) for _ in range(MINHASH_HASHES)])
 
 
-def hashed_shingles(docs: DataFrame, id_col: str = "doc_id",
-                    ngram: int = 3, hash_fn: str = "md5_60") -> DataFrame:
+def hashed_shingles(docs: DataFrame, id_col: str) -> DataFrame:
     """Per-doc distinct shingle set as int64 hashes (``hs`` array column).
 
     Each shingle string is hashed ONCE; every downstream minhash / band /
@@ -150,67 +153,48 @@ def hashed_shingles(docs: DataFrame, id_col: str = "doc_id",
     strings — the difference between O(k·|shingle bytes|) and O(k·8B) per
     shingle across k hash functions.
 
-    ``hash_fn``:
-
-    - ``"md5_60"`` (default): top 60 bits of md5 (15 hex chars through
-      conv) — md5 is the one hash every engine computes identically, and
-      60 bits stays positive and overflow-free in int64, so an ANSI SQL
-      oracle rebuilds the identical shingle sets
-      (``CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)``). This is what
-      q42/q168/q374's full-fidelity oracles require.
-    - ``"xxhash64"``: Spark's native 64-bit hash — measured ~1.8× faster
-      end-to-end at 100× corpus (BASELINE.md round-4 note) but not
-      reproducible outside Spark. VERIFIED pairs agree with md5_60 on the
-      test fixture (pinned by unit test), but LSH banding recall depends on
-      the hash values themselves, so near-threshold true pairs can be
-      caught by one hash_fn and missed by the other at scale — pick one
-      hash_fn per corpus and stick with it; production runs that don't
-      need cross-engine replay should pick this.
+    The hash is the top 60 bits of md5 (15 hex chars through conv): md5 is
+    the one hash every engine computes identically, and 60 bits stays
+    positive and overflow-free in int64, so an ANSI SQL oracle rebuilds the
+    identical shingle sets (``CAST(('0x' || substr(md5(s), 1, 15)) AS
+    BIGINT)``). This is what q42/q168/q374's full-fidelity oracles require.
     """
-    if hash_fn == "xxhash64":
-        hash1 = F.xxhash64
-    elif hash_fn == "md5_60":
-        hash1 = lambda s: F.conv(  # noqa: E731
-            F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-    else:
-        raise ValueError(f"hash_fn={hash_fn!r}: use 'md5_60' or 'xxhash64'")
-    sh = shingles(docs, n=ngram)
+    sh = shingles(docs)
     return sh.select(
         F.col(id_col),
-        F.array_distinct(
-            F.transform("shingles", lambda s: hash1(s))).alias("hs"),
+        F.array_distinct(F.transform("shingles", lambda s: F.conv(
+            F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))).alias("hs"),
     )
 
 
-def _minhash_array(num_hashes: int):
-    """array<bigint> column of ``num_hashes`` MinHash values over ``hs``.
+def _minhash_array():
+    """array<bigint> column of the MINHASH_HASHES MinHash values over
+    ``hs``.
 
     Lane i is the classic universal hash min over the shingle set:
     min_h (a_i·h + b_i) mod p with p = 2^31-1 and seeded coefficient
     literals — pure int64 arithmetic that DuckDB replays exactly, unlike
     the earlier xxhash64(i, h) lanes. Cost per lane is one multiply-add-mod
     (cheaper than an xxhash64 round)."""
-    a, b = minhash_coeffs(num_hashes)
+    a, b = minhash_coeffs()
     p = MINHASH_P
     a_lit = ",".join(f"{x}L" for x in a)
     b_lit = ",".join(f"{x}L" for x in b)
     return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), "
+        f"transform(sequence(0, {MINHASH_HASHES - 1}), "
         f"i -> array_min(transform(hs, "
         f"h -> (element_at(array({a_lit}), i + 1) * (h % {p}L)"
         f" + element_at(array({b_lit}), i + 1)) % {p}L)))")
 
 
 def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
-                     threshold: float = 0.3, num_hashes: int = 64,
-                     bands: int = 32, ngram: int = 3,
-                     hash_fn: str = "md5_60") -> DataFrame:
+                     threshold: float = 0.3) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, verified with exact Jaccard.
 
     Pipeline: hashed shingle sets (persisted — three downstream branches
-    reuse them) → signatures → band into ``bands`` buckets of
-    ``num_hashes/bands`` rows → self-join on (band, signature) → exact
-    Jaccard verification of the candidate set → pairs >= threshold.
+    reuse them) → signatures → band into MINHASH_BANDS buckets of
+    MINHASH_HASHES/MINHASH_BANDS rows → self-join on (band, signature) →
+    exact Jaccard verification of the candidate set → pairs >= threshold.
 
     Tuning: bands=32 × rows=2 ⇒ candidate probability 1-(1-j²)³² ≈ 95% at
     j=0.3 and ≈ 100% at j≥0.5; false candidates are removed by the exact
@@ -224,17 +208,13 @@ def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
     because persist registers the giant hash-pipeline plan in the session
     CacheManager, where every later query pays plan-matching cost against it).
     """
-    _check_hash_fan(num_hashes, "num_hashes")
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    sh = hashed_shingles(scan_parallel(docs), id_col, ngram,
-                         hash_fn).localCheckpoint()
+    sh = hashed_shingles(scan_parallel(docs), id_col).localCheckpoint()
     # band rows (signatures shuffle-free in one nested-HOF pass, band key =
     # raw lane-value slice: exact, no re-hash, SQL-replayable) come from the
     # SHARED _band_rows helper — the same expressions the materialized index
     # and the delta probe use, so every consumer computes byte-identical
     # (band, sig) keys
-    stacked = _band_rows(sh, id_col, num_hashes, bands).localCheckpoint()
+    stacked = _band_rows(sh, id_col).localCheckpoint()
     left = stacked.select(F.col(id_col).alias("doc_a"), "band", "sig")
     right = stacked.select(F.col(id_col).alias("doc_b"), "band", "sig")
     candidates = (
@@ -259,8 +239,7 @@ def minhash_near_dup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash_portable(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def simhash_portable(docs: DataFrame) -> DataFrame:
     """64-bit SimHash whose every step an ANSI SQL engine replays exactly.
 
     Per-token hash, bitwise ±1 majority vote: 64 aggregate expressions in
@@ -273,10 +252,10 @@ def simhash_portable(docs: DataFrame, text_col: str = "text",
     distance is bit_count(hi XOR hi') + bit_count(lo XOR lo') — identical
     dedup power, oracle-checkable values."""
     toks = F.explode(
-        F.array_distinct(F.split(F.col(text_col), " "))).alias("token")
+        F.array_distinct(F.split(F.col("text"), " "))).alias("token")
     md5 = F.md5("token")
-    tok_df = docs.select(F.col(id_col), toks).select(
-        id_col,
+    tok_df = docs.select(F.col("doc_id"), toks).select(
+        "doc_id",
         F.conv(F.substring(md5, 1, 8), 16, 10).cast("bigint").alias("hi"),
         F.conv(F.substring(md5, 9, 8), 16, 10).cast("bigint").alias("lo"))
 
@@ -288,7 +267,7 @@ def simhash_portable(docs: DataFrame, text_col: str = "text",
             for i in range(32)
         ]
 
-    voted = tok_df.groupBy(id_col).agg(*votes("hi"), *votes("lo"))
+    voted = tok_df.groupBy("doc_id").agg(*votes("hi"), *votes("lo"))
 
     def pack(col: str):
         sig = F.lit(0).cast("bigint")
@@ -298,7 +277,7 @@ def simhash_portable(docs: DataFrame, text_col: str = "text",
                                ).otherwise(F.lit(0).cast("bigint"))
         return sig
 
-    return voted.select(F.col(id_col),
+    return voted.select(F.col("doc_id"),
                         pack("hi").alias("simhash_hi"),
                         pack("lo").alias("simhash_lo"))
 
@@ -355,8 +334,7 @@ def q41_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs)
 
 
-def _minhash_pairs_ctes(threshold: float = 0.3, num_hashes: int = 64,
-                        bands: int = 32, ngram: int = 3,
+def _minhash_pairs_ctes(threshold: float = 0.3,
                         source: str = "documents") -> str:
     """CTE block replaying the ENTIRE MinHash+LSH pipeline in DuckDB —
     same md5-60-bit shingle hashes, same (a·h+b) mod p lanes, same band
@@ -371,12 +349,12 @@ def _minhash_pairs_ctes(threshold: float = 0.3, num_hashes: int = 64,
     BIGINT holds it exactly. A doc whose ``hs`` is empty has no lanes and
     drops out of ``sigs``; it can never be a candidate, as with all-NULL
     lanes, which never join."""
-    rows = num_hashes // bands
-    a, b = minhash_coeffs(num_hashes)
+    ngram, bands = MINHASH_NGRAM, MINHASH_BANDS
+    rows = MINHASH_HASHES // bands
+    a, b = minhash_coeffs()
     p = MINHASH_P
     lanes = ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(zip(a, b)))
-    # shingle concat generated FROM ngram so an oracle built with ngram != 3
-    # matches the Spark side instead of silently diverging (w[i] .. w[i+n-1])
+    # the shingle concat w[i] || ' ' || ... || w[i+ngram-1]
     concat = " || ' ' || ".join(
         f"w[i+{k}]" if k else "w[i]" for k in range(ngram))
     return f"""
@@ -601,8 +579,7 @@ def q113_survivorship_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              - len(list_intersect(a.toks, b.toks))) >= 0.95
     """,
 )
-def q151_prefix_filter_jaccard(spark: SparkSession, sf_dir: str,
-                               threshold: float = 0.95) -> DataFrame:
+def q151_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact set-similarity join via PREFIX FILTERING (the PPJoin family):
     token-set Jaccard >= t without the all-pairs product the oracle runs.
     Order each doc's tokens by global rarity; two sets with Jaccard >= t
@@ -625,6 +602,7 @@ def q151_prefix_filter_jaccard(spark: SparkSession, sf_dir: str,
     the scale fallback."""
     import math  # noqa: F401  (ceil inline via SQL to keep both engines identical)
 
+    threshold = 0.95
     docs = load_table(spark, sf_dir, "documents")
     tok = (docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
            .dropDuplicates(["doc_id", "tok"]))
@@ -665,10 +643,10 @@ def q151_prefix_filter_jaccard(spark: SparkSession, sf_dir: str,
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")))
 
 
-def dedup_pipeline(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
+def dedup_pipeline(docs: DataFrame) -> DataFrame:
     """END-TO-END near-dup dedup: MinHash/LSH candidate pairs (exact-Jaccard
-    verified) → connected components (transitive closure of "is a near-dup
-    of") → one surviving representative per cluster (longest text, doc_id
+    verified at 0.3) → connected components (transitive closure of "is a
+    near-dup of") → one surviving representative per cluster (longest text, doc_id
     tiebreak). Returns (doc_id, cluster, is_representative, cluster_size) —
     the keep/drop decision a curation run materializes.
 
@@ -679,7 +657,7 @@ def dedup_pipeline(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
 
     from .graph import connected_components
 
-    pairs = minhash_near_dup(docs, threshold=threshold)
+    pairs = minhash_near_dup(docs, threshold=0.3)
     nodes = docs.select(F.col("doc_id").alias("node"))
     comp = connected_components(
         nodes, pairs.select(F.col("doc_a").alias("src"),
@@ -806,7 +784,7 @@ def q213_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smaller side's shingles). The size inequality halves the pair space
     and fixes the containment direction."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-    sh = shingles(docs, n=3).select("doc_id", "shingles")
+    sh = shingles(docs).select("doc_id", "shingles")
     a = sh.select(F.col("doc_id").alias("contained_doc"),
                   F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("container_doc"),
@@ -1415,7 +1393,7 @@ def q374_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kp", F.min("doc_id").over(Window.partitionBy("f")))
         .filter(F.col("doc_id") == F.col("kp"))
         .select("doc_id", "text"))
-    reps = dedup_pipeline(curated, threshold=0.3).select(
+    reps = dedup_pipeline(curated).select(
         "doc_id", F.col("is_representative").alias("is_rep"))
     # ONE annotation join (round-11, guide §2.4): dedup_pipeline labels
     # EVERY input doc (connected components over all nodes), so reps has
@@ -1438,14 +1416,13 @@ def q374_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental dedup against a materialized signature index (q376)
 # ---------------------------------------------------------------------------
 
-def _band_rows(sh: DataFrame, id_col: str, num_hashes: int,
-               bands: int) -> DataFrame:
+def _band_rows(sh: DataFrame, id_col: str) -> DataFrame:
     """(id, band, sig) rows from a hashed-shingle frame — the same
     signature/band expressions as :func:`minhash_near_dup` (one nested-HOF
     signature pass, band key = raw lane-value slice), factored so the
     materialized index and the delta probe compute byte-identical keys."""
-    rows = num_hashes // bands
-    sigs = sh.select(id_col, _minhash_array(num_hashes).alias("mh"))
+    rows = MINHASH_HASHES // MINHASH_BANDS
+    sigs = sh.select(id_col, _minhash_array().alias("mh"))
     return sigs.select(
         F.col(id_col),
         F.explode(F.array(*[
@@ -1453,7 +1430,7 @@ def _band_rows(sh: DataFrame, id_col: str, num_hashes: int,
                 F.lit(b).alias("band"),
                 F.slice("mh", b * rows + 1, rows).alias("sig"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ])).alias("bs"),
     ).select(id_col, "bs.band", "bs.sig")
 
@@ -1470,9 +1447,7 @@ def _band_bucket(num_buckets: int):
 
 
 def build_minhash_index(docs: DataFrame, index_dir: str,
-                        id_col: str = "doc_id", num_hashes: int = 64,
-                        bands: int = 32, ngram: int = 3,
-                        hash_fn: str = "md5_60",
+                        id_col: str = "doc_id",
                         num_buckets: int = 64) -> None:
     """Materialize the corpus side of MinHash+LSH dedup as parquet:
     ``{index_dir}/shingles`` (id, hs) for exact-Jaccard verification and
@@ -1495,19 +1470,14 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
     over every probe. Size ``num_buckets`` so one bucket's band rows fit a
     scan task comfortably (thousands at 100 TB; the default 64 suits
     fixture scale)."""
-    _check_hash_fan(num_hashes, "num_hashes")
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     if num_buckets < 1:
         raise ValueError(f"num_buckets={num_buckets} must be >= 1")
     index_store.begin_build(
         docs.sparkSession, index_dir, ("shingles", "bands"),
-        dict(num_hashes=num_hashes, bands=bands, ngram=ngram,
-             hash_fn=hash_fn, num_buckets=num_buckets))
-    sh = hashed_shingles(scan_parallel(docs), id_col, ngram,
-                         hash_fn).localCheckpoint()
+        dict(**_MINHASH_PARAMS, num_buckets=num_buckets))
+    sh = hashed_shingles(scan_parallel(docs), id_col).localCheckpoint()
     index_store.write_generation(sh, index_dir, "shingles", None, None)
-    br = _band_rows(sh, id_col, num_hashes, bands)
+    br = _band_rows(sh, id_col)
     if sh.isEmpty():
         # empty corpus: partitionBy writes NO files at all, leaving a
         # schema-less (unreadable) bands table; write one empty file into
@@ -1531,26 +1501,17 @@ def _write_bands(br: DataFrame, index_dir: str, ingest_id: str | None,
         index_dir, "bands", ingest_id, "bkt")
 
 
-def _minhash_buckets(spark: SparkSession, index_dir: str, num_hashes: int,
-                     bands: int, ngram: int, hash_fn: str) -> int:
-    """The build's ``num_buckets``, after refusing parameters that differ
-    from the build's: a bands/ngram/hash_fn mismatch would make the band
-    join match nothing and silently return only delta-internal pairs
-    (zero corpus recall)."""
-    _check_hash_fan(num_hashes, "num_hashes")
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+def _minhash_buckets(spark: SparkSession, index_dir: str) -> int:
+    """The build's ``num_buckets``, after refusing an index whose params
+    row differs from :data:`_MINHASH_PARAMS`."""
     num_buckets, = index_store.check_params(
-        spark, index_dir, "num_buckets", num_hashes=num_hashes, bands=bands,
-        ngram=ngram, hash_fn=hash_fn)
+        spark, index_dir, "num_buckets", **_MINHASH_PARAMS)
     return num_buckets
 
 
 def incremental_near_dup(spark: SparkSession, index_dir: str,
                          delta: DataFrame, id_col: str = "doc_id",
-                         threshold: float = 0.3, num_hashes: int = 64,
-                         bands: int = 32, ngram: int = 3,
-                         hash_fn: str = "md5_60") -> DataFrame:
+                         threshold: float = 0.3) -> DataFrame:
     """Near-dup pairs TOUCHING an ingest delta, probed against a
     :func:`build_minhash_index` layout — corpus-internal pairs are never
     recomputed, which is the entire point of incremental dedup.
@@ -1576,12 +1537,9 @@ def incremental_near_dup(spark: SparkSession, index_dir: str,
     at sf0.01); and the bucket collect, whose static ``bkt IN (...)``
     filter is what prunes the bands scan at file listing.
     """
-    num_buckets = _minhash_buckets(spark, index_dir, num_hashes, bands,
-                                   ngram, hash_fn)
-    delta_sh = hashed_shingles(scan_parallel(delta), id_col, ngram,
-                               hash_fn).localCheckpoint()
-    delta_bands = _band_rows(delta_sh, id_col, num_hashes,
-                             bands).localCheckpoint()
+    num_buckets = _minhash_buckets(spark, index_dir)
+    delta_sh = hashed_shingles(scan_parallel(delta), id_col).localCheckpoint()
+    delta_bands = _band_rows(delta_sh, id_col).localCheckpoint()
     corpus_bands = read_parquet(spark, f"{index_dir}/bands")
     # Prune the index scan to the delta's bucket directories: a band-match
     # requires equal (band, sig), hence an equal bucket, so unprobed
@@ -1727,9 +1685,7 @@ def q450_minhash_tombstone_probe(spark: SparkSession,
 
 def minhash_index_append(spark: SparkSession, index_dir: str,
                          delta: DataFrame, ingest_id: str,
-                         id_col: str = "doc_id",
-                         num_hashes: int = 64, bands: int = 32,
-                         ngram: int = 3, hash_fn: str = "md5_60") -> None:
+                         id_col: str = "doc_id") -> None:
     """Append an ingest delta's shingle sets and band signatures to a
     :func:`build_minhash_index` layout — the dedup sibling of
     ``ivf_index_append``: standing index files are untouched, ingest cost
@@ -1744,13 +1700,10 @@ def minhash_index_append(spark: SparkSession, index_dir: str,
     streaming batch id); an invalid id is refused before the first job
     (:func:`index_store.check_ingest_id`)."""
     index_store.check_ingest_id(ingest_id)
-    num_buckets = _minhash_buckets(spark, index_dir, num_hashes, bands,
-                                   ngram, hash_fn)
-    sh = hashed_shingles(scan_parallel(delta), id_col, ngram,
-                         hash_fn).localCheckpoint()
+    num_buckets = _minhash_buckets(spark, index_dir)
+    sh = hashed_shingles(scan_parallel(delta), id_col).localCheckpoint()
     index_store.write_generation(sh, index_dir, "shingles", ingest_id, None)
-    _write_bands(_band_rows(sh, id_col, num_hashes, bands), index_dir,
-                 ingest_id, num_buckets)
+    _write_bands(_band_rows(sh, id_col), index_dir, ingest_id, num_buckets)
 
 
 # ---------------------------------------------------------------------------
@@ -1815,19 +1768,12 @@ def q414_chunk_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_dedup_clean(load_table(spark, sf_dir, "documents"))
 
 
-def chunk_dedup_clean(docs: DataFrame,
-                      chunk_words: int = CHUNK_WORDS) -> DataFrame:
+def chunk_dedup_clean(docs: DataFrame) -> DataFrame:
     """See q414_chunk_dedup_clean — (doc_id, text) in, per-doc
     (n_chunks, kept_chunks, removed_chunks, cleaned_md5) out."""
     toks = docs.select("doc_id", F.split("text", " ").alias("w"))
-    n_chunks = F.ceil(F.size("w") / F.lit(float(chunk_words))).cast("bigint")
-    chunks = toks.select(
-        "doc_id",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, cast(ceil(size(w) / {float(chunk_words)!r})"
-            f" as int) - 1),"
-            f" i -> array_join(slice(w, i*{chunk_words} + 1, {chunk_words}),"
-            f" ' '))")).alias("idx", "chunk"))
+    n_chunks = F.ceil(F.size("w") / F.lit(float(CHUNK_WORDS))).cast("bigint")
+    chunks = doc_chunks(docs)
     w_own = Window.partitionBy("h").orderBy("doc_id", "idx")
     decisions = (chunks.select("doc_id", "idx", F.md5("chunk").alias("h"))
                  .withColumn("rn", F.row_number().over(w_own))
@@ -1882,8 +1828,7 @@ def _decon_shingle_sql(src: str) -> str:
             WHERE len(w) >= {DECON_NGRAM}) s"""
 
 
-def decon_shingle_hashes(docs: DataFrame,
-                         ngram: int = DECON_NGRAM) -> DataFrame:
+def decon_shingle_hashes(docs: DataFrame) -> DataFrame:
     """Spark twin of :func:`_decon_shingle_sql`: per-doc distinct 8-word
     shingles as (doc_id, h1, h2) — md5 computed INSIDE the shingle
     transform so the shingle text never leaves its scan task.
@@ -1897,6 +1842,7 @@ def decon_shingle_hashes(docs: DataFrame,
     largest exchange in q415/q440's decon phase) for a dedup that never
     crossed row boundaries. Precondition (all callers satisfy it): one
     input row per doc_id."""
+    ngram = DECON_NGRAM
     toks = docs.select("doc_id", F.split("text", " ").alias("w"))
     return (toks.where(F.size("w") >= ngram)
             # IF-guard (round 11): see q224 — the inferred Generate filter
@@ -1914,9 +1860,11 @@ def decon_shingle_hashes(docs: DataFrame,
                     .alias("h2")))
 
 
-def _bloom_positions_h(h1, h2, m: int = BLOOM_M, k: int = BLOOM_HASHES):
-    """array<bigint> of k Bloom positions from precomputed md5 halves."""
-    return F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)])
+def _bloom_positions_h(h1, h2, m: int = BLOOM_M):
+    """array<bigint> of the BLOOM_HASHES Bloom positions from precomputed
+    md5 halves."""
+    return F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m))
+                     for i in range(BLOOM_HASHES)])
 
 
 def bloom_bitmap(bits: DataFrame, m: int = BLOOM_M) -> list[int]:
@@ -1938,11 +1886,10 @@ def bloom_bitmap(bits: DataFrame, m: int = BLOOM_M) -> list[int]:
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def _bloom_hit_sql(words: list[int], h1: str = "h1", h2: str = "h2",
-                   m: int = BLOOM_M, k: int = BLOOM_HASHES) -> str:
+def _bloom_hit_sql(words: list[int], m: int = BLOOM_M) -> str:
     """Scan-side Bloom membership over md5-half columns ``h1``/``h2``: the
-    SAME k positions as :func:`_bloom_positions_h` (pmod(h1 + i*h2, m))
-    tested against the bitmap literal — bit-identical hit decisions with
+    SAME BLOOM_HASHES positions as :func:`_bloom_positions_h`
+    (pmod(h1 + i*h2, m)) tested against the bitmap literal — bit-identical hit decisions with
     ZERO explode, broadcast join, or per-shingle groupBy (round 11, guide
     §2.4: the explode(k positions) -> join(set-bit table) -> groupBy(doc,
     h1, h2) count==k idiom paid a non-combinable corpus-sized exchange per
@@ -1951,8 +1898,8 @@ def _bloom_hit_sql(words: list[int], h1: str = "h1", h2: str = "h2",
     correctly for s in [0, 63] regardless of the word's sign."""
     arr = "array(" + ",".join(f"{w}L" for w in words) + ")"
     tests = []
-    for i in range(k):
-        pos = f"pmod({h1} + {i}L * {h2}, {m}L)"
+    for i in range(BLOOM_HASHES):
+        pos = f"pmod(h1 + {i}L * h2, {m}L)"
         tests.append(
             f"(shiftright(element_at({arr}, "
             f"cast(shiftright({pos}, 6) as int) + 1), "
@@ -2053,9 +2000,9 @@ def q415_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 CDC_MOD = 8  # boundary when md5_60(word) % CDC_MOD == 0 -> ~8-word chunks
 
 
-def cdc_chunks(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """Split each document into CONTENT-DEFINED chunks: a word whose
-    md5-60-bit hash is 0 mod ``mod`` ends its chunk (the word-granular
+    md5-60-bit hash is 0 mod CDC_MOD ends its chunk (the word-granular
     analogue of Rabin-fingerprint CDC in dedup storage systems). Because
     boundaries depend only on local content, inserting or deleting words
     re-chunks only the affected neighborhood — unlike fixed-width chunks
@@ -2069,7 +2016,7 @@ def cdc_chunks(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
     words = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i", "word"))
     bf = (F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint")
-          % mod == 0).cast("int")
+          % CDC_MOD == 0).cast("int")
     w_cum = (Window.partitionBy("doc_id").orderBy("i")
              .rowsBetween(Window.unboundedPreceding, -1))
     cids = words.withColumn("bf", bf).withColumn(
@@ -2248,8 +2195,7 @@ CHUNK_DROP_AT = 0.8   # matched_fraction >= : drop the whole document
 CHUNK_TRIM_AT = 0.2   # matched_fraction >= : cut matched chunks, keep rest
 
 
-def doc_chunks(docs: DataFrame,
-               chunk_words: int = CHUNK_WORDS) -> DataFrame:
+def doc_chunks(docs: DataFrame) -> DataFrame:
     """(doc_id, idx, chunk) fixed-width chunk frame — q414/q429's
     scan-side HOF chunker, factored (transform over sequence, no explode
     of raw words; the chunk list materializes once per row inside its
@@ -2259,28 +2205,25 @@ def doc_chunks(docs: DataFrame,
         "doc_id",
         F.posexplode(F.expr(
             f"transform(sequence(0, cast(ceil(size(w) / "
-            f"{float(chunk_words)!r}) as int) - 1),"
-            f" i -> array_join(slice(w, i*{chunk_words} + 1, {chunk_words}),"
+            f"{float(CHUNK_WORDS)!r}) as int) - 1),"
+            f" i -> array_join(slice(w, i*{CHUNK_WORDS} + 1, {CHUNK_WORDS}),"
             f" ' '))")).alias("idx", "chunk"))
 
 
-def chunk_dedup_dispositions(docs: DataFrame,
-                             drop_at: float = CHUNK_DROP_AT,
-                             trim_at: float = CHUNK_TRIM_AT,
-                             threshold: float = 0.5) -> DataFrame:
+def chunk_dedup_dispositions(docs: DataFrame) -> DataFrame:
     """Reconcile q429's chunk-grain FUZZY matches back to document-level
     keep/trim/drop decisions — the policy step between "these paragraphs
     fuzzy-match" and "what happens to the document" (RefinedWeb's
     partial-overlap handling, Penedo et al. 2023 §Dedup).
 
     Keep-first convention: a chunk of document d is MATCHED iff it
-    exact-verified-pairs (jaccard >= ``threshold`` through the q429 banded
+    exact-verified-pairs (jaccard >= 0.5 through the q429 banded
     MinHash engine) with a chunk of any LOWER-id document — the earliest
     copy always survives intact, duplicates absorb the damage. Per doc,
     ``matched_fraction`` = matched_chunks / n_chunks decides:
 
-    - >= ``drop_at``  -> 'drop' (mostly duplicate; full containment edge);
-    - >= ``trim_at``  -> 'trim' (cut matched chunks, reassemble the rest
+    - >= CHUNK_DROP_AT -> 'drop' (mostly duplicate; full containment edge);
+    - >= CHUNK_TRIM_AT -> 'trim' (cut matched chunks, reassemble the rest
       in order — the single-chunk-overlap edge keeps the doc);
     - else            -> 'keep' (untouched, incidental overlap).
 
@@ -2299,10 +2242,8 @@ def chunk_dedup_dispositions(docs: DataFrame,
     as_docs = chunks.select(
         chunk_key_id(F.col("doc_id"), F.col("idx")).alias("chunk_id"),
         F.col("chunk").alias("text"))
-    pairs = minhash_near_dup(as_docs, id_col="chunk_id",
-                             threshold=threshold)
-    return _dispositions_from_matches(chunks, later_matched_chunks(pairs),
-                                      drop_at, trim_at)
+    pairs = minhash_near_dup(as_docs, id_col="chunk_id", threshold=0.5)
+    return _dispositions_from_matches(chunks, later_matched_chunks(pairs))
 
 
 def later_matched_chunks(pairs: DataFrame) -> DataFrame:
@@ -2319,9 +2260,8 @@ def later_matched_chunks(pairs: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _dispositions_from_matches(chunks: DataFrame, mch: DataFrame,
-                               drop_at: float = CHUNK_DROP_AT,
-                               trim_at: float = CHUNK_TRIM_AT) -> DataFrame:
+def _dispositions_from_matches(chunks: DataFrame,
+                               mch: DataFrame) -> DataFrame:
     """The policy rollup shared by q441 (one-shot) and q444 (per stream
     batch): (doc_id, idx, chunk) + matched (doc_id, idx) -> per-doc
     disposition row with the post-policy reconstruction."""
@@ -2354,8 +2294,8 @@ def _dispositions_from_matches(chunks: DataFrame, mch: DataFrame,
                 lambda s: s["chunk"]), " "))
         .drop("_cs"))
     frac = F.col("matched_chunks") / F.col("n_chunks")
-    disposition = (F.when(frac >= drop_at, "drop")
-                   .when(frac >= trim_at, "trim")
+    disposition = (F.when(frac >= CHUNK_DROP_AT, "drop")
+                   .when(frac >= CHUNK_TRIM_AT, "trim")
                    .otherwise("keep"))
     kept_text = (F.when(F.col("disposition") == "drop", F.lit(""))
                  .when(F.col("disposition") == "trim", F.col("trimmed_text"))
@@ -2372,8 +2312,9 @@ def _dispositions_from_matches(chunks: DataFrame, mch: DataFrame,
                     kept_text.alias("kept_text")))
 
 
-def _chunkrows_sql(src: str, chunk_words: int = CHUNK_WORDS) -> str:
+def _chunkrows_sql(src: str) -> str:
     """DuckDB twin of :func:`doc_chunks` over relation ``src``."""
+    chunk_words = CHUNK_WORDS
     return f"""
       SELECT doc_id, i AS idx,
              array_to_string(list_slice(w, i*{chunk_words} + 1,
@@ -2383,9 +2324,7 @@ def _chunkrows_sql(src: str, chunk_words: int = CHUNK_WORDS) -> str:
                CAST(ceil(len(w) / {float(chunk_words)!r}) AS INT))) AS i) u"""
 
 
-def _chunk_disposition_ctes(src: str = "documents",
-                            drop_at: float = CHUNK_DROP_AT,
-                            trim_at: float = CHUNK_TRIM_AT) -> str:
+def _chunk_disposition_ctes(src: str = "documents") -> str:
     """CTE block replaying :func:`chunk_dedup_dispositions` over ``src``;
     ends with ``recon`` (doc_id, n_chunks, matched_chunks,
     matched_fraction, disposition, kept_tokens, kept_text). Claims the
@@ -2429,9 +2368,9 @@ def _chunk_disposition_ctes(src: str = "documents",
                   ELSE full_text END AS kept_text
       FROM (SELECT *,
                    CASE WHEN matched_chunks::DOUBLE / n_chunks
-                             >= {drop_at!r} THEN 'drop'
+                             >= {CHUNK_DROP_AT!r} THEN 'drop'
                         WHEN matched_chunks::DOUBLE / n_chunks
-                             >= {trim_at!r} THEN 'trim'
+                             >= {CHUNK_TRIM_AT!r} THEN 'trim'
                         ELSE 'keep' END AS d
             FROM recon_agg))"""
 

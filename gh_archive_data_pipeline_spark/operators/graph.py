@@ -27,24 +27,20 @@ from ..functions.arrays import sorted_pairs
 from ..plans.registry import register
 
 
-def connected_components(nodes: DataFrame, edges: DataFrame,
-                         node_col: str = "node",
-                         src: str = "src", dst: str = "dst",
-                         max_iters: int = 25) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Label every node with the smallest node id reachable from it.
 
-    ``nodes``: one column (``node_col``) — must include isolated nodes.
+    ``nodes``: one column ``node`` — must include isolated nodes.
     ``edges``: (``src``, ``dst``) pairs, treated as undirected.
     Returns (node, component) where component = min id in the node's
-    connected component.
+    connected component, after at most 25 label-propagation rounds.
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     sym = (sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
            .distinct()
            .localCheckpoint())
-    labels = nodes.select(F.col(node_col).alias("node"),
-                          F.col(node_col).alias("label"))
-    for _ in range(max_iters):
+    labels = nodes.select("node", F.col("node").alias("label"))
+    for _ in range(25):
         nbr = (sym.join(labels.withColumnRenamed("node", "a"), "a")
                .groupBy(F.col("b").alias("node"))
                .agg(F.min("label").alias("nbr_label")))
@@ -127,10 +123,9 @@ def q84_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id")))
 
 
-def pagerank(edges: DataFrame, damping: float = 0.85, iterations: int = 3,
-             src: str = "src", dst: str = "dst",
-             weight: str = "weight") -> DataFrame:
-    """Weighted PageRank, fixed iteration count, as pure DataFrame rounds.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank over (src, dst, weight) edges: three rounds at
+    damping 0.85, as pure DataFrame rounds.
 
     Each round is one join (ranks ⋈ edges on src) + one groupBy (dst) — the
     same two-shuffle envelope as connected_components above, and both
@@ -140,25 +135,25 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iterations: int = 3,
     that exactly. The single driver-side scalar is the node COUNT (needed in
     the teleport term) — O(1) bytes regardless of graph size.
     """
-    nodes = (edges.select(F.col(src).alias("node"))
-             .union(edges.select(F.col(dst).alias("node")))
+    nodes = (edges.select(F.col("src").alias("node"))
+             .union(edges.select(F.col("dst").alias("node")))
              .distinct()
              .localCheckpoint())
     n = nodes.count()
-    out_w = edges.groupBy(src).agg(F.sum(weight).alias("out_w"))
-    norm = (edges.join(out_w, src)
-            .select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"),
-                    (F.col(weight) / F.col("out_w")).alias("p"))
+    out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
+    norm = (edges.join(out_w, "src")
+            .select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"),
+                    (F.col("weight") / F.col("out_w")).alias("p"))
             .localCheckpoint())
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iterations):
+    for _ in range(3):
         contribs = (norm.join(ranks.withColumnRenamed("node", "e_src"), "e_src")
                     .groupBy(F.col("e_dst").alias("node"))
                     .agg(F.sum(F.col("p") * F.col("rank")).alias("contrib")))
         ranks = (nodes.join(contribs, "node", "left")
                  .select("node",
-                         (F.lit((1.0 - damping) / n)
-                          + F.lit(damping) * F.coalesce("contrib", F.lit(0.0)))
+                         (F.lit((1.0 - 0.85) / n)
+                          + F.lit(0.85) * F.coalesce("contrib", F.lit(0.0)))
                          .alias("rank")))
     return ranks
 
@@ -219,14 +214,13 @@ def q189_pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy(F.col("event_type").alias("src"),
                       F.col("next_type").alias("dst"))
              .agg(F.count(F.lit(1)).cast("double").alias("weight")))
-    ranks = pagerank(edges, damping=0.85, iterations=3)
+    ranks = pagerank(edges)
     return (ranks.select(F.col("node").alias("event_type"),
                          F.round("rank", 6).alias("pagerank"))
             .orderBy(F.desc("pagerank"), "event_type"))
 
 
-def copurchase_edges(spark: SparkSession, sf_dir: str,
-                     max_group_size: int | None = None) -> DataFrame:
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected co-purchase edges oriented low-id -> high-id: users who
     purchased within the same hour. Shared by the graph-statistics queries
     (q295/q309/q310); the per-hour pair blowup is bounded by hour-group
@@ -244,21 +238,13 @@ def copurchase_edges(spark: SparkSession, sf_dir: str,
     The 100× scale study (BASELINE.md round 4) measured this sub-linear
     because real event data grows hour COUNT, not hour-group size. The
     documented hazard is a FLASH event — one hour whose group genuinely
-    densifies to k users and would emit k²/2 pairs from one array.
-    ``max_group_size`` is that mitigation: each hour's sorted array is
-    sliced to its k lowest user_ids (deterministic), capping any hour's
-    fan-out at k(k-1)/2 while leaving every group under the cap EXACTLY
-    intact. A NULL user_id never takes one of the k slots (``collect_set``
-    drops it). A capped flash hour yields a uniform subsample of its
-    clique — acceptable for the graph STATISTICS these edges feed
-    (triangle counts / degree distributions), which is why the cap is an
-    explicit opt-in, not a default."""
+    densifies to k users and emits k²/2 pairs from one array. No hour is
+    capped: a capped hour would subsample its clique and change the graph
+    statistics (triangle counts, degree distributions) these edges feed."""
     from ..sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")
     users = F.array_sort(F.collect_set("user_id"))
-    if max_group_size is not None:
-        users = F.slice(users, 1, max_group_size)
     groups = (ev.filter(F.col("event_type") == "purchase")
               .select("user_id", F.date_trunc("hour", "ts").alias("h"))
               .filter(F.col("h").isNotNull())
@@ -361,8 +347,7 @@ def q295_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted purchaser array per hour (:func:`copurchase_edges`: pairs
     emitted from the array, one distinct), so the co-occurrence blowup is
     bounded per hour-group (k users -> k(k-1)/2 pairs), the same contract
-    as q41's candidate windows; ``max_group_size`` caps k when a flash
-    hour makes that bound too loose."""
+    as q41's candidate windows; a flash hour makes that bound loose."""
     edges = copurchase_edges(spark, sf_dir)
     # Materialize the oriented edge list ONCE (localCheckpoint truncates
     # lineage): deg, adjacency, the edge-iterator join and n_edges all read

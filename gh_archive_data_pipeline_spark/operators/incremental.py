@@ -133,8 +133,7 @@ def q100_hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
                 .alias("hll_within_2pct")))
 
 
-def apply_cdc(snapshot: DataFrame, changes: DataFrame, key: str,
-              op_col: str = "op", seq_col: str = "seq") -> DataFrame:
+def apply_cdc(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
     """Apply a CDC batch (op ∈ I/U/D with a monotonic sequence) to a
     snapshot — batch MERGE semantics without a transactional table format:
 
@@ -151,11 +150,11 @@ def apply_cdc(snapshot: DataFrame, changes: DataFrame, key: str,
     no transactional format, and the semantics are engine-portable."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
+    w = Window.partitionBy(key).orderBy(F.col("seq").desc())
     latest = (changes.withColumn("__rn", F.row_number().over(w))
               .filter(F.col("__rn") == 1).drop("__rn"))
     untouched = snapshot.join(latest.select(key), key, "left_anti")
-    upserts = (latest.filter(F.col(op_col) != "D")
+    upserts = (latest.filter(F.col("op") != "D")
                .select(*snapshot.columns))
     return untouched.unionByName(upserts)
 

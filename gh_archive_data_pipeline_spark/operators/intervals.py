@@ -21,15 +21,14 @@ from ..sources.readers import load_table
 BUCKET_SEC = 86_400  # grid aligned to the fixture promos' 1-day intervals
 
 
-def bucketed_interval_join(points: DataFrame, ts: str,
-                           intervals: DataFrame, start: str, end: str,
-                           bucket_sec: int = BUCKET_SEC) -> DataFrame:
+def bucketed_interval_join(points: DataFrame, ts: str, intervals: DataFrame,
+                           start: str, end: str) -> DataFrame:
     """Inner-join points to every interval containing them ([start, end]
     closed), via the bucket-grid equi join. Intervals spanning B buckets
     replicate B times (choose bucket_sec ≈ typical interval length to keep
     B small); points never replicate."""
     def bucket_of(col: Column) -> Column:
-        return (F.unix_timestamp(col) / bucket_sec).cast("bigint")
+        return (F.unix_timestamp(col) / BUCKET_SEC).cast("bigint")
 
     iv = intervals.withColumn(
         "_bucket",

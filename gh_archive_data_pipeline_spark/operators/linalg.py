@@ -29,10 +29,11 @@ from .similarity import _as_double
 
 DIM = 64
 ITERATIONS = 15
+KMEANS_K = 8       # k-means clusters, seeded by the first k vec_ids
+KMEANS_ROUNDS = 5  # Lloyd rounds, replayed unrolled by the oracle
 
 
-def gram_stats(emb: DataFrame,
-               dim: int = DIM) -> tuple[int, list[float], list[list[float]]]:
+def gram_stats(emb: DataFrame) -> tuple[int, list[float], list[list[float]]]:
     """One distributed pass over the embedding column returning the PCA
     sufficient statistics ``(n, m, S)``: row count, per-dimension sums
     ``m_j = sum_i e_ij`` and the uncentered Gram matrix
@@ -67,8 +68,8 @@ def gram_stats(emb: DataFrame,
     # n exactly once per group
     by_i = {int(r["i"]): float(r["s"]) for r in rows}
     n = int(rows[0]["nn"])
-    m = [by_i[j] for j in range(dim)]
-    s = [[by_i[dim + j * dim + k] for k in range(dim)] for j in range(dim)]
+    m = [by_i[j] for j in range(DIM)]
+    s = [[by_i[DIM + j * DIM + k] for k in range(DIM)] for j in range(DIM)]
     return n, m, s
 
 
@@ -109,16 +110,16 @@ def pca_top_component(emb: DataFrame) -> tuple[list[float], float, float]:
     return v, eigenvalue, eigenvalue / total_var
 
 
-def _pca_oracle(iterations: int = ITERATIONS, dim: int = DIM) -> str:
+def _pca_oracle() -> str:
     """Replay of :func:`pca_top_component`: the Gram statistics computed in
     SQL (sequential sums vs Spark's BLAS-partial distributed sums — the
     usual summation-order noise, ~1e-13 relative, nine orders below the
     6-decimal output rounding), then all 15 driver-float iterations
     unrolled as MATERIALIZED CTEs computing the identical IEEE double
     sequence. Deterministic by construction: all-ones init, fixed rounds."""
-    rng = f"range(1, {dim + 1})"
+    rng = f"range(1, {DIM + 1})"
     stages = []
-    for k in range(1, iterations + 1):
+    for k in range(1, ITERATIONS + 1):
         stages.append(f"""
     i{k} AS MATERIALIZED (
         SELECT list_transform(w, x -> x / nrm) AS v, nrm / n AS eig
@@ -157,12 +158,12 @@ def _pca_oracle(iterations: int = ITERATIONS, dim: int = DIM) -> str:
                                   GROUP BY tj.j, tk.k)
                             GROUP BY j)) AS s) ss
     ),
-    i0 AS (SELECT list_transform({rng}, i -> 1.0 / sqrt({dim}.0)) AS v,
+    i0 AS (SELECT list_transform({rng}, i -> 1.0 / sqrt({DIM}.0)) AS v,
            0.0 AS eig),
     {''.join(stages)}
     jmax AS (
         SELECT t.j AS j
-        FROM i{iterations}, LATERAL (SELECT unnest({rng}) AS j) t
+        FROM i{ITERATIONS}, LATERAL (SELECT unnest({rng}) AS j) t
         ORDER BY abs(v[t.j]) DESC, t.j ASC LIMIT 1
     ),
     tv AS (
@@ -175,7 +176,7 @@ def _pca_oracle(iterations: int = ITERATIONS, dim: int = DIM) -> str:
                AS loading,
            round(eig, 6) AS eigenvalue,
            round(eig / total_var, 6) AS var_share
-    FROM i{iterations}, jmax jm, tv,
+    FROM i{ITERATIONS}, jmax jm, tv,
          LATERAL (SELECT unnest({rng}) AS j) t
     ORDER BY dim_idx
     """
@@ -228,18 +229,18 @@ def _argmin_cluster(centroids: list[list[float]]):
             F.expr(best).getField("d2").alias("d2"))
 
 
-def kmeans(emb: DataFrame, k: int = 8, iterations: int = 5) -> tuple[list[list[float]], DataFrame]:
+def kmeans(emb: DataFrame) -> tuple[list[list[float]], DataFrame]:
     """Lloyd's k-means over the embedding column. Same scale contract as
     pca_top_component: per-iteration driver state is the k×dim codebook
     (collected — bounded and small, like the IVF codebook in
     operators/similarity.py), and each iteration is ONE partial-aggregated
     shuffle on the k-valued cluster key. Seeds are the first k vectors by
     vec_id (deterministic, replayable)."""
-    seed_rows = (emb.orderBy("vec_id").limit(k)
+    seed_rows = (emb.orderBy("vec_id").limit(KMEANS_K)
                  .select(_as_double(F.col("embedding")).alias("e")).collect())
     centroids = [list(r.e) for r in seed_rows]
     emb = emb.select("vec_id", "embedding").localCheckpoint()
-    for _ in range(iterations):
+    for _ in range(KMEANS_ROUNDS):
         cluster, _d2 = _argmin_cluster(centroids)
         sums = (
             emb.select(cluster, _as_double(F.col("embedding")).alias("e"))
@@ -260,7 +261,7 @@ def kmeans(emb: DataFrame, k: int = 8, iterations: int = 5) -> tuple[list[list[f
     return centroids, assigned
 
 
-def _kmeans_oracle(k: int = 8, iterations: int = 5, dim: int = DIM) -> str:
+def _kmeans_oracle() -> str:
     """Unrolled replay of :func:`kmeans`: per Lloyd round, an assignment
     CTE (argmin over the k centroids with the same (d2, j) lexicographic
     tie-break as the Spark struct-min) and a centroid CTE (per-cluster
@@ -269,9 +270,9 @@ def _kmeans_oracle(k: int = 8, iterations: int = 5, dim: int = DIM) -> str:
     seeds are the first k vectors by vec_id, 5 fixed rounds; the only
     engine divergence is distributed-vs-sequential summation order, ~1e-13
     relative against the 6-decimal output rounding."""
-    rng = f"range(1, {dim + 1})"
+    rng = f"range(1, {DIM + 1})"
     stages = []
-    for r in range(1, iterations + 2):   # last round = final assignment
+    for r in range(1, KMEANS_ROUNDS + 2):   # last round = final assignment
         stages.append(f"""
     a{r} AS MATERIALIZED (
         SELECT vec_id, e, cluster, d2 FROM (
@@ -285,7 +286,7 @@ def _kmeans_oracle(k: int = 8, iterations: int = 5, dim: int = DIM) -> str:
                   FROM emb, c{r - 1} c)
         ) WHERE rn = 1
     ),""")
-        if r <= iterations:
+        if r <= KMEANS_ROUNDS:
             stages.append(f"""
     c{r} AS MATERIALIZED (
         SELECT p.j, COALESCE(m.c, p.c) AS c
@@ -303,14 +304,14 @@ def _kmeans_oracle(k: int = 8, iterations: int = 5, dim: int = DIM) -> str:
                  FROM embeddings),
     c0 AS MATERIALIZED (
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, e AS c
-        FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT {k})
+        FROM (SELECT vec_id, e FROM emb ORDER BY vec_id LIMIT {KMEANS_K})
     ),
     {''.join(stages)}
     dummy AS (SELECT 1)
     SELECT CAST(cluster AS INTEGER) AS cluster,
            CAST(count(*) AS BIGINT) AS n,
            round(avg(d2), 6) AS mean_sq_dist
-    FROM a{iterations + 1}
+    FROM a{KMEANS_ROUNDS + 1}
     GROUP BY cluster
     ORDER BY cluster
     """
@@ -342,13 +343,13 @@ def q149_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_COMP = 3
 
 
-def pca_components(emb: DataFrame, n_comp: int = N_COMP
-                   ) -> tuple[list[list[float]], list[float], list[float]]:
-    """Top ``n_comp`` principal components by power iteration WITH
+def pca_components(
+        emb: DataFrame) -> tuple[list[list[float]], list[float], list[float]]:
+    """Top N_COMP principal components by power iteration WITH
     deflation — all on the driver against the one-pass :func:`gram_stats`
     statistics (the centered covariance C = S/n - mu mu^T is a 64x64
     driver matrix; each found component is subtracted as C <- C - eig v
-    v^T). Corpus cost is ONE scan regardless of n_comp. Returns
+    v^T). Corpus cost is ONE scan regardless of N_COMP. Returns
     (components, eigenvalues, mu); each component's sign is canonical
     (largest-|loading| entry positive) — deflation is sign-invariant, so
     the flip is safe to apply inside the loop."""
@@ -359,7 +360,7 @@ def pca_components(emb: DataFrame, n_comp: int = N_COMP
          for j in range(DIM)]
     comps: list[list[float]] = []
     eigs: list[float] = []
-    for _ in range(n_comp):
+    for _ in range(N_COMP):
         v = [1.0 / math.sqrt(DIM)] * DIM
         nrm = 0.0
         for _ in range(ITERATIONS):
@@ -375,20 +376,19 @@ def pca_components(emb: DataFrame, n_comp: int = N_COMP
     return comps, eigs, mu
 
 
-def _pca_proj_oracle(n_comp: int = N_COMP, iterations: int = ITERATIONS,
-                     dim: int = DIM) -> str:
+def _pca_proj_oracle() -> str:
     """Replay of :func:`pca_components` + the per-label projection report:
     the same gram CTE as q146's oracle, the covariance matrix as a 64x64
     list-of-lists, and per component 15 matvec-normalize rounds, a
     canonical sign flip, then a deflation stage — every float in the same
     IEEE order as the driver loop."""
-    rng = f"range(1, {dim + 1})"
+    rng = f"range(1, {DIM + 1})"
     parts = []
-    for p in range(1, n_comp + 1):
+    for p in range(1, N_COMP + 1):
         parts.append(f"""
-    p{p}i0 AS (SELECT list_transform({rng}, i -> 1.0 / sqrt({dim}.0)) AS v,
+    p{p}i0 AS (SELECT list_transform({rng}, i -> 1.0 / sqrt({DIM}.0)) AS v,
                0.0 AS eig),""")
-        for t in range(1, iterations + 1):
+        for t in range(1, ITERATIONS + 1):
             parts.append(f"""
     p{p}i{t} AS MATERIALIZED (
         SELECT list_transform(w, x -> x / nrm) AS v, nrm AS eig
@@ -403,9 +403,9 @@ def _pca_proj_oracle(n_comp: int = N_COMP, iterations: int = ITERATIONS,
         SELECT CASE WHEN v[jm.j] < 0
                     THEN list_transform(v, x -> -x) ELSE v END AS v,
                eig
-        FROM p{p}i{iterations},
+        FROM p{p}i{ITERATIONS},
              (SELECT t.j AS j
-              FROM p{p}i{iterations},
+              FROM p{p}i{ITERATIONS},
                    LATERAL (SELECT unnest({rng}) AS j) t
               ORDER BY abs(v[t.j]) DESC, t.j ASC LIMIT 1) jm
     ),
@@ -422,9 +422,9 @@ def _pca_proj_oracle(n_comp: int = N_COMP, iterations: int = ITERATIONS,
                   FROM comp{p}, gram) AS proj,
                (SELECT eig FROM comp{p}) AS eig
         FROM emb, comp{p}
-    )""" for p in range(1, n_comp + 1))
+    )""" for p in range(1, N_COMP + 1))
     unions = " UNION ALL ".join(
-        f"SELECT * FROM proj{p}" for p in range(1, n_comp + 1))
+        f"SELECT * FROM proj{p}" for p in range(1, N_COMP + 1))
     return f"""
     WITH emb AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
                  FROM embeddings),

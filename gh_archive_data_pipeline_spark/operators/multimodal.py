@@ -48,9 +48,7 @@ def _decode_stub(payload: bytes) -> tuple[int, int]:
     return 64 + h % 512, 64 + (h >> 9) % 512
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload",
-                     id_col: str = "doc_id",
-                     media_type_col: str = "media_type") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Arrow-batched: each pandas batch holds ~10k rows of (id, type, bytes);
@@ -60,15 +58,15 @@ def extract_features(df: DataFrame, payload_col: str = "payload",
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            dims = [_decode_stub(bytes(b)) for b in pdf[payload_col]]
+            dims = [_decode_stub(bytes(b)) for b in pdf["payload"]]
             yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media_type": pdf[media_type_col],
-                "n_bytes": [len(bytes(b)) for b in pdf[payload_col]],
+                "doc_id": pdf["doc_id"],
+                "media_type": pdf["media_type"],
+                "n_bytes": [len(bytes(b)) for b in pdf["payload"]],
                 "fake_width": [w for w, _ in dims],
                 "fake_height": [h for _, h in dims],
                 "content_sha": [hashlib.sha256(bytes(b)).hexdigest()
-                                for b in pdf[payload_col]],
+                                for b in pdf["payload"]],
             })
 
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
@@ -150,11 +148,9 @@ FRAME_SCHEMA = ("doc_id bigint, frame_idx int, frame_ts_sec double, "
                 "frame_sha string")
 
 
-def sample_frames(assets: DataFrame, every_sec: float = 2.0,
-                  payload_col: str = "payload", id_col: str = "doc_id",
-                  duration_col: str = "duration_sec") -> DataFrame:
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame sampling over video assets: one output row per sampled frame
-    (every ``every_sec`` seconds of asset duration) — the 1-to-N mapInPandas
+    (every 2 seconds of asset duration) — the 1-to-N mapInPandas
     expansion shape every video pipeline needs.
 
     The decode kernel is a deterministic stub (no codecs in this container):
@@ -172,13 +168,13 @@ def sample_frames(assets: DataFrame, every_sec: float = 2.0,
             out = {"doc_id": [], "frame_idx": [], "frame_ts_sec": [],
                    "frame_sha": []}
             for _, row in pdf.iterrows():
-                payload = bytes(row[payload_col])
-                n_frames = max(1, int(math.ceil(row[duration_col]
-                                                / every_sec)))
+                payload = bytes(row["payload"])
+                n_frames = max(1, int(math.ceil(row["duration_sec"]
+                                                / 2.0)))
                 for i in range(n_frames):
-                    out["doc_id"].append(row[id_col])
+                    out["doc_id"].append(row["doc_id"])
                     out["frame_idx"].append(i)
-                    out["frame_ts_sec"].append(round(i * every_sec, 3))
+                    out["frame_ts_sec"].append(round(i * 2.0, 3))
                     out["frame_sha"].append(hashlib.sha256(
                         payload + i.to_bytes(4, "big")).hexdigest())
             yield pd.DataFrame(out)
@@ -229,9 +225,9 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_plan(assets: DataFrame, max_side: int = 224) -> DataFrame:
+def resize_plan(assets: DataFrame) -> DataFrame:
     """Resize AUDIT for image payloads: compute source dims (stubbed decode)
-    and the aspect-preserving target dims that fit in max_side×max_side —
+    and the aspect-preserving target dims that fit in 224×224 —
     the planning half of a real resize kernel. The actual pixel resample is
     the stubbed seam (no codec libs here); everything Spark-side is real:
     Arrow batch shape, integer-exact scale ratio (numerator/denominator, no
@@ -247,15 +243,15 @@ def resize_plan(assets: DataFrame, max_side: int = 224) -> DataFrame:
             w = pd.Series([d[0] for d in dims], index=pdf.index)
             h = pd.Series([d[1] for d in dims], index=pdf.index)
             long_side = w.combine(h, max)
-            tw = (w * max_side // long_side).astype("int32")
-            th = (h * max_side // long_side).astype("int32")
+            tw = (w * 224 // long_side).astype("int32")
+            th = (h * 224 // long_side).astype("int32")
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "fake_width": w.astype("int32"),
                 "fake_height": h.astype("int32"),
                 "target_width": tw,
                 "target_height": th,
-                "scale_num": pd.Series([max_side] * len(pdf), index=pdf.index,
+                "scale_num": pd.Series([224] * len(pdf), index=pdf.index,
                                        dtype="int64"),
                 "scale_den": long_side.astype("int64"),
             })
@@ -304,11 +300,10 @@ ENERGY_SCHEMA = (
 )
 
 
-def audio_energy_frames(assets: DataFrame, frame_ms: int = 250,
-                        n_frames: int = 8) -> DataFrame:
-    """Audio-modality plumbing: windowed RMS/peak energy per fixed-length
-    frame — the silence-trim / voice-activity precursor. The PCM decode is
-    the stubbed seam (deterministic fake samples derived from the payload
+def audio_energy_frames(assets: DataFrame) -> DataFrame:
+    """Audio-modality plumbing: windowed RMS/peak energy for eight 250 ms
+    frames per asset — the silence-trim / voice-activity precursor. The
+    PCM decode is the stubbed seam (deterministic fake samples derived from the payload
     digest, marked like _decode_stub); the Spark side is the real shape: a
     1-to-N mapInPandas expansion where payload bytes never outlive their
     input batch and only (doc_id, frame stats) rows shuffle onward.
@@ -336,11 +331,11 @@ def audio_energy_frames(assets: DataFrame, frame_ms: int = 250,
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm = fake_pcm(payload, samples_per_frame * n_frames)
-                for i in range(n_frames):
+                pcm = fake_pcm(payload, samples_per_frame * 8)
+                for i in range(8):
                     fr = pcm[i * samples_per_frame:(i + 1) * samples_per_frame]
                     rms = int((sum(s * s for s in fr) // len(fr)) ** 0.5)
-                    rows.append((int(doc_id), i, i * frame_ms, rms,
+                    rows.append((int(doc_id), i, i * 250, rms,
                                  max(abs(s) for s in fr)))
             yield pd.DataFrame(rows, columns=[
                 "doc_id", "frame_idx", "start_ms", "rms", "peak"])
@@ -447,12 +442,11 @@ import struct
 import zlib
 
 
-def make_png(width: int, height: int, bit_depth: int = 8,
-             color_type: int = 6) -> bytes:
+def make_png(width: int, height: int) -> bytes:
     """Minimal structurally-valid PNG: signature + IHDR (with real CRC) +
     IEND. No IDAT — header parsers (ours and real ones) read only IHDR."""
-    ihdr = b"IHDR" + struct.pack(">II5B", width, height, bit_depth,
-                                 color_type, 0, 0, 0)
+    ihdr = b"IHDR" + struct.pack(">II5B", width, height, 8, 6,  # 8-bit RGBA
+                                 0, 0, 0)
     iend = b"IEND"
     return (b"\x89PNG\r\n\x1a\n"
             + struct.pack(">I", 13) + ihdr
@@ -475,15 +469,14 @@ def make_jpeg(width: int, height: int) -> bytes:
     return b"\xff\xd8" + app0 + com + sof0 + b"\xff\xd9"
 
 
-def make_wav(sample_rate: int, channels: int, bits: int = 16,
-             n_data: int = 64) -> bytes:
+def make_wav(sample_rate: int, channels: int) -> bytes:
     """Minimal structurally-valid RIFF/WAVE: a JUNK chunk BEFORE fmt (real
     encoders emit those — a correct reader walks chunks), then fmt + data."""
     junk = b"JUNK" + struct.pack("<I", 4) + b"\x00" * 4
     fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, channels, sample_rate,
-                                sample_rate * channels * bits // 8,
-                                channels * bits // 8, bits)
-    data = b"data" + struct.pack("<I", n_data) + bytes(n_data)
+                                sample_rate * channels * 2,   # 16-bit PCM
+                                channels * 2, 16)
+    data = b"data" + struct.pack("<I", 64) + bytes(64)
     body = b"WAVE" + junk + fmt + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
@@ -581,16 +574,15 @@ def _planted_media(doc_id: int) -> bytes:
     return make_wav(_WAV_RATES[doc_id % 5], 1 + doc_id % 2)
 
 
-def extract_media_headers(assets: DataFrame, payload_col: str = "payload",
-                          id_col: str = "doc_id") -> DataFrame:
+def extract_media_headers(assets: DataFrame) -> DataFrame:
     """mapInPandas over a binary column: parse real container headers into
     typed metadata. Payload bytes never outlive their input batch — only
     the small header fields flow onward (the 100 TB multimodal discipline:
     derive features in the scan stage, shuffle metadata only)."""
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            parsed = [parse_media_header(bytes(b)) for b in pdf[payload_col]]
-            out = {"doc_id": pdf[id_col]}
+            parsed = [parse_media_header(bytes(b)) for b in pdf["payload"]]
+            out = {"doc_id": pdf["doc_id"]}
             out["container"] = [p["container"] for p in parsed]
             for f in ("width", "height", "bit_depth", "sample_rate",
                       "channels", "bits_per_sample"):
@@ -1047,8 +1039,7 @@ def _riff_chunk(tag: bytes, body: bytes) -> bytes:
     return tag + struct.pack("<I", len(body)) + body + pad
 
 
-def make_avi(width: int, height: int,
-             frames: list[bytes], fps: int = 25) -> bytes:
+def make_avi(width: int, height: int, frames: list[bytes]) -> bytes:
     """Minimal-but-REAL AVI: RIFF('AVI ') -> LIST hdrl (avih + LIST strl
     with a 'vids'/'DIB ' strh and a BITMAPINFOHEADER strf) -> LIST movi of
     uncompressed 24bpp '00db' frames. Each frame must be in DIB layout:
@@ -1058,6 +1049,7 @@ def make_avi(width: int, height: int,
     for f in frames:
         if len(f) != stride * height:
             raise ValueError("frame must be stride*height DIB bytes")
+    fps = 25
     avih = struct.pack("<14I", 1_000_000 // fps, stride * height * fps, 0,
                        0x10, len(frames), 0, 1, stride * height, width,
                        height, 0, 0, 0, 0)
@@ -1076,10 +1068,9 @@ def make_avi(width: int, height: int,
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_avi_frames(payload: bytes,
-                      every: int = 1) -> dict:
+def decode_avi_frames(payload: bytes) -> dict:
     """REAL frame-sample decode: walk the RIFF tree to avih (dimensions,
-    frame count) and the movi LIST, take every ``every``-th '00db' frame,
+    frame count) and the movi LIST, take every 2nd '00db' frame,
     and undo the DIB layout — strip row padding, flip bottom-up rows,
     keep BGR byte order. Returns {width, height, n_frames,
     frames: [(frame_idx, bytes)]} with each frame's samples row-major
@@ -1119,7 +1110,7 @@ def decode_avi_frames(payload: bytes,
     stride = (3 * width + 3) & ~3
     out = []
     for idx, dib in frames:
-        if idx % every:
+        if idx % 2:
             continue
         if len(dib) != stride * height:
             raise ValueError("bad frame size")
@@ -1196,7 +1187,7 @@ def q410_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in pdf["doc_id"]:
                 doc_id = int(i)
                 w, h, n, frames = _planted_video(doc_id)
-                dec = decode_avi_frames(make_avi(w, h, frames), every=2)
+                dec = decode_avi_frames(make_avi(w, h, frames))
                 assert (dec["width"], dec["height"],
                         dec["n_frames"]) == (w, h, n)
                 for idx, pix in dec["frames"]:
@@ -1334,15 +1325,14 @@ def q428_image_ahash_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 AFP_WINDOW = 32  # frames per energy window
 
 
-def audio_fingerprint(chan: list[int], window: int = AFP_WINDOW
-                      ) -> tuple[int, int, int]:
+def audio_fingerprint(chan: list[int]) -> tuple[int, int, int]:
     """(n_windows, energy_sum, fingerprint) for one channel: sum |s| per
-    window of ``window`` frames (last window may be partial), fingerprint
+    window of AFP_WINDOW frames (last window may be partial), fingerprint
     bit w-1 set when window w's energy exceeds window w-1's — the
     delta-coded energy contour every audio-dedup fingerprint family
     (Shazam/Chromaprint lineage) is built on. Pure integers throughout."""
-    energies = [sum(abs(s) for s in chan[i:i + window])
-                for i in range(0, len(chan), window)]
+    energies = [sum(abs(s) for s in chan[i:i + AFP_WINDOW])
+                for i in range(0, len(chan), AFP_WINDOW)]
     fp = sum((1 << (w - 1)) for w in range(1, len(energies))
              if energies[w] > energies[w - 1])
     return len(energies), sum(energies), fp
@@ -1501,7 +1491,7 @@ def q431_video_shot_boundaries(spark: SparkSession,
             for i in pdf["doc_id"]:
                 doc_id = int(i)
                 w, h, n, frames = _planted_video(doc_id)
-                dec = decode_avi_frames(make_avi(w, h, frames), every=2)
+                dec = decode_avi_frames(make_avi(w, h, frames))
                 hashes = []
                 for idx, pix in dec["frames"]:
                     ival = [pix[3 * k] + pix[3 * k + 1] + pix[3 * k + 2]

@@ -80,14 +80,6 @@ from .sampling import SPLIT_SALT, SPLIT_TRAIN, SPLIT_VAL, assign_split
 from .selection import _SEQ_LEN, pack_spans
 
 
-def _ckpt(df: DataFrame, enabled: bool) -> DataFrame:
-    """Lazy phase boundary: materialize ONCE at first use (localCheckpoint
-    — on a cluster, the persisted stage product). Disabled by the
-    plan-seam gate test, which needs the un-truncated lineage to count
-    composition exchanges."""
-    return df.localCheckpoint(eager=False) if enabled else df
-
-
 def decon_reference(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ev, bits): the held-out benchmark slice's distinct shingle-hash
     pairs and Bloom set-bit table — IMMUTABLE standing state. q440 derives
@@ -196,15 +188,15 @@ def phase3_gate_split(docs: DataFrame, ann1: DataFrame,
 
 
 def build_disposition_table(spark: SparkSession, docs: DataFrame,
-                            w: list[float], b: float,
-                            checkpoint: bool = True) -> DataFrame:
+                            w: list[float], b: float) -> DataFrame:
     """The pipeline's product: ONE row per candidate document (doc_id >=
     EVAL_DOCS) with its split, funnel ``outcome`` ('exact_dup' |
     'chunk_dup' | 'contaminated' | 'quality' | 'kept'), chunk
     ``disposition`` and ``kept_tokens``. ``w``/``b`` are the q401 probe
-    weights. Three phase products, each checkpointed once (see module
-    docstring): the exact-dedup annotation, the chunk-disposition
-    annotation, and the final disposition table.
+    weights. Three phase products, each a lazy localCheckpoint that
+    materializes once at first use (on a cluster, the persisted stage
+    product; see module docstring): the exact-dedup annotation, the
+    chunk-disposition annotation, and the final disposition table.
 
     The post-policy text column is dropped BEFORE the final checkpoint
     (round 12, guide §5 — don't persist what the consumer never reads):
@@ -212,10 +204,10 @@ def build_disposition_table(spark: SparkSession, docs: DataFrame,
     the checkpoint materializes the decision table without the corpus
     payload; at scale that is a bounded stats table instead of a second
     copy of the corpus."""
-    flag1 = _ckpt(phase1_exact(docs), checkpoint)
-    ann1 = _ckpt(phase2_chunk(flag1), checkpoint)
+    flag1 = phase1_exact(docs).localCheckpoint(eager=False)
+    ann1 = phase2_chunk(flag1).localCheckpoint(eager=False)
     disp = phase3_gate_split(docs, ann1, w, b).drop("text")
-    return _ckpt(disp, checkpoint)
+    return disp.localCheckpoint(eager=False)
 
 
 def _pipeline_ctes() -> str:

@@ -40,6 +40,7 @@ M_SUB = 8          # subspaces
 DSUB = DIM // M_SUB
 K_PQ = 16          # centroids per subspace (codes fit 4 bits; stored as int)
 ROUNDS = 3         # Lloyd rounds per subspace — fixed, replayable
+ADC_TOPK = 10      # neighbours an ADC search returns
 
 
 def _sub_expr(s: int) -> str:
@@ -73,21 +74,21 @@ def _argmin_cells(sub: str, centroids: list[list[float]]) -> str:
             " AS d2, j AS j)))")
 
 
-def pq_train(emb: DataFrame, m_sub: int = M_SUB, k: int = K_PQ,
-             rounds: int = ROUNDS) -> list[list[list[float]]]:
+def pq_train(emb: DataFrame) -> list[list[list[float]]]:
     """Train the PQ codebook: per-subspace Lloyd k-means, all subspaces in
     one distributed pass per round. Returns ``codebooks[s][j]`` (length-DSUB
-    centroid lists). Seeds are the subvectors of the first ``k`` vectors by
+    centroid lists). Seeds are the subvectors of the first K_PQ vectors by
     vec_id — deterministic, replayable."""
-    seed_rows = (emb.orderBy("vec_id").limit(k)
+    seed_rows = (emb.orderBy("vec_id").limit(K_PQ)
                  .selectExpr("cast(embedding as array<double>) AS e")
                  .collect())
-    if len(seed_rows) < k:
-        raise ValueError(f"pq_train: need >= {k} vectors, got {len(seed_rows)}")
+    if len(seed_rows) < K_PQ:
+        raise ValueError(
+            f"pq_train: need >= {K_PQ} vectors, got {len(seed_rows)}")
     cbs = [[list(r.e[s * DSUB:(s + 1) * DSUB]) for r in seed_rows]
-           for s in range(m_sub)]
+           for s in range(M_SUB)]
     emb = emb.select("vec_id", "embedding").localCheckpoint()
-    for _ in range(rounds):
+    for _ in range(ROUNDS):
         per_sub = [
             F.struct(
                 F.lit(s).alias("s"),
@@ -95,7 +96,7 @@ def pq_train(emb: DataFrame, m_sub: int = M_SUB, k: int = K_PQ,
                 .getField("j").alias("cluster"),
                 F.expr(_sub_expr(s)).alias("sub"),
             )
-            for s in range(m_sub)
+            for s in range(M_SUB)
         ]
         sums = (emb.select(F.explode(F.array(*per_sub)).alias("t"))
                 .select("t.s", "t.cluster", "t.sub")
@@ -110,9 +111,9 @@ def pq_train(emb: DataFrame, m_sub: int = M_SUB, k: int = K_PQ,
                 [float(by_key[(s, j)][f"s{d}"]) / by_key[(s, j)].n
                  for d in range(DSUB)]
                 if (s, j) in by_key else cbs[s][j]   # empty cluster: keep
-                for j in range(k)
+                for j in range(K_PQ)
             ]
-            for s in range(m_sub)
+            for s in range(M_SUB)
         ]
     return cbs
 
@@ -126,7 +127,7 @@ def _cached_codebooks(spark: SparkSession,
 
 
 def adc_topk(emb: DataFrame, codebooks: list[list[list[float]]],
-             query: list[float], topk: int = 10,
+             query: list[float],
              exclude_vec_id: int | None = None) -> DataFrame:
     """Top-k nearest vectors to ``query`` by ADC over PQ codes: the 8x16
     distance table is driver-computed (128 floats, literals in the plan);
@@ -160,7 +161,7 @@ def adc_topk(emb: DataFrame, codebooks: list[list[list[float]]],
         out = out.filter(F.col("vec_id") != exclude_vec_id)
     from pyspark.sql import Window
     w = Window.orderBy("adc_dist", "vec_id")
-    return (out.orderBy("adc_dist", "vec_id").limit(topk)
+    return (out.orderBy("adc_dist", "vec_id").limit(ADC_TOPK)
             .withColumn("rank", F.row_number().over(w).cast("int"))
             .select("rank", "vec_id", "adc_dist", "true_d2"))
 
@@ -169,8 +170,7 @@ def adc_topk(emb: DataFrame, codebooks: list[list[list[float]]],
 # Oracle replay (q390/q149 technique: unrolled fixed-round float sequence)
 # ---------------------------------------------------------------------------
 
-def _pq_train_ctes(k: int = K_PQ, m_sub: int = M_SUB,
-                   rounds: int = ROUNDS) -> str:
+def _pq_train_ctes() -> str:
     """CTE text replaying pq_train: subvector rows, seeded codebook, and
     per-round (assignment, centroid-update) pairs with the exact (d2, j)
     lexicographic tie-break and empty-cluster carry-over of the Spark loop.
@@ -178,7 +178,7 @@ def _pq_train_ctes(k: int = K_PQ, m_sub: int = M_SUB,
     assignment = the encode pass)."""
     rngd = f"range(1, {DSUB + 1})"
     stages = []
-    for r in range(1, rounds + 2):     # final round = encode assignment
+    for r in range(1, ROUNDS + 2):     # final round = encode assignment
         stages.append(f"""
     a{r} AS MATERIALIZED (
         SELECT vec_id, s, sub, cluster, d2 FROM (
@@ -192,7 +192,7 @@ def _pq_train_ctes(k: int = K_PQ, m_sub: int = M_SUB,
                   FROM subs sb JOIN c{r - 1} c ON c.s = sb.s)
         ) WHERE rn = 1
     ),""")
-        if r <= rounds:
+        if r <= ROUNDS:
             stages.append(f"""
     c{r} AS MATERIALIZED (
         SELECT p.s, p.j, COALESCE(m.c, p.c) AS c
@@ -211,13 +211,13 @@ def _pq_train_ctes(k: int = K_PQ, m_sub: int = M_SUB,
     subs AS MATERIALIZED (
         SELECT vec_id, t.s AS s,
                e[t.s * {DSUB} + 1 : t.s * {DSUB} + {DSUB}] AS sub
-        FROM emb, LATERAL (SELECT unnest(range(0, {m_sub})) AS s) t
+        FROM emb, LATERAL (SELECT unnest(range(0, {M_SUB})) AS s) t
     ),
     c0 AS MATERIALIZED (
         SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1
                    AS j, sub AS c
         FROM subs
-        WHERE vec_id IN (SELECT vec_id FROM emb ORDER BY vec_id LIMIT {k})
+        WHERE vec_id IN (SELECT vec_id FROM emb ORDER BY vec_id LIMIT {K_PQ})
     ),
     {''.join(stages)}
     _pq_end AS (SELECT 1)"""
@@ -263,7 +263,7 @@ def q399_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("subspace", "cluster"))
 
 
-def _adc_oracle(topk: int = 10) -> str:
+def _adc_oracle() -> str:
     rngd = f"range(1, {DSUB + 1})"
     return f"""
     WITH {_pq_train_ctes()},
@@ -294,7 +294,7 @@ def _adc_oracle(topk: int = 10) -> str:
            round(td, 6) AS true_d2
     FROM adc JOIN truth ON truth.vec_id = adc.vec_id, qv
     WHERE adc.vec_id != qid
-    ORDER BY round(adc_raw, 6), adc.vec_id LIMIT {topk}
+    ORDER BY round(adc_raw, 6), adc.vec_id LIMIT {ADC_TOPK}
     """
 
 
@@ -311,7 +311,7 @@ def q400_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = (emb.orderBy("vec_id").limit(1)
             .selectExpr("vec_id", "cast(embedding as array<double>) AS e")
             .collect()[0])
-    return adc_topk(emb, cbs, list(qrow.e), topk=10,
+    return adc_topk(emb, cbs, list(qrow.e),
                     exclude_vec_id=int(qrow.vec_id))
 
 
@@ -657,18 +657,16 @@ def q411_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQ_LEVELS = 255  # 8-bit affine grid: code in [0, 255]
 
 
-def sq_dim_stats(emb: DataFrame, vec_col: str = "embedding",
-                 dim: int = DIM) -> DataFrame:
+def sq_dim_stats(emb: DataFrame) -> DataFrame:
     """Per-dimension (dim, vmin, vmax) over the corpus — the scalar-quant
     calibration table. One linear pass; posexplode fans each row into
-    ``dim`` (dim_id, value) pairs that partial-aggregate map-side down to
-    a ``dim``-row table (broadcastable; at cluster scale this is the
-    artifact you'd persist next to the PQ codebooks). ``dim`` bounds the
-    exploded width: components past it are dropped, so calibrating a
-    prefix (Matryoshka-style truncation) is the same call."""
+    DIM (dim_id, value) pairs that partial-aggregate map-side down to
+    a DIM-row table (broadcastable; at cluster scale this is the
+    artifact you'd persist next to the PQ codebooks). Components past DIM
+    are dropped."""
     v = emb.select(
-        F.posexplode(F.expr(f"cast({vec_col} as array<double>)"))
-        .alias("pos", "x")).where(F.col("pos") < dim)
+        F.posexplode(F.expr("cast(embedding as array<double>)"))
+        .alias("pos", "x")).where(F.col("pos") < DIM)
     return (v.select((F.col("pos") + 1).alias("dim"), "x")
             .groupBy("dim")
             .agg(F.min("x").alias("vmin"), F.max("x").alias("vmax")))

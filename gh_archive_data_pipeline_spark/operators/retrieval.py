@@ -61,11 +61,10 @@ MMR_ROUNDS = 5      # selections per query
 # ---------------------------------------------------------------------------
 
 
-def lexical_rank(docs: DataFrame, query_ids: list[int],
-                 depth: int = FUSE_DEPTH) -> DataFrame:
+def lexical_rank(docs: DataFrame, query_ids: list[int]) -> DataFrame:
     """Rank documents against each query document by Jaccard similarity of
     their distinct word sets. Returns (query_id, doc_id, rank) with
-    rank <= depth.
+    rank <= FUSE_DEPTH.
 
     The query side is a bounded set (broadcast); the corpus side is one
     scan computing array_distinct(split) — intersection/union sizes are
@@ -84,12 +83,11 @@ def lexical_rank(docs: DataFrame, query_ids: list[int],
     )
     w = Window.partitionBy("query_id").orderBy(F.col("jac").desc(), "doc_id")
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= depth)
+            .filter(F.col("rank") <= FUSE_DEPTH)
             .select("query_id", "doc_id", "rank"))
 
 
-def vector_rank(emb: DataFrame, query_ids: list[int],
-                depth: int = FUSE_DEPTH) -> DataFrame:
+def vector_rank(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     """Rank the corpus against each query vector by cosine, unrounded
     (ranks only — RRF never sees the score). Same broadcast-queries /
     corpus-never-shuffles shape as similarity.brute_force_topk."""
@@ -105,12 +103,11 @@ def vector_rank(emb: DataFrame, query_ids: list[int],
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "doc_id")
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= depth)
+            .filter(F.col("rank") <= FUSE_DEPTH)
             .select("query_id", "doc_id", "rank"))
 
 
-def rrf_fuse(rankings: dict[str, DataFrame], k: int = RRF_K,
-             topk: int = FUSE_TOPK) -> DataFrame:
+def rrf_fuse(rankings: dict[str, DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion: score(d) = sum over lists of 1/(k + rank_d).
 
     ``rankings`` maps a modality name to a (query_id, doc_id, rank) frame.
@@ -136,21 +133,21 @@ def rrf_fuse(rankings: dict[str, DataFrame], k: int = RRF_K,
     ]
     fused = (
         tagged.groupBy("query_id", "doc_id")
-        .agg(F.sum(F.lit(1.0) / (F.lit(k) + F.col("rank"))).alias("score"),
+        .agg(F.sum(F.lit(1.0) / (F.lit(RRF_K) + F.col("rank")))
+             .alias("score"),
              F.count("*").cast("bigint").alias("n_lists"),
              *per_modality)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     return (
         fused.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= topk)
+        .filter(F.col("fused_rank") <= FUSE_TOPK)
         .select("query_id", "doc_id", F.round("score", 6).alias("rrf_score"),
                 "n_lists", *[f"{n}_rank" for n in names], "fused_rank")
     )
 
 
-def mmr_diversify(cand: DataFrame, pair: DataFrame, lam: float = MMR_LAM,
-                  mu: float = MMR_MU, k: int = MMR_ROUNDS) -> DataFrame:
+def mmr_diversify(cand: DataFrame, pair: DataFrame) -> DataFrame:
     """Greedy maximal-marginal-relevance selection over a candidate set.
 
     ``cand``: (query_id, doc_id, rel) — relevance to the query, raw double.
@@ -170,13 +167,13 @@ def mmr_diversify(cand: DataFrame, pair: DataFrame, lam: float = MMR_LAM,
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
 
     first = (cand.select("query_id", "doc_id",
-                         (F.lit(lam) * F.col("rel")).alias("score"))
+                         (F.lit(MMR_LAM) * F.col("rel")).alias("score"))
              .withColumn("rn", F.row_number().over(w))
              .filter(F.col("rn") == 1)
              .select("query_id", F.lit(1).alias("round"), "doc_id", "score"))
     selected = first.localCheckpoint()
 
-    for r in range(2, k + 1):
+    for r in range(2, MMR_ROUNDS + 1):
         rem = cand.join(selected, ["query_id", "doc_id"], "left_anti")
         maxsim = (
             rem.join(pair.withColumnRenamed("a_id", "doc_id"),
@@ -190,8 +187,8 @@ def mmr_diversify(cand: DataFrame, pair: DataFrame, lam: float = MMR_LAM,
         pick = (
             maxsim.select(
                 "query_id", "doc_id",
-                (F.lit(lam) * F.col("rel")
-                 - F.lit(mu) * F.col("maxsim")).alias("score"))
+                (F.lit(MMR_LAM) * F.col("rel")
+                 - F.lit(MMR_MU) * F.col("maxsim")).alias("score"))
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("query_id", F.lit(r).alias("round"), "doc_id", "score")
@@ -527,13 +524,13 @@ def _d2(a: str, b: str, dot: str = _DOT_DUCK) -> str:
             f" + {dot.format(a=b, b=b)}")
 
 
-def _kcenter_oracle(k: int = KCENTER_K) -> str:
+def _kcenter_oracle() -> str:
     ctes = [
         "cv AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
         """acc1 AS (SELECT 1 AS round, vec_id, 0.0 AS radius, v
            FROM cv WHERE vec_id = 0)""",
     ]
-    for r in range(2, k + 1):
+    for r in range(2, KCENTER_K + 1):
         p = r - 1
         ctes.append(f"""md{r} AS (
            SELECT c.vec_id, min({_d2('c.v', 's.v')}) AS mind
@@ -549,7 +546,7 @@ def _kcenter_oracle(k: int = KCENTER_K) -> str:
     return ("WITH " + ",\n".join(ctes)
             + f"""
 SELECT CAST(round AS INTEGER) AS round, vec_id, round(radius, 6) AS radius
-FROM acc{k} ORDER BY round""")
+FROM acc{KCENTER_K} ORDER BY round""")
 
 
 def _kcenter_pick(c: DataFrame, selected: DataFrame, r: int) -> DataFrame:

@@ -584,8 +584,7 @@ SPLIT_SALT = "split-v1"   # version the assignment: changing the salt is the
 SPLIT_TRAIN, SPLIT_VAL = 80, 90  # bucket cutoffs of 100
 
 
-def assign_split(df: DataFrame, id_col: str = "doc_id",
-                 salt: str = SPLIT_SALT) -> DataFrame:
+def assign_split(df: DataFrame) -> DataFrame:
     """Add a ``split`` column ('train'/'validation'/'test') as a PURE
     function of (salt, id): md5-60-bit bucket mod 100, <80 train, <90
     validation, else test. Deterministic and order-free — the property a
@@ -595,8 +594,8 @@ def assign_split(df: DataFrame, id_col: str = "doc_id",
     train set). Scan-side expressions only; no shuffle, no RNG state."""
     bucket = F.pmod(
         F.conv(F.substring(
-            F.md5(F.concat(F.lit(salt + ":"),
-                           F.col(id_col).cast("string"))), 1, 15),
+            F.md5(F.concat(F.lit(SPLIT_SALT + ":"),
+                           F.col("doc_id").cast("string"))), 1, 15),
             16, 10).cast("bigint"),
         F.lit(100))
     return df.withColumn(

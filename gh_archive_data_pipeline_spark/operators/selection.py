@@ -102,13 +102,13 @@ def global_running_sum(df: DataFrame, order_cols: list[str], value_col: str,
 
 
 def global_rank(df: DataFrame, order_cols: list[str],
-                out_col: str = "rank",
                 num_partitions: int | None = None) -> DataFrame:
-    """row_number() over a GLOBAL order, distributed: a prefix sum of ones.
-    ``order_cols`` must be a total order (unique tie-break column last)."""
+    """row_number() over a GLOBAL order, distributed: a prefix sum of ones
+    in column ``__r``. ``order_cols`` must be a total order (unique
+    tie-break column last)."""
     ranked = global_running_sum(
         df.withColumn("__one", F.lit(1).cast("bigint")),
-        order_cols, "__one", out_col, num_partitions)
+        order_cols, "__one", "__r", num_partitions)
     return ranked.drop("__one")
 
 
@@ -225,7 +225,7 @@ def q380_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.sum("llr_b"), 6).alias("log_w")))
     ranked = global_rank(
         weights.withColumn("__neg_w", -F.col("log_w")),
-        ["__neg_w", "doc_id"], "__r")
+        ["__neg_w", "doc_id"])
     return (ranked.select("doc_id", "n_grams", "log_w",
                           (F.col("__r") <= _DSIR_TOP_K).alias("selected"))
             .orderBy("doc_id"))
@@ -501,16 +501,13 @@ _Q442_EPOCHS = (0, 1)     # the epochs the registry query materializes
 
 
 def epoch_order(seqs: DataFrame, epochs: list[int],
-                seed: str = EPOCH_SEED,
-                num_shards: int = EPOCH_SHARDS,
-                id_col: str = "seq_id",
                 distributed: bool = True) -> DataFrame:
     """Deterministic per-epoch dataloader ordering over a sequence
     universe — the last mechanical step between packed sequences (q397)
     and a training run (VERDICT-r8 item 4).
 
     Each (epoch, sequence) gets a keyed permutation key md5-60
-    ('{seed}:{epoch}:{seq_id}'); the SHARD is key mod ``num_shards`` — a
+    ('{EPOCH_SEED}:{epoch}:{seq_id}'); the SHARD is key mod EPOCH_SHARDS — a
     pure function of (seed, epoch, seq_id), so growing the corpus can
     NEVER move an existing sequence across shards (the q418 split
     stability property, applied to the shuffle). The within-shard OFFSET
@@ -525,9 +522,9 @@ def epoch_order(seqs: DataFrame, epochs: list[int],
     rank: ``okey`` is uniform on [0, 2^60), so ``bucket = okey >> 54``
     (64 range buckets) respects the (okey, seq_id) order within a shard —
     the within-shard offset decomposes into within-bucket rank (a Window
-    over (epoch, shard, bucket): num_shards × 64 parallel tasks per
+    over (epoch, shard, bucket): EPOCH_SHARDS × 64 parallel tasks per
     epoch, never one task per shard) plus the count of earlier buckets
-    (a ≤ |epochs|·num_shards·64-row aggregate, collected — the same
+    (a ≤ |epochs|·EPOCH_SHARDS·64-row aggregate, collected — the same
     bounded-driver-state discipline as :func:`global_running_sum` — and
     broadcast back). One real shuffle, no range-sampling pass, no Window
     partitioned by just (epoch, shard). ``distributed=False`` keeps the
@@ -535,14 +532,14 @@ def epoch_order(seqs: DataFrame, epochs: list[int],
     property-pinned (tests/test_selection.py). Output:
     (epoch, shard, offset, seq_id)."""
     ep = F.explode(F.array(*[F.lit(e) for e in epochs])).alias("epoch")
-    keyed = (seqs.select(F.col(id_col).alias("seq_id"))
+    keyed = (seqs.select("seq_id")
              .select("seq_id", ep)
              .withColumn("okey", F.conv(F.substring(F.md5(F.concat(
-                 F.lit(seed + ":"), F.col("epoch").cast("string"),
+                 F.lit(EPOCH_SEED + ":"), F.col("epoch").cast("string"),
                  F.lit(":"), F.col("seq_id").cast("string"))), 1, 15),
                  16, 10).cast("bigint"))
              .withColumn("shard",
-                         F.pmod("okey", F.lit(num_shards)).cast("int")))
+                         F.pmod("okey", F.lit(EPOCH_SHARDS)).cast("int")))
     if not distributed:
         w = (Window.partitionBy("epoch", "shard")
              .orderBy("okey", "seq_id"))
@@ -911,7 +908,7 @@ def q382_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (probs.groupBy("doc_id")
               .agg(F.count(F.lit(1)).alias("n_bigrams"),
                    F.round(F.exp(F.avg(-F.log("pr"))), 4).alias("ppl")))
-    ranked = global_rank(scored, ["ppl", "doc_id"], "__r")
+    ranked = global_rank(scored, ["ppl", "doc_id"])
     # count rows from the RANKED frame — global_rank materialized the
     # scored table (its prefix-sum checkpoint), so this reads the
     # checkpoint; counting `scored` itself re-derived the entire bigram
@@ -1090,10 +1087,7 @@ _DOREMI_KEEP = 0.99     # 1 - smoothing, as a LITERAL so both engines parse
 #                         shared literal removes the question)
 
 
-def doremi_reweight(losses: list[float], rounds: int = _DOREMI_ROUNDS,
-                    eta: float = _DOREMI_ETA,
-                    smooth: float = _DOREMI_SMOOTH,
-                    keep: float = _DOREMI_KEEP) -> list[float]:
+def doremi_reweight(losses: list[float]) -> list[float]:
     """DoReMi's multiplicative-weights domain update (Xie et al. 2023) as a
     pure driver-side function over per-DOMAIN rows — the UniMax/IVF-
     codebook bounded-state discipline. Per round: excess loss of each
@@ -1108,15 +1102,16 @@ def doremi_reweight(losses: list[float], rounds: int = _DOREMI_ROUNDS,
 
     d = len(losses)
     alpha = [1.0 / d] * d
-    for _ in range(rounds):
+    for _ in range(_DOREMI_ROUNDS):
         avg = 0.0
         for a, x in zip(alpha, losses):
             avg += a * x
-        raw = [a * math.exp(eta * (x - avg)) for a, x in zip(alpha, losses)]
+        raw = [a * math.exp(_DOREMI_ETA * (x - avg))
+               for a, x in zip(alpha, losses)]
         s = 0.0
         for r in raw:
             s += r
-        alpha = [keep * r / s + smooth / d for r in raw]
+        alpha = [_DOREMI_KEEP * r / s + _DOREMI_SMOOTH / d for r in raw]
     return alpha
 
 

@@ -25,6 +25,22 @@ from ..sources.readers import (fixture_memo, hadoop_fs, load_table,
                                read_parquet, scan_parallel, scratch_dir)
 from ..plans.registry import register
 
+# Every vector search here returns each query's TOPK nearest neighbours.
+# The IVF paths quantize into IVF_CELLS cells seeded by the lowest ids and
+# probe IVF_NPROBE of them; the SRP-LSH paths hash into SRP_TABLES tables
+# of SRP_PLANES seeded ±1 planes over SRP_DIM-wide vectors. The engine,
+# the SRP index's params row and the DuckDB oracles all read these.
+TOPK = 5
+IVF_CELLS = 16
+IVF_NPROBE = 4
+SRP_PLANES = 4
+SRP_TABLES = 16
+SRP_DIM = 64
+SRP_SEED = 42
+# The params row an SRP index records; a search refuses any other.
+_SRP_PARAMS = dict(planes_per_table=SRP_PLANES, num_tables=SRP_TABLES,
+                   dim=SRP_DIM, seed=SRP_SEED)
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -46,16 +62,17 @@ def cosine(a, b):
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Exact cosine top-k: broadcast queries × corpus, window top-k.
 
     Output: query_id, neighbor_id, cosine_sim, rank (self-matches excluded).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("qv"))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv"))
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("cv"))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("sim"))
@@ -63,38 +80,10 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id",
                 F.round("sim", 6).alias("cosine_sim"), "rank")
     )
-
-
-def _srp_bucketer(planes_per_table: int, num_tables: int,
-                  dim: int, seed: int):
-    """Signed-random-projection bucketing UDF for embedding_near_dup's
-    Arrow strategy: (L·k) × dim plane matrix; one Arrow-batched matmul
-    hashes a whole vector batch into all L tables at once (BLAS, not
-    per-element HOF eval). Returns array<long> of L bucket codes per
-    vector."""
-    import random
-
-    from pyspark.sql.types import ArrayType, LongType
-
-    rng = random.Random(seed)
-    plane_matrix = np.array(
-        [[rng.gauss(0, 1) for _ in range(dim)]
-         for _ in range(num_tables * planes_per_table)])
-    weights = (1 << np.arange(planes_per_table))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())            # (batch, dim)
-        signs = (mat @ plane_matrix.T) >= 0        # (batch, L·k)
-        bits = signs.reshape(len(mat), num_tables, planes_per_table)
-        codes = (bits * weights).sum(axis=2)       # (batch, L)
-        return pd.Series(list(codes))
-
-    return buckets_of
 
 
 # ---------------------------------------------------------------------------
@@ -130,31 +119,29 @@ def q44_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (q45) is the scale path."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return brute_force_topk(emb, queries, k=5)
+    return brute_force_topk(emb, queries)
 
 
-def _rademacher_planes(planes_per_table: int, num_tables: int, dim: int,
-                       seed: int = 42) -> list[list[list[float]]]:
+def _rademacher_planes() -> list[list[list[float]]]:
     """Seeded ±1 (Rademacher) hyperplanes — Achlioptas-style random
-    projections. ±1 entries make the projection a signed SUM of vector
+    projections: SRP_TABLES tables of SRP_PLANES planes over SRP_DIM
+    components. ±1 entries make the projection a signed SUM of vector
     components: every multiply is exact, so Spark's fold and the SQL
     oracle's list_dot_product see bit-identical dots."""
     import random
 
-    rnd = random.Random(seed)
-    return [[[1.0 if rnd.random() < 0.5 else -1.0 for _ in range(dim)]
-             for _ in range(planes_per_table)]
-            for _ in range(num_tables)]
+    rnd = random.Random(SRP_SEED)
+    return [[[1.0 if rnd.random() < 0.5 else -1.0 for _ in range(SRP_DIM)]
+             for _ in range(SRP_PLANES)]
+            for _ in range(SRP_TABLES)]
 
 
-def _srp_planes_df(spark: SparkSession, planes_per_table: int,
-                   num_tables: int, dim: int, seed: int) -> DataFrame:
+def _srp_planes_df(spark: SparkSession) -> DataFrame:
     """The planes as ONE broadcast literal VALUE (a single-row DataFrame),
     not L·k·dim expression-literal nodes — inlining them as F.lit trees
     costs ~14 s of Catalyst analysis/codegen at the default width."""
-    planes = _rademacher_planes(planes_per_table, num_tables, dim, seed)
     return spark.createDataFrame(
-        [(planes, [1 << j for j in range(planes_per_table)])],
+        [(_rademacher_planes(), [1 << j for j in range(SRP_PLANES)])],
         "planes array<array<array<double>>>, wgt array<bigint>")
 
 
@@ -175,13 +162,10 @@ def _srp_hash(df: DataFrame, out_id: str, out_vec: str,
                     .alias("t", "b")))
 
 
-def srp_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    planes_per_table: int = 4, num_tables: int = 16,
-                    dim: int = 64, seed: int = 42) -> DataFrame:
+def srp_bucket_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Multi-table SRP-LSH top-k with the hashing JVM-side (no Python hop).
 
-    L independent tables of ``planes_per_table`` ±1 hyperplanes each; the
+    L independent tables of SRP_PLANES ±1 hyperplanes each; the
     corpus is hashed once into (table, bucket) keys — L rows per vector —
     each query probes its L buckets, and candidates are the union, scored
     exactly. Recall for a pair with per-plane agreement p = 1−θ/π is
@@ -202,17 +186,16 @@ def srp_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     pruned to (id, vec), no shuffle — bought for a candidate exchange
     that stays O(pairs × ints) however wide the vectors."""
     spark = corpus.sparkSession
-    planes_df = _srp_planes_df(spark, planes_per_table, num_tables, dim,
-                               seed)
+    planes_df = _srp_planes_df(spark)
 
     def hashed(df, out_id, out_vec):
         return _srp_hash(df, out_id, out_vec, planes_df)
 
-    cd = scan_parallel(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                     _as_double(F.col(vec_col)).alias("cv")))
+    cd = scan_parallel(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                     _as_double(F.col("embedding")).alias("cv")))
     c = hashed(cd, "neighbor_id", "cv").select("neighbor_id", "t", "b")
-    qh = hashed(queries.select(F.col(id_col).alias("query_id"),
-                               _as_double(F.col(vec_col)).alias("qv")),
+    qh = hashed(queries.select(F.col("vec_id").alias("query_id"),
+                               _as_double(F.col("embedding")).alias("qv")),
                 "query_id", "qv")
     candidates = (
         c.join(F.broadcast(qh.select("query_id", "t", "b")), ["t", "b"])
@@ -229,22 +212,20 @@ def srp_bucket_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                                                "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id",
                 F.round("sim", 6).alias("cosine_sim"), "rank")
     )
 
 
-def _q45_oracle(k: int = 5, planes_per_table: int = 4, num_tables: int = 16,
-                dim: int = 64, seed: int = 42,
-                corpus_excl: str | None = None) -> str:
+def _q45_oracle(corpus_excl: str | None = None) -> str:
     """DuckDB twin of srp_bucket_topk: identical ±1 plane literals, bucket
     codes, candidate join and exact re-scoring. ``corpus_excl`` is an
     optional SQL predicate over the CANDIDATE side (alias ``c``) — q449
     applies the deletion predicate there, exactly where the engine's
     tombstone anti-join prunes the bucket scan (queries stay untouched,
     matching ivf/srp delete semantics)."""
-    planes = _rademacher_planes(planes_per_table, num_tables, dim, seed)
+    planes = _rademacher_planes()
     excl = f" AND NOT ({corpus_excl})" if corpus_excl else ""
 
     def bucket_sql(tbl) -> str:
@@ -260,7 +241,7 @@ def _q45_oracle(k: int = 5, planes_per_table: int = 4, num_tables: int = 16,
     ),
     hashed AS (
         SELECT vec_id, v,
-               unnest(range(0, {num_tables})) AS t,
+               unnest(range(0, {SRP_TABLES})) AS t,
                unnest([{buckets}]) AS b
         FROM vec
     ),
@@ -283,7 +264,7 @@ def _q45_oracle(k: int = 5, planes_per_table: int = 4, num_tables: int = 16,
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                                        ORDER BY sim DESC, neighbor_id) AS rnk
           FROM scored)
-    WHERE rnk <= {k}
+    WHERE rnk <= {TOPK}
     """
 
 
@@ -292,11 +273,10 @@ def q45_embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: multi-table signed-random-projection LSH bucketing +
     in-bucket exact cosine, hashed JVM-side with seeded ±1 planes so the
     ENTIRE pipeline (bucketing included) hash-matches the DuckDB oracle.
-    Recall vs brute force additionally asserted in unit tests; the
-    pandas-UDF/BLAS bucketer variant stays exercised via q82."""
+    Recall vs brute force additionally asserted in unit tests."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return srp_bucket_topk(emb, queries, k=5)
+    return srp_bucket_topk(emb, queries)
 
 
 @register(
@@ -351,11 +331,9 @@ def q46_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       lsh_prefilter: bool = False, hashing: str = "blas",
-                       **lsh_kwargs) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine >= t).
+def embedding_near_dup(corpus: DataFrame,
+                       lsh_prefilter: bool = False) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine >= 0.4).
 
     Exact path (default): unit-normalize each vector ONCE in a projection,
     then score id-ordered pairs with a plain dot product — half the HOF work
@@ -364,20 +342,14 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
     baseline*; at 100 TB set ``lsh_prefilter=True`` to score only LSH
     candidate pairs (one linear bucketing pass, near-linear candidate join;
     recall <1 is the documented tradeoff, precision stays 1 because every
-    candidate is exactly verified).
-
-    ``hashing`` picks the prefilter's bucketer: ``"blas"`` (default) is the
-    Gaussian-plane Arrow matmul (:func:`_srp_bucketer` — fastest per
-    vector); ``"portable"`` is the seeded ±1-plane JVM-HOF hashing
-    (:func:`_srp_hash`, same machinery as q45/q365) whose arithmetic an
-    ANSI-SQL engine reproduces bit-exactly — the knob that buys q82 its
-    full-fidelity oracle, same trade as the MinHash md5-60/xxhash64 pair.
+    candidate is exactly verified). The prefilter buckets with the seeded
+    ±1-plane JVM-HOF hashing (:func:`_srp_hash`, same machinery as
+    q45/q365), whose arithmetic an ANSI-SQL engine reproduces bit-exactly —
+    which gives q82 its full-fidelity oracle.
     """
-    if hashing not in ("blas", "portable"):
-        raise ValueError(f"hashing must be 'blas' or 'portable', "
-                         f"got {hashing!r}")
-    vecs = (corpus.select(F.col(id_col).alias("id"),
-                          _as_double(F.col(vec_col)).alias("v"))
+    threshold = 0.4
+    vecs = (corpus.select(F.col("vec_id").alias("id"),
+                          _as_double(F.col("embedding")).alias("v"))
             .withColumn("n", norm(F.col("v")))
             .select("id", F.transform("v", lambda x: x / F.col("n")).alias("uv")))
     if lsh_prefilter:
@@ -385,23 +357,9 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
         # self-join — vectors re-attach at verify time. Shipping two
         # 128-dim arrays per candidate row through the join + distinct was
         # measured 20× slower at sf0.1 than this id-only plan.
-        if hashing == "portable":
-            hashed = _srp_hash(
-                vecs, "id", "uv",
-                _srp_planes_df(corpus.sparkSession,
-                               lsh_kwargs.get("planes_per_table", 4),
-                               lsh_kwargs.get("num_tables", 16),
-                               lsh_kwargs.get("dim", 64),
-                               lsh_kwargs.get("seed", 42))
-            ).select("id", "t", "b")
-        else:
-            buckets_of = _srp_bucketer(
-                lsh_kwargs.get("planes_per_table", 4),
-                lsh_kwargs.get("num_tables", 16),
-                lsh_kwargs.get("dim", 64),
-                lsh_kwargs.get("seed", 42))
-            hashed = vecs.select(
-                "id", F.posexplode(buckets_of(F.col("uv"))).alias("t", "b"))
+        hashed = _srp_hash(vecs, "id", "uv",
+                           _srp_planes_df(corpus.sparkSession)
+                           ).select("id", "t", "b")
         a_ids = hashed.select(F.col("id").alias("id_a"), "t", "b")
         b_ids = hashed.select(F.col("id").alias("id_b"), "t", "b")
         pairs = (a_ids.join(b_ids, ["t", "b"])
@@ -430,24 +388,22 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
     )
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             num_cells: int = 16, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF (inverted-file) approximate top-k: coarse-quantize the corpus into
-    ``num_cells`` Voronoi cells, probe only the ``nprobe`` nearest cells per
+    IVF_CELLS Voronoi cells, probe only the IVF_NPROBE nearest cells per
     query, score exactly within probed cells.
 
-    Seeds are the first ``num_cells`` corpus vectors by id — deterministic,
+    Seeds are the first IVF_CELLS corpus vectors by id — deterministic,
     no iterative training (at 100 TB you'd k-means a sample offline and
     broadcast the codebook; the search-side plan is identical). Cell
     assignment is one Arrow-batched matmul per vector batch; the candidate
-    join shuffles only (cell, id) keys, and each query touches ~nprobe/num_cells
+    join shuffles only (cell, id) keys, and each query touches ~IVF_NPROBE/IVF_CELLS
     of the corpus — that fraction, not the corpus size, is the scan cost.
     """
     from pyspark.sql.types import ArrayType, IntegerType
 
-    seeds = (corpus.orderBy(id_col).limit(num_cells)
-             .select(_as_double(F.col(vec_col)).alias("v")).collect())
+    seeds = (corpus.orderBy("vec_id").limit(IVF_CELLS)
+             .select(_as_double(F.col("embedding")).alias("v")).collect())
     cb = np.array([r.v for r in seeds])                 # (C, dim) codebook
     cb_unit = cb / np.linalg.norm(cb, axis=1, keepdims=True)
 
@@ -461,13 +417,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             return pd.Series(list(top))
         return cells_of
 
-    c = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
+    c = (corpus.select(F.col("vec_id").alias("neighbor_id"),
+                       _as_double(F.col("embedding")).alias("cv"))
          .withColumn("cell", nearest_cells(1)(F.col("cv"))[0]))
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qv"))
+    q = (queries.select(F.col("vec_id").alias("query_id"),
+                        _as_double(F.col("embedding")).alias("qv"))
          .select("query_id", "qv",
-                 F.explode(nearest_cells(nprobe)(F.col("qv"))).alias("cell")))
+                 F.explode(nearest_cells(IVF_NPROBE)(F.col("qv")))
+                 .alias("cell")))
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -477,7 +434,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id",
                 F.round("sim", 6).alias("cosine_sim"), "rank")
     )
@@ -485,8 +442,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 def _unit_argmax_udf(cb: "np.ndarray"):
     """Arrow-batched nearest-centroid assignment shared by every
-    coarse-quantizing operator (IVF build, IVF append, SemDeDup's BLAS
-    path): row-normalize the batch, one matmul against the unit codebook,
+    coarse-quantizing operator (IVF build, IVF append, IVF-PQ's
+    coarse cells): row-normalize the batch, one matmul against the unit codebook,
     argmax with numpy's first-index (= lowest cell) tie-break — the
     tie-break every SQL oracle replays as ORDER BY sim DESC, cell ASC.
     One definition so a semantics fix (dtype pin, zero-norm guard) cannot
@@ -504,8 +461,7 @@ def _unit_argmax_udf(cb: "np.ndarray"):
     return cell_of
 
 
-def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+def build_ivf_index(corpus: DataFrame, index_dir: str) -> None:
     """Materialize an IVF index as a cell-PARTITIONED parquet layout: the
     index IS the physical layout, so probing a cell is reading a directory.
 
@@ -513,16 +469,16 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
     cell, then directory-per-cell files) as the ``ingest=base`` generation
     of the shared index layout (sources/index_store.py; the build first
     clears the index's own sub-trees), and ``{index_dir}/codebook`` holds
-    the ``num_cells`` centroid vectors. ``ivf_search`` then prunes the scan
-    to the probed cells — at 100 TB a search touches nprobe/num_cells of the
+    the IVF_CELLS centroid vectors. ``ivf_search`` then prunes the scan
+    to the probed cells — at 100 TB a search touches IVF_NPROBE/IVF_CELLS of the
     corpus BYTES, not just rows, because pruning happens at file listing.
-    Codebook seeds are the ``num_cells`` lowest-id corpus vectors
+    Codebook seeds are the IVF_CELLS lowest-id corpus vectors
     (deterministic; at scale you'd k-means a sample offline — layout and
     search plan are identical either way). Cell assignment is one
     Arrow-batched matmul map pass (ties: lowest cell wins, matching the SQL
     oracle's ORDER BY sim DESC, cell ASC)."""
-    seeds = (corpus.orderBy(id_col).limit(num_cells)
-             .select(_as_double(F.col(vec_col)).alias("v")).collect())
+    seeds = (corpus.orderBy("vec_id").limit(IVF_CELLS)
+             .select(_as_double(F.col("embedding")).alias("v")).collect())
     cb = np.array([r.v for r in seeds])                  # (C, dim) codebook
     cell_of = _unit_argmax_udf(cb)
     spark = corpus.sparkSession
@@ -532,16 +488,15 @@ def build_ivf_index(corpus: DataFrame, index_dir: str, num_cells: int = 16,
         f"cell int, centroid array<double>")
      .coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebook"))
     index_store.write_generation(
-        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        corpus.select("vec_id", _as_double(F.col("embedding")).alias("v"))
         .withColumn("cell", cell_of(F.col("v")))
         .repartition("cell"),   # co-locate each cell's rows -> one file each
         index_dir, "corpus", None, "cell")
 
 
-def ivf_balance(spark: SparkSession, index_dir: str,
-                overfull_factor: float = 2.0) -> DataFrame:
+def ivf_balance(spark: SparkSession, index_dir: str) -> DataFrame:
     """Per-cell occupancy of an IVF index, split by ingest generation,
-    with an ``overfull`` flag (> ``overfull_factor`` × the uniform share)
+    with an ``overfull`` flag (> 2× the uniform share)
     — the drift signal of the frozen-codebook append trade.
     Reads ONLY partition columns (cell, ingest): zero vector bytes, pure
     metadata shape, safe to run on every ingest cycle at 100 TB. Deleted
@@ -559,19 +514,18 @@ def ivf_balance(spark: SparkSession, index_dir: str,
     return (cells.crossJoin(F.broadcast(tot))
             .select("cell", "n_vectors", "n_base", "n_appended",
                     F.round(share, 6).alias("occupancy_ratio"),
-                    (share > overfull_factor).alias("overfull"))
+                    (share > 2.0).alias("overfull"))
             .orderBy("cell"))
 
 
-def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
-               k: int = 5, nprobe: int = 4,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Search a ``build_ivf_index`` layout: probe the ``nprobe`` nearest
+def ivf_search(spark: SparkSession, index_dir: str,
+               queries: DataFrame) -> DataFrame:
+    """Search a ``build_ivf_index`` layout: probe the IVF_NPROBE nearest
     cells per query, score exactly inside probed cells only.
 
     Probe selection is pure JVM (queries × broadcast 16-row codebook →
     window top-nprobe — no Python in the loop). The probed-cell set is at
-    most ``num_cells`` distinct ints regardless of query count, so it is
+    most IVF_CELLS distinct ints regardless of query count, so it is
     collected (bounded driver state) and applied as a STATIC
     ``cell IN (...)`` partition filter — the parquet scan lists only the
     probed cell directories; unprobed cells cost zero I/O. Scoring joins the
@@ -582,12 +536,12 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("csim").desc(), F.col("cell").asc())
     probes = (queries
-              .select(F.col(id_col).alias("query_id"),
-                      _as_double(F.col(vec_col)).alias("qv"))
+              .select(F.col("vec_id").alias("query_id"),
+                      _as_double(F.col("embedding")).alias("qv"))
               .crossJoin(cb)
               .withColumn("csim", cosine(F.col("qv"), F.col("centroid")))
               .withColumn("crank", F.row_number().over(probe_w))
-              .filter(F.col("crank") <= nprobe)
+              .filter(F.col("crank") <= IVF_NPROBE)
               .select("query_id", "qv", "cell"))
     # bounded driver state: <= num_cells ints, no matter how many queries
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
@@ -595,15 +549,15 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     corpus = index_store.live(
         spark, index_dir,
         read_parquet(spark, f"{index_dir}/corpus")
-        .filter(F.col("cell").isin(cells)), id_col)
+        .filter(F.col("cell").isin(cells)), "vec_id")
     scored = (corpus.join(F.broadcast(probes), "cell")
-              .filter(F.col("query_id") != F.col(id_col))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
+              .filter(F.col("query_id") != F.col("vec_id"))
+              .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       cosine(F.col("qv"), F.col("v")).alias("sim")))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),
                                                "neighbor_id")
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "neighbor_id",
                     F.round("sim", 6).alias("cosine_sim"), "rank"))
 
@@ -613,7 +567,7 @@ def ivf_search(spark: SparkSession, index_dir: str, queries: DataFrame,
 @fixture_memo("embeddings")
 def _ivf_cached_index(spark: SparkSession, sf_dir: str) -> str:
     d = scratch_dir("ivf_index_")
-    build_ivf_index(load_table(spark, sf_dir, "embeddings"), d, num_cells=16)
+    build_ivf_index(load_table(spark, sf_dir, "embeddings"), d)
     return d
 
 
@@ -673,8 +627,7 @@ def q358_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q71 path, and pruned file count)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_search(spark, _ivf_cached_index(spark, sf_dir), queries,
-                      k=5, nprobe=4)
+    return ivf_search(spark, _ivf_cached_index(spark, sf_dir), queries)
 
 
 @register(
@@ -698,18 +651,15 @@ def q448_ivf_tombstone_search(spark: SparkSession,
     q365 build-dominated convention."""
     emb = load_table(spark, sf_dir, "embeddings")
     d = scratch_dir("ivf_tomb_")
-    build_ivf_index(emb, d, num_cells=16)
+    build_ivf_index(emb, d)
     index_store.delete(spark, d,
                        emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
                        .select("vec_id"), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_search(spark, d, queries, k=5, nprobe=4)
+    return ivf_search(spark, d, queries)
 
 
-def build_srp_index(corpus: DataFrame, index_dir: str,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    planes_per_table: int = 4, num_tables: int = 16,
-                    dim: int = 64, seed: int = 42) -> None:
+def build_srp_index(corpus: DataFrame, index_dir: str) -> None:
     """Materialize the multi-table SRP-LSH index as a bucket-PARTITIONED
     parquet layout — the LSH sibling of :func:`build_ivf_index`: the index
     IS the physical layout, so probing a bucket is reading a directory.
@@ -717,48 +667,40 @@ def build_srp_index(corpus: DataFrame, index_dir: str,
     Each vector lands once per table under partition key
     ``tb = t·2^planes + b`` (one combined column so pruning is a single
     IN-set). That is the standard multi-table LSH storage trade —
-    ``num_tables``× the corpus bytes — bought back at search time: a query
+    SRP_TABLES× the corpus bytes — bought back at search time: a query
     batch reads ONLY its probed bucket directories. The build clears the
     index's own sub-trees and writes ``{index_dir}/params``, the
-    plane-generation parameters, so search re-derives the same seeded
-    planes (shared index layout, sources/index_store.py; the buckets table
-    has no ingest generations)."""
+    plane-generation parameters, so a search refuses an index hashed with
+    other planes (shared index layout, sources/index_store.py; the buckets
+    table has no ingest generations)."""
     spark = corpus.sparkSession
-    index_store.begin_build(
-        spark, index_dir, ("buckets",),
-        dict(planes_per_table=planes_per_table, num_tables=num_tables,
-             dim=dim, seed=seed))
-    planes_df = _srp_planes_df(spark, planes_per_table, num_tables, dim,
-                               seed)
-    cd = scan_parallel(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                     _as_double(F.col(vec_col)).alias("cv")))
-    (_srp_hash(cd, "neighbor_id", "cv", planes_df)
-     .withColumn("tb", F.col("t") * (1 << planes_per_table) + F.col("b"))
+    index_store.begin_build(spark, index_dir, ("buckets",), _SRP_PARAMS)
+    cd = scan_parallel(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                     _as_double(F.col("embedding"))
+                                     .alias("cv")))
+    (_srp_hash(cd, "neighbor_id", "cv", _srp_planes_df(spark))
+     .withColumn("tb", F.col("t") * (1 << SRP_PLANES) + F.col("b"))
      .repartition("tb")     # co-locate each bucket's rows -> one file each
      .write.mode("overwrite").partitionBy("tb")
      .parquet(f"{index_dir}/buckets"))
 
 
-def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
-               k: int = 5, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def srp_search(spark: SparkSession, index_dir: str,
+               queries: DataFrame) -> DataFrame:
     """Search a ``build_srp_index`` layout: hash the query batch with the
     SAME seeded planes, read ONLY the probed bucket directories (static
     ``tb IN (...)`` partition prune — at most num_tables·|queries| ints of
     driver state, capped by the total bucket count), then exact-cosine
     verify + per-query top-k. Returns exactly what the non-materialized
     :func:`srp_bucket_topk` returns — the layout changes cost, not
-    semantics (pinned by unit test)."""
-    planes_per_table, num_tables, dim, seed = index_store.check_params(
-        spark, index_dir, "planes_per_table", "num_tables", "dim", "seed")
-    planes_df = _srp_planes_df(spark, planes_per_table, num_tables, dim,
-                               seed)
-    probes = (_srp_hash(queries.select(F.col(id_col).alias("query_id"),
-                                       _as_double(F.col(vec_col))
+    semantics (pinned by unit test). An index whose params row differs
+    from :data:`_SRP_PARAMS` is refused."""
+    index_store.check_params(spark, index_dir, **_SRP_PARAMS)
+    probes = (_srp_hash(queries.select(F.col("vec_id").alias("query_id"),
+                                       _as_double(F.col("embedding"))
                                        .alias("qv")),
-                        "query_id", "qv", planes_df)
-              .withColumn("tb", F.col("t") * (1 << planes_per_table)
-                          + F.col("b")))
+                        "query_id", "qv", _srp_planes_df(spark))
+              .withColumn("tb", F.col("t") * (1 << SRP_PLANES) + F.col("b")))
     keys = [r.tb for r in probes.select("tb").distinct().collect()]
     # static partition prune; deleted ids never become candidates
     bucket_rows = index_store.live(
@@ -778,7 +720,7 @@ def srp_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),
                                                "neighbor_id")
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "neighbor_id",
                     F.round("sim", 6).alias("cosine_sim"), "rank"))
 
@@ -801,7 +743,7 @@ def q365_srp_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned scan are pinned in unit tests."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return srp_search(spark, _srp_cached_index(spark, sf_dir), queries, k=5)
+    return srp_search(spark, _srp_cached_index(spark, sf_dir), queries)
 
 
 @register("q449_srp_tombstone_search",
@@ -826,7 +768,7 @@ def q449_srp_tombstone_search(spark: SparkSession,
                        emb.filter(F.pmod("vec_id", F.lit(7)) == 3)
                        .select("vec_id"), "vec_id")
     queries = emb.filter(F.col("vec_id") < 10)
-    return srp_search(spark, d, queries, k=5)
+    return srp_search(spark, d, queries)
 
 
 @register(
@@ -851,7 +793,7 @@ def q70_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup tail). Exact scoring here; the LSH-prefilter scale path shares
     the same verify stage (tests pin candidate⊆exact + recall)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup(emb, threshold=0.4)
+    return embedding_near_dup(emb)
 
 
 @register("q71_embedding_ivf_topk", sql=_IVF_ORACLE)
@@ -862,17 +804,16 @@ def q71_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pinned in unit tests."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, queries, k=5)
+    return ivf_topk(emb, queries)
 
 
-def _q82_oracle(threshold: float = 0.4, planes_per_table: int = 4,
-                num_tables: int = 16, dim: int = 64, seed: int = 42) -> str:
+def _q82_oracle() -> str:
     """DuckDB twin of the portable LSH near-dup path: identical ±1 plane
     literals hashed over the SAME unit-normalized vectors (sign of
     dot(uv, plane) — normalization can't flip a sign, but the replay
     matches the engine's expression exactly anyway), the same
     id_a < id_b candidate join, the same round-6 unit-dot verification."""
-    planes = _rademacher_planes(planes_per_table, num_tables, dim, seed)
+    planes = _rademacher_planes()
 
     def bucket_sql(tbl) -> str:
         return " + ".join(
@@ -892,7 +833,7 @@ def _q82_oracle(threshold: float = 0.4, planes_per_table: int = 4,
     ),
     hashed AS (
         SELECT vec_id, uv,
-               unnest(range(0, {num_tables})) AS t,
+               unnest(range(0, {SRP_TABLES})) AS t,
                unnest([{buckets}]) AS b
         FROM unit
     ),
@@ -906,7 +847,7 @@ def _q82_oracle(threshold: float = 0.4, planes_per_table: int = 4,
     FROM cand
     JOIN unit ua ON ua.vec_id = cand.id_a
     JOIN unit ub ON ub.vec_id = cand.id_b
-    WHERE round(list_dot_product(ua.uv, ub.uv), 6) >= {threshold}
+    WHERE round(list_dot_product(ua.uv, ub.uv), 6) >= {0.4}
     """
 
 
@@ -916,11 +857,10 @@ def q82_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation + exact cosine verify (lsh_prefilter=True), on the PORTABLE
     ±1-plane hashing so the full pipeline — bucketing, candidate join,
     verification — replays in the DuckDB oracle (upgraded from rows-only
-    in round 6; the production Gaussian/BLAS bucketer keeps its
-    candidate-⊆-exact and recall pins in tests/test_operators.py)."""
+    in round 6; the candidate-⊆-exact and recall pins are in
+    tests/test_operators.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup(emb, threshold=0.4, lsh_prefilter=True,
-                              hashing="portable")
+    return embedding_near_dup(emb, lsh_prefilter=True)
 
 
 @register(
@@ -1390,17 +1330,14 @@ def q322_intrinsic_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SemDeDup: cluster-pruned semantic near-duplicate pairs (q377)
 # ---------------------------------------------------------------------------
 
-def semantic_dedup_pairs(corpus: DataFrame, num_clusters: int = 16,
-                         threshold: float = 0.35, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         assign: str = "hof") -> DataFrame:
+def semantic_dedup_pairs(corpus: DataFrame) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023): coarse
     cluster assignment first, exact cosine scoring ONLY within clusters.
     This is the embedding sibling of MinHash banding — the cluster is the
     candidate bucket, so the quadratic verify is bounded per cluster and
     the pipeline never goes all-pairs.
 
-    Deterministic for oracle replay: centroids are the ``num_clusters``
+    Deterministic for oracle replay: centroids are the 16
     lowest-id vectors (the same seeded-codebook convention as ivf_topk;
     at 100 TB you'd train a k-means codebook on a sample — q149 — and
     broadcast it, leaving this plan unchanged), shipped as ONE broadcast
@@ -1412,40 +1349,23 @@ def semantic_dedup_pairs(corpus: DataFrame, num_clusters: int = 16,
     in production (|corpus|/1000-ish), so groups stay bounded and AQE's
     skew split covers stragglers.
 
-    ``assign``: ``"hof"`` (default) scores every centroid with JVM
-    higher-order expressions — bit-identical to the SQL oracle, the right
-    choice while num_clusters is small. ``"blas"`` is the large-codebook
-    fast path (the portable-vs-fast convention of minhash's ``hash_fn``):
-    one Arrow-batched numpy matmul assigns a whole vector batch against
-    all centroids at once — O(batch·k·dim) in BLAS instead of interpreted
-    HOF evaluation, mandatory when k is in the thousands. Same argmax /
-    lowest-index tie-break; assignments agree except at float ties
-    (pinned equal on the fixture by unit test), but the scores are not
-    replayable in ANSI SQL, so oracle-backed q377 stays on "hof".
-
-    Output: (cluster, id_a < id_b, cosine_sim >= threshold), round-6.
+    Output: (cluster, id_a < id_b, cosine_sim >= 0.35), round-6.
     """
     spark = corpus.sparkSession
-    vecs = corpus.select(F.col(id_col).alias("id"),
-                         _as_double(F.col(vec_col)).alias("v"))
-    seeds = (corpus.orderBy(id_col).limit(num_clusters)
-             .select(_as_double(F.col(vec_col)).alias("cv")).collect())
-    if assign == "blas":
-        cluster_of = _unit_argmax_udf(np.array([list(r.cv) for r in seeds]))
-        assigned = vecs.select("id", "v", cluster_of("v").alias("cluster"))
-    elif assign == "hof":
-        cb_df = spark.createDataFrame(
-            [([list(r.cv) for r in seeds],)], "cells array<array<double>>")
-        scores = F.transform("cells", lambda c: cosine(F.col("v"), c))
-        assigned = (
-            vecs.crossJoin(F.broadcast(cb_df))
-            .withColumn("sc", scores)
-            .select("id", "v",
-                    (F.array_position(F.col("sc"), F.array_max("sc")) - 1)
-                    .cast("int").alias("cluster"))
-        )
-    else:
-        raise ValueError(f"assign={assign!r}: use 'hof' or 'blas'")
+    vecs = corpus.select(F.col("vec_id").alias("id"),
+                         _as_double(F.col("embedding")).alias("v"))
+    seeds = (corpus.orderBy("vec_id").limit(16)
+             .select(_as_double(F.col("embedding")).alias("cv")).collect())
+    cb_df = spark.createDataFrame(
+        [([list(r.cv) for r in seeds],)], "cells array<array<double>>")
+    scores = F.transform("cells", lambda c: cosine(F.col("v"), c))
+    assigned = (
+        vecs.crossJoin(F.broadcast(cb_df))
+        .withColumn("sc", scores)
+        .select("id", "v",
+                (F.array_position(F.col("sc"), F.array_max("sc")) - 1)
+                .cast("int").alias("cluster"))
+    )
     # pair scoring on UNIT vectors: normalize once per row, score each pair
     # with a plain dot — one HOF pass per pair instead of cosine's three
     # (dot + two norms); same float recipe the q70 oracle replays
@@ -1462,7 +1382,7 @@ def semantic_dedup_pairs(corpus: DataFrame, num_clusters: int = 16,
         .select("cluster", "id_a", "id_b",
                 F.round(dot(F.col("ua"), F.col("ub")), 6)
                 .alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= 0.35)
     )
 
 
@@ -1504,7 +1424,7 @@ def q377_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cluster, never all-pairs. Full-fidelity SQL oracle (assignment
     replayed as a window argmax with identical float ops and tie-break)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup_pairs(emb, num_clusters=16, threshold=0.35)
+    return semantic_dedup_pairs(emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1512,8 +1432,7 @@ def q377_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
-                     ingest_id: str, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
+                     ingest_id: str) -> None:
     """Append an ingest delta to a :func:`build_ivf_index` layout WITHOUT
     rebuilding: re-read the frozen codebook, assign only the delta rows
     (one Arrow matmul batch per partition), and write them into the
@@ -1550,7 +1469,7 @@ def ivf_index_append(spark: SparkSession, index_dir: str, delta: DataFrame,
     cell_of = _unit_argmax_udf(
         np.array([list(map(float, r.centroid)) for r in cb_rows]))
     index_store.write_generation(
-        delta.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        delta.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
         .withColumn("cell", cell_of(F.col("v")))
         .repartition("cell"),
         index_dir, "corpus", ingest_id, "cell")
@@ -1563,7 +1482,7 @@ def _ivf_appended_index(spark: SparkSession, sf_dir: str) -> str:
     per fixture state like the other materialized indexes."""
     d = scratch_dir("ivf_append_")
     emb = load_table(spark, sf_dir, "embeddings")
-    build_ivf_index(emb.filter(F.col("vec_id") % 10 != 0), d, num_cells=16)
+    build_ivf_index(emb.filter(F.col("vec_id") % 10 != 0), d)
     ivf_index_append(spark, d, emb.filter(F.col("vec_id") % 10 == 0),
                      ingest_id="delta")
     return d
@@ -1623,8 +1542,7 @@ def q378_ivf_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus + delta). The vector sibling of q376's incremental dedup."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_search(spark, _ivf_appended_index(spark, sf_dir), queries,
-                      k=5, nprobe=4)
+    return ivf_search(spark, _ivf_appended_index(spark, sf_dir), queries)
 
 
 # ---------------------------------------------------------------------------
@@ -1744,5 +1662,4 @@ def q386_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics in SQL. The same computation, generalized over any index
     via :func:`ivf_balance` (num_cells read from the codebook it
     audits)."""
-    return ivf_balance(spark, _ivf_appended_index(spark, sf_dir),
-                       overfull_factor=2.0)
+    return ivf_balance(spark, _ivf_appended_index(spark, sf_dir))

@@ -17,25 +17,22 @@ from ..sources.readers import load_table
 from ..plans.registry import register
 
 
-def salted_sum_count(df: DataFrame, keys: list[str], value_col: str,
-                     salt_buckets: int = 16,
-                     salt_from: str | None = None) -> DataFrame:
+def salted_sum_count(df: DataFrame, keys: list[str],
+                     value_col: str) -> DataFrame:
     """Two-phase sum/count aggregation with an explicit salt stage.
 
-    Phase 1 shuffles on (keys, salt) — a hot key spreads over
-    ``salt_buckets`` reducers instead of melting one; phase 2 merges the
-    per-salt partials on the original keys, a shuffle whose cardinality is
-    |groups|·salt_buckets, tiny by construction. The salt is derived
-    deterministically (xxhash64 of ``salt_from``, or a stable row id), so
-    re-runs produce identical partials.
+    Phase 1 shuffles on (keys, salt) — a hot key spreads over 16
+    reducers instead of melting one; phase 2 merges the per-salt partials
+    on the original keys, a shuffle whose cardinality is |groups|·16, tiny
+    by construction. The salt is derived deterministically (xxhash64 of
+    ``o_orderkey``), so re-runs produce identical partials.
 
     Spark's HashAggregate already does map-side partials; salting matters
     when one *reduce* group is still too large — e.g. a single group whose
     per-group state (distinct tracking, collect_list) exceeds an executor.
     """
-    salt_src = F.col(salt_from) if salt_from else F.spark_partition_id()
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(salt_src),
-                                            F.lit(salt_buckets)))
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col("o_orderkey")),
+                                            F.lit(16)))
     partial = (salted.groupBy(*keys, "__salt")
                .agg(F.sum(value_col).alias("__psum"),
                     F.count(F.lit(1)).alias("__pcnt")))
@@ -45,12 +42,11 @@ def salted_sum_count(df: DataFrame, keys: list[str], value_col: str,
 
 
 def salted_join(left: DataFrame, right: DataFrame, key: str,
-                salt_buckets: int = 8,
                 salt_from: Column | None = None) -> DataFrame:
     """Equi-join with a salted key: the skewed (left) side gets a
-    deterministic salt in [0, S); the small-but-not-broadcastable right side
-    is replicated S times with every salt value. The join key becomes
-    (key, salt), so the hot key's rows land on S reducers instead of one.
+    deterministic salt in [0, 8); the small-but-not-broadcastable right side
+    is replicated 8 times with every salt value. The join key becomes
+    (key, salt), so the hot key's rows land on 8 reducers instead of one.
 
     Cost model: right side grows S×; use only when right ≪ left and the
     broadcast threshold is out of reach. Output equals the plain join
@@ -59,9 +55,9 @@ def salted_join(left: DataFrame, right: DataFrame, key: str,
     if salt_from is None:
         salt_from = F.monotonically_increasing_id()
     lsalted = left.withColumn("__salt", F.pmod(F.xxhash64(salt_from),
-                                               F.lit(salt_buckets)))
+                                               F.lit(8)))
     rsalted = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     ).withColumn("__salt", F.col("__salt").cast("bigint"))
     return lsalted.join(rsalted, [key, "__salt"]).drop("__salt")
 
@@ -80,8 +76,7 @@ def q74_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over a low-cardinality (≤5 groups ⇒ maximally skewed
     reduce) key equals the plain GROUP BY bit-for-bit."""
     orders = load_table(spark, sf_dir, "orders")
-    out = salted_sum_count(orders, ["o_orderpriority"], "o_totalprice",
-                           salt_buckets=16, salt_from="o_orderkey")
+    out = salted_sum_count(orders, ["o_orderpriority"], "o_totalprice")
     return out.select("o_orderpriority",
                       F.round("total", 2).alias("total"), "n")
 
@@ -104,7 +99,7 @@ def q75_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "c_custkey", "c_acctbal"))
     nation = (load_table(spark, sf_dir, "nation")
               .select(F.col("n_nationkey").alias("nationkey"), "n_name"))
-    joined = salted_join(cust, nation, "nationkey", salt_buckets=8,
+    joined = salted_join(cust, nation, "nationkey",
                          salt_from=F.col("c_custkey"))
     return (joined.groupBy("n_name")
             .agg(F.count(F.lit(1)).alias("n_customers"),

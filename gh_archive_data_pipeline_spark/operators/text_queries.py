@@ -124,12 +124,16 @@ def q49_lang_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rolling_fingerprint(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 16,
-                        keep: int = 3, base: int = 31,
-                        mod: int = 1_000_000_007) -> DataFrame:
+FP_GRAM = 16           # chars per fingerprint gram
+FP_KEEP = 3            # smallest gram hashes kept per doc
+FP_BASE = 31           # polynomial hash base ...
+FP_MOD = 1_000_000_007  # ... and modulus
+
+
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Winnowing-style document fingerprint: polynomial (Rabin-Karp) hash of
-    every k-char gram, keep the ``keep`` smallest as the doc's fingerprint.
+    every FP_GRAM-char gram of ``text``, keep the FP_KEEP smallest as the
+    doc's fingerprint.
 
     Pure integer arithmetic (base-31 mod 1e9+7) so any engine reproduces the
     bits exactly — unlike md5/xxhash this fingerprint is portable across the
@@ -138,16 +142,16 @@ def rolling_fingerprint(docs: DataFrame, text_col: str = "text",
     constant-size per doc regardless of doc length, which is what makes the
     downstream fingerprint self-join (dedup at 100 TB) a bounded shuffle.
     """
-    chars = F.split(F.col(text_col), "")
+    chars = F.split(F.col("text"), "")
     n = F.size(chars)
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
+        F.sequence(F.lit(0), F.greatest(n - FP_GRAM, F.lit(0))),
         lambda i: F.aggregate(
-            F.slice(chars, i + 1, k), F.lit(0).cast("long"),
-            lambda acc, c: (acc * base + F.ascii(c)) % mod))
+            F.slice(chars, i + 1, FP_GRAM), F.lit(0).cast("long"),
+            lambda acc, c: (acc * FP_BASE + F.ascii(c)) % FP_MOD))
     return docs.select(
-        F.col(id_col),
-        F.slice(F.array_sort(grams), 1, keep).alias("fingerprint"),
+        F.col("doc_id"),
+        F.slice(F.array_sort(grams), 1, FP_KEEP).alias("fingerprint"),
         F.size(grams).alias("n_grams"))
 
 

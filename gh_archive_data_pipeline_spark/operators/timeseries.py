@@ -24,12 +24,12 @@ from ..sources.readers import load_table
 
 
 def scd2_intervals(events: DataFrame, key: str, ts: str,
-                   attr_cols: list[str],
-                   tiebreak: str | None = None) -> DataFrame:
-    """Derive SCD-type-2 validity intervals from an event log: each event
-    opens an interval [valid_from, valid_to) closed by the key's next event;
-    the latest interval per key is open (valid_to NULL, is_current)."""
-    order = [F.col(ts).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
+                   attr_cols: list[str]) -> DataFrame:
+    """Derive SCD-type-2 validity intervals from an event log ordered by
+    ``ts``, then ``event_id``: each event opens an interval [valid_from,
+    valid_to) closed by the key's next event; the latest interval per key
+    is open (valid_to NULL, is_current)."""
+    order = [F.col(ts).asc(), F.col("event_id").asc()]
     w = Window.partitionBy(key).orderBy(*order)
     nxt = F.lead(ts).over(w)
     return events.select(
@@ -40,14 +40,13 @@ def scd2_intervals(events: DataFrame, key: str, ts: str,
     )
 
 
-def sequence_gaps(events: DataFrame, key: str, ts: str,
-                  gap_seconds: int = 3600,
-                  tiebreak: str | None = None) -> DataFrame:
-    """Per-key sequence quality: count of inter-event gaps exceeding
-    ``gap_seconds`` and the maximum gap in seconds — the monitoring signal
+def sequence_gaps(events: DataFrame, key: str, ts: str) -> DataFrame:
+    """Per-key sequence quality (events ordered by ``ts``, then
+    ``event_id``): count of inter-event gaps over one hour and the maximum
+    gap in seconds — the monitoring signal
     for silent pipeline stalls (a statsd counter in the reference's plane; a
     query here)."""
-    order = [F.col(ts).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
+    order = [F.col(ts).asc(), F.col("event_id").asc()]
     w = Window.partitionBy(key).orderBy(*order)
     gap_sec = (F.col(ts).cast("timestamp").cast("long")
                - F.lag(F.col(ts).cast("timestamp").cast("long")).over(w))
@@ -56,7 +55,7 @@ def sequence_gaps(events: DataFrame, key: str, ts: str,
         .groupBy(key)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.when(F.col("gap_sec") > gap_seconds, 1).otherwise(0))
+            F.sum(F.when(F.col("gap_sec") > 3600, 1).otherwise(0))
             .cast("bigint").alias("n_gaps_over"),
             F.max("gap_sec").alias("max_gap_sec"),
         )
@@ -108,8 +107,7 @@ def q85_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return scd2_intervals(ev.select("user_id", "event_type", "ts", "event_id"),
                           key="user_id", ts="ts",
-                          attr_cols=["event_type"],
-                          tiebreak="event_id").drop("event_id")
+                          attr_cols=["event_type"]).drop("event_id")
 
 
 @register(
@@ -136,7 +134,7 @@ def q86_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the max gap — the silent-stall detector for event pipelines."""
     ev = load_table(spark, sf_dir, "events")
     return sequence_gaps(ev.select("user_id", "ts", "event_id"),
-                         key="user_id", ts="ts", tiebreak="event_id")
+                         key="user_id", ts="ts")
 
 
 @register(

@@ -168,8 +168,7 @@ def _apply_merge(col, lhs: str, rhs: str):
         ).otherwise(F.concat(acc, F.array(x))))
 
 
-def bpe_train(docs: DataFrame, n_merges: int = 5,
-              text_col: str = "text") -> list[tuple[int, str, str, str, int]]:
+def bpe_train(docs: DataFrame) -> list[tuple[int, str, str, str, int]]:
     """BPE tokenizer TRAINING (Sennrich et al.) — the iterative loop q188's
     single pair-count pass documents: per round, count adjacent symbol
     pairs over the (distinct word, freq) vocabulary, take the most frequent
@@ -188,13 +187,13 @@ def bpe_train(docs: DataFrame, n_merges: int = 5,
     # engines diverge (Spark split('','') -> [''] = 1 symbol, DuckDB
     # string_split -> [] = 0): filter them so parity doesn't depend on
     # fixture text hygiene — an empty token carries no pairs anyway
-    vocab = (docs.select(F.explode(F.split(text_col, " ")).alias("token"))
+    vocab = (docs.select(F.explode(F.split("text", " ")).alias("token"))
              .filter(F.col("token") != "")
              .groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
              .withColumn("syms", F.split("token", ""))
              .localCheckpoint())
     merges: list[tuple[int, str, str, str, int]] = []
-    for step in range(1, n_merges + 1):
+    for step in range(1, _BPE_MERGES + 1):
         pair_seq = F.transform(
             F.sequence(F.lit(1), F.size("syms") - 1),
             lambda i: F.struct(F.element_at("syms", i).alias("lhs"),
@@ -314,8 +313,7 @@ def _bpe_encode_oracle(n_merges: int) -> str:
 # share one training run per session
 @fixture_memo("documents")
 def _cached_merges(spark: SparkSession, sf_dir: str) -> list:
-    return bpe_train(load_table(spark, sf_dir, "documents"),
-                     n_merges=_BPE_MERGES)
+    return bpe_train(load_table(spark, sf_dir, "documents"))
 
 
 @register("q390_bpe_training", sql=_bpe_oracle(_BPE_MERGES))
@@ -325,13 +323,11 @@ def q390_bpe_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays every round (pair counts, deterministic argmax, the
     exact left-to-right non-overlapping merge as a recursive CTE), so one
     wrong merge anywhere cascades into every later round's counts and
-    fails the hash. Prefix stability (round k's merge is independent of
-    how many MORE rounds run) and fold-vs-reference equivalence are
-    hypothesis-pinned in tests/test_properties.py."""
+    fails the hash. Fold-vs-reference equivalence is hypothesis-pinned in
+    tests/test_properties.py."""
     # trains FRESH on every invocation — this query IS the training
     # benchmark; only the encode query (q394) amortizes the merge table
-    rows = bpe_train(load_table(spark, sf_dir, "documents"),
-                     n_merges=_BPE_MERGES)
+    rows = bpe_train(load_table(spark, sf_dir, "documents"))
     return (spark.createDataFrame(
         rows, "step int, lhs string, rhs string, merged string, "
               "pair_count bigint")

@@ -115,8 +115,7 @@ def _viterbi_udf(logq: dict[str, int]):
     return seg
 
 
-def unigram_train(docs: DataFrame, rounds: int = EM_ROUNDS
-                  ) -> list[tuple[str, int, float]]:
+def unigram_train(docs: DataFrame) -> list[tuple[str, int, float]]:
     """Train the unigram LM vocabulary; returns the final
     [(piece, weighted_count, prob)] sorted by piece. Driver state is the
     vocabulary table throughout; each EM round costs one Arrow-batched
@@ -129,7 +128,7 @@ def unigram_train(docs: DataFrame, rounds: int = EM_ROUNDS
     total = sum(weights.values())
     state = {p: c for p, c in weights.items()}          # current counts
     logq = {p: _q_logprob(c, total) for p, c in state.items()}
-    for _ in range(rounds):
+    for _ in range(EM_ROUNDS):
         segd = words.withColumn("pieces", _viterbi_udf(logq)(F.col("w")))
         counts = {r.piece: int(r.c) for r in
                   (segd.select(F.explode("pieces").alias("piece"), "wc")
@@ -148,7 +147,7 @@ def unigram_train(docs: DataFrame, rounds: int = EM_ROUNDS
     return sorted((p, c, c / float(total)) for p, c in state.items())
 
 
-def _unigram_ctes(rounds: int = EM_ROUNDS) -> str:
+def _unigram_ctes() -> str:
     """CTE body replaying the trainer: seed weights, then per round the
     unrolled per-position Viterbi DP (stage CTE per string position
     carrying the best (score, pieces) path — integer scores, (score DESC,
@@ -157,7 +156,7 @@ def _unigram_ctes(rounds: int = EM_ROUNDS) -> str:
     ``v{rounds}`` (final vocab) and ``seg{rounds}`` (final distinct-word
     segmentation)."""
     stages = []
-    for r in range(1, rounds + 1):
+    for r in range(1, EM_ROUNDS + 1):
         stages.append(f"""
     s{r}_0 AS (SELECT w, wc, CAST(0 AS BIGINT) AS score,
                       CAST([] AS VARCHAR[]) AS pieces FROM words),""")
@@ -231,12 +230,12 @@ def _unigram_ctes(rounds: int = EM_ROUNDS) -> str:
     _uni_end AS (SELECT 1)"""
 
 
-def _unigram_oracle(rounds: int = EM_ROUNDS) -> str:
+def _unigram_oracle() -> str:
     return f"""
-    {_unigram_ctes(rounds)}
+    {_unigram_ctes()}
     SELECT piece, CAST(c AS BIGINT) AS n,
            round(c / t.total, 6) AS prob
-    FROM v{rounds}, (SELECT sum(c)::DOUBLE AS total FROM v{rounds}) t
+    FROM v{EM_ROUNDS}, (SELECT sum(c)::DOUBLE AS total FROM v{EM_ROUNDS}) t
     ORDER BY piece
     """
 
@@ -265,12 +264,12 @@ def _cached_unigram(spark: SparkSession,
     return unigram_train(load_table(spark, sf_dir, "documents"))
 
 
-def _unigram_encode_oracle(rounds: int = EM_ROUNDS) -> str:
+def _unigram_encode_oracle() -> str:
     """q405 oracle: the training replay's final distinct-word segmentation
     (seg{rounds}) joined back onto every document's word stream — q394's
     digest idiom over the unigram pieces."""
     return f"""
-    {_unigram_ctes(rounds)}
+    {_unigram_ctes()}
     SELECT d.doc_id,
            CAST(count(*) AS BIGINT) AS n_words,
            CAST(sum(len(seg.pieces)) AS BIGINT) AS n_pieces,
@@ -284,7 +283,7 @@ def _unigram_encode_oracle(rounds: int = EM_ROUNDS) -> str:
                LATERAL (SELECT unnest(generate_series(1, len(ws))) AS wpos,
                                unnest(ws) AS word) w
           WHERE w.word <> '' AND length(w.word) <= {MAX_WORD_LEN}) d
-    JOIN seg{rounds} seg ON d.word = seg.w
+    JOIN seg{EM_ROUNDS} seg ON d.word = seg.w
     GROUP BY d.doc_id
     ORDER BY d.doc_id
     """
@@ -342,8 +341,7 @@ def q405_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Versioned tokenizer artifact: publish the trained vocab, load, encode
 # ---------------------------------------------------------------------------
 
-def publish_unigram_artifact(spark: SparkSession, docs, store_dir: str,
-                             rounds: int = EM_ROUNDS) -> int:
+def publish_unigram_artifact(spark: SparkSession, docs, store_dir: str) -> int:
     """Train (or retrain) the unigram vocabulary and publish it as an
     immutable versioned table (sources/versioned.py: the write lands in
     ``v=N`` and the manifest swap is the atomic publish, so a reader sees
@@ -353,20 +351,20 @@ def publish_unigram_artifact(spark: SparkSession, docs, store_dir: str,
     loader can never desync from the stored state."""
     from ..sources.versioned import write_version
 
-    vocab = unigram_train(docs, rounds=rounds)
+    vocab = unigram_train(docs)
     df = spark.createDataFrame(
         [(p, c) for p, c, _ in vocab], "piece string, c bigint")
     return write_version(df, store_dir)
 
 
-def load_unigram_artifact(spark: SparkSession, store_dir: str,
-                          version: int | None = None) -> dict[str, int]:
-    """Resolve the published (or an explicit time-travel) version and
-    rebuild the fixed-point log-prob table — vocabulary-sized driver
-    state, exactly what the Viterbi UDF broadcasts."""
+def load_unigram_artifact(spark: SparkSession,
+                          store_dir: str) -> dict[str, int]:
+    """Resolve the published version and rebuild the fixed-point log-prob
+    table — vocabulary-sized driver state, exactly what the Viterbi UDF
+    broadcasts."""
     from ..sources.versioned import read_version
 
-    rows = read_version(spark, store_dir, version).collect()
+    rows = read_version(spark, store_dir).collect()
     state = {r.piece: int(r.c) for r in rows}
     total = sum(state.values())
     return {p: _q_logprob(c, total) for p, c in state.items()}

@@ -35,7 +35,6 @@ def read_bronze(spark: SparkSession, path: str,
     line-mode reader cannot actually parse — a latent quirk; real GH
     Archive hours are JSON-lines and take the default path)."""
     return read_json_with_schema(spark, path, GH_EVENT_SCHEMA,
-                                 timestamp_ntz_format=CREATED_AT_FORMAT,
                                  multi_line=multi_line)
 
 

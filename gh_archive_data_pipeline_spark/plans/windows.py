@@ -276,12 +276,14 @@ def q109_range_frame_rolling_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 RANGE frame on event time: per-user trailing-1-hour rolling sum
     and count — the value-based frame (all rows within the interval,
     regardless of row count), expressed with rangeBetween over epoch
-    seconds. This replaces the quadratic self-join formulation of trailing
-    windows with one sort per user partition."""
+    MICROseconds, the full precision of ``ts``: ordering by whole seconds
+    would make two events of one user within the same second peers, each
+    counting the other. This replaces the quadratic self-join formulation
+    of trailing windows with one sort per user partition."""
     ev = load_table(spark, sf_dir, "events")
     w = (Window.partitionBy("user_id")
-         .orderBy(F.col("ts").cast("timestamp").cast("long"))
-         .rangeBetween(-3600, 0))
+         .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
+         .rangeBetween(-3_600_000_000, 0))
     return ev.select(
         "event_id", "user_id", "ts",
         F.round(F.sum("value").over(w), 2).alias("rolling_1h_value"),

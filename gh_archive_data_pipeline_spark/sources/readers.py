@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..pipeline.schema import CREATED_AT_FORMAT
 from ..session import ensure_runtime_confs
 
 # Fixture tables the driver pre-registers as DuckDB views (TESTDATA.md).
@@ -237,9 +238,9 @@ def scan_parallel(df: DataFrame) -> DataFrame:
 
 
 def read_json_with_schema(spark: SparkSession, path: str, schema: StructType,
-                          timestamp_ntz_format: str | None = None,
                           multi_line: bool = False) -> DataFrame:
-    """JSON-lines scan with an explicit schema — no inference pass.
+    """JSON-lines scan with an explicit schema — no inference pass;
+    TIMESTAMP_NTZ fields parse with the GH Archive ``created_at`` format.
 
     Parity with the reference's silver load
     (/root/reference/pipeline/airflow/dags/load_data_task.py:117-121); Spark
@@ -248,9 +249,8 @@ def read_json_with_schema(spark: SparkSession, path: str, schema: StructType,
     since gzip is not splittable).
     """
     ensure_runtime_confs(spark)
-    reader = spark.read.schema(schema)
-    if timestamp_ntz_format:
-        reader = reader.option("timestampNTZFormat", timestamp_ntz_format)
+    reader = (spark.read.schema(schema)
+              .option("timestampNTZFormat", CREATED_AT_FORMAT))
     if multi_line:
         # Pretty-printed JSON (one object across many lines — the shape of
         # the reference's checked-in sample hour) parses only in multiLine

@@ -80,31 +80,22 @@ class StreamingMetrics(StreamingQueryListener):
             self._rows.clear()
 
 
-def evaluate_alerts(metrics: DataFrame, rules: dict[str, str],
-                    sustained: int = 1) -> DataFrame:
+def evaluate_alerts(metrics: DataFrame, rules: dict[str, str]) -> DataFrame:
     """Alert rules over the metrics table — the engine-native analog of the
     reference's Prometheus alert rules (alert-rules.yml:4-11, NodeOutOfMemory
     = "available memory < 5% FOR 1m"): each rule is a boolean SQL expression
-    over the per-batch metric columns, and ``sustained=k`` is the FOR-clause
-    analog — the rule fires only when it holds for k CONSECUTIVE micro-batches
-    of the same query (a windowed sum of the breach indicator over the last k
-    batches, ordered by batch_id).
+    over the per-batch metric columns, firing on every batch where it holds.
 
     Returns one row per (rule, query, batch) where the rule is firing, with
     the metric columns for triage. The metrics table is O(batches), so this
     evaluates anywhere — over the in-session listener rows or a parquet
     retention table of them.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = (Window.partitionBy("query_name").orderBy("batch_id")
-         .rowsBetween(-(sustained - 1), 0))
     out = None
     for name, expr in rules.items():
-        breach = metrics.withColumn("__b", F.expr(expr).cast("int"))
-        firing = (breach.withColumn("__run", F.sum("__b").over(w))
-                  .filter(F.col("__run") >= sustained)
+        firing = (metrics.filter(F.expr(expr))
                   .select(F.lit(name).alias("alert_name"),
                           "query_name", "batch_id",
                           "input_rows", "batch_duration_ms", "state_rows"))

@@ -76,49 +76,48 @@ def _event_time(events: DataFrame, ts_col: str) -> DataFrame:
     return events
 
 
-def windowed_counts(events: DataFrame, ts_col: str = "ts",
-                    key_col: str = "event_type", window: str = "1 hour",
-                    slide: str | None = None,
-                    watermark: str = "2 hours") -> DataFrame:
-    """T4+T5: watermarked tumbling/sliding counts — the streaming twin of the
-    batch q50/q51 plans (same expressions, incremental execution)."""
-    events = _event_time(events, ts_col)
-    win = (F.window(ts_col, window, slide) if slide
-           else F.window(ts_col, window))
+def windowed_counts(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """T4+T5: per-``event_type`` counts over 1-hour windows of ``ts``
+    (sliding by ``slide`` when given), watermarked at 2 hours — the
+    streaming twin of the batch q50/q51 plans (same expressions,
+    incremental execution)."""
+    events = _event_time(events, "ts")
+    win = (F.window("ts", "1 hour", slide) if slide
+           else F.window("ts", "1 hour"))
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), F.col(key_col))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(win.alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-                key_col, "n_events", "total_value")
+                "event_type", "n_events", "total_value")
     )
 
 
-def sessionized(events: DataFrame, ts_col: str = "ts",
-                key_col: str = "user_id", gap: str = "30 minutes",
-                watermark: str = "2 hours") -> DataFrame:
-    """T6: session windows with merging state (streaming twin of q52)."""
-    events = _event_time(events, ts_col)
+def sessionized(events: DataFrame) -> DataFrame:
+    """T6: per-``user_id`` session windows (30-minute gap) with merging
+    state, watermarked at 0 seconds so a drain emits exactly the sessions
+    its final watermark closes (streaming twin of q52)."""
+    events = _event_time(events, "ts")
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
+        events.withWatermark("ts", "0 seconds")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                 F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.round(F.sum("value"), 4).alias("session_value"))
         .select(F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-                key_col, "n_events", "session_value")
+                "user_id", "n_events", "session_value")
     )
 
 
-def dedup_within_watermark(events: DataFrame, keys: list[str],
-                           ts_col: str = "ts",
-                           watermark: str = "2 hours") -> DataFrame:
-    """T7: stateful key dedup bounded by the watermark — state for a key is
-    dropped once the watermark passes it, so state size tracks the watermark
-    horizon, not the stream length (the unbounded-state trap the reference's
-    future-work note points at, README.md:303)."""
-    events = _event_time(events, ts_col)
-    return (events.withWatermark(ts_col, watermark)
+def dedup_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
+    """T7: stateful key dedup bounded by a 2-hour watermark on ``ts`` —
+    state for a key is dropped once the watermark passes it, so state size
+    tracks the watermark horizon, not the stream length (the
+    unbounded-state trap the reference's future-work note points at,
+    README.md:303)."""
+    events = _event_time(events, "ts")
+    return (events.withWatermark("ts", "2 hours")
             .dropDuplicatesWithinWatermark(keys))
 
 
@@ -127,21 +126,18 @@ def dedup_within_watermark(events: DataFrame, keys: list[str],
 # ---------------------------------------------------------------------------
 
 def run_to_memory(df: DataFrame, name: str, spark: SparkSession,
-                  output_mode: str = "complete",
-                  timeout_sec: int = 120,
-                  state_partitions: int | None = 8) -> DataFrame:
+                  output_mode: str = "complete") -> DataFrame:
     """Drain a stream into an in-memory table (availableNow) and return the
     result as a batch DataFrame — the deterministic harness used by the
     streaming registry queries and tests.
 
-    ``state_partitions`` bounds the stateful-shuffle width for this query:
+    The stateful shuffle runs 8 partitions (conf restored after start):
     the partition count is baked into the state store at query start, and
     each partition costs a state-store instance + checkpoint files per
     micro-batch — 32 idle stores tripled the wall time of a 100k-row drain.
-    Size it to state volume, not to CPU count (conf restored after start)."""
+    A drain that does not land within 120 s raises (:func:`await_drain`)."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = (df.writeStream.format("memory")
              .queryName(name)
@@ -150,7 +146,7 @@ def run_to_memory(df: DataFrame, name: str, spark: SparkSession,
              .start())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    await_drain(q, timeout_sec, name)
+    await_drain(q, 120, name)
     return spark.table(name)
 
 
@@ -164,13 +160,20 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
 
     Per micro-batch: batch rows REPLACE existing rows with the same key
     (dedup within the batch keeps the last row per key), everything else is
-    carried over, and the table is atomically swapped in. foreachBatch may
-    re-deliver a batch after failure; the merge is idempotent on keys, so
-    replays converge — the exactly-once recipe for non-transactional sinks.
+    carried over into a staged copy, and the copy is swapped in: the table
+    is renamed to ``{path}.__prev``, the staged copy is renamed to
+    ``path``, and only then is ``__prev`` deleted. A batch first repairs a
+    swap a crash interrupted: ``path`` missing beside a ``__prev`` renames
+    ``__prev`` back; both present deletes ``__prev``. foreachBatch
+    re-delivers the failed batch after a restart, and the merge is
+    idempotent on keys, so replays converge — the exactly-once recipe for
+    non-transactional sinks. The table stays flat: ``{path}/*.parquet``.
+    On S3A a rename is a copy and delete, not atomic, so there a crash can
+    also leave a partial ``__prev``; a Delta/Iceberg commit closes that.
 
     The existing table is read back with the micro-batch's schema (the
     table was written from frames of that schema), so a batch starts no
-    schema-inference job over it. Existence check, delete and rename go
+    schema-inference job over it. Existence checks, deletes and renames go
     through the Hadoop FileSystem of ``path`` (:func:`readers.hadoop_fs`),
     so a ``file://``, ``hdfs://`` or ``s3a://`` sink path works like a
     local one.
@@ -188,8 +191,18 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
     from ..sources.readers import hadoop_fs
 
     fs, table = hadoop_fs(spark, path)
+    _, prev = hadoop_fs(spark, f"{path}.__prev")
+
+    def rename(src, dst) -> None:
+        if not fs.rename(src, dst):
+            raise OSError(f"could not rename {src} to {dst}")
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
+        if fs.exists(prev):         # a swap a crash interrupted
+            if fs.exists(table):
+                fs.delete(prev, True)
+            else:
+                rename(prev, table)
         # "last write wins": by the caller's event-time columns when given
         # (deterministic across re-reads), else by arrival order.
         order_cols = ([F.col(c).desc() for c in order_by] if order_by
@@ -205,11 +218,12 @@ def start_upsert_sink(df: DataFrame, path: str, checkpoint: str,
             out = kept.unionByName(latest)
         tmp = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
         out.write.mode("overwrite").parquet(tmp)
-        if exists and not fs.delete(table, True):
-            raise OSError(f"could not delete {path}")
         _, staged = hadoop_fs(spark, tmp)
-        if not fs.rename(staged, table):
-            raise OSError(f"could not rename {tmp} to {path}")
+        if exists:
+            rename(table, prev)
+        rename(staged, table)
+        if exists:
+            fs.delete(prev, True)
 
     return start_foreach_batch(df, merge_batch, checkpoint)
 

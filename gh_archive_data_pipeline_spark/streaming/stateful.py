@@ -64,19 +64,19 @@ def _update_user_stats(key: tuple, batches: Iterator[pd.DataFrame],
     }])
 
 
-def running_user_stats(events: DataFrame,
-                       watermark: str = "10 seconds") -> DataFrame:
+def running_user_stats(events: DataFrame) -> DataFrame:
     """Custom stateful operator over a stream of (user_id, ts, value, ...).
 
     Emits a running (count, sum, max) row per key per micro-batch with
-    ``finalized=False``; when the watermark passes a key's last event by 30
-    minutes the key is finalized (``finalized=True``) and its state evicted.
+    ``finalized=False``; when the watermark (10 seconds behind ``ts``)
+    passes a key's last event by 30 minutes the key is finalized
+    (``finalized=True``) and its state evicted.
     """
     ts_type = dict(events.dtypes).get("ts")
     if ts_type == "timestamp_ntz":  # watermarks require TIMESTAMP
         events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update_user_stats,

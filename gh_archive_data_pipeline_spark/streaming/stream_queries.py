@@ -77,8 +77,7 @@ def _events_stream(spark: SparkSession, sf_dir: str,
     return raw
 
 
-def prepare_stream_fixtures(spark: SparkSession, sf_dir: str,
-                            n_files_list: tuple[int, ...] = (1, 4)) -> None:
+def prepare_stream_fixtures(spark: SparkSession, sf_dir: str) -> None:
     """Pre-build the time-range-split stream source directories for a
     fixture dir (idempotent: each split is built once per fixture state).
 
@@ -89,7 +88,7 @@ def prepare_stream_fixtures(spark: SparkSession, sf_dir: str,
     fixture rewrite that every later streaming query then gets for free —
     the per-query numbers stay comparable to each other and to the
     single-batch r01 baseline."""
-    for n in n_files_list:
+    for n in (1, 4):
         _events_stream(spark, sf_dir, n_files=n)
 
 
@@ -111,7 +110,7 @@ def q59_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked against plain SQL — streaming and batch must agree on
     every window."""
     stream = _events_stream(spark, sf_dir, n_files=4)
-    windowed = windowed_counts(stream, watermark="2 hours")
+    windowed = windowed_counts(stream)
     name = f"stream_tumbling_{next(_counter)}"
     out = run_to_memory(windowed, name, spark, output_mode="complete")
     return out.select(
@@ -240,8 +239,7 @@ def q78_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch must agree on every overlapping window."""
     stream = _events_stream(spark, sf_dir, n_files=4).filter(
         F.col("event_type") == "purchase")
-    windowed = windowed_counts(stream, window="1 hour", slide="30 minutes",
-                               watermark="2 hours", key_col="event_type")
+    windowed = windowed_counts(stream, slide="30 minutes")
     name = f"stream_sliding_{next(_counter)}"
     out = run_to_memory(windowed, name, spark, output_mode="complete")
     return out.select(
@@ -262,7 +260,7 @@ def q83_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .metrics import collect_streaming_metrics
 
     stream = _events_stream(spark, sf_dir)
-    windowed = windowed_counts(stream, watermark="2 hours")
+    windowed = windowed_counts(stream)
     name = f"stream_metrics_{next(_counter)}"
     with collect_streaming_metrics(spark) as m:
         run_to_memory(windowed, name, spark, output_mode="complete")
@@ -288,14 +286,13 @@ def q357_stream_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, pinning the alert path end-to-end with a deterministic row
     count) and SlowBatch (batch_duration_ms > 1h; structurally never fires
     here). Rows-only driver check — batch durations are wall-clock; the
-    planted-slow-batch + sustained-FOR semantics are pinned in
-    tests/test_streaming.py."""
+    planted-slow-batch semantics are pinned in tests/test_streaming.py."""
     import time
 
     from .metrics import collect_streaming_metrics, evaluate_alerts
 
     stream = _events_stream(spark, sf_dir, n_files=4)
-    windowed = windowed_counts(stream, watermark="2 hours")
+    windowed = windowed_counts(stream)
     name = f"stream_alerts_{next(_counter)}"
     with collect_streaming_metrics(spark) as m:
         run_to_memory(windowed, name, spark, output_mode="complete")
@@ -439,8 +436,7 @@ def q201_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     final watermark (= max event time) are emitted as finalized. The
     gaps-and-islands oracle applies the same cutoff, so streaming session
     merging must agree with first-principles sessionization exactly."""
-    sessions = sessionized(_events_stream(spark, sf_dir, n_files=4),
-                           gap="30 minutes", watermark="0 seconds")
+    sessions = sessionized(_events_stream(spark, sf_dir, n_files=4))
     name = f"stream_sessions_{next(_counter)}"
     return run_to_memory(
         sessions.select("user_id", "session_start", "n_events",

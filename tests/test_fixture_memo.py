@@ -185,21 +185,21 @@ def test_check_index_params_rereads_a_rebuilt_index(spark, sf_dir,
         check_params)
     from gh_archive_data_pipeline_spark.sources.readers import load_table
 
-    def check(bands):
+    def check(bands=32):
         return check_params(spark, idx, "num_buckets", num_hashes=64,
                             bands=bands, ngram=3, hash_fn="md5_60")
 
     docs = load_table(spark, sf_dir, "documents").limit(20)
     idx = str(tmp_path / "mh_idx")
-    build_minhash_index(docs, idx, bands=32, num_buckets=4)
-    assert check(32) == (4,)
-    nb, jobs = _jobs_started(spark, lambda: check(32))
+    build_minhash_index(docs, idx, num_buckets=4)
+    assert check() == (4,)
+    nb, jobs = _jobs_started(spark, check)
     assert (nb, jobs) == ((4,), 0)
 
-    build_minhash_index(docs, idx, bands=16, num_buckets=2)   # rebuilt
+    build_minhash_index(docs, idx, num_buckets=2)   # rebuilt
+    assert check() == (2,)
     with pytest.raises(ValueError, match="built with"):
-        check(32)
-    assert check(16) == (2,)
+        check(16)                  # a bands value the build never wrote
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +286,7 @@ def test_rebuild_over_a_used_index_equals_a_fresh_build(spark, sf_dir,
         src = load_table(spark, sf_dir, "embeddings")
         if plane == "ivf":
             def build(idx):
-                sim.build_ivf_index(src, idx, num_cells=16)
+                sim.build_ivf_index(src, idx)
             search = sim.ivf_search
         else:
             def build(idx):
@@ -298,7 +298,7 @@ def test_rebuild_over_a_used_index_equals_a_fresh_build(spark, sf_dir,
                                "vec_id")
 
         def answer(idx):
-            return search(spark, idx, src.filter("vec_id < 10"), k=5)
+            return search(spark, idx, src.filter("vec_id < 10"))
 
     fresh, used = str(tmp_path / "fresh"), str(tmp_path / "used")
     build(fresh)

@@ -22,7 +22,7 @@ def test_pca_components_match_numpy_on_gapped_data(spark):
         [(i, [float(x) for x in row], i % 3) for i, row in enumerate(X)],
         "vec_id long, embedding array<double>, label int")
 
-    comps, eigs, mu = pca_components(emb, n_comp=3)
+    comps, eigs, mu = pca_components(emb)
     C = np.cov((X - X.mean(axis=0)).T, bias=True)
     evals, evecs = np.linalg.eigh(C)
     for i in range(3):

@@ -64,8 +64,7 @@ def test_scd2_intervals_open_tail(spark):
         [(7, "a", _ts(0), 1), (7, "b", _ts(10), 2), (8, "x", _ts(5), 3)],
         "user_id long, event_type string, ts timestamp_ntz, event_id long")
     rows = {(r.user_id, r.valid_from): r for r in scd2_intervals(
-        ev, key="user_id", ts="ts", attr_cols=["event_type"],
-        tiebreak="event_id").collect()}
+        ev, key="user_id", ts="ts", attr_cols=["event_type"]).collect()}
     assert rows[(7, _ts(0))].valid_to == _ts(10)
     assert not rows[(7, _ts(0))].is_current
     assert rows[(7, _ts(10))].valid_to is None
@@ -79,7 +78,7 @@ def test_sequence_gaps_thresholds(spark):
          (2, _ts(0), 4)],
         "user_id long, ts timestamp_ntz, event_id long")
     got = {r.user_id: r for r in sequence_gaps(
-        ev, key="user_id", ts="ts", tiebreak="event_id").collect()}
+        ev, key="user_id", ts="ts").collect()}
     assert got[1].n_gaps_over == 1          # only the 170-minute gap > 1h
     assert got[1].max_gap_sec == 170 * 60
     assert got[2].n_gaps_over == 0 and got[2].max_gap_sec is None
@@ -321,7 +320,7 @@ def test_kmeans_matches_numpy_lloyd(spark):
 
     sf = "/root/testdata/sf0.01"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    centroids, assigned = kmeans(emb, k=8, iterations=5)
+    centroids, assigned = kmeans(emb)
     got = {r.vec_id: (r.cluster, r.d2) for r in assigned.collect()}
 
     rows = sorted(emb.collect(), key=lambda r: r.vec_id)
@@ -435,7 +434,7 @@ def test_pagerank_symmetric_cycle(spark):
 
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "a", 1.0)], "src string, dst string, weight double")
-    ranks = {r["node"]: r["rank"] for r in pagerank(edges, iterations=5).collect()}
+    ranks = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
     assert ranks["a"] == pytest.approx(0.5)
     assert ranks["b"] == pytest.approx(0.5)
 
@@ -447,7 +446,7 @@ def test_pagerank_sink_attracts_mass(spark):
     edges = spark.createDataFrame(
         [("a", "c", 1.0), ("b", "c", 1.0), ("c", "a", 1.0), ("c", "b", 1.0)],
         "src string, dst string, weight double")
-    ranks = {r["node"]: r["rank"] for r in pagerank(edges, iterations=8).collect()}
+    ranks = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
     assert ranks["c"] > ranks["a"]
     assert ranks["a"] == pytest.approx(ranks["b"])
     assert sum(ranks.values()) == pytest.approx(1.0)  # no dangling nodes
@@ -1796,57 +1795,12 @@ def test_ece_bounds_and_mce_dominates(spark, sf_dir):
     assert r["n_bins"] >= 1
 
 
-def test_copurchase_group_cap_bounds_flash_hour(spark, tmp_path):
-    """The flash-crowd mitigation documented in BASELINE.md: a single hour
-    whose group densifies to k users must emit at most cap*(cap-1)/2 pairs
-    under max_group_size=cap (the cap keeps the k lowest user_ids,
-    deterministically), while hours under the cap stay EXACTLY intact."""
-    import datetime as dt
-
-    from gh_archive_data_pipeline_spark.operators.graph import (
-        copurchase_edges,
-    )
-
-    flash = [(i, dt.datetime(2024, 1, 1, 10, 0, 0), i % 100 + 1000,
-              "purchase", 1.0) for i in range(100)]          # 100-user hour
-    quiet = [(200 + i, dt.datetime(2024, 1, 1, 12, 0, 0), 2000 + i,
-              "purchase", 1.0) for i in range(3)]            # 3-user hour
-    df = spark.createDataFrame(
-        flash + quiet,
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double")
-    d = str(tmp_path / "flash_fixture")
-    import os
-    os.makedirs(d, exist_ok=True)
-    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
-
-    capped = copurchase_edges(spark, d, max_group_size=10).collect()
-    # flash hour contributes <= 45 pairs; quiet hour keeps all 3 pairs
-    flash_pairs = [r for r in capped if r.u < 2000]
-    quiet_pairs = [r for r in capped if r.u >= 2000]
-    assert len(flash_pairs) == 10 * 9 // 2
-    assert len(quiet_pairs) == 3
-    # deterministic: the kept users are the 10 LOWEST ids of the flash hour
-    kept = {r.u for r in flash_pairs} | {r.v for r in flash_pairs}
-    assert kept == set(range(1000, 1010))
-    # uncapped baseline: the quadratic count the cap is protecting against
-    full = copurchase_edges(spark, d).collect()
-    assert len([r for r in full if r.u < 2000]) == 100 * 99 // 2
-
-
-def _selfjoin_copurchase_edges(ev, max_group_size=None):
+def _selfjoin_copurchase_edges(ev):
     """Reference: co-purchase edges as an hour self-join over distinct
-    (user, hour) rows, capped by a row_number window."""
-    from pyspark.sql import Window
-
+    (user, hour) rows."""
     pur = (ev.filter(F.col("event_type") == "purchase")
            .select("user_id", F.date_trunc("hour", "ts").alias("h"))
            .distinct())
-    if max_group_size is not None:
-        w = Window.partitionBy("h").orderBy("user_id")
-        pur = (pur.withColumn("__rn", F.row_number().over(w))
-               .filter(F.col("__rn") <= max_group_size)
-               .drop("__rn"))
     a, b = pur.alias("a"), pur.alias("b")
     return (a.join(b, (F.col("a.h") == F.col("b.h"))
                    & (F.col("a.user_id") < F.col("b.user_id")))
@@ -1858,9 +1812,7 @@ def _selfjoin_copurchase_edges(ev, max_group_size=None):
 def test_copurchase_edges_equal_hour_self_join(spark, tmp_path):
     """The per-hour sorted-array edges equal the hour self-join: repeated
     purchases by one user, a user in several hours, a NULL ts, a NULL
-    user_id, a non-purchase event, and caps below and above group sizes.
-    The one difference is documented: under a cap the self-join's window
-    ranked a NULL user_id first and gave it a slot; the array does not."""
+    user_id and a non-purchase event."""
     from gh_archive_data_pipeline_spark.operators.graph import (
         copurchase_edges,
     )
@@ -1878,7 +1830,6 @@ def test_copurchase_edges_equal_hour_self_join(spark, tmp_path):
     d = str(tmp_path / "edges_fixture")
     ev.write.mode("overwrite").parquet(f"{d}/events.parquet")
     ev = spark.read.parquet(f"{d}/events.parquet")
-    known = ev.filter(F.col("user_id").isNotNull())
 
     def edges(df):
         return sorted((r.u, r.v) for r in df.collect())
@@ -1887,13 +1838,6 @@ def test_copurchase_edges_equal_hour_self_join(spark, tmp_path):
     assert got == edges(_selfjoin_copurchase_edges(ev))
     assert got == [(1, 3), (1, 5), (1, 8), (3, 5), (3, 8), (3, 9), (5, 8),
                    (8, 9)]
-    for cap in (0, 1, 2, 3, 4, 10):          # below, at and above 3 and 4
-        assert (edges(copurchase_edges(spark, d, max_group_size=cap))
-                == edges(_selfjoin_copurchase_edges(known, cap))), cap
-    # cap 2: the array keeps users 1, 3 of hour 10; the window kept NULL, 1
-    assert edges(copurchase_edges(spark, d, max_group_size=2)) == [
-        (1, 3), (3, 8)]
-    assert edges(_selfjoin_copurchase_edges(ev, 2)) == [(3, 8)]
 
 
 # ---------------------------------------------------------------------------
@@ -1968,7 +1912,7 @@ def test_semantic_dedup_matches_numpy_ground_truth(spark, sf_dir):
     C = U[:16]
     cl = (U @ C.T).argmax(axis=1)
     tau = 0.35
-    got = semantic_dedup_pairs(emb, num_clusters=16, threshold=tau).collect()
+    got = semantic_dedup_pairs(emb).collect()
     got_pairs = {(r.id_a, r.id_b) for r in got}
     by_id = {int(i): k for i, k in zip(ids, cl)}
     # every emitted pair: same numpy cluster, cosine above (tau - eps)
@@ -1981,23 +1925,6 @@ def test_semantic_dedup_matches_numpy_ground_truth(spark, sf_dir):
         for b in range(a + 1, len(ids)):
             if cl[a] == cl[b] and sims[a, b] >= tau + 1e-6:
                 assert (int(ids[a]), int(ids[b])) in got_pairs
-
-
-def test_semantic_dedup_blas_assignment_matches_hof(spark, sf_dir):
-    """The BLAS fast path (Arrow matmul argmax) and the oracle-portable HOF
-    path must agree on this fixture: same cluster per vector, same emitted
-    pair set with identical round-6 cosines."""
-    from gh_archive_data_pipeline_spark.operators.similarity import (
-        semantic_dedup_pairs)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    hof = {(r.cluster, r.id_a, r.id_b, r.cosine_sim)
-           for r in semantic_dedup_pairs(emb, assign="hof").collect()}
-    blas = {(r.cluster, r.id_a, r.id_b, r.cosine_sim)
-            for r in semantic_dedup_pairs(emb, assign="blas").collect()}
-    assert hof == blas
-    assert hof
 
 
 def test_ivf_append_preserves_standing_files_and_serves_delta(spark, sf_dir,
@@ -2015,7 +1942,7 @@ def test_ivf_append_preserves_standing_files_and_serves_delta(spark, sf_dir,
     corpus = emb.filter("vec_id % 10 != 0")
     delta = emb.filter("vec_id % 10 = 0")
     idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus, idx, num_cells=16)
+    build_ivf_index(corpus, idx)
 
     def data_files(root):
         out = {}
@@ -2038,8 +1965,8 @@ def test_ivf_append_preserves_standing_files_and_serves_delta(spark, sf_dir,
     assert len(after) > len(before), "append must add delta files"
     n_rows = spark.read.parquet(f"{idx}/corpus").count()
     assert n_rows == emb.count(), "retried append must not duplicate rows"
-    # every indexed row is now searchable: nprobe = all cells -> exact
-    res = ivf_search(spark, idx, emb.filter("vec_id < 10"), k=5, nprobe=16)
+    # appended rows are searchable beside the standing ones
+    res = ivf_search(spark, idx, emb.filter("vec_id < 10"))
     assert {r.neighbor_id % 10 == 0 for r in res.collect()} == {True, False}
 
 
@@ -2065,7 +1992,7 @@ def test_ivf_append_guards(spark, sf_dir, tmp_path):
     corpus = emb.filter("vec_id % 10 != 0")
     delta = emb.filter("vec_id % 10 = 0")
     idx = str(tmp_path / "ivf")
-    build_ivf_index(corpus, idx, num_cells=16)
+    build_ivf_index(corpus, idx)
     mh_idx = _cached_minhash_index(spark, sf_dir)
     mh_delta = load_table(spark, sf_dir, "documents").filter("doc_id % 10 = 0")
 
@@ -2088,12 +2015,12 @@ def test_ivf_append_guards(spark, sf_dir, tmp_path):
     # rebuild clears stale generations: append one, rebuild, gone
     ivf_index_append(spark, idx, delta, ingest_id="d1")
     assert os.path.isdir(f"{idx}/corpus/ingest=d1")
-    build_ivf_index(corpus, idx, num_cells=16)
+    build_ivf_index(corpus, idx)
     assert not os.path.isdir(f"{idx}/corpus/ingest=d1")
     assert spark.read.parquet(f"{idx}/corpus").count() == corpus.count()
     # old pre-generation layout is detected, not silently mixed
     old = str(tmp_path / "old_ivf")
-    build_ivf_index(corpus, old, num_cells=16)
+    build_ivf_index(corpus, old)
     os.rename(f"{old}/corpus/ingest=base", f"{old}/corpus_flat")
     os.rmdir(f"{old}/corpus")
     os.rename(f"{old}/corpus_flat", f"{old}/corpus")
@@ -2130,9 +2057,9 @@ def test_parse_media_header_golden_vectors():
     jp = parse_media_header(padded)
     assert (jp["width"], jp["height"], jp["header_ok"]) == (123, 45, True)
 
-    w = parse_media_header(make_wav(22050, 2, bits=24))
+    w = parse_media_header(make_wav(22050, 2))
     assert (w["container"], w["sample_rate"], w["channels"],
-            w["bits_per_sample"], w["header_ok"]) == ("wav", 22050, 2, 24,
+            w["bits_per_sample"], w["header_ok"]) == ("wav", 22050, 2, 16,
                                                       True)
 
     # IHDR CRC corruption (byte 30 is inside the 4-byte CRC at 29..32)
@@ -2146,19 +2073,6 @@ def test_parse_media_header_golden_vectors():
     assert parse_media_header(b"")["container"] == "unknown"
     assert parse_media_header(b"\xff\xd8\xff")["container"] == "jpeg"
     assert parse_media_header(b"\xff\xd8\xff")["header_ok"] is False
-
-
-def test_embedding_near_dup_rejects_unknown_hashing(spark, sf_dir):
-    """A typo'd hashing knob ('portabel') must fail loudly, not silently
-    fall through to the BLAS bucketer and lose the oracle-exact hashing
-    the caller asked for."""
-    from gh_archive_data_pipeline_spark.operators.similarity import (
-        embedding_near_dup)
-    from gh_archive_data_pipeline_spark.sources.readers import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="hashing must be"):
-        embedding_near_dup(emb, lsh_prefilter=True, hashing="portabel")
 
 
 def test_probe_then_append_emits_cross_batch_pairs(spark, tmp_path):
@@ -2725,7 +2639,7 @@ def test_ivf_delete_hides_ids(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, idx, num_cells=16)
+    sim.build_ivf_index(emb, idx)
     queries = emb.filter("vec_id < 5")
 
     import pyspark.sql.functions as F  # noqa: N812
@@ -2738,7 +2652,7 @@ def test_ivf_delete_hides_ids(spark, sf_dir, tmp_path):
     # can never overwrite each other's tombstones
     assert d1 != d2 and d1.startswith("delete=") and d2.startswith("delete=")
     assert sorted(os.listdir(f"{idx}/tombstones")) == sorted([d1, d2])
-    got = sim.ivf_search(spark, idx, queries, k=5, nprobe=4)
+    got = sim.ivf_search(spark, idx, queries)
     rows = got.collect()
     assert rows and all(r.neighbor_id % 7 != 3 and r.neighbor_id % 11 != 5
                         for r in rows)
@@ -2768,8 +2682,8 @@ def test_bpe_ignores_empty_tokens_from_ragged_whitespace(spark):
         [(i, t) for i, t in enumerate(ragged)], "doc_id long, text string")
     df_clean = spark.createDataFrame(
         [(i, t) for i, t in enumerate(clean)], "doc_id long, text string")
-    got = bpe_train(df_ragged, n_merges=_BPE_MERGES)
-    assert got == bpe_train(df_clean, n_merges=_BPE_MERGES)
+    got = bpe_train(df_ragged)
+    assert got == bpe_train(df_clean)
 
     con = duckdb.connect()
     con.register("documents",
@@ -2852,19 +2766,20 @@ def test_avi_round_trip_sampling_and_corruption():
 
     w, h, n, frames = _planted_video(11)
     avi = make_avi(w, h, frames)
-    full = decode_avi_frames(avi, every=1)
-    assert (full["width"], full["height"], full["n_frames"]) == (w, h, n)
-    every2 = decode_avi_frames(avi, every=2)
-    assert [i for i, _ in every2["frames"]] == list(range(0, n, 2))
-    # sampled frames are bit-equal to the corresponding full-decode frames
-    full_by_idx = dict(full["frames"])
-    for i, pix in every2["frames"]:
-        assert pix == full_by_idx[i]
+    dec = decode_avi_frames(avi)         # every 2nd frame
+    assert (dec["width"], dec["height"], dec["n_frames"]) == (w, h, n)
+    assert [i for i, _ in dec["frames"]] == list(range(0, n, 2))
+    # each sampled frame is its stored DIB frame with the row padding
+    # stripped and the bottom-up rows flipped top-down
+    stride = (3 * w + 3) & ~3
+    for i, pix in dec["frames"]:
+        assert pix == b"".join(frames[i][y * stride:y * stride + 3 * w]
+                               for y in range(h - 1, -1, -1))
     # top-down row 0 differs from DIB storage row 0 whenever h > 1 and the
     # law varies by row — i.e. the decoder really flipped rows
     assert h > 1
     raw0 = frames[0][: 3 * w]            # stored bottom row (y_top = h-1)
-    assert full_by_idx[0][:3 * w] != raw0
+    assert dict(dec["frames"])[0][:3 * w] != raw0
     with pytest.raises(ValueError, match="not a RIFF/AVI"):
         decode_avi_frames(b"nope")
     with pytest.raises(ValueError, match="truncated chunk"):
@@ -2878,8 +2793,13 @@ def test_avi_round_trip_sampling_and_corruption():
         decode_avi_frames(lied)
 
 
+def _chunk(tag: str) -> str:
+    """One CHUNK_WORDS-word (16-word) chunk of distinct words."""
+    return " ".join(f"{tag}{i}" for i in range(16))
+
+
 def test_chunk_dedup_clean_crafted(spark):
-    """q414 semantics on a crafted corpus (chunk_words=2): cross-doc and
+    """q414 semantics on a crafted corpus of 16-word chunks: cross-doc and
     intra-doc duplicate chunks are removed, first occurrence (smallest
     (doc_id, idx)) wins, kept chunks reassemble in order."""
     import hashlib
@@ -2888,20 +2808,21 @@ def test_chunk_dedup_clean_crafted(spark):
         chunk_dedup_clean,
     )
 
+    a, c, x, p = _chunk("a"), _chunk("c"), _chunk("x"), _chunk("p")
     docs = spark.createDataFrame(
         [
-            (0, "a b c d a b"),   # chunks: [a b][c d][a b] -> intra-dup
-            (1, "a b x y"),       # [a b] dup of doc0 chunk0 -> removed
-            (2, "p q"),           # unique
+            (0, f"{a} {c} {a}"),  # chunks: [a][c][a] -> intra-dup
+            (1, f"{a} {x}"),      # [a] dup of doc0 chunk0 -> removed
+            (2, p),               # unique
         ],
         "doc_id long, text string")
-    got = {r.doc_id: r for r in chunk_dedup_clean(docs, chunk_words=2).collect()}
+    got = {r.doc_id: r for r in chunk_dedup_clean(docs).collect()}
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
     assert (got[0].n_chunks, got[0].kept_chunks, got[0].removed_chunks) == (3, 2, 1)
-    assert got[0].cleaned_md5 == md5("a b c d")
+    assert got[0].cleaned_md5 == md5(f"{a} {c}")
     assert (got[1].n_chunks, got[1].kept_chunks) == (2, 1)
-    assert got[1].cleaned_md5 == md5("x y")
-    assert got[2].removed_chunks == 0 and got[2].cleaned_md5 == md5("p q")
+    assert got[1].cleaned_md5 == md5(x)
+    assert got[2].removed_chunks == 0 and got[2].cleaned_md5 == md5(p)
 
 
 def test_chunk_dedup_clean_fully_removed_doc(spark):
@@ -2913,9 +2834,10 @@ def test_chunk_dedup_clean_fully_removed_doc(spark):
         chunk_dedup_clean,
     )
 
+    text = f"{_chunk('a')} {_chunk('c')}"
     docs = spark.createDataFrame(
-        [(0, "a b c d"), (1, "a b c d")], "doc_id long, text string")
-    got = {r.doc_id: r for r in chunk_dedup_clean(docs, chunk_words=2).collect()}
+        [(0, text), (1, text)], "doc_id long, text string")
+    got = {r.doc_id: r for r in chunk_dedup_clean(docs).collect()}
     assert got[1].kept_chunks == 0
     assert got[1].cleaned_md5 == hashlib.md5(b"").hexdigest()
 
@@ -3000,32 +2922,33 @@ def test_assign_split_deterministic_and_stable_under_growth(spark):
     assert c["validation"] > 0 and c["test"] > 0
 
 
-def test_assign_split_salt_versions_the_assignment(spark):
-    """Changing the salt is the ONLY way the split moves."""
-    from gh_archive_data_pipeline_spark.operators.sampling import (
-        assign_split,
-    )
+def test_assign_split_salt_versions_the_assignment(spark, monkeypatch):
+    """Changing the salt (the module's SPLIT_SALT) is the ONLY way the
+    split moves."""
+    from gh_archive_data_pipeline_spark.operators import sampling
 
     df = spark.createDataFrame([(i,) for i in range(300)], "doc_id long")
-    v1 = {r.doc_id: r.split for r in assign_split(df, salt="v1").collect()}
-    v2 = {r.doc_id: r.split for r in assign_split(df, salt="v2").collect()}
+    v1 = {r.doc_id: r.split for r in sampling.assign_split(df).collect()}
+    monkeypatch.setattr(sampling, "SPLIT_SALT", "v2")
+    v2 = {r.doc_id: r.split for r in sampling.assign_split(df).collect()}
     assert v1 != v2  # some ids must move under a new salt
 
 
 def test_cdc_boundary_semantics(spark):
-    """A boundary word (md5_60 % mod == 0) ENDS its chunk; the next word
-    starts a new one. Verified against a hand-computed mod-2 chunking."""
+    """A boundary word (md5_60 % CDC_MOD == 0) ENDS its chunk; the next
+    word starts a new one. Verified against a chunking rebuilt in Python."""
     import hashlib
 
-    from gh_archive_data_pipeline_spark.operators.dedup import cdc_chunks
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        CDC_MOD, cdc_chunks)
 
-    words = ["alpha", "beta", "gamma", "delta", "eps"]
+    words = [f"w{i}" for i in range(40)]
     def is_boundary(w, mod):
         return int(hashlib.md5(w.encode()).hexdigest()[:15], 16) % mod == 0
-    mod = 2
+    mod = CDC_MOD
     docs = spark.createDataFrame([(0, " ".join(words))],
                                  "doc_id long, text string")
-    got = {r.cid: r.chunk for r in cdc_chunks(docs, mod=mod).collect()}
+    got = {r.cid: r.chunk for r in cdc_chunks(docs).collect()}
     # rebuild expected chunks in python
     expected, cur = [], []
     for w in words:
@@ -3034,6 +2957,7 @@ def test_cdc_boundary_semantics(spark):
             expected.append(" ".join(cur)); cur = []
     if cur:
         expected.append(" ".join(cur))
+    assert len(expected) > 1
     assert [got[i] for i in sorted(got)] == expected
 
 

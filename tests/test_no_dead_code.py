@@ -16,6 +16,15 @@ pass the name check while nothing outside the tests imports it.
 
 Every Sphinx ``:func:`` / ``:class:`` cross-reference in the package must
 name a function or class the package defines.
+
+Every defaulted parameter of a top-level package function must be passed
+at least two different values by those same non-test callers: an option
+with one value in use is a constant and belongs in the function body (or
+one module constant). A call that omits the parameter passes its default;
+a literal, or a name bound to a literal at a module's top level, is one
+value; any other expression, a ``*args``/``**kwargs`` call and a reference
+that is not a call (say, a function handed to a thread pool) count as
+varying. Calls are matched by name, so the census is approximate.
 """
 
 from __future__ import annotations
@@ -41,6 +50,38 @@ ALLOWED = {
                   "jdbc_write_options",
     "plan_metrics": "ROADMAP's metrics-as-data API: executed-plan metrics "
                     "as a DataFrame",
+}
+
+# Defaulted parameters kept with fewer than two values in use, each for a
+# stated reason: a deployment setting, a fault-injection seam, a reference
+# path a test compares against, a property-test lever, or a documented
+# entry point.
+_JDBC_SEAM = ("deployment setting of the gold -> Postgres sink, a README "
+              "environment-blocked seam (no database here)")
+_DELTA_SEAM = ("deployment setting of the Delta writer, a README "
+               "environment-blocked seam (no Delta jars here)")
+ALLOWED_PARAMS = {
+    "get_spark.master": "deployment setting: the cluster master URL",
+    "write_delta.mode": _DELTA_SEAM,
+    "write_delta.overwrite_schema": _DELTA_SEAM,
+    "write_jdbc.mode": _JDBC_SEAM,
+    "write_jdbc.properties": _JDBC_SEAM,
+    "write_jdbc.isolation_level": _JDBC_SEAM,
+    "write_jdbc.batchsize": _JDBC_SEAM,
+    "write_jdbc.num_partitions": _JDBC_SEAM,
+    "read_binary_files.glob": "path: the file-name filter under the asset "
+                              "directory being read",
+    "stream_corpus_build.fail_after_stage3": "fault-injection seam: the "
+                                             "crash/restart rehearsal kills "
+                                             "the drain after a stage",
+    "stream_corpus_build.n_batches": "property-test lever: batch-boundary "
+                                     "invariance is pinned over 2/4/8 "
+                                     "landing splits",
+    "epoch_order.distributed": "reference path a test compares against: "
+                               "the one-window-per-shard rank",
+    "global_rank.num_partitions": "property-test lever: the rank must not "
+                                  "depend on the partition count",
+    "main.argv": "the python -m entry point's argument list",
 }
 
 _XREF = re.compile(r":(?:func|class):`~?([\w.]+)`")
@@ -170,3 +211,106 @@ def test_docstring_cross_references_resolve():
                 if name.rsplit(".", 1)[-1] not in defined]
     assert not dangling, (
         f"cross-references to nothing the package defines: {dangling}")
+
+
+_VARIES = "<varies>"
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _literal(node, consts: dict):
+    """repr of the value ``node`` always has, or ``_VARIES``."""
+    if isinstance(node, ast.Name) and node.id in consts:
+        return consts[node.id]
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _VARIES
+
+
+def _defaulted(fn: ast.FunctionDef):
+    """(name, positional index or None, default node) per defaulted
+    parameter of ``fn``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    for i, d in enumerate(a.defaults):
+        yield pos[first + i].arg, first + i, d
+    for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield arg.arg, None, d
+
+
+def _one_valued_params() -> dict[str, str]:
+    """``"function.param"`` -> where, for each defaulted parameter of a
+    top-level package function that non-test callers pass fewer than two
+    different values."""
+    trees = {path: ast.parse(open(path).read(), path)
+             for root in CALLERS for path in _py_files(root)}
+    # module -> {top-level name: literal it is bound to}; a name bound to
+    # different literals in different modules resolves only in its own
+    consts: dict = {path: {} for path in trees}
+    anywhere: dict = {}
+    for path, tree in trees.items():
+        for node in tree.body:
+            if (isinstance(node, ast.Assign) and len(node.targets) == 1
+                    and isinstance(node.targets[0], ast.Name)):
+                v = _literal(node.value, {})
+                name = node.targets[0].id
+                consts[path][name] = v
+                anywhere[name] = v if anywhere.get(name, v) == v else _VARIES
+    for path in trees:
+        consts[path] = {**anywhere, **consts[path]}
+    params: dict = {}  # function name -> [(param, index, default, where)]
+    for path, tree in trees.items():
+        if path.startswith(PACKAGE + os.sep):
+            for fn in tree.body:
+                if isinstance(fn, _FUNCS):
+                    where = f"{os.path.relpath(path, ROOT)}:{fn.lineno}"
+                    params.setdefault(fn.name, []).extend(
+                        (p, i, _literal(d, consts[path]), where)
+                        for p, i, d in _defaulted(fn))
+    values: dict = {(f, p): set() for f, ps in params.items() for p, *_ in ps}
+    for path, tree in trees.items():
+        for top in tree.body:
+            own = top.name if isinstance(top, _FUNCS) else None
+            called = set()
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                name = getattr(n.func, "id", getattr(n.func, "attr", None))
+                if name not in params or name == own:
+                    continue
+                called.add(id(n.func))
+                kw = {k.arg: k.value for k in n.keywords}
+                star = None in kw or any(isinstance(x, ast.Starred)
+                                         for x in n.args)
+                for p, i, d, _ in params[name]:
+                    if p in kw:
+                        v = _literal(kw[p], consts[path])
+                    elif i is not None and i < len(n.args) and not star:
+                        v = _literal(n.args[i], consts[path])
+                    else:
+                        v = _VARIES if star else d
+                    values[name, p].add(v)
+            for n in ast.walk(top):
+                name = getattr(n, "id", getattr(n, "attr", None))
+                if (isinstance(n, (ast.Name, ast.Attribute))
+                        and name in params and name != own
+                        and id(n) not in called):
+                    for p, *_ in params[name]:
+                        values[name, p].add(_VARIES)
+    return {f"{f}.{p}": where for f, ps in params.items()
+            for p, _, _, where in ps
+            if _VARIES not in values[f, p] and len(values[f, p]) < 2}
+
+
+def test_every_parameter_has_two_values_in_use():
+    one = _one_valued_params()
+    knobs = {k: where for k, where in one.items() if k not in ALLOWED_PARAMS}
+    assert not knobs, (
+        "defaulted parameters that callers outside tests pass fewer than "
+        "two values (make each a constant in the function body or the "
+        f"module): {knobs}")
+    stale = sorted(set(ALLOWED_PARAMS) - set(one))
+    assert not stale, (
+        f"ALLOWED_PARAMS entries that are no longer one-valued knobs: {stale}")

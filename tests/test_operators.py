@@ -24,10 +24,10 @@ def docs(spark):
 # MinHash
 # ---------------------------------------------------------------------------
 
-def _signatures(df, k=64):
+def _signatures(df):
     """doc_id -> MinHash signature, via the lanes q42 and q376 run."""
-    return {r.doc_id: r.mh for r in dedup.hashed_shingles(df).select(
-        "doc_id", dedup._minhash_array(k).alias("mh")).collect()}
+    return {r.doc_id: r.mh for r in dedup.hashed_shingles(df, "doc_id").select(
+        "doc_id", dedup._minhash_array().alias("mh")).collect()}
 
 
 def test_identical_docs_identical_signatures(spark):
@@ -97,9 +97,9 @@ def test_srp_topk_recall_vs_bruteforce(spark):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {(r.query_id, r.neighbor_id)
-             for r in similarity.brute_force_topk(emb, queries, k=5).collect()}
+             for r in similarity.brute_force_topk(emb, queries).collect()}
     approx = {(r.query_id, r.neighbor_id)
-              for r in similarity.srp_bucket_topk(emb, queries, k=5).collect()}
+              for r in similarity.srp_bucket_topk(emb, queries).collect()}
     assert len(exact & approx) / len(exact) >= 0.6
 
 
@@ -128,9 +128,9 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {(r.query_id, r.neighbor_id)
-             for r in similarity.brute_force_topk(emb, queries, k=5).collect()}
+             for r in similarity.brute_force_topk(emb, queries).collect()}
     approx = {(r.query_id, r.neighbor_id)
-              for r in similarity.ivf_topk(emb, queries, k=5).collect()}
+              for r in similarity.ivf_topk(emb, queries).collect()}
     # nprobe=4 of 16 cells scans ~25% of the corpus; near neighbors
     # concentrate in the probed cells, so recall is far above that fraction.
     assert len(exact & approx) / len(exact) >= 0.5
@@ -150,15 +150,15 @@ def test_ivf_index_search_matches_inline_ivf(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     idx = str(tmp_path / "ivf_idx")
-    similarity.build_ivf_index(emb, idx, num_cells=16)
+    similarity.build_ivf_index(emb, idx)
     inline = sorted((r.query_id, r.neighbor_id, r.rank, r.cosine_sim)
-                    for r in similarity.ivf_topk(emb, queries, k=5).collect())
+                    for r in similarity.ivf_topk(emb, queries).collect())
     indexed = sorted((r.query_id, r.neighbor_id, r.rank, r.cosine_sim)
                      for r in similarity.ivf_search(
-                         spark, idx, queries, k=5).collect())
+                         spark, idx, queries).collect())
     assert indexed == inline
     exact = {(r.query_id, r.neighbor_id)
-             for r in similarity.brute_force_topk(emb, queries, k=5).collect()}
+             for r in similarity.brute_force_topk(emb, queries).collect()}
     approx = {(q, n) for q, n, _, _ in indexed}
     assert len(exact & approx) / len(exact) >= 0.5
 
@@ -173,9 +173,8 @@ def test_ivf_index_scan_is_partition_pruned(spark, tmp_path):
 
     emb = load_table(spark, SF, "embeddings")
     idx = str(tmp_path / "ivf_idx")
-    similarity.build_ivf_index(emb, idx, num_cells=16)
-    out = similarity.ivf_search(spark, idx, emb.filter(F.col("vec_id") < 3),
-                                k=5, nprobe=4)
+    similarity.build_ivf_index(emb, idx)
+    out = similarity.ivf_search(spark, idx, emb.filter(F.col("vec_id") < 3))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
@@ -196,10 +195,10 @@ def test_srp_index_search_matches_inline_srp(spark, tmp_path):
     similarity.build_srp_index(emb, idx)
     inline = sorted((r.query_id, r.neighbor_id, r.rank, r.cosine_sim)
                     for r in similarity.srp_bucket_topk(
-                        emb, queries, k=5).collect())
+                        emb, queries).collect())
     indexed = sorted((r.query_id, r.neighbor_id, r.rank, r.cosine_sim)
                      for r in similarity.srp_search(
-                         spark, idx, queries, k=5).collect())
+                         spark, idx, queries).collect())
     assert indexed == inline and len(indexed) > 0
 
 
@@ -214,7 +213,7 @@ def test_srp_index_scan_is_partition_pruned(spark, tmp_path):
     idx = str(tmp_path / "srp_idx")
     similarity.build_srp_index(emb, idx)
     out = similarity.srp_search(spark, idx,
-                                emb.filter(F.col("vec_id") < 3), k=5)
+                                emb.filter(F.col("vec_id") < 3))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
@@ -242,7 +241,7 @@ def test_srp_delete_hides_ids(spark, tmp_path):
     assert d1 != d2
     assert sorted(os.listdir(f"{idx}/tombstones")) == sorted([d1, d2])
     before = sorted(map(tuple, similarity.srp_search(
-        spark, idx, queries, k=5).collect()))
+        spark, idx, queries).collect()))
     assert before and all(r[1] % 7 != 3 and r[1] % 11 != 5 for r in before)
     by_q: dict = {}
     for r in before:
@@ -253,16 +252,16 @@ def test_srp_delete_hides_ids(spark, tmp_path):
     similarity.build_srp_index(
         emb.filter("vec_id % 7 != 3 AND vec_id % 11 != 5"), fresh)
     assert sorted(map(tuple, similarity.srp_search(
-        spark, fresh, queries, k=5).collect())) == before
+        spark, fresh, queries).collect())) == before
 
 
 def test_embedding_near_dup_lsh_prefilter_subset(spark):
     emb = load_table(spark, SF, "embeddings")
     exact = {(r.id_a, r.id_b): r.cosine_sim
-             for r in similarity.embedding_near_dup(emb, threshold=0.35).collect()}
+             for r in similarity.embedding_near_dup(emb).collect()}
     approx = {(r.id_a, r.id_b): r.cosine_sim
               for r in similarity.embedding_near_dup(
-                  emb, threshold=0.35, lsh_prefilter=True).collect()}
+                  emb, lsh_prefilter=True).collect()}
     # precision 1: every LSH-path pair is a true pair with the same score
     for pair, sim in approx.items():
         assert pair in exact
@@ -274,13 +273,6 @@ def test_embedding_near_dup_lsh_prefilter_subset(spark):
 # ---------------------------------------------------------------------------
 # Guards & quality checks
 # ---------------------------------------------------------------------------
-
-
-def test_hash_fan_guards(docs):
-    with pytest.raises(ValueError, match="codegen-safe cap"):
-        dedup.minhash_near_dup(docs, num_hashes=1024, bands=64)
-    with pytest.raises(ValueError, match="must divide"):
-        dedup.minhash_near_dup(docs, num_hashes=64, bands=48)
 
 
 def test_is_unique_counts_null_keys(spark):
@@ -323,18 +315,3 @@ def test_simhash_portable_matches_python_reference(spark, docs):
     got = {r.doc_id: (r.simhash_hi, r.simhash_lo)
            for r in dedup.simhash_portable(sample).collect()}
     assert got == exp
-
-
-def test_minhash_pairs_identical_across_hash_families(spark, docs):
-    """The hash_fn knob trades oracle portability (md5_60) for throughput
-    (xxhash64, ~1.8x faster end-to-end at 100x corpus); the near-dup PAIRS
-    and their jaccard values must be identical either way — both hashes
-    are injective at corpus scale, so the distinct shingle-set sizes (and
-    hence every verified jaccard) agree even though signatures differ."""
-    portable = {(r.doc_a, r.doc_b, r.jaccard)
-                for r in dedup.minhash_near_dup(
-                    docs, threshold=0.3, hash_fn="md5_60").collect()}
-    fast = {(r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.minhash_near_dup(
-                docs, threshold=0.3, hash_fn="xxhash64").collect()}
-    assert portable == fast and len(portable) > 0

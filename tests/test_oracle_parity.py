@@ -60,3 +60,39 @@ def test_mismatch_rules():
                                      pd.DataFrame({"a": [1]}))
     assert "['b']" in mismatch(pd.DataFrame({"a": [1]}),
                                pd.DataFrame({"b": [1]}))
+
+
+def test_q109_range_frame_orders_by_microseconds(spark, tmp_path):
+    """q109's trailing-hour RANGE frame runs over the full precision of
+    ``ts``: two events of one user in the same second at different
+    sub-second times are not peers (the earlier counts only itself), and
+    an event 3600.5 s before a later one falls outside the later one's
+    frame. Ordering by whole epoch seconds gets both wrong."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [(1, t0 + dt.timedelta(seconds=0.2), 7, 1.0),
+            (2, t0 + dt.timedelta(seconds=0.7), 7, 2.0),
+            (3, t0 - dt.timedelta(hours=1), 8, 4.0),
+            (4, t0 + dt.timedelta(seconds=0.5), 8, 8.0)]
+    ids, ts, users, values = zip(*rows)
+    pq.write_table(pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array(users, pa.int64()),
+        "event_type": pa.array(["click"] * len(rows)),
+        "value": pa.array(values, pa.float64()),
+    }), str(tmp_path / "events.parquet"))
+    spec = _SPECS["q109_range_frame_rolling_sum"]
+    got = spec.fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()      # a one-table lake: duckdb_lake wants all ten
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/events.parquet')")
+    want = con.execute(spec.sql).fetchdf()
+    assert dict(zip(want.event_id, want.rolling_1h_events)) == {
+        1: 1, 2: 2, 3: 1, 4: 1}
+    assert mismatch(got, want) is None

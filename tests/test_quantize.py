@@ -98,7 +98,7 @@ def test_pq_encode_codes_shape_and_qerr_nonnegative(gapped):
 def test_adc_topk_orders_and_excludes(gapped):
     X, emb = gapped
     cbs = pq_train(emb)
-    got = adc_topk(emb, cbs, [float(x) for x in X[0]], topk=10,
+    got = adc_topk(emb, cbs, [float(x) for x in X[0]],
                    exclude_vec_id=0).collect()
     assert [r.rank for r in got] == list(range(1, 11))
     assert 0 not in {r.vec_id for r in got}
@@ -117,7 +117,7 @@ def test_adc_cluster_recall_on_gapped_data(gapped):
     X, emb = gapped
     cbs = pq_train(emb)
     got = [r.vec_id for r in
-           adc_topk(emb, cbs, [float(x) for x in X[0]], topk=10,
+           adc_topk(emb, cbs, [float(x) for x in X[0]],
                     exclude_vec_id=0).collect()]
     true_d2 = ((X - X[0]) ** 2).sum(axis=1)
     cluster_members = set(np.where(true_d2 < 1.0)[0].tolist()) - {0}
@@ -189,5 +189,5 @@ def test_sq_dim_stats_crafted_vectors(spark):
     emb = spark.createDataFrame(
         [(0, [0.0, -1.0, 5.0]), (1, [1.0, 3.0, 5.0])],
         "vec_id long, embedding array<double>")
-    got = {r.dim: (r.vmin, r.vmax) for r in sq_dim_stats(emb, dim=3).collect()}
+    got = {r.dim: (r.vmin, r.vmax) for r in sq_dim_stats(emb).collect()}
     assert got == {1: (0.0, 1.0), 2: (-1.0, 3.0), 3: (5.0, 5.0)}

@@ -22,7 +22,7 @@ def test_rrf_fuse_hand_example(spark):
     vec = spark.createDataFrame(
         [(0, 101, 1), (0, 102, 2)], "query_id long, doc_id long, rank int")
     got = {r.doc_id: r for r in
-           rrf_fuse({"lexical": lex, "vector": vec}, k=60, topk=10).collect()}
+           rrf_fuse({"lexical": lex, "vector": vec}).collect()}
     assert got[101].rrf_score == round(1 / 62 + 1 / 61, 6)  # both lists
     assert got[100].rrf_score == round(1 / 61, 6)
     assert got[102].rrf_score == round(1 / 62, 6)
@@ -33,23 +33,27 @@ def test_rrf_fuse_hand_example(spark):
 
 
 def test_rrf_fuse_respects_topk_and_tiebreak(spark):
-    # two docs with identical single-list ranks tie on score -> doc_id order
+    # two docs with identical single-list ranks tie on score -> doc_id order;
+    # 12 single-list docs are cut to the FUSE_TOPK = 10 best
     lex = spark.createDataFrame(
-        [(0, 7, 1), (0, 3, 2)], "query_id long, doc_id long, rank int")
+        [(0, 7, 1), (0, 3, 2)] + [(0, 100 + r, r) for r in range(3, 7)],
+        "query_id long, doc_id long, rank int")
     vec = spark.createDataFrame(
-        [(0, 9, 1), (0, 4, 2)], "query_id long, doc_id long, rank int")
-    rows = (rrf_fuse({"lexical": lex, "vector": vec}, k=60, topk=2)
+        [(0, 9, 1), (0, 4, 2)] + [(0, 200 + r, r) for r in range(3, 7)],
+        "query_id long, doc_id long, rank int")
+    rows = (rrf_fuse({"lexical": lex, "vector": vec})
             .orderBy("fused_rank").collect())
-    assert len(rows) == 2
+    assert len(rows) == 10
     # 7 and 9 tie at 1/61; smaller doc_id first
-    assert [r.doc_id for r in rows] == [7, 9]
+    assert [r.doc_id for r in rows[:2]] == [7, 9]
+    assert {r.doc_id for r in rows[8:]} == {105, 205}
 
 
-def _mmr_fixture(spark):
-    """Query 0: candidates a(rel .9), a2(rel .89, near-dup of a, sim .99),
-    d(rel .5, diverse, sim .1 to both)."""
+def _mmr_fixture(spark, rel_a2=0.89):
+    """Query 0: candidates a(rel .9), a2(rel ``rel_a2``, near-dup of a,
+    sim .99), d(rel .5, diverse, sim .1 to both)."""
     cand = spark.createDataFrame(
-        [(0, 1, 0.9), (0, 2, 0.89), (0, 3, 0.5)],
+        [(0, 1, 0.9), (0, 2, rel_a2), (0, 3, 0.5)],
         "query_id long, doc_id long, rel double")
     sims = [(1, 2, 0.99), (1, 3, 0.1), (2, 3, 0.1)]
     pair = spark.createDataFrame(
@@ -62,7 +66,7 @@ def _mmr_fixture(spark):
 def test_mmr_prefers_diverse_over_near_duplicate(spark):
     cand, pair = _mmr_fixture(spark)
     rows = {r.round: r for r in
-            mmr_diversify(cand, pair, lam=0.7, mu=0.3, k=3).collect()}
+            mmr_diversify(cand, pair).collect()}
     assert rows[1].doc_id == 1  # pure relevance
     # round 2: a2 scores .7*.89-.3*.99=.326 ; d scores .7*.5-.3*.1=.32
     # near-dup still edges it out at mu=0.3...
@@ -72,17 +76,16 @@ def test_mmr_prefers_diverse_over_near_duplicate(spark):
 
 
 def test_mmr_diversity_weight_flips_the_pick(spark):
-    cand, pair = _mmr_fixture(spark)
-    rows = {r.round: r for r in
-            mmr_diversify(cand, pair, lam=0.5, mu=0.5, k=2).collect()}
-    # at mu=0.5 the near-dup is penalized below the diverse doc:
-    # a2: .5*.89-.5*.99 = -.05 ; d: .5*.5-.5*.1 = .2
+    cand, pair = _mmr_fixture(spark, rel_a2=0.8)
+    rows = {r.round: r for r in mmr_diversify(cand, pair).collect()}
+    # a less relevant near-dup is penalized below the diverse doc:
+    # a2: .7*.8-.3*.99 = .263 ; d: .7*.5-.3*.1 = .32
     assert rows[2].doc_id == 3
 
 
 def test_mmr_selects_k_per_query_without_repeats(spark):
     cand, pair = _mmr_fixture(spark)
-    rows = mmr_diversify(cand, pair, k=3).collect()
+    rows = mmr_diversify(cand, pair).collect()
     picked = [r.doc_id for r in rows]
     assert len(picked) == 3 and len(set(picked)) == 3
 
@@ -129,7 +132,7 @@ def test_rrf_fuse_single_list_preserves_order(spark):
     lex = spark.createDataFrame(
         [(0, 10 + r, r) for r in range(1, 6)],
         "query_id long, doc_id long, rank int")
-    rows = (rrf_fuse({"lexical": lex}, k=60, topk=5)
+    rows = (rrf_fuse({"lexical": lex})
             .orderBy("fused_rank").collect())
     assert [r.doc_id for r in rows] == [11, 12, 13, 14, 15]
     assert all(r.n_lists == 1 for r in rows)

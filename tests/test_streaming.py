@@ -6,6 +6,7 @@ planted duplicates, and the Confluent Avro framing helpers.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,7 +70,7 @@ def _read(spark, stream_dir):
 
 def test_stream_dedup_drops_planted_duplicate(spark, stream_dir):
     stream = _read(spark, stream_dir)
-    deduped = sp.dedup_within_watermark(stream, ["event_id"], watermark="1 hour")
+    deduped = sp.dedup_within_watermark(stream, ["event_id"])
     out = sp.run_to_memory(deduped, "t_dedup", spark, output_mode="append")
     ids = sorted(r.event_id for r in out.collect())
     assert ids == [1, 2, 3, 4, 5]  # id=3 delivered twice, kept once
@@ -77,7 +78,7 @@ def test_stream_dedup_drops_planted_duplicate(spark, stream_dir):
 
 def test_stream_windowed_counts_match_batch(spark, stream_dir):
     stream = _read(spark, stream_dir)
-    windowed = sp.windowed_counts(stream, window="1 hour", watermark="2 hours")
+    windowed = sp.windowed_counts(stream)
     out = sp.run_to_memory(windowed, "t_window", spark, output_mode="complete")
     got = {(r.window_start, r.event_type): r.n_events for r in out.collect()}
     # batch twin on the same files (dups NOT removed — window agg counts both)
@@ -93,7 +94,7 @@ def test_stream_windowed_counts_match_batch(spark, stream_dir):
 
 def test_sessionized_stream(spark, stream_dir):
     stream = _read(spark, stream_dir)
-    sessions = sp.sessionized(stream, gap="30 minutes", watermark="2 hours")
+    sessions = sp.sessionized(stream)
     out = sp.run_to_memory(sessions, "t_sessions", spark, output_mode="complete")
     rows = out.collect()
     # user 7: events at 10:00,10:05 then 10:40 → two sessions (gap > 30m);
@@ -311,19 +312,18 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     run1 = [
         (1, _ts(0), 7, "click", 1.0),
         (2, _ts(5), 7, "click", 1.0),
-        (3, _ts(180), 7, "click", 1.0),   # 13:00 → watermark commits at 12:50
+        (3, _ts(180), 7, "click", 1.0),   # 13:00 → watermark commits at 11:00
     ]
     spark.createDataFrame(run1, SCHEMA).coalesce(1).write.parquet(str(src / "f1"))
 
     def drain():
-        counts = sp.windowed_counts(_read(spark, str(src)),
-                                    watermark="10 minutes")
+        counts = sp.windowed_counts(_read(spark, str(src)))
         q = _parquet_sink(counts, out, ckpt)
         q.awaitTermination(120)
 
     drain()
     run2 = [
-        (4, _ts(20), 7, "click", 100.0),  # LATE: 10:20 < watermark 12:50
+        (4, _ts(20), 7, "click", 100.0),  # LATE: 10:20 < watermark 11:00
         (5, _ts(300), 7, "click", 1.0),   # fresh row keeps the stream moving
     ]
     spark.createDataFrame(run2, SCHEMA).coalesce(1).write.parquet(str(src / "f2"))
@@ -345,7 +345,7 @@ def test_streaming_metrics_listener(spark, stream_dir):
     )
 
     stream = _read(spark, stream_dir)
-    windowed = sp.windowed_counts(stream, watermark="2 hours")
+    windowed = sp.windowed_counts(stream)
     with collect_streaming_metrics(spark) as m:
         out = sp.run_to_memory(windowed, "t_metrics", spark,
                                output_mode="complete")
@@ -410,6 +410,57 @@ def test_upsert_sink_on_file_uri(spark, tmp_path):
     assert len([p for p in q.recentProgress if p["numInputRows"]]) == 2
     got = {r.k: r.v for r in spark.read.parquet(gold).collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
+
+
+def test_upsert_sink_survives_a_crash_inside_the_swap(spark, tmp_path,
+                                                     monkeypatch):
+    """A crash between the two renames of the sink's table swap loses no
+    row: batch 1 fails right after the table moved aside and before the
+    staged copy moved in; the restarted drain replays batch 1 and the sink
+    holds every id, batch 0's untouched rows included."""
+    from gh_archive_data_pipeline_spark.sources import readers
+
+    src = tmp_path / "src"
+    gold, ck = str(tmp_path / "gold"), str(tmp_path / "ck")
+    schema = "k long, v string"
+    empty = spark.createDataFrame([], schema).schema
+    spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema) \
+        .coalesce(1).write.parquet(str(src / "f1"))
+    q = sp.start_upsert_sink(sp.read_file_stream(
+        spark, f"{src}/*/*.parquet", empty), gold, ck, keys=["k"], spark=spark)
+    assert q.awaitTermination(60) and q.exception() is None
+
+    class CrashingFS:
+        """The sink's FileSystem, failing the staged copy's rename."""
+
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, src, dst):
+            if "__staging_" in src.getName():
+                raise OSError("injected crash inside the swap")
+            return self.fs.rename(src, dst)
+
+    real = readers.hadoop_fs
+    monkeypatch.setattr(readers, "hadoop_fs", lambda spark, path: (
+        CrashingFS(real(spark, path)[0]), real(spark, path)[1]))
+    spark.createDataFrame([(2, "B")], schema).coalesce(1) \
+        .write.parquet(str(src / "f2"))
+    q = sp.start_upsert_sink(sp.read_file_stream(
+        spark, f"{src}/*/*.parquet", empty), gold, ck, keys=["k"], spark=spark)
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(60)                  # batch 1 crashed mid-swap
+
+    monkeypatch.setattr(readers, "hadoop_fs", real)
+    q = sp.start_upsert_sink(sp.read_file_stream(
+        spark, f"{src}/*/*.parquet", empty), gold, ck, keys=["k"], spark=spark)
+    assert q.awaitTermination(60) and q.exception() is None
+    got = {r.k: r.v for r in spark.read.parquet(gold).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+    assert not os.path.exists(f"{gold}.__prev")
 
 
 def test_rate_source_processing_time_lifecycle(spark):
@@ -587,10 +638,8 @@ def test_transform_with_state_in_pandas(spark, stream_dir):
 
 
 def test_alert_rules_planted_slow_batch(spark):
-    """evaluate_alerts over a planted metrics table: a slow batch fires
-    SlowBatch; the sustained=2 variant (the Prometheus FOR-clause analog)
-    fires only where the breach holds for two CONSECUTIVE batches of the
-    same query."""
+    """evaluate_alerts over a planted metrics table: every slow batch fires
+    SlowBatch, and rules union."""
     from gh_archive_data_pipeline_spark.streaming.metrics import (
         METRICS_SCHEMA, evaluate_alerts,
     )
@@ -606,11 +655,6 @@ def test_alert_rules_planted_slow_batch(spark):
         metrics, {"SlowBatch": "batch_duration_ms > 5000"}).collect()
     assert {(r.query_name, r.batch_id) for r in fired} == {
         ("qa", 1), ("qa", 2), ("qb", 0)}
-    # FOR-style: needs 2 consecutive breaching batches -> only qa batch 2
-    sustained = evaluate_alerts(
-        metrics, {"SlowBatch": "batch_duration_ms > 5000"},
-        sustained=2).collect()
-    assert {(r.query_name, r.batch_id) for r in sustained} == {("qa", 2)}
     # multiple rules union; impossible rule contributes nothing
     both = evaluate_alerts(metrics, {
         "SlowBatch": "batch_duration_ms > 5000",
