@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import index_store
-from ..sources.readers import (fixture_memo, load_table, read_parquet,
-                               scan_parallel, scratch_dir)
+from ..sources.readers import (fixture_memo, hadoop_fs, load_table,
+                               read_parquet, scan_parallel, scratch_dir)
 from ..plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -71,23 +71,20 @@ def shingles(df: DataFrame) -> DataFrame:
     (three) words.
 
     Tokenization happens in its own projection so the split() runs once per
-    row, not once per reference inside the gram-builder expressions.
+    row, not once per reference inside the gram-builder expressions. The
+    gram builder is one SQL expression: built from Python lambdas over
+    Columns it took about 260 Py4J round trips on every call.
     """
     n = MINHASH_NGRAM
-    toks = F.col("__toks")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + k + 1).cast("int")) for k in range(n)]
-        ),
-    )
+    grams = ", ".join(f"element_at(__toks, cast(i + {k + 1} as int))"
+                      for k in range(n))
     return (
         df.withColumn("__toks", F.split(F.col("text"), " "))
-        .withColumn(
-            "shingles",
-            F.when(F.size(toks) >= n, F.array_distinct(grams))
-            .otherwise(F.array(F.concat_ws(" ", toks))),
-        )
+        .withColumn("shingles", F.expr(
+            f"CASE WHEN size(__toks) >= {n} THEN array_distinct(transform("
+            f"sequence(0, greatest(size(__toks) - {n}, 0)), "
+            f"i -> concat_ws(' ', {grams}))) "
+            "ELSE array(concat_ws(' ', __toks)) END"))
         .drop("__toks")
     )
 
@@ -159,12 +156,9 @@ def hashed_shingles(docs: DataFrame, id_col: str) -> DataFrame:
     identical shingle sets (``CAST(('0x' || substr(md5(s), 1, 15)) AS
     BIGINT)``). This is what q42/q168/q374's full-fidelity oracles require.
     """
-    sh = shingles(docs)
-    return sh.select(
-        F.col(id_col),
-        F.array_distinct(F.transform("shingles", lambda s: F.conv(
-            F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))).alias("hs"),
-    )
+    return shingles(docs).select(F.col(id_col), F.expr(
+        "array_distinct(transform(shingles, s -> "
+        "cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)))").alias("hs"))
 
 
 def _minhash_array():
@@ -1417,22 +1411,24 @@ def q374_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _band_rows(sh: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, sig) rows from a hashed-shingle frame — the same
-    signature/band expressions as :func:`minhash_near_dup` (one nested-HOF
-    signature pass, band key = raw lane-value slice), factored so the
-    materialized index and the delta probe compute byte-identical keys."""
+    """(id, band, sig) rows from a hashed-shingle frame — the signature/band
+    expressions every MinHash path shares (:func:`minhash_near_dup`, the
+    materialized index, its appends and the delta probe), so all of them
+    compute byte-identical keys: one nested-HOF signature pass, then band
+    ``b`` (int, 0..MINHASH_BANDS-1) keyed by the raw lane-value slice
+    ``mh[b*rows+1 .. b*rows+rows]``.
+
+    The bands come from ONE generator expression, ``inline`` over a
+    ``transform`` of ``sequence(0, MINHASH_BANDS-1)``, built in a few dozen
+    Py4J round trips: a Python list of per-band ``struct(lit, slice)``
+    Columns costs about 1,480 round trips (about 200 ms of driver time on
+    a 4-core host) on every call."""
     rows = MINHASH_HASHES // MINHASH_BANDS
     sigs = sh.select(id_col, _minhash_array().alias("mh"))
-    return sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.slice("mh", b * rows + 1, rows).alias("sig"),
-            )
-            for b in range(MINHASH_BANDS)
-        ])).alias("bs"),
-    ).select(id_col, "bs.band", "bs.sig")
+    return sigs.select(id_col, F.expr(
+        f"inline(transform(sequence(0, {MINHASH_BANDS - 1}), "
+        f"b -> named_struct('band', b, "
+        f"'sig', slice(mh, b * {rows} + 1, {rows}))))"))
 
 
 def _band_bucket(num_buckets: int):
@@ -1469,7 +1465,14 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
     generation, not tasks×buckets small files) — build-once cost amortized
     over every probe. Size ``num_buckets`` so one bucket's band rows fit a
     scan task comfortably (thousands at 100 TB; the default 64 suits
-    fixture scale)."""
+    fixture scale).
+
+    Jobs: the params write (one task, no Python worker:
+    :func:`index_store.begin_build`), the shingle checkpoint, the shingles
+    write and the bands write (its bucket shuffle, then the write). An
+    empty corpus is found after the fact, by one file-system listing of
+    ``bands/ingest=base``, not by an ``isEmpty`` job; only then does a
+    further write put the empty ``bkt=0`` file in place."""
     if num_buckets < 1:
         raise ValueError(f"num_buckets={num_buckets} must be >= 1")
     index_store.begin_build(
@@ -1478,15 +1481,16 @@ def build_minhash_index(docs: DataFrame, index_dir: str,
     sh = hashed_shingles(scan_parallel(docs), id_col).localCheckpoint()
     index_store.write_generation(sh, index_dir, "shingles", None, None)
     br = _band_rows(sh, id_col)
-    if sh.isEmpty():
-        # empty corpus: partitionBy writes NO files at all, leaving a
+    _write_bands(br, index_dir, None, num_buckets)
+    base = f"{index_dir}/bands/ingest={index_store.BASE}"
+    fs, path = hadoop_fs(docs.sparkSession, base)
+    if not any(st.getPath().getName().startswith("bkt=")
+               for st in fs.listStatus(path)):
+        # empty corpus: partitionBy wrote NO bkt= directory, leaving a
         # schema-less (unreadable) bands table; write one empty file into
         # an explicit bkt=0 directory so probes/appends still see the
         # schema and the partition layout.
-        br.write.mode("overwrite").parquet(
-            f"{index_dir}/bands/ingest=base/bkt=0")
-    else:
-        _write_bands(br, index_dir, None, num_buckets)
+        br.write.mode("overwrite").parquet(f"{base}/bkt=0")
 
 
 def _write_bands(br: DataFrame, index_dir: str, ingest_id: str | None,

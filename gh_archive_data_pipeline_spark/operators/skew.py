@@ -42,18 +42,18 @@ def salted_sum_count(df: DataFrame, keys: list[str],
 
 
 def salted_join(left: DataFrame, right: DataFrame, key: str,
-                salt_from: Column | None = None) -> DataFrame:
+                salt_from: Column) -> DataFrame:
     """Equi-join with a salted key: the skewed (left) side gets a
-    deterministic salt in [0, 8); the small-but-not-broadcastable right side
-    is replicated 8 times with every salt value. The join key becomes
-    (key, salt), so the hot key's rows land on 8 reducers instead of one.
+    deterministic salt in [0, 8), xxhash64 of ``salt_from`` (a left-side
+    column that spreads the hot key's rows, e.g. a row id); the
+    small-but-not-broadcastable right side is replicated 8 times with every
+    salt value. The join key becomes (key, salt), so the hot key's rows
+    land on 8 reducers instead of one.
 
     Cost model: right side grows S×; use only when right ≪ left and the
     broadcast threshold is out of reach. Output equals the plain join
     exactly — salting never changes semantics, only placement.
     """
-    if salt_from is None:
-        salt_from = F.monotonically_increasing_id()
     lsalted = left.withColumn("__salt", F.pmod(F.xxhash64(salt_from),
                                                F.lit(8)))
     rsalted = right.withColumn(

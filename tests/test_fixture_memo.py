@@ -4,7 +4,10 @@ read_parquet / collect_parquet: infer a schema (or collect a params row)
 once per file state, and again when the file changes.
 index_store: the one index layout the MinHash, IVF and SRP planes share —
 params checks, tombstone deletes, and a rebuild over a used directory that
-gives the index a fresh build gives."""
+gives the index a fresh build gives.
+The MinHash build's driver work: a params row built in the JVM, shingle
+hashes and band rows from SQL expressions, no emptiness job, and a
+readable empty index."""
 
 from __future__ import annotations
 
@@ -308,3 +311,118 @@ def test_rebuild_over_a_used_index_equals_a_fresh_build(spark, sf_dir,
     assert sorted(os.listdir(used)) == sorted(os.listdir(fresh))
     want = sorted(map(tuple, answer(fresh).collect()))
     assert want and sorted(map(tuple, answer(used).collect())) == want
+
+
+# ---------------------------------------------------------------------------
+# The MinHash build's driver work: no Python worker, no lambda or per-band
+# Columns, no emptiness job
+# ---------------------------------------------------------------------------
+
+def test_minhash_build_params_row_is_built_in_the_jvm(spark, sf_dir,
+                                                      tmp_path, monkeypatch):
+    """The params row is written without ``createDataFrame`` (whose
+    ``LogicalRDD`` write starts a Python worker) and reads back with the
+    columns and types the probes check."""
+    from pyspark.sql import SparkSession
+
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        build_minhash_index)
+    from gh_archive_data_pipeline_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(20)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("createDataFrame called by the index build")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    idx = str(tmp_path / "mh_idx")
+    build_minhash_index(docs, idx, num_buckets=4)
+    params = spark.read.parquet(f"{idx}/params")
+    assert params.dtypes == [("num_hashes", "int"), ("bands", "int"),
+                             ("ngram", "int"), ("hash_fn", "string"),
+                             ("num_buckets", "int")]
+    assert [tuple(r) for r in params.collect()] == [(64, 32, 3, "md5_60", 4)]
+
+
+def test_signature_expressions_take_few_py4j_round_trips(spark, sf_dir,
+                                                        monkeypatch):
+    """The shingle hashes and the 32 bands are each built from SQL
+    expressions, not from Python lambdas and one Column per band: the
+    lambdas took 343 Py4J round trips per ``hashed_shingles`` call, and the
+    per-band ``struct(lit, slice)`` list about 1,480 per ``_band_rows``
+    call."""
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        MINHASH_BANDS, _band_rows, hashed_shingles)
+    from gh_archive_data_pipeline_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    client = spark.sparkContext._gateway._gateway_client
+    sends = []
+    send = client.send_command
+
+    def counted(*args, **kwargs):
+        sends.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    sh = hashed_shingles(docs, "doc_id")
+    shingle_sends = len(sends)
+    br = _band_rows(sh, "doc_id")
+    monkeypatch.undo()
+    assert shingle_sends < 100
+    assert len(sends) - shingle_sends < 50
+    assert br.dtypes == [("doc_id", "bigint"), ("band", "int"),
+                         ("sig", "array<bigint>")]
+    bands = sorted(r.band for r in br.select("band").distinct().collect())
+    assert bands == list(range(MINHASH_BANDS))
+
+
+def test_minhash_build_starts_no_emptiness_job(spark, sf_dir, tmp_path):
+    """The build's jobs are the shingle checkpoint, the shingles write, the
+    bands write (its bucket shuffle and the write) and the params write;
+    the empty-corpus case is detected from the written layout, not by an
+    ``isEmpty`` job."""
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        build_minhash_index, hashed_shingles)
+    from gh_archive_data_pipeline_spark.sources.readers import (
+        load_table, scan_parallel)
+
+    docs = load_table(spark, sf_dir, "documents").filter("doc_id % 10 != 0")
+    _, ckpt = _jobs_started(spark, lambda: hashed_shingles(
+        scan_parallel(docs), "doc_id").localCheckpoint())
+    idx = str(tmp_path / "mh_idx")
+    build_minhash_index(docs, idx, num_buckets=8)          # warm
+    _, jobs = _jobs_started(
+        spark, lambda: build_minhash_index(docs, idx, num_buckets=8))
+    assert jobs == ckpt + 1 + 2 + 1
+
+
+def test_minhash_index_over_an_empty_corpus(spark, tmp_path):
+    """An empty build leaves a readable ``bkt=0`` generation: a probe
+    against it finds nothing, and an append on it is probed like any
+    other generation."""
+    from gh_archive_data_pipeline_spark.operators.dedup import (
+        build_minhash_index, incremental_near_dup, minhash_index_append)
+    from gh_archive_data_pipeline_spark.sources.readers import read_parquet
+
+    def docs(*rows):
+        return spark.createDataFrame(list(rows), "doc_id long, text string")
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    delta = docs((1, text), (2, "entirely unrelated words appear in this "
+                                "second document about cooking pasta"))
+    idx = str(tmp_path / "mh_idx")
+    build_minhash_index(docs(), idx, num_buckets=4)
+    assert os.listdir(f"{idx}/bands/ingest=base/bkt=0")
+    base = read_parquet(spark, f"{idx}/bands/ingest=base/bkt=0")
+    assert base.dtypes == [("doc_id", "bigint"), ("band", "int"),
+                           ("sig", "array<bigint>")]
+    assert base.count() == 0
+    bands = read_parquet(spark, f"{idx}/bands")
+    assert (dict(bands.dtypes)["bkt"], dict(bands.dtypes)["ingest"]) == (
+        "int", "string")
+    assert incremental_near_dup(spark, idx, delta).count() == 0
+
+    minhash_index_append(spark, idx, delta, "b1")
+    got = incremental_near_dup(spark, idx, docs((3, text + " again")))
+    assert [(r.doc_a, r.doc_b) for r in got.collect()] == [(1, 3)]

@@ -1918,7 +1918,7 @@ def test_semantic_dedup_matches_numpy_ground_truth(spark, sf_dir):
     # every emitted pair: same numpy cluster, cosine above (tau - eps)
     for r in got:
         assert by_id[r.id_a] == by_id[r.id_b] == r.cluster
-        assert float(U[ids == r.id_a] @ U[ids == r.id_b].T) >= tau - 1e-6
+        assert (U[ids == r.id_a] @ U[ids == r.id_b].T).item() >= tau - 1e-6
     # every clearly-above-threshold same-cluster numpy pair is emitted
     sims = U @ U.T
     for a in range(len(ids)):
